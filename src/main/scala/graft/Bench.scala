@@ -35,6 +35,22 @@ object Bench {
       (name, (System.nanoTime() - t0) / 1e9)
     }
 
+  /** The bench session: `local[SPARK_GRAFT_CPUS]` (default 4), console
+    * logging at ERROR. */
+  private[graft] def session(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt)
+      .config("spark.ui.enabled", "false")
+      // a WARN mid-run (e.g. SparkStringUtils plan truncation) can land
+      // between stdout flushes and corrupt the single JSON result line the
+      // driver parses — BENCH_r03 came back "parsed: null" exactly this way.
+      // Nothing below ERROR may write to the console during a bench run.
+      .config("spark.sql.debug.maxToStringFields", "2000")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    spark
+  }
+
   /** Timed probe: whole-row xxhash64 checksum folded with bit_xor, NOT
     * `count()`. Under `count()` ColumnPruning deletes any operator whose
     * outputs the count never references — e.g. a composed as-of join's
@@ -45,31 +61,23 @@ object Bench {
     * query. This makes BENCH_r04+ a step SLOWER than r01-r03 on queries
     * whose tail was previously pruned — the honest number.
     */
-  private[graft] def probe(df: DataFrame): Unit =
-    df.select(count(lit(1)), bit_xor(xxhash64(df.columns.map(col): _*))).head()
+  private[graft] def probe(df: DataFrame): Unit = checksum(df)
 
-  /** probe + row count in one action — BenchOne's variant, same plan
-    * semantics as `probe` so its numbers are comparable to the driver's. */
-  private[graft] def probeRows(df: DataFrame): Long =
-    df.select(count(lit(1)), bit_xor(xxhash64(df.columns.map(col): _*)))
-      .head().getLong(0)
+  /** The probe's value: (row count, whole-row hash), an empty result
+    * hashing to 0. Order-insensitive, so two plans of one query compare
+    * equal whatever their partitioning. */
+  private[graft] def checksum(df: DataFrame): (Long, Long) = {
+    val r = df.select(count(lit(1)), bit_xor(xxhash64(df.columns.map(col): _*))).head()
+    (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // n warm runs per query, min reported: one noisy sample (GC pause,
     // plan-cache interaction from neighboring queries in the long run)
     // cannot masquerade as a regression — the round-2 q08 lesson
     val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt)
-    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt)
-      .config("spark.ui.enabled", "false")
-      // a WARN mid-run (e.g. SparkStringUtils plan truncation) can land
-      // between stdout flushes and corrupt the single JSON result line the
-      // driver parses — BENCH_r03 came back "parsed: null" exactly this way.
-      // Nothing below ERROR may write to the console during a bench run.
-      .config("spark.sql.debug.maxToStringFields", "2000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = session()
     // runtime codegen-bailout detection (the q296 lesson: a silent
     // interpreted-mode fallback is invisible to plan strings and costs
     // up to 36×) — any query that executes interpreted is NAMED in the

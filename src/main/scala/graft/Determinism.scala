@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions.{bit_xor, col, count, lit, xxhash64}
-
 /** Determinism gate: every registered query, evaluated under two different
   * physical layouts (shuffle partition counts 5 and 32 — different
   * reduction trees, different row orders, different AQE decisions), must
@@ -32,12 +30,8 @@ object Determinism {
 
     def checksum(name: String, parts: Int): Either[String, (Long, Long)] = {
       spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
-      try {
-        val df = SparkEntry.queries(name)(spark, sfDir)
-        val r = df.select(count(lit(1)).as("n"),
-          bit_xor(xxhash64(df.columns.map(col): _*)).as("h")).head()
-        Right((r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1)))
-      } catch { case e: Throwable => Left(s"${e.getClass.getSimpleName}: ${e.getMessage}") }
+      try Right(Bench.checksum(SparkEntry.queries(name)(spark, sfDir)))
+      catch { case e: Throwable => Left(s"${e.getClass.getSimpleName}: ${e.getMessage}") }
     }
 
     val only = sys.env.get("SPARK_GRAFT_DET_ONLY")

@@ -122,6 +122,16 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   */
 object GraftSession {
 
+  /** Integer setting `key` of the active session, read on every call so a
+    * runtime `spark.conf.set` takes effect on the next plan. A value that
+    * is not an integer in `[0, max]` fails naming the key and the value. */
+  def nonNegativeConf(key: String, default: Long, max: Long = Long.MaxValue): Long =
+    SparkSession.active.conf.getOption(key).fold(default) { raw =>
+      raw.trim.toLongOption.filter(v => v >= 0 && v <= max).getOrElse(
+        throw new IllegalArgumentException(
+          s"$key must be an integer in [0, $max], got '$raw'"))
+    }
+
   def builder(master: String = "local[*]", shufflePartitions: Int = 0,
               appName: String = "graft"): SparkSession.Builder = {
     val parts =

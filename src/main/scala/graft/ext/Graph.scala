@@ -31,9 +31,7 @@ object Graph {
     * and every sf0.1 arm choice are unchanged.
     */
   private[ext] def BroadcastBytes: Long =
-    org.apache.spark.sql.SparkSession.active.conf
-      .getOption("spark.graft.broadcastBytes").map(_.trim.toLong)
-      .getOrElse(128L << 20)
+    graft.GraftSession.nonNegativeConf("spark.graft.broadcastBytes", 128L << 20)
   // ^ conf-overridable (default 128 MiB) so a scale A/B can force every
   // byte-gated operator onto its shuffle arm on ONE box (set 0) without
   // a billion-row corpus — the same testability contract as the

@@ -24,18 +24,22 @@ object RankStats {
     *    cumulated on an N-row relation and broadcast back as offsets.
     *    Identical values for any partitioning (a running sum over a
     *    total order does not depend on where the cuts fall; range cuts
-    *    only make partitions contiguous in the order). MidrankScaleAB
-    *    measured the crossover: flat at 1M distinct values, distributed
-    *    1.8× faster at 4M, 2.3× at 16M — set N ≈ 2-3× total cores once
-    *    value keyspaces pass ~2M (the 100 TB posture; r12 VERDICT #8).
+    *    only make partitions contiguous in the order). Measured
+    *    crossover on synthetic distinct-value relations: flat at 1M
+    *    distinct values, distributed 1.8× faster at 4M, 2.3× at 16M — set
+    *    N ≈ 2-3× total cores once value keyspaces pass ~2M (the 100 TB
+    *    posture; r12 VERDICT #8). Both arms' checksums and warm times on
+    *    the registered midrank queries: `graft.Tool ab <sfDir>
+    *    'spark.graft.midrankPartitions=1|8' q315_ks_statistic
+    *    q317_gate_auc q344_kruskal_wallis`.
     * `ordCols` must be a total order (callers pass collapsed DISTINCT
     * values), or the cumulative sum itself is ill-defined.
     */
   private[ext] def cumSums(df: DataFrame, ordCols: Seq[Column],
                            valueCols: Seq[String]): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val parts = org.apache.spark.sql.SparkSession.active.conf
-      .getOption("spark.graft.midrankPartitions").map(_.trim.toInt).getOrElse(1)
+    val parts = graft.GraftSession.nonNegativeConf(
+      "spark.graft.midrankPartitions", 1, Int.MaxValue).toInt
     if (parts <= 1) {
       // callers pass the collapsed distinct-value relation (bounded by
       // the VALUE DOMAIN, not the corpus); the distributed arm above the

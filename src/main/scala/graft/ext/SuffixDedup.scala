@@ -83,8 +83,10 @@ object SuffixDedup {
     * [[Graph.BroadcastBytes]] posture applied to the one text-carrying
     * broadcast in this module (the former 4M-POSITION bound priced a
     * string row like a 2-long row; r12 VERDICT #5). Shares the
-    * `spark.graft.broadcastBytes` override so the ArmScaleAB harness can
-    * force the string-keyed exchange arm on one box.
+    * `spark.graft.broadcastBytes` override, so `graft.Tool ab <sfDir>
+    * 'spark.graft.broadcastBytes=134217728|0' q362_substr_dup_spans
+    * q368_longest_repeat q376_cross_corpus_repeat` forces the string-keyed
+    * exchange arm on one box and compares it with the broadcast arm.
     */
   private def BroadcastRepBytes: Long = Graph.BroadcastBytes
   private def packDP(d: Column, p: Column): Column =

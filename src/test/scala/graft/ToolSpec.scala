@@ -1,0 +1,55 @@
+package graft
+
+/** Drives [[Tool]] inside the shared test session. The first `ab` case
+  * is the parity floor of the byte-gated two-arm operators: it is the only
+  * spec that forces their shuffle arms (`spark.graft.broadcastBytes=0`). */
+class ToolSpec extends SparkSpec {
+
+  private val SfDir = "/root/testdata/sf0.001"
+
+  private def output(args: String*): (Int, String) = {
+    val buf = new java.io.ByteArrayOutputStream
+    val code = Console.withOut(buf)(Tool.run(spark, args.toArray))
+    (code, buf.toString("UTF-8"))
+  }
+
+  test("ab: broadcast and shuffle arms of the byte-gated operators agree") {
+    val key = "spark.graft.broadcastBytes"
+    val (code, out) = output("ab", SfDir, s"$key=134217728|0",
+      "q101_triangles", "q273_hyperanf", "q305_assortativity",
+      "q306_local_clustering", "q333_kcore", "q362_substr_dup_spans",
+      "q368_longest_repeat", "q376_cross_corpus_repeat")
+    assert(code == 0, out)
+    assert(out.linesIterator.count(_.endsWith("PARITY=OK")) == 8, out)
+    assert(spark.conf.getOption(key).isEmpty, "ab must unset the key it had to set")
+  }
+
+  test("ab: restores a key that was set before the run") {
+    val key = "spark.graft.midrankPartitions"
+    spark.conf.set(key, "2")
+    try {
+      val (code, out) = output("ab", SfDir, s"$key=1|4", "q344_kruskal_wallis")
+      assert(code == 0, out)
+      assert(spark.conf.get(key) == "2")
+    } finally spark.conf.unset(key)
+  }
+
+  test("time: prints one timing line per named query") {
+    val (code, out) = output("time", SfDir, "--reps", "1", "q01_retail_agg")
+    assert(code == 0, out)
+    assert(out.linesIterator.exists(l =>
+      l.startsWith("TIME q01_retail_agg") && l.contains(" rows")), out)
+  }
+
+  test("plan: prints the formatted physical plan") {
+    val (code, out) = output("plan", SfDir, "q01_retail_agg")
+    assert(code == 0, out)
+    assert(out.contains("## q01_retail_agg"), out)
+    assert(out.contains("Exchange"), out)
+  }
+
+  test("an unknown subcommand or query name is rejected") {
+    assert(output("nope")._1 == 2)
+    intercept[IllegalArgumentException](output("plan", SfDir, "q0_no_such_query"))
+  }
+}

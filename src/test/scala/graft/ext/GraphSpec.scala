@@ -496,4 +496,15 @@ class GraphSpec extends SparkSpec {
       case (k, None)    => conf.unset(k)
     }
   }
+
+  test("spark.graft.broadcastBytes: a malformed or negative value fails naming the key") {
+    val key = "spark.graft.broadcastBytes"
+    Seq("12x", "-1").foreach { bad =>
+      spark.conf.set(key, bad)
+      try {
+        val e = intercept[IllegalArgumentException](Graph.BroadcastBytes)
+        assert(e.getMessage.contains(key) && e.getMessage.contains(s"'$bad'"), e.getMessage)
+      } finally spark.conf.unset(key)
+    }
+  }
 }

@@ -362,4 +362,17 @@ class RankStatsSpec extends SparkSpec {
     try assert(all() == single)
     finally spark.conf.unset("spark.graft.midrankPartitions")
   }
+
+  test("spark.graft.midrankPartitions: a malformed or negative value fails naming the key") {
+    val key = "spark.graft.midrankPartitions"
+    val d = df("g STRING, v BIGINT", Seq(Row("a", 1L), Row("b", 2L)))
+    Seq("12x", "-1").foreach { bad =>
+      spark.conf.set(key, bad)
+      try {
+        val e = intercept[IllegalArgumentException](
+          RankStats.kruskalWallis(d, col("g"), col("v")))
+        assert(e.getMessage.contains(key) && e.getMessage.contains(s"'$bad'"), e.getMessage)
+      } finally spark.conf.unset(key)
+    }
+  }
 }

@@ -4,7 +4,7 @@
 # rewrite class files under the lazy-loading JVM (the gate.sh discipline
 # applied to benching). Usage:
 #   tools/bench_frozen.sh                 # full-suite graft.Bench
-#   tools/bench_frozen.sh graft.BenchOne q101_triangles /root/testdata/sf0.1 3
+#   tools/bench_frozen.sh graft.Tool time <sfDir> --reps 3 q101_triangles
 # Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, SPARK_GRAFT_BENCH_REPS,
 #      SPARK_GRAFT_BENCH_ONLY pass through. FROZEN_CLASSES reuses a prior
 #      freeze (skip the copy).
