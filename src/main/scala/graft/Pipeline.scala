@@ -9,9 +9,21 @@ import graft.load.Sinks
 import graft.transform.{Aggregate, Clean, Enrich, Inventory}
 
 /** The reference's full transform DAG (portfolio-etl.py:581-775, SURVEY.md
-  * §3.3) as one lazy Spark pipeline with 11 sink outputs
-  * (2 aggregate reports, a 3-path inventory fan-out, and 6 dated brand /
-  * wholesale reports).
+  * §3.3) as one Spark pipeline with 11 sink outputs (2 aggregate reports, a
+  * 3-path inventory fan-out, and 6 dated brand / wholesale reports), all
+  * derived from one cleaned `(sku, qty, site)` sales fact.
+  *
+  * [[build]] is lazy: each output re-runs the extract, union and clean when
+  * it is acted on. [[run]] computes the fact once per run instead: it
+  * persists the cleaned frame, every sink reads the cached rows, and the
+  * cache is released when the sinks are done, whether they succeeded or
+  * not. That is `persist` (recomputable from lineage) and not a checkpoint
+  * or a parquet materialize because the feeds are read-only inputs of a
+  * run: a lost cache block re-reads them and gets the same rows. The one
+  * input a run overwrites, the stock file, keeps its own durable
+  * materialize in `Sinks.csvFanOut`. The `Outputs` that [[run]] returns
+  * are still lazy frames over the feeds, so acting on them after [[run]]
+  * recomputes from the feeds.
   *
   * Divergences from the reference, all documented in SURVEY.md §7.4:
   * the cross-frame mask bug at :769 is implemented with its intended
@@ -52,10 +64,12 @@ object Pipeline {
     * @param primaryBrand / otherBrands the brand split literals (:688-689)
     */
   def build(salesFrames: Seq[DataFrame], dims: Dims, runDate: Date,
-            primaryBrand: String, otherBrands: Seq[String]): Outputs = {
-    // :581-607 union + clean
-    val sales = Clean.cleanSales(salesFrames)
+            primaryBrand: String, otherBrands: Seq[String]): Outputs =
+    derive(Clean.cleanSales(salesFrames), dims, runDate, primaryBrand, otherBrands)
 
+  /** Every output of the DAG over the cleaned sales fact (:581-607). */
+  private def derive(sales: DataFrame, dims: Dims, runDate: Date,
+                     primaryBrand: String, otherBrands: Seq[String]): Outputs = {
     // branch A: retail agg → wholesale mapping (:610-632)
     val soldValue = Aggregate.retailAgg(sales)
     val finalResult = Aggregate.wholesaleAgg(soldValue, dims.skuMap)
@@ -85,24 +99,28 @@ object Pipeline {
   }
 
   /** Executes the DAG and writes the reference's 11 CSV sinks under
-    * `outDir` (K1-K3). `newstock` goes through the materialize-first
-    * fan-out because the reference overwrites its own input file
-    * (SURVEY.md §7.4-d).
+    * `outDir` (K1-K3). The cleaned sales fact is persisted for the duration
+    * of the sink writes and unpersisted before returning or throwing.
+    * `newstock` goes through the materialize-first fan-out because the
+    * reference overwrites its own input file (SURVEY.md §7.4-d).
     */
   def run(salesFrames: Seq[DataFrame], dims: Dims, runDate: Date, outDir: String,
           primaryBrand: String = "brand1", otherBrands: Seq[String] = Seq("brand2", "brand3")): Outputs = {
-    val o = build(salesFrames, dims, runDate, primaryBrand, otherBrands)
-    val day = runDate.toLocalDate
-    Sinks.csvReport(o.soldValueRetail, s"$outDir/soldvalueretail.csv")
-    Sinks.csvReport(o.soldWholesale, s"$outDir/sold_itemswholesale.csv")
-    Sinks.csvFanOut(o.newStock, Seq(
-      s"$outDir/newstock.csv", s"$outDir/newstock_copy1.csv", s"$outDir/newstock_copy2.csv"))
-    Sinks.datedCsv(o.brandPrimary, s"$outDir/brand1_sales", day)
-    Sinks.datedCsv(o.brandOthers, s"$outDir/brand2_sales", day)
-    Sinks.datedCsv(o.brandPrimaryAgg, s"$outDir/brand1_sales_agg", day, "-brand1")
-    Sinks.datedCsv(o.brandOthersAgg, s"$outDir/brand2_sales_agg", day, "-brand2s")
-    Sinks.datedCsv(o.wholesalePrimary, s"$outDir/wholesale_brand1", day)
-    Sinks.datedCsv(o.wholesaleOthers, s"$outDir/wholesale_brand2", day)
-    o
+    val sales = Clean.cleanSales(salesFrames).persist()
+    try {
+      val o = derive(sales, dims, runDate, primaryBrand, otherBrands)
+      val day = runDate.toLocalDate
+      Sinks.csvReport(o.soldValueRetail, s"$outDir/soldvalueretail.csv")
+      Sinks.csvReport(o.soldWholesale, s"$outDir/sold_itemswholesale.csv")
+      Sinks.csvFanOut(o.newStock, Seq(
+        s"$outDir/newstock.csv", s"$outDir/newstock_copy1.csv", s"$outDir/newstock_copy2.csv"))
+      Sinks.datedCsv(o.brandPrimary, s"$outDir/brand1_sales", day)
+      Sinks.datedCsv(o.brandOthers, s"$outDir/brand2_sales", day)
+      Sinks.datedCsv(o.brandPrimaryAgg, s"$outDir/brand1_sales_agg", day, "-brand1")
+      Sinks.datedCsv(o.brandOthersAgg, s"$outDir/brand2_sales_agg", day, "-brand2s")
+      Sinks.datedCsv(o.wholesalePrimary, s"$outDir/wholesale_brand1", day)
+      Sinks.datedCsv(o.wholesaleOthers, s"$outDir/wholesale_brand2", day)
+      o
+    } finally sales.unpersist()
   }
 }

@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 import java.sql.{Date, Timestamp}
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.functions.{col, sum}
 import graft.extract.{Excel, Feeds, FileFeed, Payloads}
 
 /** The whole reference program end-to-end (SURVEY.md §3): all 13 source
@@ -89,10 +90,23 @@ class FullEtlSpec extends SparkSpec {
     val inv = o.newStock.collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
     assert(inv == Map("alpha" -> 80.0, "beta" -> 41.0, "gamma" -> 16.0))
 
-    // all 9 sink directories written
-    val sinks = new java.io.File(outDir).listFiles().map(_.getName).toSet
-    assert(Seq("soldvalueretail.csv", "sold_itemswholesale.csv", "newstock.csv",
-      "newstock_copy1.csv", "newstock_copy2.csv", "brand1_sales", "brand2_sales",
-      "wholesale_brand1", "wholesale_brand2").forall(sinks.contains), s"sinks: $sinks")
+    assert(PipelineSpec.missingSinks(outDir).isEmpty,
+      s"missing sinks: ${PipelineSpec.missingSinks(outDir)}")
+
+    // the six dated reports read back: (rows, qty total). Line-level sales
+    // are A-1 ×5 (brand1), B-2 ×3 and C-3 ×3 (brand2/brand3); the aggs
+    // have one row per (sku, cost), the wholesale reports one per sku_name
+    def readBack(sink: String): (Long, Double) = {
+      val d = spark.read.option("header", "true").csv(s"$outDir/$sink")
+      (d.count(), d.agg(sum(col("qty").cast("double"))).head().getDouble(0))
+    }
+    val dated = Map(
+      "brand1_sales/06-01-2024.csv" -> (5L, 10.0),
+      "brand2_sales/06-01-2024.csv" -> (6L, 13.0),
+      "brand1_sales_agg/06-01-2024-brand1.csv" -> (1L, 10.0),
+      "brand2_sales_agg/06-01-2024-brand2s.csv" -> (2L, 13.0),
+      "wholesale_brand1/06-01-2024.csv" -> (1L, 20.0),
+      "wholesale_brand2/06-01-2024.csv" -> (2L, 13.0))
+    assert(dated.map { case (sink, _) => sink -> readBack(sink) } == dated)
   }
 }
