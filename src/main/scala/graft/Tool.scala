@@ -30,8 +30,9 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *  - `ab`: runs each query under every value of one session conf key
   *    and compares the checksums, e.g.
   *    `ab <sfDir> 'spark.graft.broadcastBytes=134217728|0' q333_kcore`
-  *    forces the byte-gated shuffle arm. Exits 1 on any mismatch; the
-  *    key's prior value is restored afterwards.
+  *    forces the shuffle arm of every two-arm Graph and SuffixDedup
+  *    operator (that key is their one broadcast budget). Exits 1 on any
+  *    mismatch; the key's prior value is restored afterwards.
   *
   * Checksums, never `count()`: under `count()` ColumnPruning deletes any
   * operator whose outputs the count does not reference, so the timed or

@@ -19,27 +19,10 @@ import graft.ext.Pin.PinOps
   */
 object Graph {
 
-  /** Broadcast BYTE budget for the two-arm gates (the hash relation is
-    * resident on the driver and every executor). Effective limits are
-    * `min(callerRowLimit, BroadcastBytes / estimated row width)`: the
-    * former flat 4M-row bounds were calibrated for 2-long rows and
-    * over-admitted wide rows — a 4M-row HyperANF register relation at
-    * log2m=4 is ~17× the payload of a rank relation (r12 VERDICT #5 /
-    * ADVICE). 128 MiB sits comfortably inside executor memory and far
-    * under the 8 GiB broadcast cap; row-count parameters keep their 4M
-    * defaults so the A/B harnesses (limit = 0 forces the shuffle arm)
-    * and every sf0.1 arm choice are unchanged.
-    */
-  private[ext] def BroadcastBytes: Long =
-    graft.GraftSession.nonNegativeConf("spark.graft.broadcastBytes", 128L << 20)
-  // ^ conf-overridable (default 128 MiB) so a scale A/B can force every
-  // byte-gated operator onto its shuffle arm on ONE box (set 0) without
-  // a billion-row corpus — the same testability contract as the
-  // limit = 0 row parameters (r12 ADVICE #3).
-
-  /** `min(rowLimit, BroadcastBytes / rowBytes)` — the effective row gate. */
-  private def gateLimit(rowLimit: Long, rowBytes: Long): Long =
-    math.min(rowLimit, BroadcastBytes / rowBytes)
+  /** `d` hinted for broadcast on the small arm of a [[BroadcastGate]]
+    * decision, as is on the shuffle arm. */
+  private def arm(small: Boolean, d: DataFrame): DataFrame =
+    if (small) broadcast(d) else d
 
   /** Fixed-iteration integer PageRank over a directed edge list.
     *
@@ -57,12 +40,12 @@ object Graph {
     * previous round's blocks (the overwritten reference is the only one).
     *
     * TWO ARMS, picked by node count (one exact `nodes.count()` over the
-    * checkpointed node set, paid once per run):
-    *  - nodes ≤ `broadcastNodeLimit`: edges partition by DST once; each
+    * checkpointed node set, paid once per run, against [[BroadcastGate]]):
+    *  - the rank relation fits: edges partition by DST once; each
     *    round broadcasts the keyspace-sized rank relation into the edges
     *    and the dst-aggregate reuses the resident partitioning — the big
     *    relation crosses the wire exactly once for the whole run.
-    *  - nodes > limit (a billion-node web/user graph — the regime where a
+    *  - it does not (a billion-node web/user graph — the regime where a
     *    per-round O(n) broadcast would kill the driver and every
     *    executor): edges partition by SRC once, so the rank join is a
     *    co-located shuffle join (only the keyspace-sized rank relation
@@ -74,8 +57,7 @@ object Graph {
     */
   def pageRank(edges: DataFrame, iterations: Int,
                scale: Long = 1000000000000L,
-               srcCol: String = "src", dstCol: String = "dst",
-               broadcastNodeLimit: Long = 4000000L): DataFrame = {
+               srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
     require(iterations >= 1, "iterations must be >= 1")
     // pin the edge projection once: it feeds the node derivation (twice)
     // AND the degree/partition setup — unpinned, each consumer re-ran the
@@ -84,22 +66,19 @@ object Graph {
     val nodes = e0.select(col("src").as("id"))
       .union(e0.select(col("dst").as("id"))).distinct()
       .pin()
-    // rank rows are (id, pr[, seed]) — ~64 B built; byte-capped (see BroadcastBytes)
-    val small = nodes.count() <= gateLimit(broadcastNodeLimit, 64)
+    // rank rows are (id, pr[, seed]) — ~64 B built
+    val small = BroadcastGate.fits(nodes.count(), 64)
     val e = e0.repartition(col(if (small) "dst" else "src"))
     val deg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
-    val withDeg = e.join(if (small) broadcast(deg) else deg, "src")
+    val withDeg = e.join(arm(small, deg), "src")
       .pin()
     var pr = nodes.withColumn("pr", lit(scale))
     for (_ <- 1 to iterations) {
-      val prSide = if (small) broadcast(pr) else pr
+      val prSide = arm(small, pr)
       val sums = withDeg.join(prSide, withDeg("src") === prSide("id"))
         .select(col("dst").as("id"), expr("pr div outdeg").as("c"))
         .groupBy("id").agg(sum("c").as("s"))
-      // small arm: sums is keyspace-sized too — broadcast it into the
-      // node fold-back (build side of the LEFT join), so the pinned node
-      // relation (unknown stats) is never re-shuffled per round
-      pr = nodes.join(if (small) broadcast(sums) else sums, Seq("id"), "left")
+      pr = nodes.join(arm(small, sums), Seq("id"), "left")
         .na.fill(0L, Seq("s"))
         .select(col("id"),
           (lit(15L * scale / 100L) + expr("(85 * s) div 100")).as("pr"))
@@ -124,8 +103,7 @@ object Graph {
     */
   def personalizedPageRank(edges: DataFrame, seeds: DataFrame, iterations: Int,
                            scale: Long = 1000000000000L,
-                           srcCol: String = "src", dstCol: String = "dst",
-                           broadcastNodeLimit: Long = 4000000L): DataFrame = {
+                           srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
     require(iterations >= 1, "iterations must be >= 1")
     // pinned once — the [[pageRank]] rationale (node derivation + setup
     // each re-ran the caller's edge construction otherwise)
@@ -136,21 +114,19 @@ object Graph {
         Seq("id"), "left")
       .na.fill(0L, Seq("__seed"))
       .pin()
-    // rank rows are (id, pr[, seed]) — ~64 B built; byte-capped (see BroadcastBytes)
-    val small = nodes.count() <= gateLimit(broadcastNodeLimit, 64)
+    // rank rows are (id, pr[, seed]) — ~64 B built
+    val small = BroadcastGate.fits(nodes.count(), 64)
     val e = e0.repartition(col(if (small) "dst" else "src"))
     val deg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
-    val withDeg = e.join(if (small) broadcast(deg) else deg, "src")
+    val withDeg = e.join(arm(small, deg), "src")
       .pin()
     var pr = nodes.select(col("id"), (col("__seed") * scale).as("pr"), col("__seed"))
     for (_ <- 1 to iterations) {
-      val prSide = if (small) broadcast(pr) else pr
+      val prSide = arm(small, pr)
       val sums = withDeg.join(prSide, withDeg("src") === prSide("id"))
         .select(col("dst").as("id"), expr("pr div outdeg").as("c"))
         .groupBy("id").agg(sum("c").as("s"))
-      // small arm: broadcast the keyspace-sized sums into the node
-      // fold-back — the [[pageRank]] rationale
-      pr = nodes.join(if (small) broadcast(sums) else sums, Seq("id"), "left")
+      pr = nodes.join(arm(small, sums), Seq("id"), "left")
         .na.fill(0L, Seq("s"))
         .select(col("id"),
           (col("__seed") * lit(15L * scale / 100L) + expr("(85 * s) div 100")).as("pr"),
@@ -307,8 +283,7 @@ object Graph {
     * fact rows. `localCheckpoint(eager)` per round keeps lineage O(1),
     * the same discipline as [[pageRank]] / [[kCorePeel]].
     */
-  def labelPropagation(edges: DataFrame, rounds: Int,
-                       broadcastNodeLimit: Long = 4000000L): DataFrame = {
+  def labelPropagation(edges: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 1, "rounds must be >= 1")
     // checkpoint the UNDIRECTED list first: the symmetric view references
     // it twice (union of both orientations) — un-cut, one checkpoint job
@@ -318,15 +293,8 @@ object Graph {
     val sym = und.unionAll(und.select(col("v").as("u"), col("u").as("v")))
       .pin()
     val nodes = sym.select(col("u").as("id")).distinct().pin()
-    // two-arm gate, the [[pageRank]] pattern: labels are EXACTLY one row
-    // per node, but a pinned relation reports unknown stats (LogicalRDD),
-    // so the planner sort-merge-joins it against the edge list and pays
-    // an edge-sized exchange EVERY round. Below the limit, broadcast the
-    // keyspace-sized side explicitly — the edge relation then never
-    // re-shuffles for the join; past it (billion-node graphs) the
-    // shuffle join is the only correct posture. Identical rows either way.
-    // label rows are (id, lbl) — ~48 B built; byte-capped (see BroadcastBytes)
-    val small = nodes.count() <= gateLimit(broadcastNodeLimit, 48)
+    // label rows are (id, lbl) — ~48 B built
+    val small = BroadcastGate.fits(nodes.count(), 48)
     var labels = nodes.withColumn("lbl", col("id"))
     // arg-max packing: (c, −lbl) rides ONE DECIMAL(38,0) `c·2⁶⁴ +
     // (−lbl + 2⁶³)` — a struct-typed max buffer is not
@@ -340,7 +308,7 @@ object Graph {
     for (_ <- 1 to rounds) {
       val lblSide = labels.select(col("id").as("u"), col("lbl").as("nl"))
       labels = sym
-        .join(if (small) broadcast(lblSide) else lblSide, "u")
+        .join(arm(small, lblSide), "u")
         .select(col("v").as("id"), col("nl"))
         .groupBy("id", "nl")
         .agg(count(lit(1)).as("c"))
@@ -373,28 +341,21 @@ object Graph {
     * settled relation grows monotonically but is only ever probed by
     * key (anti-join), never expanded.
     */
-  def bfsDistances(edges: DataFrame, sources: DataFrame, rounds: Int,
-                   broadcastNodeLimit: Long = 4000000L): DataFrame = {
+  def bfsDistances(edges: DataFrame, sources: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 1, "rounds must be >= 1")
     val und = edges.select(col("u"), col("v")).pin()
     val sym = und.unionAll(und.select(col("v").as("u"), col("u").as("v")))
       .pin()
-    // two-arm gate on the (conservative) edge count: frontier and settled
-    // are keyspace-sized, but pinned relations report unknown stats, so
-    // the planner would shuffle the symmetric edge list against them
-    // every round. Identical rows either way.
-    // settled/frontier are node-sized and nodes ≤ 2·|und| (r12 ADVICE:
-    // the edge-count read underestimates the node count by up to 2×),
-    // so the edge gate carries the 2× slack inside its row width
-    val small = und.count() <= gateLimit(broadcastNodeLimit, 2 * 48)
-    def gate(d: DataFrame): DataFrame = if (small) broadcast(d) else d
+    // settled/frontier rows are (id, dist) ~48 B, node-sized; nodes ≤
+    // 2·|und|, so the edge-count read carries the 2× slack in the width
+    val small = BroadcastGate.fits(und.count(), 2 * 48)
     var settled = sources.select(col("id")).distinct()
       .withColumn("dist", lit(0L)).pin()
     var frontier = settled.select("id")
     for (i <- 1 to rounds) {
-      val newf = sym.join(gate(frontier.select(col("id").as("u"))), "u")
+      val newf = sym.join(arm(small, frontier.select(col("id").as("u"))), "u")
         .select(col("v").as("id")).distinct()
-        .join(gate(settled.select("id")), Seq("id"), "left_anti")
+        .join(arm(small, settled.select("id")), Seq("id"), "left_anti")
         .pin()
       settled = settled.unionAll(newf.withColumn("dist", lit(i.toLong)))
         .pin()
@@ -421,23 +382,20 @@ object Graph {
     * keeps lineage O(1). On graphs where distances stabilize early the
     * frontier empties and later rounds are no-ops.
     */
-  def shortestPaths(edges: DataFrame, sources: DataFrame, rounds: Int,
-                    broadcastNodeLimit: Long = 4000000L): DataFrame = {
+  def shortestPaths(edges: DataFrame, sources: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 1, "rounds must be >= 1")
     val und = edges.select(col("u"), col("v"), col("w")).pin()
     val sym = und.unionAll(und.select(col("v").as("u"), col("u").as("v"), col("w")))
       .pin()
-    // two-arm frontier-broadcast gate on the (conservative) edge count —
-    // the [[bfsDistances]] rationale; identical rows either way
     // frontier rows are (id, dist), node-sized, nodes ≤ 2·|und| — the
     // [[bfsDistances]] 2× slack inside the row width
-    val small = und.count() <= gateLimit(broadcastNodeLimit, 2 * 56)
+    val small = BroadcastGate.fits(und.count(), 2 * 56)
     var dist = sources.select(col("id")).distinct()
       .withColumn("dist", lit(0L)).pin()
     var frontier = dist
     for (_ <- 1 to rounds) {
       val fSide = frontier.select(col("id").as("u"), col("dist").as("du"))
-      val cand = sym.join(if (small) broadcast(fSide) else fSide, "u")
+      val cand = sym.join(arm(small, fSide), "u")
         .select(col("v").as("id"), (col("du") + col("w")).as("dist"))
         .groupBy("id").agg(min("dist").as("dist"))
       val improved = cand
@@ -474,46 +432,28 @@ object Graph {
     * that re-execution dominated the wall clock 3× over (the q55
     * iterative-lineage lesson applied to a DAG that merely FANS OUT).
     *
-    * `broadcastEdgeLimit`: the adjacency relation carries every oriented
-    * edge twice (out- and in-arrays) — edge-sized payload, so the
-    * broadcast arm is chosen by edge count exactly like [[pageRank]]'s
-    * `broadcastNodeLimit`: a billion-edge graph can never silently pick
-    * the O(m) broadcast; above the limit the census joins become
-    * partitioned equi-joins on the endpoint keys (edge-sized exchanges —
-    * strictly narrower than the wedge-stream exchange the old closing
-    * join paid there). Both arms are the same integer census — identical
-    * rows.
+    * Arms ([[censusFits]]): the adjacency relation carries every oriented
+    * edge twice (out- and in-arrays) — an edge-sized payload, so a
+    * billion-edge graph never silently picks the O(m) broadcast; past
+    * the budget the census joins become partitioned equi-joins on the
+    * endpoint keys (edge-sized exchanges — strictly narrower than the
+    * wedge-stream exchange the old closing join paid there). Both arms
+    * are the same integer census — identical rows.
     */
-  def triangleCounts(edges: DataFrame,
-                     broadcastEdgeLimit: Long = 4000000L): DataFrame = {
+  def triangleCounts(edges: DataFrame): DataFrame = {
     val und = edges.select(col("u"), col("v")).pin()
     val deg = und.select(col("u").as("n")).union(und.select(col("v").as("n")))
       .groupBy("n").agg(count(lit(1)).as("d"))
       .pin() // feeds BOTH orientation joins + the arm gate: unpinned, each
              // join re-aggregated the edge list and the gate paid its own
              // O(m) pass over `oriented`
-    // |oriented| = |und| = Σd/2 — read the gate count off the NODE-sized
-    // pinned degree relation instead of scanning the edge list again
-    val degSum = deg.agg(sum("d"), count(lit(1))).head()
-    val edgeCount = (if (degSum.isNullAt(0)) 0L else degSum.getLong(0)) / 2
-    val nodeCount = degSum.getLong(1)
-    // byte-honest gate off the SAME one-row head: the census broadcasts
-    // the degree relation (~48 B/node) and the adjacency relation T
-    // (~64 B/node of row+array overhead + 16 B/edge of elements) — cap
-    // the total at BroadcastBytes alongside the caller's row limit
-    val small = edgeCount <= broadcastEdgeLimit &&
-      112L * nodeCount + 16L * edgeCount <= BroadcastBytes
-    // below the limit the keyspace-sized degree relation broadcasts into
-    // the orientation joins (pinned stats are unknown, so the planner
-    // alone would shuffle the edge list twice); same arm as the census
-    // joins — identical rows either way
-    def gate(d: DataFrame): DataFrame = if (small) broadcast(d) else d
+    val small = censusFits(deg)
     // orient: src = smaller (deg, id), dst = larger — a total order, so
     // the oriented graph is acyclic and every triangle has ONE wedge
     // (a→b, a→c, b→c) with a < b < c in orientation order
     val oriented = und
-      .join(gate(deg.select(col("n").as("u"), col("d").as("du"))), "u")
-      .join(gate(deg.select(col("n").as("v"), col("d").as("dv"))), "v")
+      .join(arm(small, deg.select(col("n").as("u"), col("d").as("du"))), "u")
+      .join(arm(small, deg.select(col("n").as("v"), col("d").as("dv"))), "v")
       .select(
         when(struct(col("du"), col("u")) < struct(col("dv"), col("v")), col("u"))
           .otherwise(col("v")).as("src"),
@@ -521,6 +461,18 @@ object Graph {
           .otherwise(col("u")).as("dst"))
       .pin()
     triangleCensus(oriented, small)
+  }
+
+  /** The triangle census's [[BroadcastGate]] decision: it broadcasts the
+    * degree relation (~48 B/node) and the adjacency relation (~64 B/node
+    * of row and array overhead + 16 B/edge of elements). Both counts come
+    * off one aggregate over the pinned degree relation (|edges| = Σd/2),
+    * not a scan of the edge list.
+    */
+  private def censusFits(deg: DataFrame): Boolean = {
+    val h = deg.agg(sum("d"), count(lit(1))).head()
+    val edgeCount = (if (h.isNullAt(0)) 0L else h.getLong(0)) / 2
+    BroadcastGate.fits(1, 112L * h.getLong(1) + 16L * edgeCount)
   }
 
   /** Edge-iterator triangle census over a degree-ORIENTED (acyclic) edge
@@ -551,7 +503,6 @@ object Graph {
     * only edge-sized rows ever cross an exchange.
     */
   private def triangleCensus(oriented: DataFrame, small: Boolean): DataFrame = {
-    def gate(d: DataFrame): DataFrame = if (small) broadcast(d) else d
     // one pass builds BOTH arrays: out-neighbors (role=true) and
     // in-neighbors (role=false); collect_list skips the nulls the
     // opposite role leaves. Arrays cast to BIGINT for the native merge.
@@ -564,9 +515,9 @@ object Graph {
         sort_array(collect_list(when(!col("o"), col("x")))).as("ib"))
       .pin() // fans out into both census joins (two broadcasts/exchanges)
     val paired = oriented
-      .join(gate(t.select(col("n").as("src"), col("ob").as("so"), col("ib").as("si"))),
+      .join(arm(small, t.select(col("n").as("src"), col("ob").as("so"), col("ib").as("si"))),
         "src")
-      .join(gate(t.select(col("n").as("dst"), col("ob").as("od"), col("ib").as("id"))),
+      .join(arm(small, t.select(col("n").as("dst"), col("ob").as("od"), col("ib").as("id"))),
         "dst")
       .select(col("src"), col("dst"),
         graft.functions.VectorFunctions.sortedInterCount(col("so"), col("od")).as("cf"),
@@ -652,8 +603,7 @@ object Graph {
     * iterative-lineage discipline). Nothing is ever broadcast-sized but
     * the survivor keys, and those only if Spark's own stats choose to.
     */
-  def kCore(edges: DataFrame, k: Int, rounds: Int = 12,
-            broadcastNodeLimit: Long = 4000000L): DataFrame = {
+  def kCore(edges: DataFrame, k: Int, rounds: Int = 12): DataFrame = {
     require(k >= 1 && rounds >= 1, s"bad kCore params: k=$k rounds=$rounds")
     val und = edges.select(col("u"), col("v"))
     // symmetric, deduped (deg = out-deg), HASH-PARTITIONED ON u: the
@@ -672,20 +622,14 @@ object Graph {
     // full `rounds` unroll would (the oracle replays the full unroll) —
     // the remaining rounds are pure wasted O(m) scans at any scale
     var n = e.count()
-    // two-arm gate (the [[pageRank]] pattern): the survivor set is
-    // keyspace-sized but pinned relations report unknown stats, so the
-    // planner would shuffle the full edge list against it twice per
-    // round; below the limit broadcast the survivors — rounds then never
-    // re-shuffle the edge relation. Gated on the EDGE count (≥ node
-    // count — conservative); identical rows either way.
     // survivor rows are single keys (~40 B built), survivors ≤ nodes ≤ n
-    val small = n <= gateLimit(broadcastNodeLimit, 40)
+    val small = BroadcastGate.fits(n, 40)
     var r = 0
     var converged = false
     while (r < rounds && !converged) {
       val keep = e.groupBy("u").agg(count(lit(1)).as("d"))
         .filter(col("d") >= k).select(col("u").as("n"))
-      val keepSide = if (small) broadcast(keep) else keep
+      val keepSide = arm(small, keep)
       e = e.join(keepSide.select(col("n").as("u")), Seq("u"))
         .join(keepSide.select(col("n").as("v")), Seq("v"))
         .select("u", "v").pin()
@@ -723,8 +667,7 @@ object Graph {
     * materialized (the kCenterGreedy discipline).
     */
   def neighborhoodFunction(edges: DataFrame, rounds: Int,
-                           log2m: Int = 4,
-                           broadcastNodeLimit: Long = 4000000L): DataFrame = {
+                           log2m: Int = 4): DataFrame = {
     require(rounds >= 1, "rounds must be >= 1")
     val m = 1 << log2m
     // pin the edge list once: unpinned, every round's neighbor join (and
@@ -747,14 +690,9 @@ object Graph {
       (0 until m).map(i =>
         when(bucket === i, rank).otherwise(lit(0)).cast("int").as(rCols(i))): _*)
       .pin()
-    // two-arm gate (the [[pageRank]] pattern): the register relation is
-    // one row per node, but pinned stats are unknown, so the planner
-    // would shuffle the edge list against it every round. The gate reads
-    // the TRUE node count off the just-pinned relation (cheap cached
-    // count — the former e.count() overestimated nodes AND priced the
-    // m-register row like a 2-long row, r12 ADVICE #2) and prices a row
-    // at 40 + 4m bytes, so wider register layouts tighten the limit.
-    val small = regs.count() <= gateLimit(broadcastNodeLimit, 40L + 4L * m)
+    // register rows are (node, m ints) — ~40 + 4m B, so wider register
+    // layouts tighten the gate; the count is the true node count
+    val small = BroadcastGate.fits(regs.count(), 40L + 4L * m)
     // each round's histogram is EAGERLY checkpointed (≤ rank-range rows)
     // before the round's register blocks are freed — a lazy histogram
     // would still reference blocks a localCheckpoint cannot recompute
@@ -768,8 +706,7 @@ object Graph {
     var out = hist(0, regs)
     for (t <- 1 to rounds) {
       val regsAsDst = regs.withColumnRenamed("node", "dst")
-      val fromNbrs = e.join(if (small) broadcast(regsAsDst) else regsAsDst,
-          Seq("dst"))
+      val fromNbrs = e.join(arm(small, regsAsDst), Seq("dst"))
         .select(col("src").as("node") +: rCols.map(col): _*)
       val next = regs.unionByName(fromNbrs)
         .groupBy(col("node"))
@@ -796,10 +733,10 @@ object Graph {
     * `scale` for hub-ier graphs.
     *
     * Scale shape per round (mirrors [[pageRank]], same two-arm gate):
-    * with nodes ≤ `broadcastNodeLimit` each half-step is one
+    * while the score relation fits [[BroadcastGate]] each half-step is one
     * keyspace-sized broadcast join into the dst-partitioned edge copy
     * plus one hash aggregate (map-side combined), one one-row max, one
-    * left join back to the node set. Past the limit, TWO checkpointed
+    * left join back to the node set. Past the budget, TWO checkpointed
     * edge copies (src- and dst-partitioned) make each half-step's score
     * join co-located — only the keyspace-sized score relation shuffles,
     * and the cross-direction aggregate pays the one unavoidable
@@ -807,8 +744,7 @@ object Graph {
     * lineage O(1) and frees the superseded round's blocks.
     */
   def hits(edges: DataFrame, iterations: Int, scale: Long = 1000000L,
-           srcCol: String = "src", dstCol: String = "dst",
-           broadcastNodeLimit: Long = 4000000L): DataFrame = {
+           srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
     require(iterations >= 1, "iterations must be >= 1")
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .distinct()
@@ -817,8 +753,8 @@ object Graph {
     val nodes = e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id"))).distinct()
       .pin()
-    // score rows are (id, score) — ~56 B built; byte-capped
-    val small = nodes.count() <= gateLimit(broadcastNodeLimit, 56)
+    // score rows are (id, score) — ~56 B built
+    val small = BroadcastGate.fits(nodes.count(), 56)
     // big-node arm: a second edge copy partitioned on SRC so the hub
     // half-step's score join is co-located too (the dst copy already
     // co-locates the authority half-step)
@@ -832,15 +768,12 @@ object Graph {
     def halfStep(score: DataFrame, scoreCol: String, joinKey: String,
                  groupKey: String, out: String): DataFrame = {
       val ed = eBy(joinKey)
-      val sSide = if (small) broadcast(score) else score
+      val sSide = arm(small, score)
       val raw = ed.join(sSide, ed(joinKey) === sSide("id"))
         .groupBy(col(groupKey).as("id"))
         .agg(sum(col(scoreCol)).as("s"))
       val m = raw.agg(max(col("s")).as("m"))
-      // small arm: the keyspace-sized half-step sums broadcast into the
-      // node fold-back (the [[pageRank]] rationale) — the pinned node
-      // relation is never re-shuffled per half-step
-      nodes.join(if (small) broadcast(raw) else raw, Seq("id"), "left")
+      nodes.join(arm(small, raw), Seq("id"), "left")
         .crossJoin(broadcast(m))
         .select(col("id"),
           expr(s"coalesce(s, 0L) * $scale div m").as(out))
@@ -888,24 +821,18 @@ object Graph {
     * arithmetic; nothing quadratic, no windows over facts.
     */
   def modularityReport(edges: DataFrame, labels: DataFrame,
-                       scale: Long = 1000000L,
-                       broadcastEdgeLimit: Long = 4000000L): DataFrame = {
+                       scale: Long = 1000000L): DataFrame = {
     val und = edges.select(col("u"), col("v")).pin()
     val m = und.count()
     require(m > 0, "modularityReport needs at least one edge")
     val lab = labels.select(col("node_id"), col("community"))
       .pin()
-    // keyspace-sized labels vs unknown pinned stats: same two-arm gate as
-    // [[labelPropagation]] — broadcast below the limit (edge count ≥ node
-    // count, conservative), shuffle join above it. Identical rows.
     // label rows are (node_id, community) ~48 B, nodes ≤ 2·m — the 2×
-    // edge-read slack rides the row width (r12 ADVICE #1/#3: literal
-    // lifted into a parameter, byte-capped)
-    def labSide(d: DataFrame): DataFrame =
-      if (m <= gateLimit(broadcastEdgeLimit, 2 * 48)) broadcast(d) else d
+    // edge-read slack rides the row width
+    val small = BroadcastGate.fits(m, 2 * 48)
     val eIn = und
-      .join(labSide(lab.select(col("node_id").as("u"), col("community").as("cu"))), "u")
-      .join(labSide(lab.select(col("node_id").as("v"), col("community").as("cv"))), "v")
+      .join(arm(small, lab.select(col("node_id").as("u"), col("community").as("cu"))), "u")
+      .join(arm(small, lab.select(col("node_id").as("v"), col("community").as("cv"))), "v")
       .filter(col("cu") === col("cv"))
       .groupBy(col("cu").as("community"))
       .agg(count(lit(1)).as("e_in"))
@@ -940,24 +867,17 @@ object Graph {
     * edge endpoints, one 4-moment aggregate — a single edge pass plus
     * degree-relation joins; nothing iterates, nothing collects.
     */
-  def degreeAssortativity(edges: DataFrame,
-                          broadcastNodeLimit: Long = 4000000L): DataFrame = {
+  def degreeAssortativity(edges: DataFrame): DataFrame = {
     val und = edges.select(col("u"), col("v")).pin()
     val deg = und.select(col("u").as("n")).unionAll(und.select(col("v").as("n")))
       .groupBy("n").agg(count(lit(1)).as("d"))
       .pin() // feeds both endpoint joins and the node count
-    // keyspace-sized degrees vs unknown pinned stats: broadcast below the
-    // limit so the symmetric edge stream never shuffles for its
-    // decoration joins; identical rows either way. The gate reads the
-    // TRUE node count off the just-pinned degree relation (one cached
-    // count — the former und.count() both overestimated nodes by up to
-    // 2× and scanned the wider edge relation; r12 ADVICE #1/#3)
-    val small = deg.count() <= gateLimit(broadcastNodeLimit, 48)
-    def gate(d: DataFrame): DataFrame = if (small) broadcast(d) else d
+    // degree rows are (n, d) — ~48 B built
+    val small = BroadcastGate.fits(deg.count(), 48)
     val sym = und.unionAll(und.select(col("v").as("u"), col("u").as("v")))
     val pts = sym
-      .join(gate(deg.select(col("n").as("u"), col("d").as("dx"))), "u")
-      .join(gate(deg.select(col("n").as("v"), col("d").as("dy"))), "v")
+      .join(arm(small, deg.select(col("n").as("u"), col("d").as("dx"))), "u")
+      .join(arm(small, deg.select(col("n").as("v"), col("d").as("dy"))), "v")
     val nn = deg.agg(count(lit(1)).as("n_nodes"))
     pts
       .agg(count(lit(1)).as("mm"), sum("dx").as("sx"),
@@ -983,13 +903,10 @@ object Graph {
     *
     * Scale shape: [[triangleCounts]]'s degree-oriented wedge
     * enumeration (O(Σ min-deg) fan-in, never a wedge DISTINCT) plus one
-    * degree aggregate and a keyspace-sized left join.
-    * `broadcastEdgeLimit` carries [[triangleCounts]]'s contract: the
-    * closing-join arm is chosen automatically by edge count — above the
-    * limit the closing join becomes a partitioned equi-join on (a, c).
+    * degree aggregate and a keyspace-sized left join, with
+    * [[triangleCounts]]'s census arms ([[censusFits]]).
     */
-  def localClustering(edges: DataFrame,
-                      broadcastEdgeLimit: Long = 4000000L): DataFrame = {
+  def localClustering(edges: DataFrame): DataFrame = {
     // inline [[triangleCounts]]'s wedge census rather than calling it:
     // sharing ONE materialization of the edge list and ONE degree
     // aggregate across orientation and normalization halves the edge
@@ -998,24 +915,10 @@ object Graph {
     val deg = und.select(col("u").as("n")).unionAll(und.select(col("v").as("n")))
       .groupBy("n").agg(count(lit(1)).as("d"))
       .pin() // feeds both orientation joins + the output
-    // automatic arm gate: |oriented| = |und| = Σdeg/2, and deg is already
-    // checkpointed — so the gate reads the NODE-sized cached relation
-    // instead of scanning the edge list (the r8 gate's oriented.count()
-    // was an extra O(m) cached pass per execution; part of the q306
-    // 5.65→7.59 s drift the r8 verdict flagged)
-    val degSum = deg.agg(sum("d"), count(lit(1))).head()
-    val edgeCount = (if (degSum.isNullAt(0)) 0L else degSum.getLong(0)) / 2
-    val nodeCount = degSum.getLong(1)
-    // byte-honest gate — the [[triangleCounts]] estimate off the same head
-    val small = edgeCount <= broadcastEdgeLimit &&
-      112L * nodeCount + 16L * edgeCount <= BroadcastBytes
-    // below the limit the keyspace-sized degree relation broadcasts into
-    // the orientation joins (pinned stats are unknown, so the planner
-    // alone would shuffle the edge list twice); identical rows either way
-    def gate(d: DataFrame): DataFrame = if (small) broadcast(d) else d
+    val small = censusFits(deg)
     val oriented = und
-      .join(gate(deg.select(col("n").as("u"), col("d").as("du"))), "u")
-      .join(gate(deg.select(col("n").as("v"), col("d").as("dv"))), "v")
+      .join(arm(small, deg.select(col("n").as("u"), col("d").as("du"))), "u")
+      .join(arm(small, deg.select(col("n").as("v"), col("d").as("dv"))), "v")
       .select(
         when(struct(col("du"), col("u")) < struct(col("dv"), col("v")), col("u"))
           .otherwise(col("v")).as("src"),

@@ -79,16 +79,6 @@ object SuffixDedup {
     */
   private val PosShift = 1099511627776L // 2^40
 
-  /** Broadcast byte budget for the seed's dup-pruned rep table — the
-    * [[Graph.BroadcastBytes]] posture applied to the one text-carrying
-    * broadcast in this module (the former 4M-POSITION bound priced a
-    * string row like a 2-long row; r12 VERDICT #5). Shares the
-    * `spark.graft.broadcastBytes` override, so `graft.Tool ab <sfDir>
-    * 'spark.graft.broadcastBytes=134217728|0' q362_substr_dup_spans
-    * q368_longest_repeat q376_cross_corpus_repeat` forces the string-keyed
-    * exchange arm on one box and compares it with the broadcast arm.
-    */
-  private def BroadcastRepBytes: Long = Graph.BroadcastBytes
   private def packDP(d: Column, p: Column): Column =
     (d.cast("decimal(38,0)") * PosShift + p).cast("decimal(38,0)")
   /** pmod (not div): negative tagged doc ids must floor, not truncate. */
@@ -144,20 +134,18 @@ object SuffixDedup {
         count(lit(1)).as("__n"))
       .filter(col("__n") >= 2) // ACTIVE positions only (see [[combine]])
       .select(col("__g"), unpackD(col("__m")).as("rd"), unpackP(col("__m")).as("rp"))
-    // BYTE-based gate (r12 VERDICT #5): the reps table carries gram TEXT,
-    // so a row-count bound calibrated for narrow rows could admit a
-    // multi-hundred-MB broadcast on a mid-sized corpus. Estimate the
-    // payload from the same one narrow aggregate over the pinned token
-    // relation: reps rows ≤ positions (Σ tokens), gram bytes ≈ depth ×
-    // (avg token bytes + 1 separator), ~48 B row overhead. No window
-    // text is ever materialized for the gate.
+    // [[BroadcastGate]] on the reps table, which carries gram TEXT: its
+    // payload is estimated from one narrow aggregate over the pinned
+    // token relation — reps rows ≤ positions (Σ tokens), gram bytes ≈
+    // depth × (avg token bytes + 1 separator), ~48 B row overhead. No
+    // window text is ever materialized for the gate.
     val nTok = toks.agg(sum(size(col("__ws"))),
       sum(expr("aggregate(__ws, 0L, (a, x) -> a + length(x))"))).head()
     val nPos = if (nTok.isNullAt(0)) 0L else nTok.getLong(0)
     val nChars = if (nTok.isNullAt(1)) 0L else nTok.getLong(1)
     val avgTok = if (nPos > 0) nChars / nPos + 1 else 1L
-    val estBytes = nPos * (depth * (avgTok + 1) + 48)
-    val repSide = if (estBytes <= BroadcastRepBytes) broadcast(reps) else reps
+    val repSide =
+      if (BroadcastGate.fits(nPos, depth * (avgTok + 1) + 48)) broadcast(reps) else reps
     grams.join(repSide, Seq("__g"))
       .select(col("d"), col("p"), col("rd"), col("rp"))
       .pin()

@@ -121,21 +121,8 @@ object Excel {
     * genuinely absent/broken feed degrades to the reference's 1-row marker.
     */
   def readFeed(spark: SparkSession, feed: FileFeed): DataFrame =
-    try {
-      val base = read(spark, feed.path)
-      val renamed = feed.renames.foldLeft(base) { case (df, (from, to)) =>
-        if (df.columns.contains(from)) df.withColumnRenamed(from, to) else df
-      }
-      import org.apache.spark.sql.functions._
-      val withSite = (feed.siteColumn, feed.siteLiteral) match {
-        case (Some(c), _) if renamed.columns.contains(c) => renamed.withColumn("site", col(c))
-        case (_, Some(s)) => renamed.withColumn("site", lit(s))
-        case _ => renamed.withColumn("site", lit(null).cast("string"))
-      }
-      withSite.select(col("sku").cast("string").as("sku"),
-        col("qty").try_cast("double").as("qty"),
-        col("site").cast("string").as("site"))
-    } catch {
+    try Feeds.project(read(spark, feed.path), feed)
+    catch {
       case e: UnsupportedOperationException => throw e
       case scala.util.control.NonFatal(e) =>
         System.err.println(s"[graft.Excel] feed ${feed.path} unreadable (${e.getClass.getSimpleName}: ${e.getMessage}); substituting sentinel row")

@@ -59,7 +59,15 @@ object Feeds {
           .toDS()
         spark.read.option("header", "true").option("sep", feed.sep).csv(lines)
       }
-    val renamed = feed.renames.foldLeft(base) { case (df, (from, to)) =>
+    project(base, feed)
+  }
+
+  /** The canonical `(sku, qty, site)` projection of a feed's raw columns,
+    * shared by every file-feed reader: apply the feed's renames, derive
+    * `site` from its column or literal, then cast.
+    */
+  private[extract] def project(raw: DataFrame, feed: FileFeed): DataFrame = {
+    val renamed = feed.renames.foldLeft(raw) { case (df, (from, to)) =>
       if (df.columns.contains(from)) df.withColumnRenamed(from, to) else df
     }
     val withSite = (feed.siteColumn, feed.siteLiteral) match {

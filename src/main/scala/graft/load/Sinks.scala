@@ -193,16 +193,26 @@ object Sinks {
         case None    => spark.conf.unset(inferKey)
       }
     }
+    swapIn(spark, tmp, path, "compact")
+  }
+
+  /** Replaces the directory at `path` with the one at `tmp`: moves the
+    * original aside to `path.__<op>_old__`, moves `tmp` into place, THEN
+    * deletes the original — at every instant a full copy exists under a
+    * deterministic name. Residue from a previously crashed swap is cleared
+    * first; a failed move-in rolls the original back into place.
+    */
+  private def swapIn(spark: org.apache.spark.sql.SparkSession, tmp: String,
+                     path: String, op: String): Unit = {
     val hadoop = new org.apache.hadoop.fs.Path(path)
-    val old = new org.apache.hadoop.fs.Path(path + ".__compact_old__")
+    val old = new org.apache.hadoop.fs.Path(s"$path.__${op}_old__")
     val fs = hadoop.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(old, true) // clear any residue from a previously-crashed swap
-    require(fs.rename(hadoop, old),
-      s"compaction swap failed moving $path aside (input untouched)")
+    fs.delete(old, true)
+    require(fs.rename(hadoop, old), s"$op swap failed moving $path aside (input untouched)")
     if (!fs.rename(new org.apache.hadoop.fs.Path(tmp), hadoop)) {
-      fs.rename(old, hadoop) // roll back: restore the original in place
+      fs.rename(old, hadoop)
       throw new IllegalStateException(
-        s"compaction swap failed for $path — original restored, compacted data is in $tmp")
+        s"$op swap failed for $path — original restored, new data is in $tmp")
     }
     fs.delete(old, true)
   }
@@ -279,18 +289,7 @@ object Sinks {
     binned.drop("__ka", "__kb", "__lk", "rnk")
       .repartition(nFiles, col("part_bin"))
       .write.mode("overwrite").partitionBy("part_bin").parquet(tmp)
-    val hadoop = new org.apache.hadoop.fs.Path(path)
-    val old = new org.apache.hadoop.fs.Path(path + ".__optimize_old__")
-    val fs = hadoop.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(old, true)
-    require(fs.rename(hadoop, old),
-      s"optimize swap failed moving $path aside (input untouched)")
-    if (!fs.rename(new org.apache.hadoop.fs.Path(tmp), hadoop)) {
-      fs.rename(old, hadoop)
-      throw new IllegalStateException(
-        s"optimize swap failed for $path — original restored, clustered data is in $tmp")
-    }
-    fs.delete(old, true)
+    swapIn(spark, tmp, path, "optimize")
     parquet(manifest, path + "_manifest")
     manifest
   }

@@ -1,8 +1,10 @@
 package graft
 
 /** Drives [[Tool]] inside the shared test session. The first `ab` case
-  * is the parity floor of the byte-gated two-arm operators: it is the only
-  * spec that forces their shuffle arms (`spark.graft.broadcastBytes=0`). */
+  * compares every registered query that runs a two-arm Graph or
+  * SuffixDedup operator under the default broadcast budget and under
+  * `spark.graft.broadcastBytes=0`, which forces their shuffle arms;
+  * `GraphSpec` does the same per operator on hand-built graphs. */
 class ToolSpec extends SparkSpec {
 
   private val SfDir = "/root/testdata/sf0.001"
@@ -15,12 +17,14 @@ class ToolSpec extends SparkSpec {
 
   test("ab: broadcast and shuffle arms of the byte-gated operators agree") {
     val key = "spark.graft.broadcastBytes"
-    val (code, out) = output("ab", SfDir, s"$key=134217728|0",
-      "q101_triangles", "q273_hyperanf", "q305_assortativity",
+    val queries = Seq("q95_pagerank", "q101_triangles", "q146_label_propagation",
+      "q152_bfs_distances", "q157_shortest_paths", "q273_hyperanf", "q283_hits",
+      "q284_modularity", "q299_personalized_pagerank", "q305_assortativity",
       "q306_local_clustering", "q333_kcore", "q362_substr_dup_spans",
       "q368_longest_repeat", "q376_cross_corpus_repeat")
+    val (code, out) = output(Seq("ab", SfDir, s"$key=134217728|0") ++ queries: _*)
     assert(code == 0, out)
-    assert(out.linesIterator.count(_.endsWith("PARITY=OK")) == 8, out)
+    assert(out.linesIterator.count(_.endsWith("PARITY=OK")) == queries.size, out)
     assert(spark.conf.getOption(key).isEmpty, "ab must unset the key it had to set")
   }
 

@@ -309,39 +309,6 @@ class GraphSpec extends SparkSpec {
     assert(r3(2L) > r3(4L) && r3(3L) > 0L)
   }
 
-  test("personalizedPageRank: shuffle arm bit-identical to broadcast arm") {
-    val rows60 = (0L until 60L).flatMap(i =>
-      Seq(Row(i, (i + 1) % 60), Row((i + 1) % 60, i)))
-    val e = df("src BIGINT, dst BIGINT", rows60)
-    val seeds = df("id BIGINT", Seq(Row(0L), Row(30L)))
-    val bc = Graph.personalizedPageRank(e, seeds, iterations = 3, scale = 1000000L)
-    val sh = Graph.personalizedPageRank(e, seeds, iterations = 3, scale = 1000000L,
-      broadcastNodeLimit = 0L)
-    assertSameRows(bc, sh)
-  }
-
-  test("pageRank: shuffle arm (nodes > broadcastNodeLimit) is bit-identical to the broadcast arm") {
-    // ring + chords — multiple outdegrees, several rounds of mixing
-    val n = 60L
-    val rows = (0L until n).flatMap(i =>
-      Seq(Row(i, (i + 1) % n), Row(i, (i + 7) % n)) ++
-        (if (i % 3 == 0) Seq(Row(i, (i + 19) % n)) else Nil))
-    val e = df("src BIGINT, dst BIGINT", rows)
-    val bc = Graph.pageRank(e, iterations = 4, scale = 1000000L)
-    val sh = Graph.pageRank(e, iterations = 4, scale = 1000000L,
-      broadcastNodeLimit = 0L) // force the big-node arm
-    assertSameRows(bc, sh)
-  }
-
-  test("hits: shuffle arm is bit-identical to the broadcast arm") {
-    val rows = (0L until 40L).flatMap(i =>
-      Seq(Row(i, (i * 3 + 1) % 40), Row(i, (i + 11) % 40)))
-    val e = df("src BIGINT, dst BIGINT", rows)
-    val bc = Graph.hits(e, iterations = 3)
-    val sh = Graph.hits(e, iterations = 3, broadcastNodeLimit = 0L)
-    assertSameRows(bc, sh)
-  }
-
   // Triangle 1-2-3 plus pendant 3-4: degrees 2,2,3,1.
   // Symmetrized endpoint degrees: mm=8, Σx=18, Σx²=44, Σxy=38 →
   // num = 8·38−18² = −20, den = 8·44−18² = 28 → −20e6 div 28 = −714285
@@ -456,19 +423,76 @@ class GraphSpec extends SparkSpec {
     }
   }
 
-  test("localClustering: edge-count gate drives both closing-join arms to the same rows") {
-    val e = df("u BIGINT, v BIGINT",
-      Seq(Row(1L, 2L), Row(1L, 3L), Row(2L, 3L), Row(3L, 4L), Row(2L, 4L)))
-    // limit 0 forces the shuffle arm (5 edges > 0); the default takes broadcast
-    assertSameRows(Graph.localClustering(e),
-      Graph.localClustering(e, broadcastEdgeLimit = 0L))
+  private val BudgetKey = "spark.graft.broadcastBytes"
+
+  /** `body` with the broadcast budget set to `value`; the prior value is
+    * restored afterwards. */
+  private def withBudget[T](value: String)(body: => T): T = {
+    val prior = spark.conf.getOption(BudgetKey)
+    spark.conf.set(BudgetKey, value)
+    try body
+    finally prior.fold(spark.conf.unset(BudgetKey))(spark.conf.set(BudgetKey, _))
   }
 
-  test("triangleCounts: edge-count gate drives both closing-join arms to the same rows") {
-    val e = df("u BIGINT, v BIGINT",
-      Seq(Row(1L, 2L), Row(1L, 3L), Row(2L, 3L), Row(3L, 4L), Row(2L, 4L)))
-    assertSameRows(Graph.triangleCounts(e),
-      Graph.triangleCounts(e, broadcastEdgeLimit = 0L))
+  // One row per two-arm operator. On these small graphs the default budget
+  // takes the broadcast arm and a zero budget forces the shuffle arm; both
+  // arms must return the same rows.
+  private val bridged = Seq((1L, 2L), (2L, 3L), (1L, 3L), (4L, 5L), (5L, 6L), (4L, 6L), (3L, 4L))
+  private val diamond = Seq((1L, 2L), (1L, 3L), (2L, 3L), (3L, 4L), (2L, 4L))
+  private val shuffleArms: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+    "pageRank: shuffle arm is bit-identical to the broadcast arm" -> { () =>
+      // ring + chords — multiple outdegrees, several rounds of mixing
+      val n = 60L
+      val e = df("src BIGINT, dst BIGINT", (0L until n).flatMap(i =>
+        Seq(Row(i, (i + 1) % n), Row(i, (i + 7) % n)) ++
+          (if (i % 3 == 0) Seq(Row(i, (i + 19) % n)) else Nil)))
+      Graph.pageRank(e, iterations = 4, scale = 1000000L)
+    },
+    "personalizedPageRank: shuffle arm bit-identical to broadcast arm" -> { () =>
+      val e = df("src BIGINT, dst BIGINT", (0L until 60L).flatMap(i =>
+        Seq(Row(i, (i + 1) % 60), Row((i + 1) % 60, i))))
+      val seeds = df("id BIGINT", Seq(Row(0L), Row(30L)))
+      Graph.personalizedPageRank(e, seeds, iterations = 3, scale = 1000000L)
+    },
+    "hits: shuffle arm is bit-identical to the broadcast arm" -> { () =>
+      val e = df("src BIGINT, dst BIGINT", (0L until 40L).flatMap(i =>
+        Seq(Row(i, (i * 3 + 1) % 40), Row(i, (i + 11) % 40))))
+      Graph.hits(e, iterations = 3)
+    },
+    "localClustering: edge-count gate drives both closing-join arms to the same rows" ->
+      (() => Graph.localClustering(und(diamond: _*))),
+    "triangleCounts: edge-count gate drives both closing-join arms to the same rows" ->
+      (() => Graph.triangleCounts(und(diamond: _*))),
+    "labelPropagation: shuffle arm returns the broadcast arm's rows" ->
+      (() => Graph.labelPropagation(und(bridged: _*), rounds = 4)),
+    "bfsDistances: shuffle arm returns the broadcast arm's rows" ->
+      (() => Graph.bfsDistances(und(bridged: _*), df("id BIGINT", Seq(Row(1L))), rounds = 3)),
+    "shortestPaths: shuffle arm returns the broadcast arm's rows" -> { () =>
+      val e = wund((1L, 2L, 1L), (2L, 3L, 1L), (3L, 4L, 1L), (1L, 4L, 5L), (4L, 5L, 2L))
+      Graph.shortestPaths(e, df("id BIGINT", Seq(Row(1L))), rounds = 3)
+    },
+    "kCore: shuffle arm returns the broadcast arm's rows" -> { () =>
+      val e = und((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L), (4L, 5L), (5L, 6L))
+      Graph.kCore(e, k = 2, rounds = 3)
+    },
+    "neighborhoodFunction: shuffle arm returns the broadcast arm's rows" -> { () =>
+      val e = df("src BIGINT, dst BIGINT",
+        bridged.flatMap { case (u, v) => Seq(Row(u, v), Row(v, u)) })
+      Graph.neighborhoodFunction(e, rounds = 3)
+    },
+    "modularityReport: shuffle arm returns the broadcast arm's rows" -> { () =>
+      val labels = df("node_id BIGINT, community BIGINT",
+        (1L to 6L).map(n => Row(n, if (n <= 3) 10L else 20L)))
+      Graph.modularityReport(und(bridged: _*), labels)
+    },
+    "degreeAssortativity: shuffle arm returns the broadcast arm's rows" ->
+      (() => Graph.degreeAssortativity(und(bridged: _*))))
+
+  shuffleArms.foreach { case (name, run) =>
+    test(name) {
+      val broadcastArm = run()
+      withBudget("0")(assertSameRows(broadcastArm, run()))
+    }
   }
 
   test("triangleCounts: big-edge arm plans a shuffle join, not a broadcast") {
@@ -483,11 +507,11 @@ class GraphSpec extends SparkSpec {
       .map(k => k -> conf.getOption(k))
     saved.foreach { case (k, _) => conf.set(k, "-1") }
     try {
-      val plan = Graph.triangleCounts(e, broadcastEdgeLimit = 0L)
+      val plan = withBudget("0")(Graph.triangleCounts(e))
         .queryExecution.executedPlan.toString
       assert(!plan.contains("BroadcastHashJoin"),
         s"gate failed to suppress broadcast:\n$plan")
-      val broadcastPlan = Graph.triangleCounts(e, broadcastEdgeLimit = 100L)
+      val broadcastPlan = Graph.triangleCounts(e)
         .queryExecution.executedPlan.toString
       assert(broadcastPlan.contains("BroadcastHashJoin"),
         s"small-edge arm should broadcast the closing edges:\n$broadcastPlan")
@@ -498,13 +522,12 @@ class GraphSpec extends SparkSpec {
   }
 
   test("spark.graft.broadcastBytes: a malformed or negative value fails naming the key") {
-    val key = "spark.graft.broadcastBytes"
     Seq("12x", "-1").foreach { bad =>
-      spark.conf.set(key, bad)
-      try {
-        val e = intercept[IllegalArgumentException](Graph.BroadcastBytes)
-        assert(e.getMessage.contains(key) && e.getMessage.contains(s"'$bad'"), e.getMessage)
-      } finally spark.conf.unset(key)
+      withBudget(bad) {
+        val e = intercept[IllegalArgumentException](BroadcastGate.fits(1L, 1L))
+        assert(e.getMessage.contains(BudgetKey) && e.getMessage.contains(s"'$bad'"),
+          e.getMessage)
+      }
     }
   }
 }

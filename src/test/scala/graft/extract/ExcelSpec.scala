@@ -45,4 +45,13 @@ class ExcelSpec extends SparkSpec {
     // broken feed → the reference's 1-row sentinel, same as a missing file
     assert(rowSet(Excel.readFeed(spark, feed)) == rows(Seq("other", "0.0", "hsn")))
   }
+
+  test("a BIFF5 workbook read through readFeed throws instead of becoming the sentinel row") {
+    val p = XlsFixture.writeXls(Seq(
+      Seq(Left("sku"), Left("qty")),
+      Seq(Left("H-1"), Right(3.0))), mini = true, streamName = "Book")
+    val e = intercept[UnsupportedOperationException](
+      Excel.readFeed(spark, FileFeed(p, siteLiteral = Some("hsn"))))
+    assert(e.getMessage.contains("BIFF8"))
+  }
 }

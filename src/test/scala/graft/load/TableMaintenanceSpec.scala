@@ -50,6 +50,19 @@ class TableMaintenanceSpec extends SparkSpec {
     assert(!new java.io.File(path + ".__compact_tmp__").exists())
   }
 
+  test("compact: residue of a crashed swap is cleared, data intact") {
+    val path = tmp()
+    spark.range(100).repartition(10).write.parquet(path)
+    // a previous compaction died after moving its original aside
+    val residue = new java.io.File(path + ".__compact_old__")
+    spark.range(5).write.parquet(residue.getPath)
+    Sinks.compact(spark, path, targetRowsPerFile = 1000)
+    assert(!residue.exists(), "the crashed swap's residue survived")
+    val out = spark.read.parquet(path)
+    assert(out.count() == 100)
+    assert(out.agg(sum("id")).head().getLong(0) == 4950L)
+  }
+
   test("compact with partition columns: partition dirs survive, each compacts independently") {
     val path = tmp()
     val data = spark.range(400).select(
