@@ -13,17 +13,23 @@ import graft.transform.{Aggregate, Clean, Enrich, Inventory}
   * 3-path inventory fan-out, and 6 dated brand / wholesale reports), all
   * derived from one cleaned `(sku, qty, site)` sales fact.
   *
-  * [[build]] is lazy: each output re-runs the extract, union and clean when
-  * it is acted on. [[run]] computes the fact once per run instead: it
-  * persists the cleaned frame, every sink reads the cached rows, and the
-  * cache is released when the sinks are done, whether they succeeded or
-  * not. That is `persist` (recomputable from lineage) and not a checkpoint
-  * or a parquet materialize because the feeds are read-only inputs of a
-  * run: a lost cache block re-reads them and gets the same rows. The one
-  * input a run overwrites, the stock file, keeps its own durable
-  * materialize in `Sinks.csvFanOut`. The `Outputs` that [[run]] returns
-  * are still lazy frames over the feeds, so acting on them after [[run]]
-  * recomputes from the feeds.
+  * [[build]] is lazy: each output re-runs the extract, union, clean and
+  * aggregates when it is acted on. [[run]] computes each shared frame once
+  * per run instead: it persists the cleaned fact, the retail aggregate
+  * `soldValue` (read by 5 outputs) and the wholesale aggregate
+  * `finalResult` (read by 4), and releases all three when the sinks are
+  * done, whether they succeeded or not. That is `persist` (recomputable
+  * from lineage) and not a checkpoint or a parquet materialize because the
+  * feeds are read-only inputs of a run: a lost cache block re-reads them
+  * and gets the same rows. The one input a run overwrites, the stock file,
+  * keeps its own durable materialize in `Sinks.csvFanOut`. The `Outputs`
+  * that [[run]] returns are still lazy frames over the feeds, so acting on
+  * them after [[run]] recomputes from the feeds.
+  *
+  * The sinks are independent, so [[run]] writes them concurrently, as
+  * concurrent Spark jobs from driver threads. A failed sink does not stop
+  * the others: every sink finishes, then the first failure in sink order
+  * is thrown with the others attached as suppressed.
   *
   * Divergences from the reference, all documented in SURVEY.md §7.4:
   * the cross-frame mask bug at :769 is implemented with its intended
@@ -65,14 +71,20 @@ object Pipeline {
     */
   def build(salesFrames: Seq[DataFrame], dims: Dims, runDate: Date,
             primaryBrand: String, otherBrands: Seq[String]): Outputs =
-    derive(Clean.cleanSales(salesFrames), dims, runDate, primaryBrand, otherBrands)
+    derive(salesFrames, dims, runDate, primaryBrand, otherBrands, identity)
 
-  /** Every output of the DAG over the cleaned sales fact (:581-607). */
-  private def derive(sales: DataFrame, dims: Dims, runDate: Date,
-                     primaryBrand: String, otherBrands: Seq[String]): Outputs = {
+  /** Every output of the DAG over the cleaned sales fact (:581-607).
+    * `share` is applied to each frame that several outputs read: the
+    * cleaned fact and the two aggregates.
+    */
+  private def derive(salesFrames: Seq[DataFrame], dims: Dims, runDate: Date,
+                     primaryBrand: String, otherBrands: Seq[String],
+                     share: DataFrame => DataFrame): Outputs = {
+    val sales = share(Clean.cleanSales(salesFrames))
+
     // branch A: retail agg → wholesale mapping (:610-632)
-    val soldValue = Aggregate.retailAgg(sales)
-    val finalResult = Aggregate.wholesaleAgg(soldValue, dims.skuMap)
+    val soldValue = share(Aggregate.retailAgg(sales))
+    val finalResult = share(Aggregate.wholesaleAgg(soldValue, dims.skuMap))
 
     // branch A1: inventory decrement (:634-646)
     val newStock = Inventory.decrement(dims.stock, finalResult)
@@ -99,28 +111,33 @@ object Pipeline {
   }
 
   /** Executes the DAG and writes the reference's 11 CSV sinks under
-    * `outDir` (K1-K3). The cleaned sales fact is persisted for the duration
-    * of the sink writes and unpersisted before returning or throwing.
+    * `outDir` (K1-K3). The cleaned sales fact and the retail and wholesale
+    * aggregates are persisted for the duration of the sink writes and
+    * unpersisted before returning or throwing. The sinks write
+    * concurrently; when some fail, the others still finish, and then the
+    * first failure in sink order is thrown with the rest suppressed.
     * `newstock` goes through the materialize-first fan-out because the
     * reference overwrites its own input file (SURVEY.md §7.4-d).
     */
   def run(salesFrames: Seq[DataFrame], dims: Dims, runDate: Date, outDir: String,
           primaryBrand: String = "brand1", otherBrands: Seq[String] = Seq("brand2", "brand3")): Outputs = {
-    val sales = Clean.cleanSales(salesFrames).persist()
+    val cached = Seq.newBuilder[DataFrame]
+    def share(df: DataFrame): DataFrame = { cached += df; df.persist() }
     try {
-      val o = derive(sales, dims, runDate, primaryBrand, otherBrands)
+      val o = derive(salesFrames, dims, runDate, primaryBrand, otherBrands, share)
       val day = runDate.toLocalDate
-      Sinks.csvReport(o.soldValueRetail, s"$outDir/soldvalueretail.csv")
-      Sinks.csvReport(o.soldWholesale, s"$outDir/sold_itemswholesale.csv")
-      Sinks.csvFanOut(o.newStock, Seq(
-        s"$outDir/newstock.csv", s"$outDir/newstock_copy1.csv", s"$outDir/newstock_copy2.csv"))
-      Sinks.datedCsv(o.brandPrimary, s"$outDir/brand1_sales", day)
-      Sinks.datedCsv(o.brandOthers, s"$outDir/brand2_sales", day)
-      Sinks.datedCsv(o.brandPrimaryAgg, s"$outDir/brand1_sales_agg", day, "-brand1")
-      Sinks.datedCsv(o.brandOthersAgg, s"$outDir/brand2_sales_agg", day, "-brand2s")
-      Sinks.datedCsv(o.wholesalePrimary, s"$outDir/wholesale_brand1", day)
-      Sinks.datedCsv(o.wholesaleOthers, s"$outDir/wholesale_brand2", day)
+      Sinks.concurrently(Seq(
+        () => Sinks.csvReport(o.soldValueRetail, s"$outDir/soldvalueretail.csv"),
+        () => Sinks.csvReport(o.soldWholesale, s"$outDir/sold_itemswholesale.csv"),
+        () => Sinks.csvFanOut(o.newStock, Seq(
+          s"$outDir/newstock.csv", s"$outDir/newstock_copy1.csv", s"$outDir/newstock_copy2.csv")),
+        () => Sinks.datedCsv(o.brandPrimary, s"$outDir/brand1_sales", day),
+        () => Sinks.datedCsv(o.brandOthers, s"$outDir/brand2_sales", day),
+        () => Sinks.datedCsv(o.brandPrimaryAgg, s"$outDir/brand1_sales_agg", day, "-brand1"),
+        () => Sinks.datedCsv(o.brandOthersAgg, s"$outDir/brand2_sales_agg", day, "-brand2s"),
+        () => Sinks.datedCsv(o.wholesalePrimary, s"$outDir/wholesale_brand1", day),
+        () => Sinks.datedCsv(o.wholesaleOthers, s"$outDir/wholesale_brand2", day)))
       o
-    } finally sales.unpersist()
+    } finally cached.result().foreach(_.unpersist())
   }
 }

@@ -31,18 +31,47 @@ object Sinks {
     * temp parquet dir and re-read from there before any target is
     * touched. cache()+count() is not airtight — cached blocks lost after
     * the count (executor failure, eviction) would recompute from lineage
-    * and re-scan the by-then-overwritten source (SURVEY.md §7.4-d).
+    * and re-scan the by-then-overwritten source (SURVEY.md §7.4-d). The
+    * re-read declares the frame's schema, so it starts no footer-reading
+    * job, and the targets are then written [[concurrently]].
     */
   def csvFanOut(df: DataFrame, paths: Seq[String]): Unit = {
     val spark = df.sparkSession
     val tmp = paths.head + ".__materialize_tmp__"
     df.write.mode("overwrite").parquet(tmp)
     try {
-      val pinned = spark.read.parquet(tmp)
-      paths.foreach(p => csvReport(pinned, p))
+      val pinned = spark.read.schema(df.schema).parquet(tmp)
+      concurrently(paths.map(p => () => csvReport(pinned, p)))
     } finally {
       val hPath = new org.apache.hadoop.fs.Path(tmp)
       hPath.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(hPath, true)
+    }
+  }
+
+  /** Name prefix of the threads [[concurrently]] starts. */
+  private[graft] val WriterThreadPrefix = "graft-sink-"
+
+  /** Runs independent writes at once, one driver thread each, so their
+    * Spark jobs share the cores. The threads are started here, per call,
+    * because a new thread inherits its creator's Spark local properties
+    * (job group, description, scheduler pool), which pooled threads
+    * created elsewhere would not carry. Every write runs to its end; then
+    * the first failure in `writes` order is thrown with the later ones
+    * attached as suppressed. No thread outlives the call.
+    */
+  private[graft] def concurrently(writes: Seq[() => Unit]): Unit = {
+    val failures = new Array[Throwable](writes.size)
+    val threads = writes.zipWithIndex.map { case (write, i) =>
+      new Thread(() => try write() catch { case t: Throwable => failures(i) = t },
+        s"$WriterThreadPrefix$i")
+    }
+    try threads.foreach(_.start())
+    finally threads.foreach(_.join())
+    failures.filter(_ != null) match {
+      case Array() =>
+      case Array(first, rest @ _*) =>
+        rest.filterNot(_ eq first).foreach(first.addSuppressed)
+        throw first
     }
   }
 

@@ -3,12 +3,15 @@ package graft
 import java.io.File
 import java.nio.file.Files
 import java.sql.Date
+import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLong
+import scala.jdk.CollectionConverters._
 import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, Row}
 import graft.SparkSpec
 import graft.extract.{Feeds, FileFeed}
+import graft.load.Sinks
 
 object PipelineSpec {
 
@@ -62,6 +65,34 @@ class PipelineSpec extends SparkSpec {
   private def outputRows(o: Pipeline.Outputs): Seq[Seq[String]] =
     o.productIterator.map { case d: DataFrame => rowSet(d) }.toSeq
 
+  /** A one-file CSV feed of `rows` order lines over two SKUs. */
+  private def csvFeed(rows: Int): DataFrame = {
+    val csv = Files.createTempDirectory("feed").resolve("walmart.csv")
+    Files.writeString(csv, Seq.tabulate(rows)(i => if (i % 2 == 0) "SET-1,1" else "B-2,2")
+      .mkString("sku,qty\n", "\n", "\n"))
+    Feeds.read(spark, FileFeed(csv.toString, siteLiteral = Some("Walmart")))
+  }
+
+  /** Runs `body` with `listener` registered, after every earlier event has
+    * been delivered, and delivers every event `body` posted before returning.
+    */
+  private def listening[T](listener: SparkListener)(body: => T): T = {
+    val sc = spark.sparkContext
+    ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try { val r = body; ListenerBusDrain(sc); r }
+    finally sc.removeSparkListener(listener)
+  }
+
+  /** The live threads `Sinks.concurrently` started. */
+  private def writerThreads: Set[String] =
+    Thread.getAllStackTraces.keySet.asScala.map(_.getName)
+      .filter(_.startsWith(Sinks.WriterThreadPrefix)).toSet
+
+  /** The messages of `e` and its causes. */
+  private def messages(e: Throwable): Seq[String] =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).map(x => String.valueOf(x.getMessage)).toSeq
+
   test("full DAG: union→clean→agg→map→inventory→enrich→split, 11 sinks written") {
     val outDir = Files.createTempDirectory("pipeline").toString
     val o = Pipeline.run(feeds, dims, runDate, outDir)
@@ -90,33 +121,36 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("run reads each sales feed once, not once per sink") {
-    val dir = Files.createTempDirectory("feed")
     val feedRows = 1000
-    val csv = dir.resolve("walmart.csv")
-    Files.writeString(csv, Seq.tabulate(feedRows)(i => if (i % 2 == 0) "SET-1,1" else "B-2,2")
-      .mkString("sku,qty\n", "\n", "\n"))
-    val feed = Feeds.read(spark, FileFeed(csv.toString, siteLiteral = Some("Walmart")))
-
+    val feed = csvFeed(feedRows)
     val recordsRead = new AtomicLong
-    val listener = new SparkListener {
+    listening(new SparkListener {
       override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
         if (e.taskMetrics != null) recordsRead.addAndGet(e.taskMetrics.inputMetrics.recordsRead)
-    }
-    val sc = spark.sparkContext
-    ListenerBusDrain(sc)
-    sc.addSparkListener(listener)
-    try {
-      Pipeline.run(Seq(feed), dims, runDate, Files.createTempDirectory("once").toString)
-      ListenerBusDrain(sc)
-    } finally sc.removeSparkListener(listener)
+    })(Pipeline.run(Seq(feed), dims, runDate, Files.createTempDirectory("once").toString))
 
     // besides the feed's rows, the fan-out reads its parquet copy of the 3
-    // new-stock rows once per target path, and a task reading the cached
-    // fact counts one record per cached batch (one per partition here)
+    // new-stock rows once per target path, and a task reading a cached
+    // frame counts one record per cached batch (one per partition here)
     val stockReReads = 3L * 3
     val feedPasses = (recordsRead.get - stockReReads) / feedRows
     assert(feedPasses == 1,
       s"$feedPasses passes: ${recordsRead.get} records read for a $feedRows-row feed")
+  }
+
+  test("run computes the retail and the wholesale aggregate once each") {
+    // the stages that ran shuffle-map tasks: one per shuffle computed
+    val shuffles = ConcurrentHashMap.newKeySet[Int]()
+    listening(new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.taskType == "ShuffleMapTask") shuffles.add(e.stageId)
+    })(Pipeline.run(Seq(csvFeed(1000)), dims, runDate, Files.createTempDirectory("aggs").toString))
+
+    // one pass of the DAG shuffles four times: the retail aggregate, the
+    // wholesale aggregate and the two brand aggregates (every join
+    // broadcasts its dim). Recomputing the shared aggregates per sink
+    // shuffles 11 times: retail under 5 sinks, wholesale under 4.
+    assert(shuffles.size == 4, s"${shuffles.size} shuffles in one run")
   }
 
   test("run releases the cached sales fact, on success and when a sink fails") {
@@ -129,16 +163,29 @@ class PipelineSpec extends SparkSpec {
     // the returned frames recompute from the feeds
     assert(outputRows(o) == expected)
 
-    // a regular file where a dated sink's directory goes: the first sinks
-    // have read the cache by the time this one fails
+    // regular files where two dated sinks' directories go: the other
+    // sinks still write, and the first blocked sink's failure is thrown
     val blocked = Files.createTempDirectory("blocked")
     Files.writeString(blocked.resolve("brand1_sales"), "not a directory")
-    // and an output directory under a regular file: the first sink fails
+    Files.writeString(blocked.resolve("wholesale_brand1"), "not a directory")
+    val e = intercept[Exception](Pipeline.run(feeds, dims, runDate, blocked.toString))
+    def names(dir: String)(x: Throwable) = messages(x).exists(s"/$dir\\b".r.findFirstIn(_).isDefined)
+    assert(names("brand1_sales")(e), messages(e))
+    // (Spark may attach a suppressed caller stack trace of its own)
+    assert(e.getSuppressed.count(names("wholesale_brand1")) == 1, e.getSuppressed.toSeq.map(messages))
+    assert(PipelineSpec.missingSinks(blocked.toString) ==
+      Seq("brand1_sales/06-01-2024.csv", "wholesale_brand1/06-01-2024.csv"))
+    assert(cache.isEmpty, "cache not released after a run with blocked sinks")
+    assert(writerThreads.isEmpty, s"writer threads alive after the run: $writerThreads")
+
+    // an output directory under a regular file: every sink fails
     val underFile = Files.createTempFile("out", ".txt").resolve("out")
-    for (outDir <- Seq(blocked.toString, underFile.toString)) {
-      intercept[Exception](Pipeline.run(feeds, dims, runDate, outDir))
-      assert(cache.isEmpty, s"cache not released after a failed run into $outDir")
-    }
+    val all = intercept[Exception](Pipeline.run(feeds, dims, runDate, underFile.toString))
+    val file = underFile.getParent.toString
+    assert(all.getSuppressed.count(messages(_).exists(_.contains(file))) == 8,
+      all.getSuppressed.toSeq.map(messages))
+    assert(cache.isEmpty, s"cache not released after a failed run into $underFile")
+    assert(writerThreads.isEmpty, s"writer threads alive after the run: $writerThreads")
   }
 
   test("read-overwrite cycle: fan-out materializes before overwriting its input (§7.4-d)") {
@@ -148,10 +195,51 @@ class PipelineSpec extends SparkSpec {
       .coalesce(1).write.option("header", "true").csv(src)
     val stock = spark.read.option("header", "true").csv(src)
     val decremented = stock.selectExpr("sku", "CAST(qty AS DOUBLE) - 1.0 AS qty")
-    // overwrite the very file we read from — must not truncate mid-read
-    load.Sinks.csvFanOut(decremented, Seq(src, s"$dir/copy.csv"))
+    // overwrite the very file we read from — must not truncate mid-read.
+    // Every job the fan-out starts belongs to one of its writes: the
+    // re-read of the parquet copy declares its schema, so no footer job
+    // runs outside a SQL execution
+    val unattached = new AtomicLong
+    listening(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties == null || e.properties.getProperty("spark.sql.execution.id") == null)
+          unattached.incrementAndGet()
+    })(Sinks.csvFanOut(decremented, Seq(src, s"$dir/copy.csv")))
+    assert(unattached.get == 0, s"${unattached.get} jobs outside the fan-out's writes")
     val back = spark.read.option("header", "true").csv(src).collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
     assert(back == Map("a" -> "4.0", "b" -> "1.0"))
+  }
+
+  test("run overwrites the stock file it read while the other sinks write (§7.4-d)") {
+    val outDir = Files.createTempDirectory("cycle").toString
+    val stockFile = s"$outDir/newstock.csv"
+    val stockSchema = dims.stock.schema
+    dims.stock.coalesce(1).write.option("header", "true").csv(stockFile)
+    val d = dims.copy(stock = spark.read.schema(stockSchema).option("header", "true").csv(stockFile))
+
+    // every other sink's rows, taken before the run overwrites the stock
+    val built = Pipeline.build(feeds, d, runDate, "brand1", Seq("brand2", "brand3"))
+    val others = Seq(
+      "soldvalueretail.csv" -> built.soldValueRetail,
+      "sold_itemswholesale.csv" -> built.soldWholesale,
+      "brand1_sales/06-01-2024.csv" -> built.brandPrimary,
+      "brand2_sales/06-01-2024.csv" -> built.brandOthers,
+      "brand1_sales_agg/06-01-2024-brand1.csv" -> built.brandPrimaryAgg,
+      "brand2_sales_agg/06-01-2024-brand2s.csv" -> built.brandOthersAgg,
+      "wholesale_brand1/06-01-2024.csv" -> built.wholesalePrimary,
+      "wholesale_brand2/06-01-2024.csv" -> built.wholesaleOthers)
+      .map { case (sink, frame) => (sink, frame.schema, rowSet(frame)) }
+
+    Pipeline.run(feeds, d, runDate, outDir)
+    def readBack(sink: String, schema: org.apache.spark.sql.types.StructType): Seq[String] =
+      rowSet(spark.read.schema(schema).option("header", "true").csv(s"$outDir/$sink"))
+
+    val decremented = rows(Seq("towel", "91.0", "bath", "red", "brand1"),
+      Seq("soap", "47.0", "bath", "white", "brand1"), Seq("untouched", "7.0", "misc", "blue", "brand2"))
+    for (sink <- Seq("newstock.csv", "newstock_copy1.csv", "newstock_copy2.csv"))
+      assert(readBack(sink, stockSchema) == decremented, sink)
+    for ((sink, schema, want) <- others)
+      assert(readBack(sink, schema) == want, sink)
   }
 }
