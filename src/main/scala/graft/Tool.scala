@@ -2,6 +2,7 @@ package graft
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardOpenOption}
+import org.apache.spark.ListenerBusDrain
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -156,17 +157,9 @@ object Tool {
       spark.listenerManager.register(listener)
       try {
         Bench.probe(fn(spark, sfDir))
-        // listener events post asynchronously: wait until the file size
-        // has held for a full second (at most 30 s), not a fixed sleep
-        var last = -1L
-        var stable = 0
-        var waited = 0
-        while (stable < 10 && waited < 300) {
-          Thread.sleep(100)
-          waited += 1
-          val sz = if (Files.exists(out)) Files.size(out) else 0L
-          if (sz == last) stable += 1 else { stable = 0; last = sz }
-        }
+        // listener events post asynchronously: deliver every one posted
+        // so far before the listener goes
+        ListenerBusDrain(spark.sparkContext)
       } finally spark.listenerManager.unregister(listener)
       println(s"$name: ${if (Files.exists(out)) Files.size(out) else 0L} bytes -> $out")
     }

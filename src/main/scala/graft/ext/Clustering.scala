@@ -1,10 +1,12 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.ext.Pin.PinOps
-import org.apache.spark.sql.types.{DoubleType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, LongType, StructField,
+  StructType}
 import graft.functions.VectorFunctions
 
 /** Distributed k-means (Lloyd's) and SemDeDup-style semantic deduplication
@@ -127,24 +129,14 @@ object Clustering {
     // every one of the n·k candidate rows. Reverted — the packing pays
     // where the aggregate input is the dominant stream (the suffix
     // gram/position relations), not here.
-    def assigned: DataFrame = {
-      val centDf = {
-        import scala.jdk.CollectionConverters._
-        spark.createDataFrame(
-          cent.map { case (cid, cv) => org.apache.spark.sql.Row(cid, cv) }
-            .toList.asJava,
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("cid", LongType, nullable = false),
-            org.apache.spark.sql.types.StructField("cv",
-              org.apache.spark.sql.types.ArrayType(LongType, containsNull = false)))))
-      }
-      q.crossJoin(broadcast(centDf))
+    def assigned: DataFrame =
+      q.crossJoin(broadcast(centroidFrame(spark,
+          cent.toSeq.map { case (cid, cv) => Row(cid, cv) })))
         .select(col("vec_id"), col("cid"), l2sq(col("qv"), col("cv")).as("dist"))
         .groupBy("vec_id")
         .agg(min(struct(col("dist"), col("cid"))).as("best"))
         .select(col("vec_id"), col("best.cid").as("cluster"),
           col("best.dist").as("dist"))
-    }
 
     for (_ <- 1 to iterations) {
       // per-(cluster, dim) truncated-mean update: join the assignment back
@@ -162,6 +154,85 @@ object Clustering {
     }
 
     (assigned, cent.toSeq)
+  }
+
+  /** Driver-held centroids `(cid, cv)` as a DataFrame to broadcast, each
+    * row led by the `keys` columns it carries first (a PQ subspace id).
+    * Built from rows, not a join: the Lloyd's loop holds its centroids on
+    * the driver between iterations anyway.
+    */
+  private def centroidFrame(spark: SparkSession, rows: Seq[Row],
+                            keys: StructField*): DataFrame =
+    spark.createDataFrame(rows.asJava, StructType(keys ++ Seq(
+      StructField("cid", LongType, nullable = false),
+      StructField("cv", ArrayType(LongType, containsNull = false)))))
+
+  /** Product quantization works on 64-dim vectors. */
+  private val PqDim = 64
+
+  /** The `subspaces` equal slices of a [[PqDim]]-dim vector column. A
+    * vector of any other width raises an in-plan error naming both widths
+    * in the first job that reads it — unchecked, a wider vector would be
+    * quantized on its first 64 dims only and a narrower one would slice
+    * empty (null distances), both without an error.
+    */
+  private def pqSlices(vec: Column, subspaces: Int): IndexedSeq[Column] = {
+    require(subspaces > 0 && PqDim % subspaces == 0,
+      s"subspaces must divide $PqDim: $subspaces")
+    val sub = PqDim / subspaces
+    val checked = when(size(vec) =!= PqDim, raise_error(concat(
+      lit(s"product quantization expects $PqDim-dim vectors, got "),
+      size(vec).cast("string"), lit("-dim")))).otherwise(vec)
+    (0 until subspaces).map(s => slice(checked, s * sub + 1, sub))
+  }
+
+  /** PQ codebooks over the corpus: one [[kmeansTrain]] codebook per
+    * subspace slice. Returns the codes `(neighbor_id, cs, code)` — the
+    * corpus as `subspaces` small integer codes per vector, the only form
+    * of it the query side reads — and the codeword table `(s, cid, cv)`.
+    */
+  private def pqCodebooks(corpus: DataFrame, subspaces: Int, iterations: Int,
+                          idCol: String, vecCol: String): (DataFrame, DataFrame) = {
+    val parts = pqSlices(col(vecCol), subspaces).map { v =>
+      kmeansTrain(corpus.select(col(idCol).cast(LongType).as("vec_id"),
+        v.as("embedding")), 0, iterations)
+    }.zipWithIndex
+    val codes = parts.map { case ((a, _), s) =>
+      a.select(col("vec_id").as("neighbor_id"), lit(s).as("cs"), col("cluster").as("code"))
+    }.reduce(_ union _)
+    val codewords = centroidFrame(corpus.sparkSession,
+      parts.flatMap { case ((_, cents), s) => cents.map { case (cid, cv) => Row(s, cid, cv) } },
+      StructField("s", IntegerType, nullable = false))
+    (codes, codewords)
+  }
+
+  /** The asymmetric-distance (ADC) table `(qidCol, s, cid, d)`: each
+    * query's exact integer L2² from its own subspace slice to every
+    * codeword of that subspace — queries × codewords rows against the
+    * broadcast codeword table. A candidate's distance is then the sum of
+    * its codes' entries, and the corpus vectors are never read again.
+    */
+  private def adcTable(queries: DataFrame, codewords: DataFrame, subspaces: Int,
+                       qidCol: String, idCol: String, vecCol: String): DataFrame =
+    pqSlices(col(vecCol), subspaces).zipWithIndex.map { case (v, s) =>
+      queries.select(col(idCol).cast(LongType).as(qidCol), lit(s).as("s"),
+        quantize(v).as("qv"))
+    }.reduce(_ union _)
+      .join(broadcast(codewords), Seq("s"))
+      .select(col(qidCol), col("s"), col("cid"), l2sq(col("qv"), col("cv")).as("d"))
+
+  /** The `k` nearest candidates per query by ADC distance: `cand` holds
+    * one `(query_id, neighbor_id, d)` row per matched subspace code;
+    * `adist` is their sum (a partial aggregate per pair), self-matches
+    * drop, and ties rank by the lower `neighbor_id`.
+    */
+  private def adcTopK(cand: DataFrame, k: Int): DataFrame = {
+    val adist = cand.filter(col("query_id") =!= col("neighbor_id"))
+      .groupBy("query_id", "neighbor_id").agg(sum("d").as("adist"))
+    val w = Window.partitionBy("query_id").orderBy(col("adist"), col("neighbor_id"))
+    adist.withColumn("rank", row_number().over(w).cast("int"))
+      .filter(col("rank") <= k)
+      .select("query_id", "neighbor_id", "adist", "rank")
   }
 
   /** Product-quantization ANN (Jégou et al. 2011, "Product quantization
@@ -184,49 +255,9 @@ object Clustering {
   def pqTopK(queries: DataFrame, corpus: DataFrame, k: Int, subspaces: Int = 4,
              iterations: Int = 2, idCol: String = "vec_id",
              vecCol: String = "embedding"): DataFrame = {
-    val dim = 64
-    require(subspaces > 0 && dim % subspaces == 0,
-      s"subspaces must divide $dim: $subspaces")
-    val sub = dim / subspaces
-    val spark = corpus.sparkSession
-
-    val parts = (0 until subspaces).map { s =>
-      val sliced = corpus.select(col(idCol).cast(LongType).as("vec_id"),
-        slice(col(vecCol), s * sub + 1, sub).as("embedding"))
-      val (assign, cent) = kmeansTrain(sliced, 0, iterations)
-      (s, assign, cent)
-    }
-    val codes = parts.map { case (s, a, _) =>
-      a.select(col("vec_id").as("neighbor_id"), lit(s).as("cs"), col("cluster").as("code"))
-    }.reduce(_ union _)
-    val centDf = {
-      import scala.jdk.CollectionConverters._
-      spark.createDataFrame(
-        parts.flatMap { case (s, _, cs) =>
-          cs.map { case (cid, cv) => org.apache.spark.sql.Row(s, cid, cv) }
-        }.toList.asJava,
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("s",
-            org.apache.spark.sql.types.IntegerType, nullable = false),
-          org.apache.spark.sql.types.StructField("cid", LongType, nullable = false),
-          org.apache.spark.sql.types.StructField("cv",
-            org.apache.spark.sql.types.ArrayType(LongType, containsNull = false)))))
-    }
-    val qLong = (0 until subspaces).map { s =>
-      queries.select(col(idCol).cast(LongType).as("query_id"), lit(s).as("s"),
-        quantize(slice(col(vecCol), s * sub + 1, sub)).as("qv"))
-    }.reduce(_ union _)
-    val qdist = qLong.join(broadcast(centDf), Seq("s"))
-      .select(col("query_id"), col("s"), col("cid"), l2sq(col("qv"), col("cv")).as("d"))
-
-    val adist = codes
-      .join(qdist, codes("cs") === qdist("s") && codes("code") === qdist("cid"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .groupBy("query_id", "neighbor_id").agg(sum("d").as("adist"))
-    val w = Window.partitionBy("query_id").orderBy(col("adist"), col("neighbor_id"))
-    adist.withColumn("rank", row_number().over(w).cast("int"))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "adist", "rank")
+    val (codes, codewords) = pqCodebooks(corpus, subspaces, iterations, idCol, vecCol)
+    val qdist = adcTable(queries, codewords, subspaces, "query_id", idCol, vecCol)
+    adcTopK(codes.join(qdist, codes("cs") === qdist("s") && codes("code") === qdist("cid")), k)
   }
 
   /** SemDeDup (Abbas et al. 2023, arXiv:2303.09540 — public paper):
@@ -354,75 +385,28 @@ object Clustering {
   def ivfPqTopK(queries: DataFrame, corpus: DataFrame, k: Int, nProbe: Int = 3,
                 subspaces: Int = 4, iterations: Int = 2,
                 idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val dim = 64
-    require(subspaces > 0 && dim % subspaces == 0,
-      s"subspaces must divide $dim: $subspaces")
-    val sub = dim / subspaces
-    val spark = corpus.sparkSession
-    def centTable(rows: Seq[org.apache.spark.sql.Row],
-                  fields: Seq[org.apache.spark.sql.types.StructField]): DataFrame = {
-      import scala.jdk.CollectionConverters._
-      spark.createDataFrame(rows.toList.asJava,
-        org.apache.spark.sql.types.StructType(fields))
-    }
-    val arrT = org.apache.spark.sql.types.ArrayType(LongType, containsNull = false)
-
     // coarse quantizer over the full vectors
     val (coarse, coarseCents) = kmeansTrain(corpus, 0, iterations, idCol, vecCol)
-    val coarseCentDf = centTable(
-      coarseCents.map { case (cid, cv) => org.apache.spark.sql.Row(cid, cv) },
-      Seq(org.apache.spark.sql.types.StructField("cid", LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("cv", arrT)))
-
-    // PQ codebooks per subspace slice (the q106 training)
-    val parts = (0 until subspaces).map { s =>
-      val sliced = corpus.select(col(idCol).cast(LongType).as("vec_id"),
-        slice(col(vecCol), s * sub + 1, sub).as("embedding"))
-      val (assign, cent) = kmeansTrain(sliced, 0, iterations)
-      (s, assign, cent)
-    }
-    val codes = parts.map { case (s, a, _) =>
-      a.select(col("vec_id").as("neighbor_id"), lit(s).as("cs"), col("cluster").as("code"))
-    }.reduce(_ union _)
-      .join(coarse.select(col("vec_id").as("neighbor_id"), col("cluster").as("cell")),
-        "neighbor_id")
-    val centDf = centTable(
-      parts.flatMap { case (s, _, cs) =>
-        cs.map { case (cid, cv) => org.apache.spark.sql.Row(s, cid, cv) }
-      },
-      Seq(org.apache.spark.sql.types.StructField("s",
-          org.apache.spark.sql.types.IntegerType, nullable = false),
-        org.apache.spark.sql.types.StructField("cid", LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("cv", arrT)))
+    val (pqCodes, codewords) = pqCodebooks(corpus, subspaces, iterations, idCol, vecCol)
+    val codes = pqCodes.join(
+      coarse.select(col("vec_id").as("neighbor_id"), col("cluster").as("cell")), "neighbor_id")
 
     // each query probes its nProbe nearest coarse cells (integer L2²,
     // ties → lower cell id — the oracle's (dist, cid) row_number order)
     val qq = queries.select(col(idCol).cast(LongType).as("query_id"),
       quantize(col(vecCol)).as("qv"))
     val pw = Window.partitionBy("query_id").orderBy(col("d"), col("cid"))
+    val coarseCentDf = centroidFrame(corpus.sparkSession,
+      coarseCents.map { case (cid, cv) => Row(cid, cv) })
     val probes = qq.crossJoin(broadcast(coarseCentDf))
       .select(col("query_id"), col("cid"), l2sq(col("qv"), col("cv")).as("d"))
       .withColumn("rn", row_number().over(pw)).filter(col("rn") <= nProbe)
       .select(col("query_id"), col("cid").as("cell"))
 
-    // ADC table: query → every codeword, per subspace
-    val qLong = (0 until subspaces).map { s =>
-      queries.select(col(idCol).cast(LongType).as("qid"), lit(s).as("s"),
-        quantize(slice(col(vecCol), s * sub + 1, sub)).as("qv"))
-    }.reduce(_ union _)
-    val qdist = qLong.join(broadcast(centDf), Seq("s"))
-      .select(col("qid"), col("s"), col("cid"), l2sq(col("qv"), col("cv")).as("d"))
-
+    val qdist = adcTable(queries, codewords, subspaces, "qid", idCol, vecCol)
     val cand = codes.join(probes, "cell")
-    val adist = cand
-      .join(qdist, cand("cs") === qdist("s") && cand("code") === qdist("cid") &&
-        cand("query_id") === qdist("qid"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .groupBy("query_id", "neighbor_id").agg(sum("d").as("adist"))
-    val w = Window.partitionBy("query_id").orderBy(col("adist"), col("neighbor_id"))
-    adist.withColumn("rank", row_number().over(w).cast("int"))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "adist", "rank")
+    adcTopK(cand.join(qdist, cand("cs") === qdist("s") && cand("code") === qdist("cid") &&
+      cand("query_id") === qdist("qid")), k)
   }
 
   /** k-center greedy coreset selection (farthest-point traversal —

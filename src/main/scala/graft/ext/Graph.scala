@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.ext.Pin.PinOps
 
@@ -57,35 +57,9 @@ object Graph {
     */
   def pageRank(edges: DataFrame, iterations: Int,
                scale: Long = 1000000000000L,
-               srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
-    require(iterations >= 1, "iterations must be >= 1")
-    // pin the edge projection once: it feeds the node derivation (twice)
-    // AND the degree/partition setup — unpinned, each consumer re-ran the
-    // caller's whole edge construction (for q95 a corpus distinct + union)
-    val e0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).pin()
-    val nodes = e0.select(col("src").as("id"))
-      .union(e0.select(col("dst").as("id"))).distinct()
-      .pin()
-    // rank rows are (id, pr[, seed]) — ~64 B built
-    val small = BroadcastGate.fits(nodes.count(), 64)
-    val e = e0.repartition(col(if (small) "dst" else "src"))
-    val deg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
-    val withDeg = e.join(arm(small, deg), "src")
-      .pin()
-    var pr = nodes.withColumn("pr", lit(scale))
-    for (_ <- 1 to iterations) {
-      val prSide = arm(small, pr)
-      val sums = withDeg.join(prSide, withDeg("src") === prSide("id"))
-        .select(col("dst").as("id"), expr("pr div outdeg").as("c"))
-        .groupBy("id").agg(sum("c").as("s"))
-      pr = nodes.join(arm(small, sums), Seq("id"), "left")
-        .na.fill(0L, Seq("s"))
-        .select(col("id"),
-          (lit(15L * scale / 100L) + expr("(85 * s) div 100")).as("pr"))
-        .pin()
-    }
-    pr.select(col("id").as("node_id"), col("pr"))
-  }
+               srcCol: String = "src", dstCol: String = "dst"): DataFrame =
+    rankRounds(edges, iterations, srcCol, dstCol, identity,
+      lit(scale), lit(15L * scale / 100L))
 
   /** PERSONALIZED PageRank: the [[pageRank]] recursion with the teleport
     * mass restricted to a seed set — `pr'(v) = [v ∈ S]·(15·scale)/100 +
@@ -95,32 +69,44 @@ object Graph {
     * authority. Mass that would teleport from non-seed nodes is dropped
     * — the standard unnormalized PPR; ratios between nodes are what the
     * consumer reads. All-integer like the parent, bit-identical in any
-    * engine; same overflow envelope.
-    *
-    * Scale shape: identical to [[pageRank]] including the two-arm
-    * broadcast/shuffle gate — the seed flag rides the checkpointed node
-    * relation (one extra left join at setup, nothing per round).
+    * engine; same overflow envelope. The seed flag `__seed` rides the
+    * pinned node relation: one extra left join at setup, nothing per
+    * round.
     */
   def personalizedPageRank(edges: DataFrame, seeds: DataFrame, iterations: Int,
                            scale: Long = 1000000000000L,
-                           srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
+                           srcCol: String = "src", dstCol: String = "dst"): DataFrame =
+    rankRounds(edges, iterations, srcCol, dstCol,
+      _.join(seeds.select(col("id")).distinct().withColumn("__seed", lit(1L)),
+        Seq("id"), "left").na.fill(0L, Seq("__seed")),
+      col("__seed") * scale, col("__seed") * lit(15L * scale / 100L))
+
+  /** The integer rank rounds behind [[pageRank]] and
+    * [[personalizedPageRank]]: `pr₀ = start`, then per round
+    * `pr'(v) = teleport + (85·Σ_in pr/outdeg) div 100`. `nodeRelation`
+    * turns the distinct node ids `(id)` into the pinned node relation;
+    * every column it adds besides `id` is carried through each round's
+    * rank rows, where `start` and `teleport` may read it.
+    */
+  private def rankRounds(edges: DataFrame, iterations: Int, srcCol: String, dstCol: String,
+                         nodeRelation: DataFrame => DataFrame,
+                         start: Column, teleport: Column): DataFrame = {
     require(iterations >= 1, "iterations must be >= 1")
-    // pinned once — the [[pageRank]] rationale (node derivation + setup
-    // each re-ran the caller's edge construction otherwise)
+    // pin the edge projection once: it feeds the node derivation (twice)
+    // AND the degree/partition setup — unpinned, each consumer re-ran the
+    // caller's whole edge construction (for q95 a corpus distinct + union)
     val e0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst")).pin()
-    val nodes = e0.select(col("src").as("id"))
-      .union(e0.select(col("dst").as("id"))).distinct()
-      .join(seeds.select(col("id")).distinct().withColumn("__seed", lit(1L)),
-        Seq("id"), "left")
-      .na.fill(0L, Seq("__seed"))
+    val nodes = nodeRelation(e0.select(col("src").as("id"))
+      .union(e0.select(col("dst").as("id"))).distinct())
       .pin()
+    val carried = nodes.columns.filter(_ != "id").map(col).toSeq
     // rank rows are (id, pr[, seed]) — ~64 B built
     val small = BroadcastGate.fits(nodes.count(), 64)
     val e = e0.repartition(col(if (small) "dst" else "src"))
     val deg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
     val withDeg = e.join(arm(small, deg), "src")
       .pin()
-    var pr = nodes.select(col("id"), (col("__seed") * scale).as("pr"), col("__seed"))
+    var pr = nodes.select(col("id") +: start.as("pr") +: carried: _*)
     for (_ <- 1 to iterations) {
       val prSide = arm(small, pr)
       val sums = withDeg.join(prSide, withDeg("src") === prSide("id"))
@@ -128,9 +114,7 @@ object Graph {
         .groupBy("id").agg(sum("c").as("s"))
       pr = nodes.join(arm(small, sums), Seq("id"), "left")
         .na.fill(0L, Seq("s"))
-        .select(col("id"),
-          (col("__seed") * lit(15L * scale / 100L) + expr("(85 * s) div 100")).as("pr"),
-          col("__seed"))
+        .select(col("id") +: (teleport + expr("(85 * s) div 100")).as("pr") +: carried: _*)
         .pin()
     }
     pr.select(col("id").as("node_id"), col("pr"))
@@ -441,6 +425,17 @@ object Graph {
     * are the same integer census — identical rows.
     */
   def triangleCounts(edges: DataFrame): DataFrame = {
+    val (_, small, oriented) = orient(edges)
+    triangleCensus(oriented, small)
+  }
+
+  /** The degree orientation both triangle readouts start from: the
+    * pinned degree relation `(n, d)`, the census arm ([[censusFits]]),
+    * and the pinned oriented edge list `(src, dst)` — src the smaller
+    * `(degree, id)` endpoint. The order is total, so the oriented graph
+    * is acyclic and every triangle has ONE wedge (a→b, a→c, b→c).
+    */
+  private def orient(edges: DataFrame): (DataFrame, Boolean, DataFrame) = {
     val und = edges.select(col("u"), col("v")).pin()
     val deg = und.select(col("u").as("n")).union(und.select(col("v").as("n")))
       .groupBy("n").agg(count(lit(1)).as("d"))
@@ -448,9 +443,6 @@ object Graph {
              // join re-aggregated the edge list and the gate paid its own
              // O(m) pass over `oriented`
     val small = censusFits(deg)
-    // orient: src = smaller (deg, id), dst = larger — a total order, so
-    // the oriented graph is acyclic and every triangle has ONE wedge
-    // (a→b, a→c, b→c) with a < b < c in orientation order
     val oriented = und
       .join(arm(small, deg.select(col("n").as("u"), col("d").as("du"))), "u")
       .join(arm(small, deg.select(col("n").as("v"), col("d").as("dv"))), "v")
@@ -460,7 +452,7 @@ object Graph {
         when(struct(col("du"), col("u")) < struct(col("dv"), col("v")), col("v"))
           .otherwise(col("u")).as("dst"))
       .pin()
-    triangleCensus(oriented, small)
+    (deg, small, oriented)
   }
 
   /** The triangle census's [[BroadcastGate]] decision: it broadcasts the
@@ -901,30 +893,12 @@ object Graph {
     * Nodes of degree < 2 have no defined coefficient and are excluded;
     * triangle-free nodes read an explicit 0.
     *
-    * Scale shape: [[triangleCounts]]'s degree-oriented wedge
-    * enumeration (O(Σ min-deg) fan-in, never a wedge DISTINCT) plus one
-    * degree aggregate and a keyspace-sized left join, with
-    * [[triangleCounts]]'s census arms ([[censusFits]]).
+    * Scale shape: the [[triangleCounts]] census; its pinned degree
+    * relation also supplies the denominators, so normalization adds only
+    * a keyspace-sized left join.
     */
   def localClustering(edges: DataFrame): DataFrame = {
-    // inline [[triangleCounts]]'s wedge census rather than calling it:
-    // sharing ONE materialization of the edge list and ONE degree
-    // aggregate across orientation and normalization halves the edge
-    // work (the co-occurrence build dominates this operator's cost)
-    val und = edges.select(col("u"), col("v")).pin()
-    val deg = und.select(col("u").as("n")).unionAll(und.select(col("v").as("n")))
-      .groupBy("n").agg(count(lit(1)).as("d"))
-      .pin() // feeds both orientation joins + the output
-    val small = censusFits(deg)
-    val oriented = und
-      .join(arm(small, deg.select(col("n").as("u"), col("d").as("du"))), "u")
-      .join(arm(small, deg.select(col("n").as("v"), col("d").as("dv"))), "v")
-      .select(
-        when(struct(col("du"), col("u")) < struct(col("dv"), col("v")), col("u"))
-          .otherwise(col("v")).as("src"),
-        when(struct(col("du"), col("u")) < struct(col("dv"), col("v")), col("v"))
-          .otherwise(col("u")).as("dst"))
-      .pin()
+    val (deg, small, oriented) = orient(edges)
     val tri = triangleCensus(oriented, small)
     deg.filter(col("d") >= 2)
       .join(tri, col("n") === col("node_id"), "left")

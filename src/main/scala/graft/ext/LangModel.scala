@@ -37,11 +37,6 @@ object LangModel {
                     element_at(col("__ts"), i).as("w2")))).as("__bg"))
       .select(col(idCol), col("__bg.w1").as("w1"), col("__bg.w2").as("w2"))
 
-  /** Corpus bigram counts: (w1, w2, c12). One hash aggregate. */
-  def bigramCounts(docs: DataFrame, idCol: String = "doc_id",
-                   textCol: String = "text"): DataFrame =
-    docBigrams(docs, idCol, textCol).groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
-
   /** Per-document mean bigram log-probability under the corpus-trained
     * add-one model: avg over the doc's bigrams of
     * ln((c(w1,w2) + 1) / (c(w1,·) + V)), V = corpus vocabulary size.

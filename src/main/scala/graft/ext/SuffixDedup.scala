@@ -216,21 +216,9 @@ object SuffixDedup {
     * corpus with sparse duplication the deep rounds run on near-empty
     * relations instead of the full position set.
     */
-  private def combine(a: DataFrame, b: DataFrame, shift: Int): DataFrame = {
-    val right = b.select(col("d"), (col("p") - shift).as("p"),
-      col("rd").as("rd2"), col("rp").as("rp2"))
-    val paired = a.join(right, Seq("d", "p"))
-    val reps = paired.groupBy("rd", "rp", "rd2", "rp2")
-      .agg(min(packDP(col("d"), col("p"))).as("__m"), // HashAggregate (see [[packDP]])
-        count(lit(1)).as("__n"))
-      .filter(col("__n") >= 2) // active positions only
-      .select(col("rd"), col("rp"), col("rd2"), col("rp2"),
-        unpackD(col("__m")).as("__nrd"), unpackP(col("__m")).as("__nrp"))
-    paired.join(reps, Seq("rd", "rp", "rd2", "rp2"))
-      .select(col("d"), col("p"),
-        col("__nrd").as("rd"), col("__nrp").as("rp"))
-      .pin()
-  }
+  private def combine(a: DataFrame, b: DataFrame, shift: Int): DataFrame =
+    combineOn(a, b.select(col("d"), col("p"), col("rd").as("rd2"), col("rp").as("rp2")),
+      shift, Seq("rd2", "rp2"))
 
   /** [[combine]] with the right side keyed by raw window TEXT
     * ([[rawGrams]]) instead of a representative pair — the search
@@ -241,18 +229,28 @@ object SuffixDedup {
     * equality is the same exact equality — just a wider grouping column
     * for one aggregate.
     */
-  private def combineRaw(a: DataFrame, rawRight: DataFrame,
-                         shift: Int): DataFrame = {
-    val right = rawRight.select(col("d"), (col("p") - shift).as("p"),
-      col("__g"))
-    val paired = a.join(right, Seq("d", "p"))
-    val reps = paired.groupBy("rd", "rp", "__g")
+  private def combineRaw(a: DataFrame, rawRight: DataFrame, shift: Int): DataFrame =
+    combineOn(a, rawRight, shift, Seq("__g"))
+
+  /** The one relational step of [[combine]] and [[combineRaw]]: `right`'s
+    * `(d, p)` shift back by `shift`, each position pairs its class
+    * `(rd, rp)` in `a` with `right`'s class key columns `keys` at
+    * p+shift, and the pair is re-represented by its minimal (d, p) —
+    * one map-combined aggregate plus one join-back, keeping duplicated
+    * classes only (the active-position invariant).
+    */
+  private def combineOn(a: DataFrame, right: DataFrame, shift: Int,
+                        keys: Seq[String]): DataFrame = {
+    val paired = a.join(
+      right.select(col("d") +: (col("p") - shift).as("p") +: keys.map(col): _*), Seq("d", "p"))
+    val cls = Seq("rd", "rp") ++ keys
+    val reps = paired.groupBy(cls.map(col): _*)
       .agg(min(packDP(col("d"), col("p"))).as("__m"), // HashAggregate (see [[packDP]])
         count(lit(1)).as("__n"))
-      .filter(col("__n") >= 2) // active positions only (see [[combine]])
-      .select(col("rd"), col("rp"), col("__g"),
-        unpackD(col("__m")).as("__nrd"), unpackP(col("__m")).as("__nrp"))
-    paired.join(reps, Seq("rd", "rp", "__g"))
+      .filter(col("__n") >= 2) // active positions only
+      .select(cls.map(col) :+ unpackD(col("__m")).as("__nrd") :+
+        unpackP(col("__m")).as("__nrp"): _*)
+    paired.join(reps, cls)
       .select(col("d"), col("p"),
         col("__nrd").as("rd"), col("__nrp").as("rp"))
       .pin()
@@ -346,12 +344,19 @@ object SuffixDedup {
   /** Maximal duplicated spans, the paper's output unit: one row per
     * maximal run of consecutive duplicated window starts — (doc_id,
     * start, span_tokens) where the span covers tokens [start,
-    * start + span_tokens − 1]. Gaps-and-islands over each document's own
-    * dup positions (window partitioned BY DOCUMENT — never global).
+    * start + span_tokens − 1] ([[spans]]).
     */
   def dupSpans(docs: DataFrame, minLen: Int = 8, idCol: String = "doc_id",
-               textCol: String = "text"): DataFrame = {
-    val pos = dupWindowPositions(docs, minLen, idCol, textCol)
+               textCol: String = "text"): DataFrame =
+    spans(dupWindowPositions(docs, minLen, idCol, textCol), minLen, idCol)
+
+  /** Gaps-and-islands over a `(d, p)` window-start set: one
+    * `(idCol, start, span_tokens)` row per maximal run of consecutive
+    * starts in a document, the run's `minLen`-token windows covering
+    * tokens [start, start + span_tokens − 1]. The window is partitioned
+    * BY DOCUMENT — never global.
+    */
+  private def spans(pos: DataFrame, minLen: Int, idCol: String): DataFrame = {
     val w = Window.partitionBy("d").orderBy("p")
     pos.withColumn("__g", col("p") - row_number().over(w))
       .groupBy("d", "__g")
@@ -404,14 +409,23 @@ object SuffixDedup {
     * [[Dedup.trimDuplicatedSpans]] (which keys on materialized gram
     * strings and cross-document frequency only).
     *
-    * Output: (idCol, clean_text, n_kept) for EVERY doc.
-    * Scale: covered positions explode ×minLen off the dup-start stream,
-    * the anti-join and per-doc ordered rebuild are (id, pos)-keyed — the
-    * q60 rebuild shape.
+    * Output: (idCol, clean_text, n_kept) for EVERY doc ([[trimCovered]]).
     */
   def trimDupSpans(docs: DataFrame, minLen: Int = 8, idCol: String = "doc_id",
-                   textCol: String = "text"): DataFrame = {
-    val covered = dupWindowPositions(docs, minLen, idCol, textCol)
+                   textCol: String = "text"): DataFrame =
+    trimCovered(dupWindowPositions(docs, minLen, idCol, textCol), docs, minLen,
+      idCol, textCol)
+
+  /** Removes every token of `docs` covered by a `minLen`-window starting
+    * at a `(d, p)` of `pos` and rebuilds each doc's text from the
+    * surviving tokens in order: (idCol, clean_text, n_kept) for EVERY doc
+    * of `docs`. Covered positions explode ×minLen off the window-start
+    * stream; the anti-join and per-doc ordered rebuild are (id,
+    * pos)-keyed — the q60 rebuild shape.
+    */
+  private def trimCovered(pos: DataFrame, docs: DataFrame, minLen: Int,
+                          idCol: String, textCol: String): DataFrame = {
+    val covered = pos
       .select(col("d"), explode(sequence(col("p"),
         col("p") + (minLen - 1))).as("p"))
       .distinct()
@@ -468,8 +482,7 @@ object SuffixDedup {
     * gives only the MAXIMUM of): every maximal run of eval-document
     * positions whose `minLen`-token window also occurs ANYWHERE in the
     * training corpus — (idCol, start, span_tokens) rows per eval doc,
-    * the Lee et al. 2022 eval-decontamination unit. Gaps-and-islands per
-    * eval document (window partitioned BY DOCUMENT — never global).
+    * the Lee et al. 2022 eval-decontamination unit ([[spans]]).
     *
     * Scale shape: [[windowClasses]]' fixed-depth cost over the UNION
     * (direct depth-4 seed + ⌈log₂ minLen⌉−2 doubling rounds), one
@@ -478,48 +491,22 @@ object SuffixDedup {
     */
   def crossDupSpans(train: DataFrame, eval: DataFrame, minLen: Int = 8,
                     idCol: String = "doc_id",
-                    textCol: String = "text"): DataFrame = {
-    val pos = crossDupPositions(train, eval, minLen, idCol, textCol)
-    val w = Window.partitionBy("d").orderBy("p")
-    pos.withColumn("__g", col("p") - row_number().over(w))
-      .groupBy("d", "__g")
-      .agg(min("p").as("start"),
-        (max("p") - min("p") + minLen).as("span_tokens"))
-      .select(col("d").as(idCol), col("start"), col("span_tokens"))
-  }
+                    textCol: String = "text"): DataFrame =
+    spans(crossDupPositions(train, eval, minLen, idCol, textCol), minLen, idCol)
 
   /** Eval-corpus decontamination TRIM at suffix precision — the editing
     * half of [[crossDupSpans]]: every eval token position covered by ANY
     * train-shared `minLen`-window is removed and each eval doc's text is
-    * rebuilt from the surviving tokens in order ([[trimDupSpans]]' rule
-    * with the cross-corpus predicate). The training corpus is never
+    * rebuilt from the surviving tokens in order ([[trimCovered]], with the
+    * cross-corpus predicate). The training corpus is never
     * edited — it defines the contamination set. Output: (idCol,
     * clean_text, n_kept) for EVERY eval doc.
     */
   def trimCrossDupSpans(train: DataFrame, eval: DataFrame, minLen: Int = 8,
                         idCol: String = "doc_id",
-                        textCol: String = "text"): DataFrame = {
-    val covered = crossDupPositions(train, eval, minLen, idCol, textCol)
-      .select(col("d"), explode(sequence(col("p"),
-        col("p") + (minLen - 1))).as("p"))
-      .distinct()
-    val toksPos = eval
-      .select(col(idCol).cast("long").as("d"),
-        posexplode(TextAnalysis.tokens(col(textCol))).as(Seq("__p0", "token")))
-      .select(col("d"), (col("__p0") + 1).cast("long").as("p"), col("token"))
-    val kept = toksPos.join(covered, Seq("d", "p"), "left_anti")
-    val rebuilt = kept.groupBy("d")
-      .agg(collect_list(struct(col("p"), col("token"))).as("__kt"))
-      .select(col("d"),
-        concat_ws(" ", transform(array_sort(col("__kt")), s => s("token")))
-          .as("clean_text"),
-        size(col("__kt")).cast("long").as("n_kept"))
-    eval.select(col(idCol).cast("long").as("d"))
-      .join(rebuilt, Seq("d"), "left")
-      .select(col("d").as(idCol),
-        coalesce(col("clean_text"), lit("")).as("clean_text"),
-        coalesce(col("n_kept"), lit(0L)).as("n_kept"))
-  }
+                        textCol: String = "text"): DataFrame =
+    trimCovered(crossDupPositions(train, eval, minLen, idCol, textCol), eval, minLen,
+      idCol, textCol)
 
   /** The LONGEST exactly-duplicated token span in the corpus — the
     * suffix-array "longest repeated substring" readout, at token

@@ -166,13 +166,6 @@ object TextAnalysis {
       size(filter(toks, t => t.isin(englishStopwords.map(lit): _*))).cast("double") / n)
   }
 
-  /** Mean token length (0 for empty). */
-  def avgTokenLen(text: Column): Column = {
-    val toks = tokens(text)
-    when(size(toks) === 0, lit(0.0)).otherwise(
-      aggregate(toks, lit(0L), (acc, t) => acc + length(t)).cast("double") / size(toks))
-  }
-
   /** Heuristic quality score in [0,1]: rewards mid-length documents and a
     * healthy stopword ratio, penalizes punctuation soup. Deterministic,
     * closed-form — the same formula is expressible as oracle SQL. The

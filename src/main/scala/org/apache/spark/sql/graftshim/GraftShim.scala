@@ -10,9 +10,10 @@ import org.apache.spark.sql.classic
   * API to wrap a hand-built `LogicalPlan` back into a `DataFrame` —
   * `Dataset.ofRows` is `private[sql]`. Placing this one forwarding object
   * inside the `org.apache.spark.sql` namespace is the established pattern
-  * third-party Spark libraries use for exactly this gap. Nothing else in
-  * the engine lives outside the `graft` namespace, and nothing here adds
-  * behavior — it only forwards.
+  * third-party Spark libraries use for exactly this gap. The one other
+  * such bridge is `org.apache.spark.ListenerBusDrain` (the listener bus
+  * is package-private too); nothing here adds behavior — it only
+  * forwards.
   */
 object GraftShim {
 

@@ -1,5 +1,10 @@
 package graft
 
+import java.nio.file.Files
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
+
 /** Drives [[Tool]] inside the shared test session. The first `ab` case
   * compares every registered query that runs a two-arm Graph or
   * SuffixDedup operator under the default broadcast budget and under
@@ -50,6 +55,32 @@ class ToolSpec extends SparkSpec {
     assert(code == 0, out)
     assert(out.contains("## q01_retail_agg"), out)
     assert(out.contains("Exchange"), out)
+  }
+
+  test("trace: when run returns, every execution has its section in the file") {
+    val executions = new java.util.concurrent.atomic.AtomicInteger
+    val counter = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        executions.incrementAndGet()
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit =
+        executions.incrementAndGet()
+    }
+    val dir = Files.createTempDirectory("trace")
+    ListenerBusDrain(spark.sparkContext)
+    spark.listenerManager.register(counter)
+    val (code, text) = try {
+      val (code, _) = output("trace", SfDir, dir.toString, "q101_triangles")
+      // read before anything else drains the bus: `trace` must have done it
+      (code, Files.readString(dir.resolve("q101_triangles_trace.txt")))
+    } finally {
+      ListenerBusDrain(spark.sparkContext)
+      spark.listenerManager.unregister(counter)
+    }
+    assert(code == 0)
+    val sections = text.linesIterator.count(_.startsWith("== job "))
+    // the pins, the gate's head() and the checksum: several executions
+    assert(executions.get > 3)
+    assert(sections == executions.get, text)
   }
 
   test("an unknown subcommand or query name is rejected") {

@@ -178,6 +178,25 @@ class ClusteringSpec extends SparkSpec {
     assert(out.nonEmpty && out.subsetOf(Set(1L, 2L)))
   }
 
+  test("pqTopK / ivfPqTopK: a vector that is not 64-dim fails naming both widths") {
+    def onehot(width: Int, hot: Long) = Seq.tabulate(width)(j => if (j == hot) 1.0 else 0.0)
+    def messages(run: => Unit): String =
+      Iterator.iterate[Throwable](intercept[Exception](run))(_.getCause)
+        .takeWhile(_ != null).map(_.getMessage).mkString("\n")
+    // a 128-dim corpus used to be quantized on its first 64 dims, silently
+    val wide = vecs((0L until 8L).map(i => i -> onehot(128, i * 16)): _*)
+    val want = "expects 64-dim vectors, got 128-dim"
+    val pq = messages(Clustering.pqTopK(wide, wide, k = 3).collect())
+    assert(pq.contains(want), pq)
+    val ivf = messages(Clustering.ivfPqTopK(wide, wide, k = 3).collect())
+    assert(ivf.contains(want), ivf)
+    // the query side is checked too: 32-dim queries against a 64-dim corpus
+    val corpus = vecs((0L until 8L).map(i => i -> onehot(64, i * 8)): _*)
+    val narrow = vecs(100L -> Seq.fill(32)(0.5))
+    val q = messages(Clustering.pqTopK(narrow, corpus, k = 3).collect())
+    assert(q.contains("expects 64-dim vectors, got 32-dim"), q)
+  }
+
   test("kCenterGreedy: farthest-point order with exact integer radii") {
     // 1-D layout (padded to 2 dims): 0, 10, 5, 0.001(dim2), 20
     val d = vecs(

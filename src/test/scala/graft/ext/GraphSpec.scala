@@ -309,6 +309,20 @@ class GraphSpec extends SparkSpec {
     assert(r3(2L) > r3(4L) && r3(3L) > 0L)
   }
 
+  // With every node a seed, [v ∈ S] = 1 everywhere: pr₀ and the teleport
+  // term are PageRank's, so the two operators must agree row for row.
+  test("personalizedPageRank: seeding every node returns exactly pageRank's rows") {
+    val n = 60L
+    val e = df("src BIGINT, dst BIGINT", (0L until n).flatMap(i =>
+      Seq(Row(i, (i + 1) % n), Row(i, (i + 7) % n)) ++
+        (if (i % 3 == 0) Seq(Row(i, (i + 19) % n)) else Nil)))
+    val everyNode = df("id BIGINT", (0L until n).map(Row(_)))
+    val ppr = Graph.personalizedPageRank(e, everyNode, iterations = 4, scale = 1000000L)
+    val pr = Graph.pageRank(e, iterations = 4, scale = 1000000L)
+    assert(ppr.count() == n)
+    assertSameRows(ppr, pr)
+  }
+
   // Triangle 1-2-3 plus pendant 3-4: degrees 2,2,3,1.
   // Symmetrized endpoint degrees: mm=8, Σx=18, Σx²=44, Σxy=38 →
   // num = 8·38−18² = −20, den = 8·44−18² = 28 → −20e6 div 28 = −714285
