@@ -10,7 +10,7 @@ package graft
   * same exact-hash gate as every parquet-backed query.
   *
   * The fixtures deliberately carry the reference APIs' edge cases: dirty
-  * quantities (`"n/a"` → try_cast null), null/missing skus and quantities,
+  * quantities (`"n/a"` → null), null/missing skus and quantities,
   * out-of-window order dates, CANCELED orders, and multi- vs single-line
   * orders at every nesting depth.
   */

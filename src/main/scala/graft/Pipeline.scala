@@ -5,6 +5,7 @@ import java.time.LocalDate
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.extract.Payloads
 import graft.load.Sinks
 import graft.transform.{Aggregate, Clean, Enrich, Inventory}
 
@@ -71,17 +72,15 @@ object Pipeline {
     */
   def build(salesFrames: Seq[DataFrame], dims: Dims, runDate: Date,
             primaryBrand: String, otherBrands: Seq[String]): Outputs =
-    derive(salesFrames, dims, runDate, primaryBrand, otherBrands, identity)
+    derive(Clean.cleanSales(salesFrames), dims, runDate, primaryBrand, otherBrands, identity)
 
-  /** Every output of the DAG over the cleaned sales fact (:581-607).
-    * `share` is applied to each frame that several outputs read: the
-    * cleaned fact and the two aggregates.
+  /** Every output of the DAG over the cleaned sales fact `sales`
+    * (:581-607). `share` is applied to each aggregate that several outputs
+    * read.
     */
-  private def derive(salesFrames: Seq[DataFrame], dims: Dims, runDate: Date,
+  private def derive(sales: DataFrame, dims: Dims, runDate: Date,
                      primaryBrand: String, otherBrands: Seq[String],
                      share: DataFrame => DataFrame): Outputs = {
-    val sales = share(Clean.cleanSales(salesFrames))
-
     // branch A: retail agg → wholesale mapping (:610-632)
     val soldValue = share(Aggregate.retailAgg(sales))
     val finalResult = share(Aggregate.wholesaleAgg(soldValue, dims.skuMap))
@@ -113,9 +112,18 @@ object Pipeline {
   /** Executes the DAG and writes the reference's 11 CSV sinks under
     * `outDir` (K1-K3). The cleaned sales fact and the retail and wholesale
     * aggregates are persisted for the duration of the sink writes and
-    * unpersisted before returning or throwing. The sinks write
-    * concurrently; when some fail, the others still finish, and then the
-    * first failure in sink order is thrown with the rest suppressed.
+    * unpersisted before returning or throwing.
+    *
+    * Before any sink starts, one job fills the cached fact and counts each
+    * API payload's lines as it reads them (`Payloads.watchDrift`). When a
+    * payload with lines has its sku or qty null on every line, its reader's
+    * declared field is missing from the payload: the run throws an
+    * `IllegalArgumentException` that names the source and the field, and
+    * writes no sink.
+    *
+    * The sinks write concurrently; when some fail, the others still
+    * finish, and then the first failure in sink order is thrown with the
+    * rest suppressed.
     * `newstock` goes through the materialize-first fan-out because the
     * reference overwrites its own input file (SURVEY.md §7.4-d).
     */
@@ -124,7 +132,13 @@ object Pipeline {
     val cached = Seq.newBuilder[DataFrame]
     def share(df: DataFrame): DataFrame = { cached += df; df.persist() }
     try {
-      val o = derive(salesFrames, dims, runDate, primaryBrand, otherBrands, share)
+      val (frames, drift) = salesFrames.map(Payloads.watchDrift).unzip
+      val sales = share(Clean.cleanSales(frames))
+      // the one scan of the feeds: fills the cache, counts the payloads
+      sales.write.format("noop").mode("overwrite").save()
+      val drifted = drift.flatMap(_())
+      if (drifted.nonEmpty) throw new IllegalArgumentException(drifted.mkString("; "))
+      val o = derive(sales, dims, runDate, primaryBrand, otherBrands, share)
       val day = runDate.toLocalDate
       Sinks.concurrently(Seq(
         () => Sinks.csvReport(o.soldValueRetail, s"$outDir/soldvalueretail.csv"),

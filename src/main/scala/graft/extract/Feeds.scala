@@ -1,8 +1,16 @@
 package graft.extract
 
-import scala.util.Try
+import java.io.{BufferedReader, FileNotFoundException, IOException, InputStream, InputStreamReader}
+import java.nio.charset.StandardCharsets
+import scala.util.{Try, Using}
+import com.univocity.parsers.csv.CsvParser
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.io.compress.CompressionCodecFactory
 import org.apache.spark.sql.{DataFrame, SparkSession, Row}
+import org.apache.spark.sql.catalyst.csv.CSVOptions
+import org.apache.spark.sql.execution.datasources.csv.CSVUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import graft.model.Schemas
 
 /** File-feed extraction (reference portfolio-etl.py:465-534).
@@ -31,10 +39,20 @@ object Feeds {
     * swallowed cause is logged so a present-but-broken feed (the
     * data-dropping case) is observable, unlike the reference's bare except.
     *
+    * Declared read: the column names come from the feed's header line,
+    * read on the driver from its first file ([[header]]), and every column
+    * is declared STRING (the types inference would give). So building the
+    * frame starts no Spark job; a header without the `renames`' source
+    * names fails the build and takes the sentinel branch. With a preamble,
+    * the one job left is `zipWithIndex`'s size count over a feed of more
+    * than one partition.
+    *
     * Preamble skipping: CSV has no skip-N-rows option, so the connector
     * pre-strips in-engine via a distributed positional index filter on the
     * raw lines (SURVEY.md §2.1 S10) — no driver materialization, so the
-    * path is safe even if a preambled feed arrives at fact scale.
+    * path is safe even if a preambled feed arrives at fact scale. Every
+    * later line equal to the header is dropped too, as Spark's
+    * `csv(Dataset)` does with `header`.
     */
   def read(spark: SparkSession, feed: FileFeed): DataFrame =
     Try(readRaw(spark, feed)).recover { case scala.util.control.NonFatal(e) =>
@@ -43,23 +61,57 @@ object Feeds {
     }.get
 
   private def readRaw(spark: SparkSession, feed: FileFeed): DataFrame = {
+    val (line, names) = header(spark, feed)
+    val reader = spark.read.schema(StructType(names.map(StructField(_, StringType))))
+      .option("sep", feed.sep)
     val base =
-      if (feed.headerOffset == 0) {
-        spark.read.option("header", "true").option("sep", feed.sep).csv(feed.path)
-      } else {
-        // Strip N preamble lines positionally, then re-parse: zipWithIndex
-        // keeps split order (= file order for text), the filter runs on the
-        // executors, and only the surviving lines flow on. One extra job to
-        // size the partition offsets — no collect(), any file size.
+      if (feed.headerOffset == 0) reader.option("header", "true").csv(feed.path)
+      else {
+        // zipWithIndex keeps split order (= file order for text), the
+        // filters run on the executors, and only the surviving lines flow on
         import spark.implicits._
         val lines = spark.read.textFile(feed.path).rdd
           .zipWithIndex()
           .filter(_._2 >= feed.headerOffset)
           .map(_._1)
+          .filter(_ != line)
           .toDS()
-        spark.read.option("header", "true").option("sep", feed.sep).csv(lines)
+        reader.csv(lines)
       }
     project(base, feed)
+  }
+
+  /** The feed's header line and the column names Spark derives from it.
+    * The line is the first non-blank one after `headerOffset` lines of the
+    * feed's first file (by path, hidden files skipped), read through the
+    * Hadoop FileSystem API and the file's compression codec, as Spark's
+    * scan reads it. The names follow Spark's own CSV rules: a blank name
+    * becomes `_c<i>`, and duplicate names get their index as a suffix.
+    */
+  private[extract] def header(spark: SparkSession, feed: FileFeed): (String, Seq[String]) = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val path = new Path(feed.path)
+    val fs = path.getFileSystem(conf)
+    def hidden(p: Path) = p.getName.startsWith("_") || p.getName.startsWith(".")
+    val files = Option(fs.globStatus(path)).toSeq.flatten.flatMap { s =>
+      if (s.isDirectory) fs.listStatus(s.getPath).filter(c => c.isFile && !hidden(c.getPath))
+      else Seq(s)
+    }.map(_.getPath).sortBy(_.toString)
+    val first = files.headOption.getOrElse(throw new FileNotFoundException(feed.path))
+    val codec = Option(new CompressionCodecFactory(conf).getCodec(first))
+    val line = Using.Manager { use =>
+      val raw = use(fs.open(first))
+      val in = use(new BufferedReader(new InputStreamReader(
+        codec.fold[InputStream](raw)(_.createInputStream(raw)), StandardCharsets.UTF_8)))
+      Iterator.continually(in.readLine()).takeWhile(_ != null).drop(feed.headerOffset)
+        .find(_.trim.nonEmpty)
+        .getOrElse(throw new IOException(s"${feed.path}: no header line"))
+    }.get
+    val options = new CSVOptions(Map("sep" -> feed.sep, "header" -> "true"),
+      true, spark.conf.get("spark.sql.session.timeZone"))
+    val caseSensitive = spark.conf.get("spark.sql.caseSensitive").toBoolean
+    (line, CSVUtils.makeSafeHeader(
+      new CsvParser(options.asParserSettings).parseLine(line), caseSensitive, options).toSeq)
   }
 
   /** The canonical `(sku, qty, site)` projection of a feed's raw columns,
@@ -88,31 +140,6 @@ object Feeds {
     val site = feed.siteLiteral.getOrElse(feed.path)
     spark.createDataFrame(
       java.util.List.of(Row("other", 0.0, site)), Schemas.saleLine)
-  }
-
-  /** JSON-lines ingestion with a QUARANTINE lane: good records parse
-    * against the declared schema, malformed lines survive VERBATIM in the
-    * second frame instead of becoming silent nulls (the reference's bare
-    * `except:` swallows them — portfolio-etl.py:477). Built on
-    * `from_json` + an in-schema corrupt-record column, which — unlike
-    * filtering the reader's internal `_corrupt_record` — needs no
-    * cache() workaround and streams unchanged. At scale the quarantine
-    * frame is written next to the output and its COUNT is the batch's
-    * data-quality gate.
-    */
-  def jsonWithQuarantine(spark: SparkSession, path: String,
-                         schemaDdl: String): (DataFrame, DataFrame) = {
-    val parsed = spark.read.text(path)
-      .filter(length(trim(col("value"))) > 0)
-      .select(col("value"), from_json(col("value"),
-        org.apache.spark.sql.types.StructType.fromDDL(schemaDdl)
-          .add("_corrupt_record", org.apache.spark.sql.types.StringType),
-        java.util.Map.of("columnNameOfCorruptRecord", "_corrupt_record",
-          "mode", "PERMISSIVE")).as("r"))
-    (parsed.filter(col("r._corrupt_record").isNull).select(col("r.*"))
-       .drop("_corrupt_record"),
-      parsed.filter(col("r._corrupt_record").isNotNull)
-        .select(col("value").as("raw_record")))
   }
 
   /** Schema-evolution read: one logical table whose parquet batches were

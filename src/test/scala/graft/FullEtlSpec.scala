@@ -2,9 +2,11 @@ package graft
 
 import java.nio.file.Files
 import java.sql.{Date, Timestamp}
+import java.util.concurrent.atomic.AtomicLong
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions.{col, sum}
-import graft.extract.{Excel, Feeds, FileFeed, Payloads}
+import graft.extract.{Excel, Feeds, FileFeed, Payloads, XlsxFixture}
 
 /** The whole reference program end-to-end (SURVEY.md §3): all 13 source
   * extractors (7 API payload shapes + 5 flat-file feeds + 1 Excel feed)
@@ -108,5 +110,59 @@ class FullEtlSpec extends SparkSpec {
       "wholesale_brand1/06-01-2024.csv" -> (1L, 20.0),
       "wholesale_brand2/06-01-2024.csv" -> (2L, 13.0))
     assert(dated.map { case (sink, _) => sink -> readBack(sink) } == dated)
+  }
+
+  test("building the 14 source frames of a nightly run starts no Spark job") {
+    // the benchmark's shapes: two pages per API payload, a preambled CSV,
+    // a TSV, two plain CSVs, one missing feed and a workbook
+    val in = Files.createTempDirectory("nightly")
+    def pages(feed: String, ext: String)(page: Int => String): String = {
+      val d = Files.createDirectories(in.resolve(feed))
+      (0 until 2).foreach(i => Files.writeString(d.resolve(s"page-$i.$ext"), page(i)))
+      d.toString
+    }
+    def file(name: String, body: String): String =
+      Files.writeString(in.resolve(name), body).toString
+    def items(sku: String, i: Int) = s"""[{"$sku":"A-$i","quantity":2},{"$sku":"B-$i","quantity":"n/a"}]"""
+    val from = Timestamp.valueOf("2024-05-01 00:00:00")
+    val to = Timestamp.valueOf("2024-06-01 00:00:00")
+    val dsco = (i: Int) => s"""{"orders":[{"dscoCreateDate":"2024-05-0${i + 2}T10:00:00","lineItems":${items("sku", i)}}]}"""
+    val build = () => Seq(
+      Payloads.walmart(spark, pages("walmart", "json")(i =>
+        s"""{"list":{"elements":{"order":[{"orderLines":{"orderLine":[""" +
+          s"""{"item":{"sku":"W-$i"},"orderLineQuantity":{"amount":"n/a"}}]}}]}}}""")),
+      Payloads.houzz(spark, pages("houzz", "xml")(i =>
+        s"<Orders><Order><OrderItem><SKU>H-$i</SKU><Quantity>1</Quantity></OrderItem></Order></Orders>")),
+      Payloads.faire(spark, pages("faire", "json")(i => s"""{"orders":[{"items":${items("sku", i)}}]}""")),
+      Payloads.wooCommerce(spark, pages("woo", "json")(i =>
+        s"""[{"date_created":"2024-05-0${i + 2}T10:00:00","line_items":${items("sku", i)}}]"""),
+        "woo_site1", from, to),
+      Payloads.dsco(spark, pages("dsco_t1", "json")(dsco), "dsco_t1", from, to),
+      Payloads.dsco(spark, pages("dsco_t2", "json")(dsco), "dsco_t2", from, to),
+      Payloads.mirakl(spark, pages("mirakl", "json")(i =>
+        s"""{"orders":[{"order_state":"SHIPPING","order_lines":${items("offer_sku", i)}}]}"""), "mirakl_s1"),
+      Payloads.wayfair(spark, pages("wayfair", "json")(i =>
+        s"""{"data":{"getDropshipPurchaseOrders":[{"products":${items("partNumber", i)}}]}}""")),
+      Feeds.read(spark, FileFeed(file("macys.csv", "pre\npre\npre\npre\nVendor SKU,Quantity,Merchant\nM-1,2,Macys\n"),
+        headerOffset = 4, renames = Map("Vendor SKU" -> "sku", "Quantity" -> "qty"),
+        siteColumn = Some("Merchant"))),
+      Feeds.read(spark, FileFeed(file("amazon.csv", "sku\tquantity\nZ-1\t3\nsku\tquantity\n"), sep = "\t",
+        renames = Map("quantity" -> "qty"), siteLiteral = Some("Amazon"))),
+      Feeds.read(spark, FileFeed(file("tom.csv", "Item SKU,Qty\nT-1,1\n"),
+        renames = Map("Item SKU" -> "sku", "Qty" -> "qty"), siteLiteral = Some("Touch OF Modern"))),
+      Feeds.read(spark, FileFeed(in.resolve("hsn.csv").toString, siteLiteral = Some("HSN"))),
+      Feeds.read(spark, FileFeed(file("rue.csv", "Vendor SKU,Quantity\nR-1,1\n"),
+        renames = Map("Vendor SKU" -> "sku", "Quantity" -> "qty"), siteLiteral = Some("Ruelala & Gilt"))),
+      Excel.readFeed(spark, FileFeed(XlsxFixture.writeXlsx(Seq(
+        Seq(Left("SKU"), Left("Qty")), Seq(Left("X-1"), Right(2.0)))),
+        renames = Map("SKU" -> "sku", "Qty" -> "qty"), siteLiteral = Some("Walmart"))))
+
+    val jobs = new AtomicLong
+    val frames = listening(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    })(build())
+    assert(jobs.get == 0, s"${jobs.get} jobs while building the frames")
+    // every frame read its input: 14 sources, the missing one as its sentinel
+    assert(frames.map(_.count()) == Seq(2, 2, 4, 4, 4, 4, 4, 4, 1, 2, 1, 1, 1, 1))
   }
 }

@@ -6,11 +6,10 @@ import java.sql.Date
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLong
 import scala.jdk.CollectionConverters._
-import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, Row}
 import graft.SparkSpec
-import graft.extract.{Feeds, FileFeed}
+import graft.extract.{Feeds, FileFeed, Payloads}
 import graft.load.Sinks
 
 object PipelineSpec {
@@ -71,17 +70,6 @@ class PipelineSpec extends SparkSpec {
     Files.writeString(csv, Seq.tabulate(rows)(i => if (i % 2 == 0) "SET-1,1" else "B-2,2")
       .mkString("sku,qty\n", "\n", "\n"))
     Feeds.read(spark, FileFeed(csv.toString, siteLiteral = Some("Walmart")))
-  }
-
-  /** Runs `body` with `listener` registered, after every earlier event has
-    * been delivered, and delivers every event `body` posted before returning.
-    */
-  private def listening[T](listener: SparkListener)(body: => T): T = {
-    val sc = spark.sparkContext
-    ListenerBusDrain(sc)
-    sc.addSparkListener(listener)
-    try { val r = body; ListenerBusDrain(sc); r }
-    finally sc.removeSparkListener(listener)
   }
 
   /** The live threads `Sinks.concurrently` started. */
@@ -241,5 +229,22 @@ class PipelineSpec extends SparkSpec {
       assert(readBack(sink, stockSchema) == decremented, sink)
     for ((sink, schema, want) <- others)
       assert(readBack(sink, schema) == want, sink)
+  }
+
+  test("a payload without its declared quantity field fails the run before any sink") {
+    val page = Files.createTempDirectory("drift").resolve("faire.json")
+    Files.writeString(page, """{"orders":[{"items":[{"sku":"SET-1","qty":2},{"sku":"B-2","qty":1}]}]}""")
+    val faire = Payloads.faire(spark, page.toString)
+    val outDir = Files.createTempDirectory("drifted").toString
+    val e = intercept[IllegalArgumentException](Pipeline.run(feeds :+ faire, dims, runDate, outDir))
+    assert(e.getMessage.contains("faire") && e.getMessage.contains("quantity"), e.getMessage)
+    assert(PipelineSpec.missingSinks(outDir) == PipelineSpec.sinks)
+    assert(spark.sharedState.cacheManager.isEmpty, "cache not released after a drifted run")
+
+    // the same payload with its field back runs through
+    Files.writeString(page, """{"orders":[{"items":[{"sku":"SET-1","quantity":2},{"sku":"B-2","quantity":1}]}]}""")
+    val fixedDir = Files.createTempDirectory("fixed").toString
+    Pipeline.run(feeds :+ Payloads.faire(spark, page.toString), dims, runDate, fixedDir)
+    assert(PipelineSpec.missingSinks(fixedDir).isEmpty)
   }
 }

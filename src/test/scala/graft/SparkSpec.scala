@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.SparkListener
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -24,6 +26,17 @@ abstract class SparkSpec extends AnyFunSuite {
       .map(r => (0 until r.length).map(i => String.valueOf(r.get(i))).mkString("|")).sorted
 
   def rows(xs: Seq[String]*): Seq[String] = xs.map(_.mkString("|")).sorted
+
+  /** Runs `body` with `listener` registered, after every earlier event has
+    * been delivered, and delivers every event `body` posted before returning.
+    */
+  def listening[T](listener: SparkListener)(body: => T): T = {
+    val sc = spark.sparkContext
+    ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try { val r = body; ListenerBusDrain(sc); r }
+    finally sc.removeSparkListener(listener)
+  }
 
   def assertSameRows(a: DataFrame, b: DataFrame): Unit = {
     assert(a.columns.toSeq == b.columns.toSeq, "column mismatch")

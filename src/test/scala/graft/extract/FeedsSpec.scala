@@ -50,4 +50,33 @@ class FeedsSpec extends SparkSpec {
     // header echo + sentinel dropped; b2's qty is null after coerce
     assert(rowSet(cleaned) == rows(Seq("a1", "2.0", "x"), Seq("b2", "null", "x")))
   }
+
+  test("header names follow Spark's rules: blank → _c<i>, duplicates take their index") {
+    for (line <- Seq("sku,,qty", "sku,qty,SKU,qty", "\"Vendor SKU\",Quantity,", "a;b;;a"))
+      withClue(line) {
+        val p = tmpFile("h.csv", s"$line\n1,2,3,4\n")
+        val sep = if (line.contains(";")) ";" else ","
+        val (got, names) = Feeds.header(spark, FileFeed(p, sep = sep))
+        assert(got == line)
+        assert(names == spark.read.option("header", "true").option("sep", sep).csv(p).columns.toSeq)
+      }
+  }
+
+  test("preambled feed: a blank line before the header is skipped, header echoes dropped") {
+    val p = tmpFile("macys.csv",
+      "report\nline 2\n\nVendor SKU,Quantity\nAB-1,2\nVendor SKU,Quantity\nCD-2,3\n")
+    val feed = FileFeed(p, headerOffset = 2,
+      renames = Map("Vendor SKU" -> "sku", "Quantity" -> "qty"), siteLiteral = Some("Macys"))
+    assert(rowSet(Feeds.read(spark, feed)) ==
+      rows(Seq("AB-1", "2.0", "Macys"), Seq("CD-2", "3.0", "Macys")))
+  }
+
+  test("a gzip-compressed feed reads like a plain one") {
+    val p = Files.createTempDirectory("feeds").resolve("tom.csv.gz")
+    val out = new java.util.zip.GZIPOutputStream(Files.newOutputStream(p))
+    try out.write("Item SKU,Qty\nT-1,4\n".getBytes("UTF-8")) finally out.close()
+    val feed = FileFeed(p.toString, renames = Map("Item SKU" -> "sku", "Qty" -> "qty"),
+      siteLiteral = Some("Touch OF Modern"))
+    assert(rowSet(Feeds.read(spark, feed)) == rows(Seq("T-1", "4.0", "Touch OF Modern")))
+  }
 }

@@ -5,29 +5,6 @@ import graft.SparkSpec
 
 class IngestionRobustnessSpec extends SparkSpec {
 
-  test("jsonWithQuarantine: malformed lines survive verbatim, good lines parse typed") {
-    val dir = java.nio.file.Files.createTempDirectory("quar")
-    val f = dir.resolve("payload.jsonl")
-    java.nio.file.Files.writeString(f,
-      """{"id": 1, "sku": "a", "qty": 2.5}
-        |not json at all
-        |{"id": 2, "sku": "b"}
-        |{"id": "WRONG TYPE, unclosed
-        |
-        |{"id": 3, "sku": "c", "qty": 9.0}
-        |""".stripMargin)
-    val (good, quarantine) = Feeds.jsonWithQuarantine(
-      spark, f.toString, "id BIGINT, sku STRING, qty DOUBLE")
-    assert(good.columns.toSeq == Seq("id", "sku", "qty"))
-    assert(rowSet(good) == rows(
-      Seq("1", "a", "2.5"),
-      Seq("2", "b", "null"),   // missing field ≠ corrupt: schema evolution
-      Seq("3", "c", "9.0")))
-    assert(rowSet(quarantine) == rows(
-      Seq("not json at all"),
-      Seq("""{"id": "WRONG TYPE, unclosed""")))
-  }
-
   test("readEvolved: batches with different schemas union by name, absent fields null") {
     val dir = java.nio.file.Files.createTempDirectory("evolve").toString + "/t"
     spark.range(2).selectExpr("id", "cast(id as string) as b")

@@ -2,7 +2,12 @@ package graft.extract
 
 import java.nio.file.Files
 import java.sql.Timestamp
-import graft.SparkSpec
+import java.util.concurrent.atomic.AtomicLong
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, count, lit, sum}
+import graft.{Fixtures, SparkSpec}
+import graft.model.Schemas
 
 /** Fixture shapes per FIXTURES.md §A.3 — each exercises one nested
   * flattening pattern from the reference (N1-N7).
@@ -84,5 +89,52 @@ class PayloadsSpec extends SparkSpec {
         |{"products":[{"partNumber":"Y-1","quantity":4},{"partNumber":"Y-2","quantity":2}]}]}}""".stripMargin)
     assert(rowSet(Payloads.wayfair(spark, p)) == rows(
       Seq("Y-1", "4.0", "wayfair"), Seq("Y-2", "2.0", "wayfair")))
+  }
+
+  private val from = Timestamp.valueOf("2024-05-01 00:00:00")
+  private val to = Timestamp.valueOf("2024-06-01 00:00:00")
+
+  /** Each reader with a payload of a day without orders. */
+  private val emptyDays: Seq[(String, String, String => DataFrame)] = Seq(
+    ("walmart", """{"list":{"elements":{"order":[]}}}""", Payloads.walmart(spark, _)),
+    ("houzz", "<Orders/>", Payloads.houzz(spark, _)),
+    ("faire", """{"orders":[]}""", Payloads.faire(spark, _)),
+    ("wooCommerce", "[]", Payloads.wooCommerce(spark, _, "woo", from, to)),
+    ("dsco", """{"orders":[]}""", Payloads.dsco(spark, _, "dsco_t1", from, to)),
+    ("mirakl", """{"orders":[]}""", Payloads.mirakl(spark, _, "mirakl_s1")),
+    ("wayfair", """{"data":{"getDropshipPurchaseOrders":[]}}""", Payloads.wayfair(spark, _)))
+
+  for ((reader, payload, read) <- emptyDays)
+    test(s"$reader: a day without orders reads as zero rows") {
+      val out = read(tmp(s"$reader.payload", payload))
+      assert(out.schema.map(f => f.name -> f.dataType) ==
+        Schemas.saleLine.map(f => f.name -> f.dataType))
+      assert(out.collect().isEmpty)
+    }
+
+  test("walmart fixture: the quoted amount is declared a string and reads as 2.0 and 1.0") {
+    // a quoted "2" in a DOUBLE field would read as null
+    val qty = Payloads.walmart(spark, s"${Fixtures.dir}/walmart.json")
+      .collect().map(r => r.getString(0) -> r.get(1)).toMap
+    assert(qty("W-100") == 2.0 && qty("W-101") == 1.0, qty)
+  }
+
+  test("a Faire page with numeric quantities is read once, not once per number") {
+    // 2,000 items, every 50th quantity "n/a", as the nightly feed has them:
+    // an inferred schema makes `quantity` a string, and Spark's exact
+    // string parsing re-reads the page for each numeric token (~50x)
+    val page = (0 until 2000).map { i =>
+      val q = if (i % 50 == 0) "\"n/a\"" else (1 + i % 10).toString
+      s"""{"sku":"S$i","quantity":$q}"""
+    }.grouped(3).map(_.mkString("{\"items\":[", ",", "]}")).mkString("{\"orders\":[\n", ",\n", "]}\n")
+    val p = tmp("faire.json", page)
+    val bytes = new AtomicLong
+    val got = listening(new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null) bytes.addAndGet(e.taskMetrics.inputMetrics.bytesRead)
+    })(Payloads.faire(spark, p).agg(count(lit(1)), count(col("qty")), sum(col("qty"))).head())
+    assert(got.getLong(0) == 2000 && got.getLong(1) == 1960, got)
+    val size = Files.size(java.nio.file.Paths.get(p))
+    assert(bytes.get <= 2 * size, s"${bytes.get} bytes read from a $size-byte page")
   }
 }
