@@ -35,6 +35,11 @@ object Bench {
       (name, (System.nanoTime() - t0) / 1e9)
     }
 
+  /** Names a failure on stderr, as Verify does; stdout stays the one JSON
+    * line, and a failed rep still counts its query in `failed`. */
+  private def report(what: String, e: Throwable): Unit =
+    System.err.println(s"[bench] $what failed: ${e.getClass.getName}: ${e.getMessage}")
+
   /** The bench session: `local[SPARK_GRAFT_CPUS]` (default 4), console
     * logging at ERROR. */
   private[graft] def session(): SparkSession = {
@@ -91,10 +96,10 @@ object Bench {
     Seq("lineitem", "part", "orders", "customer", "supplier",
         "events", "documents", "embeddings").foreach { t =>
       try spark.read.parquet(s"$sfDir/$t.parquet").count()
-      catch { case _: Throwable => () }
+      catch { case e: Throwable => report(s"warm-up scan of $t", e) }
     }
-    SparkEntry.queries.headOption.foreach { case (_, fn) =>
-      try probe(fn(spark, sfDir)) catch { case _: Throwable => () }
+    SparkEntry.queries.headOption.foreach { case (name, fn) =>
+      try probe(fn(spark, sfDir)) catch { case e: Throwable => report(s"warm-up $name", e) }
     }
     // (name, best seconds, ok): a throwing query is reported in `failed` and
     // its partial elapsed time excluded from `value` instead of silently
@@ -125,8 +130,8 @@ object Bench {
     // only compares full-suite snapshots, and the probes would add tens
     // of seconds of fixed cost to the one-query iteration loop.
     val calibrated = only.isEmpty
-    if (calibrated) calibrationProbes.foreach { case (_, fn) =>
-      try fn(spark) catch { case _: Throwable => () } }
+    if (calibrated) calibrationProbes.foreach { case (name, fn) =>
+      try fn(spark) catch { case e: Throwable => report(s"calibration warm-up $name", e) } }
     val calSamples = scala.collection.mutable.ArrayBuffer.empty[Seq[(String, Double)]]
     if (calibrated) calSamples += calibrate(spark)
     val midAfterPass = math.max(1, (reps + 1) / 2)
@@ -134,7 +139,8 @@ object Bench {
       val pass = named.map { case (name, fn) =>
         CodegenWatch.drain() // discard anything attributed to prior work
         val t0 = System.nanoTime()
-        val ok = try { probe(fn(spark, sfDir)); true } catch { case _: Throwable => false }
+        val ok = try { probe(fn(spark, sfDir)); true }
+          catch { case e: Throwable => report(s"$name rep $rep", e); false }
         val codegenOk = CodegenWatch.drain().isEmpty
         (name, (System.nanoTime() - t0) / 1e9, ok, codegenOk)
       }
@@ -186,7 +192,7 @@ object Bench {
     val fileLine = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failed,"codegen_ok":$cg,"codegen_bailouts":$bailedJson,"reps":$reps,"probe":"xxhash64-checksum","calibration":$calJson,"sf":"$sfDir"}"""
     try java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_LOCAL.json"),
       (fileLine + "\n").getBytes("UTF-8"))
-    catch { case _: Throwable => () }
+    catch { case e: Throwable => report("writing BENCH_LOCAL.json", e) }
     // r13 (additions-only, VERDICT #2): the per-query map ALSO rides the
     // stable result FILE so the driver's PERF comparison can read
     // per-query seconds without depending on the gitignore state of
@@ -202,7 +208,7 @@ object Bench {
     // driver (or a human) can read without any log-prefix stripping.
     try java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_RESULT.json"),
       (stdoutLine + "\n").getBytes("UTF-8"))
-    catch { case _: Throwable => () }
+    catch { case e: Throwable => report("writing BENCH_RESULT.json", e) }
     System.out.flush(); System.err.flush()
     println(stdoutShort)
     System.out.flush()

@@ -28,6 +28,11 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *  - `trace`: runs each query and writes every plan it executes —
   *    including the per-round jobs that eager pins hide from a plain
   *    `explain` — to `<outDir>/<query>_trace.txt`, in completion order.
+  *    The output is not reproducible for every query: in the
+  *    SuffixDedup climb queries (q368, q376, q381) AQE converts to a
+  *    broadcast whichever join side's shuffle stage finishes first, so
+  *    two runs of the same classes can trace different plans. Compare
+  *    two builds with `plan`, not `trace`.
   *  - `ab`: runs each query under every value of one session conf key
   *    and compares the checksums, e.g.
   *    `ab <sfDir> 'spark.graft.broadcastBytes=134217728|0' q333_kcore`

@@ -868,6 +868,15 @@ object Jpeg {
   private val AcEobBits =
     Array(0, 1, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0)
   private val AcEobVals: Array[Byte] = Array(0x00)
+  // minimal AC table for progressive EOB-run scans: the four EOBn
+  // symbols an all-zero-AC corpus needs (EOB1/EOB2/EOB4/EOB16), all
+  // 2-bit codes — legal per Annex C, decoder rebuilds from DHT
+  private val AcEobRunBits =
+    Array(0, 0, 4, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0)
+  private val AcEobRunVals: Array[Byte] =
+    Array(0x00, 0x10, 0x20, 0x40).map(_.toByte)
+  // the all-1s quantization table: DC-only blocks round-trip exactly
+  private val DqtOnes: Array[Int] = Array.fill(64)(1)
 
   /** Canonical codes for an encoder-side table: value -> (code, len). */
   private def encTable(bits: Array[Int], vals: Array[Byte]): Array[(Int, Int)] = {
@@ -884,6 +893,10 @@ object Jpeg {
     }
     m
   }
+  private val DcLumCodes = encTable(DcLumBits, DcLumVals)
+  private val DcChrCodes = encTable(DcChrBits, DcChrVals)
+  private val AcEobCodes = encTable(AcEobBits, AcEobVals)
+  private val AcEobRunCodes = encTable(AcEobRunBits, AcEobRunVals)
 
   private final class BitWriter(out: java.io.ByteArrayOutputStream) {
     private var acc = 0
@@ -910,6 +923,142 @@ object Jpeg {
     t
   }
 
+  /** The one JFIF writer behind the four synthetic encoders
+    * ([[synthJpegPayload]], [[synthJpeg420Payload]],
+    * [[synthJpegProgressivePayload]], [[synthJpegQualityPayload]]), so
+    * their marker segments and DC coding have one spelling and the
+    * encoders differ only in the frame and scans they declare. SOI and
+    * APP0 are written on construction, EOI by [[finish]]. Component `c`
+    * (0-based) is id c+1, uses DQT and DC table 0 for luma (c = 0) and 1
+    * for chroma. Each SOS resets the DPCM predictors and the RSTn index
+    * (B.2.1.2); each restart marker resets the predictors too.
+    */
+  private final class JfifWriter {
+    private val out = new java.io.ByteArrayOutputStream()
+    val bw = new BitWriter(out)
+    private val pred = new Array[Int](3)
+    private var ri = 0
+    private var rstN = 0
+    private def w(vs: Int*): Unit = vs.foreach(v => out.write(v & 0xff))
+    private def w16(v: Int): Unit = { out.write((v >> 8) & 0xff); out.write(v & 0xff) }
+    w(0xff, 0xd8) // SOI
+    w(0xff, 0xe0); w16(16) // APP0 JFIF
+    w('J', 'F', 'I', 'F', 0, 1, 1, 0); w16(1); w16(1); w(0, 0)
+
+    /** DQT: table i in slot i, entries in zigzag order, 16-bit when wide. */
+    def dqt(tables: Seq[Array[Int]], wide: Boolean = false): Unit = {
+      w(0xff, 0xdb); w16(2 + tables.length * (1 + 64 * (if (wide) 2 else 1)))
+      tables.zipWithIndex.foreach { case (t, slot) =>
+        w(((if (wide) 1 else 0) << 4) | slot)
+        (0 until 64).foreach(k => if (wide) w16(t(Zigzag(k))) else w(t(Zigzag(k))))
+      }
+    }
+    /** SOF0 (baseline) or SOF2 (progressive), square, one sampling byte
+      * per component. */
+    def sof(marker: Int, size: Int, sampling: Seq[Int]): Unit = {
+      w(0xff, marker); w16(8 + 3 * sampling.length)
+      w(8); w16(size); w16(size); w(sampling.length)
+      sampling.zipWithIndex.foreach { case (hv, c) => w(c + 1, hv, if (c == 0) 0 else 1) }
+    }
+    def dht(tc: Int, th: Int, bits: Array[Int], vals: Array[Byte]): Unit = {
+      w(0xff, 0xc4); w16(2 + 17 + vals.length)
+      w((tc << 4) | th)
+      (1 to 16).foreach(l => w(bits(l)))
+      vals.foreach(v => w(v))
+    }
+    /** DHTs of a baseline DC-only scan: DC lum (0), AC eob (0); for color
+      * also DC chr (1), AC eob (1). */
+    def dcOnlyTables(color: Boolean): Unit = {
+      dht(0, 0, DcLumBits, DcLumVals)
+      dht(1, 0, AcEobBits, AcEobVals)
+      if (color) {
+        dht(0, 1, DcChrBits, DcChrVals)
+        dht(1, 1, AcEobBits, AcEobVals)
+      }
+    }
+    /** DRI, written only for a positive interval. */
+    def dri(interval: Int): Unit = {
+      ri = interval
+      if (ri > 0) { w(0xff, 0xdd); w16(4); w16(ri) }
+    }
+    /** SOS over `comps`: DC table 0 for luma, 1 for chroma; the AC table
+      * follows the DC one when `acPerClass`, else every component uses
+      * AC table 0. */
+    def sos(comps: Seq[Int], acPerClass: Boolean, ss: Int, se: Int, ah: Int, al: Int): Unit = {
+      w(0xff, 0xda); w16(6 + 2 * comps.length)
+      w(comps.length)
+      comps.foreach { c =>
+        val td = if (c == 0) 0 else 1
+        w(c + 1, (td << 4) | (if (acPerClass) td else 0))
+      }
+      w(ss, se, (ah << 4) | al)
+      rstN = 0
+      java.util.Arrays.fill(pred, 0)
+    }
+    /** Before MCU (or block run) `i` of a scan: RSTn when `i` is a
+      * positive multiple of the DRI interval — byte-align, marker, DPCM
+      * reset. */
+    def restartAt(i: Int): Unit =
+      if (ri > 0 && i > 0 && i % ri == 0) {
+        bw.flushOnes() // leaves the writer byte-aligned and empty
+        w(0xff, 0xd0 + rstN)
+        rstN = (rstN + 1) % 8
+        java.util.Arrays.fill(pred, 0)
+      }
+    /** DPCM-coded DC value: huffman category, then its magnitude bits. */
+    def dc(comp: Int, v: Int): Unit = {
+      val diff = v - pred(comp)
+      pred(comp) = v
+      val cat = category(diff)
+      val (hc, hl) = if (comp == 0) DcLumCodes(cat) else DcChrCodes(cat)
+      bw.put(hc, hl)
+      if (cat > 0) {
+        val bitsV = if (diff < 0) diff - 1 else diff
+        bw.put(bitsV & ((1 << cat) - 1), cat)
+      }
+    }
+    /** A baseline DC-only block: the DC value, then EOB (all 63 ACs zero). */
+    def dcBlock(comp: Int, v: Int): Unit = {
+      dc(comp, v)
+      val (ec, el) = AcEobCodes(0)
+      bw.put(ec, el)
+    }
+    /** EOBn run over `n` blocks (n = 2^r + extra) — progressive AC scans. */
+    def eobRun(n: Int): Unit = {
+      var r = 0
+      while ((2 << r) <= n) r += 1
+      val (hc, hl) = AcEobRunCodes(r << 4)
+      bw.put(hc, hl)
+      if (r > 0) bw.put(n - (1 << r), r)
+    }
+    def finish(): Array[Byte] = {
+      bw.flushOnes()
+      w(0xff, 0xd9) // EOI
+      out.toByteArray
+    }
+  }
+
+  /** Plane constant of block `bi` of component `comp`: odd ids are
+    * grayscale, even ids color (Y, Cb, Cr). */
+  private def synthBlock(id: Long, comp: Int, bi: Int): Int =
+    if (id % 2 != 0) synthGray(id, bi) else synthColor(id, comp, bi)
+  private def synthColor(id: Long, comp: Int, bi: Int): Int =
+    if (comp == 0) synthY(id, bi) else if (comp == 1) synthCb(id, bi) else synthCr(id, bi)
+
+  /** The 6 blocks of 4:2:0 MCU `mcu` on a 2×2 MCU grid, in T.81 A.2.3
+    * order — 4 Y blocks (raster within the MCU) on the 4×4 Y block grid,
+    * then Cb, then Cr — as (component, block index). */
+  private def mcu420(mcu: Int)(f: (Int, Int) => Unit): Unit = {
+    val my = mcu / 2; val mx = mcu % 2
+    var vb = 0
+    while (vb < 2) {
+      var hb = 0
+      while (hb < 2) { f(0, (my * 2 + vb) * 4 + mx * 2 + hb); hb += 1 }
+      vb += 1
+    }
+    f(1, my * 2 + mx); f(2, my * 2 + mx)
+  }
+
   /** A REAL baseline JFIF stream: SOI, APP0, all-1s DQT(s), SOF0
     * (16×16, 4:4:4), Annex-K DC + minimal-EOB AC DHTs, SOS, a genuinely
     * huffman/DPCM-coded DC-only scan (with 0xFF byte stuffing live),
@@ -918,87 +1067,18 @@ object Jpeg {
   private[ext] def synthJpegPayload(id: Long, restartInterval: Int = 0): Array[Byte] = {
     val gray = id % 2 != 0
     val nComp = if (gray) 1 else 3
-    val out = new java.io.ByteArrayOutputStream()
-    def w(vs: Int*): Unit = vs.foreach(v => out.write(v & 0xff))
-    def w16(v: Int): Unit = { out.write((v >> 8) & 0xff); out.write(v & 0xff) }
-    w(0xff, 0xd8) // SOI
-    // APP0 JFIF
-    w(0xff, 0xe0); w16(16)
-    w('J', 'F', 'I', 'F', 0, 1, 1, 0); w16(1); w16(1); w(0, 0)
-    // DQT: table 0 (and 1 for color), all ones, 8-bit
-    val nq = if (gray) 1 else 2
-    w(0xff, 0xdb); w16(2 + nq * 65)
-    var t = 0
-    while (t < nq) { out.write(t); (0 until 64).foreach(_ => out.write(1)); t += 1 }
-    // SOF0
-    w(0xff, 0xc0); w16(8 + 3 * nComp)
-    w(8); w16(16); w16(16); w(nComp)
-    var c = 0
-    while (c < nComp) { w(c + 1, 0x11, if (c == 0) 0 else 1); c += 1 }
-    // DHT: DC lum (0), AC eob (0); for color also DC chr (1), AC eob (1)
-    def dht(tc: Int, th: Int, bits: Array[Int], vals: Array[Byte]): Unit = {
-      w(0xff, 0xc4); w16(2 + 17 + vals.length)
-      w((tc << 4) | th)
-      (1 to 16).foreach(l => out.write(bits(l)))
-      vals.foreach(v => out.write(v & 0xff))
-    }
-    dht(0, 0, DcLumBits, DcLumVals)
-    dht(1, 0, AcEobBits, AcEobVals)
-    if (!gray) {
-      dht(0, 1, DcChrBits, DcChrVals)
-      dht(1, 1, AcEobBits, AcEobVals)
-    }
-    if (restartInterval > 0) { w(0xff, 0xdd); w16(4); w16(restartInterval) }
-    // SOS
-    w(0xff, 0xda); w16(6 + 2 * nComp)
-    w(nComp)
-    c = 0
-    while (c < nComp) {
-      w(c + 1, if (c == 0) 0x00 else 0x11)
-      c += 1
-    }
-    w(0, 63, 0)
+    val jw = new JfifWriter
+    jw.dqt(Seq.fill(if (gray) 1 else 2)(DqtOnes))
+    jw.sof(0xc0, 16, Seq.fill(nComp)(0x11))
+    jw.dcOnlyTables(color = !gray)
+    jw.dri(restartInterval)
+    jw.sos(0 until nComp, acPerClass = true, 0, 63, 0, 0)
     // entropy-coded DC-only scan: 4 MCUs (2×2 blocks), DPCM per component
-    val dcLum = encTable(DcLumBits, DcLumVals)
-    val dcChr = encTable(DcChrBits, DcChrVals)
-    val acEob = encTable(AcEobBits, AcEobVals)
-    val bwRiter = new BitWriter(out)
-    val pred = new Array[Int](nComp)
-    var bi = 0
-    var rstN = 0
-    while (bi < 4) {
-      if (restartInterval > 0 && bi > 0 && bi % restartInterval == 0) {
-        bwRiter.flushOnes() // leaves the writer byte-aligned and empty
-        w(0xff, 0xd0 + rstN) // RSTn: realign + DPCM reset
-        rstN = (rstN + 1) % 8
-        java.util.Arrays.fill(pred, 0)
-      }
-      c = 0
-      while (c < nComp) {
-        val v =
-          if (gray) synthGray(id, bi)
-          else if (c == 0) synthY(id, bi)
-          else if (c == 1) synthCb(id, bi)
-          else synthCr(id, bi)
-        val dc = 8 * (v - 128)
-        val diff = dc - pred(c)
-        pred(c) = dc
-        val cat = category(diff)
-        val (hc, hl) = if (c == 0) dcLum(cat) else dcChr(cat)
-        bwRiter.put(hc, hl)
-        if (cat > 0) {
-          val bitsV = if (diff < 0) diff - 1 else diff
-          bwRiter.put(bitsV & ((1 << cat) - 1), cat)
-        }
-        val (ec, el) = acEob(0)
-        bwRiter.put(ec, el) // EOB: all 63 ACs zero
-        c += 1
-      }
-      bi += 1
+    for (bi <- 0 until 4) {
+      jw.restartAt(bi)
+      for (c <- 0 until nComp) jw.dcBlock(c, 8 * (synthBlock(id, c, bi) - 128))
     }
-    bwRiter.flushOnes()
-    w(0xff, 0xd9) // EOI
-    out.toByteArray
+    jw.finish()
   }
 
   /** A REAL 4:2:0 JFIF stream: 32×32, Y sampled 2×2 (table 0), Cb/Cr
@@ -1013,90 +1093,18 @@ object Jpeg {
     */
   private[ext] def synthJpeg420Payload(id: Long,
                                        restartInterval: Int = 0): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    def w(vs: Int*): Unit = vs.foreach(v => out.write(v & 0xff))
-    def w16(v: Int): Unit = { out.write((v >> 8) & 0xff); out.write(v & 0xff) }
-    w(0xff, 0xd8) // SOI
-    w(0xff, 0xe0); w16(16) // APP0 JFIF
-    w('J', 'F', 'I', 'F', 0, 1, 1, 0); w16(1); w16(1); w(0, 0)
-    // DQT: tables 0 and 1, all ones, 8-bit (DC-only exactness)
-    w(0xff, 0xdb); w16(2 + 2 * 65)
-    var t = 0
-    while (t < 2) { out.write(t); (0 until 64).foreach(_ => out.write(1)); t += 1 }
-    // SOF0: 32×32, Y 2×2 / Cb 1×1 / Cr 1×1
-    w(0xff, 0xc0); w16(8 + 3 * 3)
-    w(8); w16(32); w16(32); w(3)
-    w(1, 0x22, 0); w(2, 0x11, 1); w(3, 0x11, 1)
-    def dht(tc: Int, th: Int, bits: Array[Int], vals: Array[Byte]): Unit = {
-      w(0xff, 0xc4); w16(2 + 17 + vals.length)
-      w((tc << 4) | th)
-      (1 to 16).foreach(l => out.write(bits(l)))
-      vals.foreach(v => out.write(v & 0xff))
+    val jw = new JfifWriter
+    jw.dqt(Seq.fill(2)(DqtOnes))
+    jw.sof(0xc0, 32, Seq(0x22, 0x11, 0x11))
+    jw.dcOnlyTables(color = true)
+    jw.dri(restartInterval)
+    jw.sos(0 until 3, acPerClass = true, 0, 63, 0, 0)
+    for (mcu <- 0 until 4) {
+      jw.restartAt(mcu)
+      mcu420(mcu)((c, bi) => jw.dcBlock(c, 8 * (synthColor(id, c, bi) - 128)))
     }
-    dht(0, 0, DcLumBits, DcLumVals)
-    dht(1, 0, AcEobBits, AcEobVals)
-    dht(0, 1, DcChrBits, DcChrVals)
-    dht(1, 1, AcEobBits, AcEobVals)
-    if (restartInterval > 0) { w(0xff, 0xdd); w16(4); w16(restartInterval) }
-    // SOS
-    w(0xff, 0xda); w16(6 + 2 * 3)
-    w(3); w(1, 0x00); w(2, 0x11); w(3, 0x11)
-    w(0, 63, 0)
-    val dcLum = encTable(DcLumBits, DcLumVals)
-    val dcChr = encTable(DcChrBits, DcChrVals)
-    val acEob = encTable(AcEobBits, AcEobVals)
-    val bwRiter = new BitWriter(out)
-    val pred = new Array[Int](3)
-    var mcu = 0
-    var rstN = 0
-    while (mcu < 4) {
-      if (restartInterval > 0 && mcu > 0 && mcu % restartInterval == 0) {
-        bwRiter.flushOnes()
-        w(0xff, 0xd0 + rstN)
-        rstN = (rstN + 1) % 8
-        java.util.Arrays.fill(pred, 0)
-      }
-      val my = mcu / 2; val mx = mcu % 2
-      def putDc(comp: Int, v: Int): Unit = {
-        val dc = 8 * (v - 128)
-        val diff = dc - pred(comp)
-        pred(comp) = dc
-        val cat = category(diff)
-        val (hc, hl) = if (comp == 0) dcLum(cat) else dcChr(cat)
-        bwRiter.put(hc, hl)
-        if (cat > 0) {
-          val bitsV = if (diff < 0) diff - 1 else diff
-          bwRiter.put(bitsV & ((1 << cat) - 1), cat)
-        }
-        val (ec, el) = acEob(0)
-        bwRiter.put(ec, el)
-      }
-      // 4 Y blocks (raster within the MCU), then Cb, then Cr
-      var vb = 0
-      while (vb < 2) {
-        var hb = 0
-        while (hb < 2) {
-          putDc(0, synthY(id, (my * 2 + vb) * 4 + (mx * 2 + hb)))
-          hb += 1
-        }
-        vb += 1
-      }
-      putDc(1, synthCb(id, my * 2 + mx))
-      putDc(2, synthCr(id, my * 2 + mx))
-      mcu += 1
-    }
-    bwRiter.flushOnes()
-    w(0xff, 0xd9) // EOI
-    out.toByteArray
+    jw.finish()
   }
-
-  // minimal AC table for progressive EOB-run scans: the four EOBn
-  // symbols an all-zero-AC corpus needs (EOB1/EOB2/EOB4/EOB16), all
-  // 2-bit codes — legal per Annex C, decoder rebuilds from DHT
-  private val AcEobRunBits =
-    Array(0, 0, 4, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0)
-  private val AcEobRunVals: Array[Byte] =
-    Array(0x00, 0x10, 0x20, 0x40).map(_.toByte)
 
   /** A REAL progressive (SOF2) JFIF stream with spectral selection AND
     * successive approximation, all blocks per-block constants so the
@@ -1118,158 +1126,42 @@ object Jpeg {
   private[ext] def synthJpegProgressivePayload(id: Long): Array[Byte] = {
     val gray = id % 2 != 0
     val nComp = if (gray) 1 else 3
-    val ri = if (((id % 5) + 5) % 5 == 0) 2 else 0
-    val out = new java.io.ByteArrayOutputStream()
-    def w(vs: Int*): Unit = vs.foreach(v => out.write(v & 0xff))
-    def w16(v: Int): Unit = { out.write((v >> 8) & 0xff); out.write(v & 0xff) }
-    w(0xff, 0xd8) // SOI
-    w(0xff, 0xe0); w16(16) // APP0 JFIF
-    w('J', 'F', 'I', 'F', 0, 1, 1, 0); w16(1); w16(1); w(0, 0)
-    val nq = if (gray) 1 else 2
-    w(0xff, 0xdb); w16(2 + nq * 65) // DQT: all ones (DC-only exactness)
-    var t = 0
-    while (t < nq) { out.write(t); (0 until 64).foreach(_ => out.write(1)); t += 1 }
+    val jw = new JfifWriter
+    jw.dqt(Seq.fill(if (gray) 1 else 2)(DqtOnes))
     // SOF2: 32×32; gray 1×1, color Y 2×2 / Cb 1×1 / Cr 1×1
-    w(0xff, 0xc2); w16(8 + 3 * nComp)
-    w(8); w16(32); w16(32); w(nComp)
-    if (gray) w(1, 0x11, 0)
-    else { w(1, 0x22, 0); w(2, 0x11, 1); w(3, 0x11, 1) }
-    def dht(tc: Int, th: Int, bits: Array[Int], vals: Array[Byte]): Unit = {
-      w(0xff, 0xc4); w16(2 + 17 + vals.length)
-      w((tc << 4) | th)
-      (1 to 16).foreach(l => out.write(bits(l)))
-      vals.foreach(v => out.write(v & 0xff))
-    }
-    dht(0, 0, DcLumBits, DcLumVals)
-    if (!gray) dht(0, 1, DcChrBits, DcChrVals)
-    dht(1, 0, AcEobRunBits, AcEobRunVals)
-    if (ri > 0) { w(0xff, 0xdd); w16(4); w16(ri) }
-    val dcLum = encTable(DcLumBits, DcLumVals)
-    val dcChr = encTable(DcChrBits, DcChrVals)
-    val acRun = encTable(AcEobRunBits, AcEobRunVals)
-    // per-block plane constants: gray 16 blocks; color 16 Y + 4 Cb + 4 Cr
-    def blockVal(comp: Int, bi: Int): Int =
-      if (gray) synthGray(id, bi)
-      else if (comp == 0) synthY(id, bi)
-      else if (comp == 1) synthCb(id, bi)
-      else synthCr(id, bi)
-
-    var rstN = 0
-    def sos(comps: Seq[Int], ss: Int, se: Int, ah: Int, al: Int): Unit = {
-      w(0xff, 0xda); w16(6 + 2 * comps.length)
-      w(comps.length)
-      comps.foreach { c =>
-        val td = if (c == 0) 0 else 1 // DC slot; AC always slot 0
-        w(c + 1, (td << 4) | 0)
+    jw.sof(0xc2, 32, if (gray) Seq(0x11) else Seq(0x22, 0x11, 0x11))
+    jw.dht(0, 0, DcLumBits, DcLumVals)
+    if (!gray) jw.dht(0, 1, DcChrBits, DcChrVals)
+    jw.dht(1, 0, AcEobRunBits, AcEobRunVals)
+    val ri = if (((id % 5) + 5) % 5 == 0) 2 else 0
+    jw.dri(ri)
+    // every block of the DC scans, MCU by MCU: gray 16 single-block MCUs,
+    // color 4 MCUs of 16 Y + 4 Cb + 4 Cr blocks in all
+    def dcScan(f: (Int, Int) => Unit): Unit = {
+      for (mcu <- 0 until (if (gray) 16 else 4)) {
+        jw.restartAt(mcu)
+        if (gray) f(0, mcu) else mcu420(mcu)(f)
       }
-      w(ss, se, (ah << 4) | al)
-      rstN = 0 // RST index restarts at RST0 in each scan (B.2.1.2)
+      jw.bw.flushOnes()
     }
-    def rst(bw: BitWriter): Unit = {
-      bw.flushOnes()
-      w(0xff, 0xd0 + rstN)
-      rstN = (rstN + 1) % 8
-    }
-    def putCat(bw: BitWriter, comp: Int, diff: Int): Unit = {
-      val cat = category(diff)
-      val (hc, hl) = if (comp == 0) dcLum(cat) else dcChr(cat)
-      bw.put(hc, hl)
-      if (cat > 0) {
-        val bitsV = if (diff < 0) diff - 1 else diff
-        bw.put(bitsV & ((1 << cat) - 1), cat)
-      }
-    }
-    def putEobRun(bw: BitWriter, n: Int): Unit = { // n = (1<<r) + extra
-      var r = 0
-      while ((2 << r) <= n) r += 1
-      val (hc, hl) = acRun(r << 4)
-      bw.put(hc, hl)
-      if (r > 0) bw.put(n - (1 << r), r)
-    }
-
     // scan 1: DC first, Al=4 — interleaved for color, single-comp for gray
-    sos((0 until nComp), 0, 0, 0, 4)
-    locally {
-      val bw = new BitWriter(out)
-      val pred = new Array[Int](nComp)
-      var mcu = 0
-      val nMcu = if (gray) 16 else 4
-      while (mcu < nMcu) {
-        if (ri > 0 && mcu > 0 && mcu % ri == 0) {
-          rst(bw); java.util.Arrays.fill(pred, 0)
-        }
-        if (gray) {
-          val vq = (8 * (blockVal(0, mcu) - 128)) >> 4
-          putCat(bw, 0, vq - pred(0)); pred(0) = vq
-        } else {
-          val my = mcu / 2; val mx = mcu % 2
-          var vb = 0
-          while (vb < 2) {
-            var hb = 0
-            while (hb < 2) {
-              val vq = (8 * (blockVal(0, (my * 2 + vb) * 4 + mx * 2 + hb) - 128)) >> 4
-              putCat(bw, 0, vq - pred(0)); pred(0) = vq
-              hb += 1
-            }
-            vb += 1
-          }
-          var c = 1
-          while (c < 3) {
-            val vq = (8 * (blockVal(c, my * 2 + mx) - 128)) >> 4
-            putCat(bw, c, vq - pred(c)); pred(c) = vq
-            c += 1
-          }
-        }
-        mcu += 1
-      }
-      bw.flushOnes()
-    }
+    jw.sos(0 until nComp, acPerClass = false, 0, 0, 0, 4)
+    dcScan((c, bi) => jw.dc(c, (8 * (synthBlock(id, c, bi) - 128)) >> 4))
     // scans 2..: AC first per component — EOB runs only (restart-split)
-    var comp = 0
-    while (comp < nComp) {
-      sos(Seq(comp), 1, 63, 0, 0)
-      val bw = new BitWriter(out)
+    for (comp <- 0 until nComp) {
+      jw.sos(Seq(comp), acPerClass = false, 1, 63, 0, 0)
       val nBlocks = if (gray || comp == 0) 16 else 4
-      if (ri > 0) {
-        var bdone = 0
-        while (bdone < nBlocks) {
-          if (bdone > 0) rst(bw)
-          putEobRun(bw, math.min(ri, nBlocks - bdone))
-          bdone += ri
-        }
-      } else putEobRun(bw, nBlocks)
-      bw.flushOnes()
-      comp += 1
+      val run = if (ri > 0) ri else nBlocks
+      for (b <- 0 until nBlocks by run) {
+        jw.restartAt(b)
+        jw.eobRun(math.min(run, nBlocks - b))
+      }
+      jw.bw.flushOnes()
     }
     // final scan: DC refine, Ah=4 Al=3 — one raw bit per block
-    sos((0 until nComp), 0, 0, 4, 3)
-    locally {
-      val bw = new BitWriter(out)
-      var mcu = 0
-      val nMcu = if (gray) 16 else 4
-      while (mcu < nMcu) {
-        if (ri > 0 && mcu > 0 && mcu % ri == 0) rst(bw)
-        if (gray) bw.put((blockVal(0, mcu) - 128) & 1, 1)
-        else {
-          val my = mcu / 2; val mx = mcu % 2
-          var vb = 0
-          while (vb < 2) {
-            var hb = 0
-            while (hb < 2) {
-              bw.put((blockVal(0, (my * 2 + vb) * 4 + mx * 2 + hb) - 128) & 1, 1)
-              hb += 1
-            }
-            vb += 1
-          }
-          bw.put((blockVal(1, my * 2 + mx) - 128) & 1, 1)
-          bw.put((blockVal(2, my * 2 + mx) - 128) & 1, 1)
-        }
-        mcu += 1
-      }
-      bw.flushOnes()
-    }
-    w(0xff, 0xd9) // EOI
-    out.toByteArray
+    jw.sos(0 until nComp, acPerClass = false, 0, 0, 4, 3)
+    dcScan((c, bi) => jw.bw.put((synthBlock(id, c, bi) - 128) & 1, 1))
+    jw.finish()
   }
 
   final case class JpegPixelStats(media_id: Long, width: Int, height: Int,
@@ -1277,21 +1169,18 @@ object Jpeg {
                                   px_wsum: Long, c0_sum: Long, c1_sum: Long,
                                   c2_sum: Long)
 
-  /** q375: build a real JFIF per doc and FULLY DECODE it — marker walk,
-    * DHT reconstruction, huffman + DPCM, dequantize, IDCT, fixed-point
-    * color convert — emitting order-sensitive pixel statistics (total,
-    * position-weighted, and byte-position-class sums; classes are RGB
-    * channels for color ids, positional thirds for grayscale ids). All
-    * fields have closed forms over the per-block constants, so the
-    * oracle is analytic while the engine exercises the full decoder.
-    * Narrow mapPartitions; payloads never shuffle.
+  /** The body of the three pixel-stats queries ([[jpegPixelStats]],
+    * [[jpegProgressivePixelStats]], [[jpeg420PixelStats]]), which differ
+    * only in the encoder that makes each doc's payload: decode it and
+    * emit the q375 statistics. Narrow mapPartitions; payloads never
+    * shuffle.
     */
-  def jpegPixelStats(docs: DataFrame)(implicit spark: SparkSession): DataFrame = {
+  private def pixelStats(docs: DataFrame)(payload: Long => Array[Byte])(
+      implicit spark: SparkSession): DataFrame = {
     import spark.implicits._
     docs.select(col("doc_id")).as[Long].mapPartitions { ids =>
       ids.map { id =>
-        val p = synthJpegPayload(id)
-        decode(p) match {
+        decode(payload(id)) match {
           case Some(img) =>
             var sum = 0L; var wsum = 0L
             val ch = new Array[Long](3)
@@ -1309,6 +1198,18 @@ object Jpeg {
       }
     }.toDF()
   }
+
+  /** q375: build a real JFIF per doc and FULLY DECODE it — marker walk,
+    * DHT reconstruction, huffman + DPCM, dequantize, IDCT, fixed-point
+    * color convert — emitting order-sensitive pixel statistics (total,
+    * position-weighted, and byte-position-class sums; classes are RGB
+    * channels for color ids, positional thirds for grayscale ids). All
+    * fields have closed forms over the per-block constants, so the
+    * oracle is analytic while the engine exercises the full decoder.
+    * Body: [[pixelStats]].
+    */
+  def jpegPixelStats(docs: DataFrame)(implicit spark: SparkSession): DataFrame =
+    pixelStats(docs)(synthJpegPayload(_))
 
   /** q385: [[jpegPixelStats]] over the PROGRESSIVE corpus — every doc
     * gets a real SOF2 stream ([[synthJpegProgressivePayload]]) and rides
@@ -1319,31 +1220,11 @@ object Jpeg {
     * 32×32 grayscale (non-interleaved scans), even ids 32×32 color at
     * 4:2:0 (the dominant real-world progressive shape); ids % 5 == 0
     * thread restart markers through every scan. Stats are the q375
-    * shape. Narrow mapPartitions; payloads never shuffle.
+    * shape. Body: [[pixelStats]].
     */
   def jpegProgressivePixelStats(docs: DataFrame)(
-      implicit spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long].mapPartitions { ids =>
-      ids.map { id =>
-        decode(synthJpegProgressivePayload(id)) match {
-          case Some(img) =>
-            var sum = 0L; var wsum = 0L
-            val ch = new Array[Long](3)
-            var i = 0
-            while (i < img.pixels.length) {
-              val v = img.pixels(i) & 0xff
-              sum += v; wsum += i.toLong * v; ch(i % 3) += v
-              i += 1
-            }
-            JpegPixelStats(id, img.width, img.height, img.nComp,
-              img.pixels.length, sum, wsum, ch(0), ch(1), ch(2))
-          case None =>
-            JpegPixelStats(id, 0, 0, 0, 0, 0L, 0L, 0L, 0L, 0L)
-        }
-      }
-    }.toDF()
-  }
+      implicit spark: SparkSession): DataFrame =
+    pixelStats(docs)(synthJpegProgressivePayload)
 
   // ------------------------------------------------- quality estimation
 
@@ -1458,65 +1339,15 @@ object Jpeg {
     */
   private[ext] def synthJpegQualityPayload(id: Long): Array[Byte] = {
     val q = (5 + ((id % 94) + 94) % 94 * 7 % 94).toInt
-    val lum = scaledTable(AnnexKLum, q)
-    val chr = scaledTable(AnnexKChr, q)
-    val wide = id % 5 == 0
-    val out = new java.io.ByteArrayOutputStream()
-    def w(vs: Int*): Unit = vs.foreach(v => out.write(v & 0xff))
-    def w16(v: Int): Unit = { out.write((v >> 8) & 0xff); out.write(v & 0xff) }
-    w(0xff, 0xd8)
-    w(0xff, 0xe0); w16(16)
-    w('J', 'F', 'I', 'F', 0, 1, 1, 0); w16(1); w16(1); w(0, 0)
+    val jw = new JfifWriter
     // DQT in zigzag order (the wire format [[quantTables]] must undo)
-    val esz = if (wide) 2 else 1
-    w(0xff, 0xdb); w16(2 + 2 * (1 + 64 * esz))
-    for ((t, slot) <- Seq(lum -> 0, chr -> 1)) {
-      w(((if (wide) 1 else 0) << 4) | slot)
-      (0 until 64).foreach { k =>
-        if (wide) w16(t(Zigzag(k))) else out.write(t(Zigzag(k)))
-      }
-    }
-    w(0xff, 0xc0); w16(8 + 9)
-    w(8); w16(16); w16(16); w(3)
-    w(1, 0x11, 0); w(2, 0x11, 1); w(3, 0x11, 1)
-    def dht(tc: Int, th: Int, bits: Array[Int], vals: Array[Byte]): Unit = {
-      w(0xff, 0xc4); w16(2 + 17 + vals.length)
-      w((tc << 4) | th)
-      (1 to 16).foreach(l => out.write(bits(l)))
-      vals.foreach(v => out.write(v & 0xff))
-    }
-    dht(0, 0, DcLumBits, DcLumVals); dht(1, 0, AcEobBits, AcEobVals)
-    dht(0, 1, DcChrBits, DcChrVals); dht(1, 1, AcEobBits, AcEobVals)
-    w(0xff, 0xda); w16(12)
-    w(3); w(1, 0x00); w(2, 0x11); w(3, 0x11); w(0, 63, 0)
-    val dcLum = encTable(DcLumBits, DcLumVals)
-    val dcChr = encTable(DcChrBits, DcChrVals)
-    val acEob = encTable(AcEobBits, AcEobVals)
-    val bw = new BitWriter(out)
-    val pred = new Array[Int](3)
-    var bi = 0
-    while (bi < 4) {
-      var c = 0
-      while (c < 3) {
-        val dcq = ((id * 13 + c * 5 + bi * 3) % 21).toInt - 10
-        val diff = dcq - pred(c)
-        pred(c) = dcq
-        val cat = category(diff)
-        val (hc, hl) = if (c == 0) dcLum(cat) else dcChr(cat)
-        bw.put(hc, hl)
-        if (cat > 0) {
-          val bitsV = if (diff < 0) diff - 1 else diff
-          bw.put(bitsV & ((1 << cat) - 1), cat)
-        }
-        val (ec, el) = acEob(0)
-        bw.put(ec, el)
-        c += 1
-      }
-      bi += 1
-    }
-    bw.flushOnes()
-    w(0xff, 0xd9)
-    out.toByteArray
+    jw.dqt(Seq(scaledTable(AnnexKLum, q), scaledTable(AnnexKChr, q)), wide = id % 5 == 0)
+    jw.sof(0xc0, 16, Seq.fill(3)(0x11))
+    jw.dcOnlyTables(color = true)
+    jw.sos(0 until 3, acPerClass = true, 0, 63, 0, 0)
+    for (bi <- 0 until 4; c <- 0 until 3)
+      jw.dcBlock(c, ((id * 13 + c * 5 + bi * 3) % 21).toInt - 10)
+    jw.finish()
   }
 
   final case class JpegQualityStats(media_id: Long, q_lum: Int, q_chr: Int,
@@ -1557,30 +1388,9 @@ object Jpeg {
     * chroma planes at half resolution, replication upsampling, then the
     * same fixed-point color convert. Restart markers every other MCU for
     * ids divisible by 3 (the DRI/RSTn path under subsampling). Stats are
-    * the q375 shape; c0/c1/c2 are the RGB channel sums. Narrow
-    * mapPartitions; payloads never shuffle.
+    * the q375 shape; c0/c1/c2 are the RGB channel sums. Body:
+    * [[pixelStats]].
     */
-  def jpeg420PixelStats(docs: DataFrame)(implicit spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long].mapPartitions { ids =>
-      ids.map { id =>
-        val p = synthJpeg420Payload(id, restartInterval = if (id % 3 == 0) 2 else 0)
-        decode(p) match {
-          case Some(img) =>
-            var sum = 0L; var wsum = 0L
-            val ch = new Array[Long](3)
-            var i = 0
-            while (i < img.pixels.length) {
-              val v = img.pixels(i) & 0xff
-              sum += v; wsum += i.toLong * v; ch(i % 3) += v
-              i += 1
-            }
-            JpegPixelStats(id, img.width, img.height, img.nComp,
-              img.pixels.length, sum, wsum, ch(0), ch(1), ch(2))
-          case None =>
-            JpegPixelStats(id, 0, 0, 0, 0, 0L, 0L, 0L, 0L, 0L)
-        }
-      }
-    }.toDF()
-  }
+  def jpeg420PixelStats(docs: DataFrame)(implicit spark: SparkSession): DataFrame =
+    pixelStats(docs)(id => synthJpeg420Payload(id, restartInterval = if (id % 3 == 0) 2 else 0))
 }

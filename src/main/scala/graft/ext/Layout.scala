@@ -94,40 +94,9 @@ object Layout {
     */
   def skippingAudit(df: DataFrame, keyA: String, keyB: String, idCol: String,
                     nFiles: Int = 64, bits: Int = 16,
-                    probeModA: Int = 97, probeModB: Int = 61): DataFrame = {
-    require(nFiles >= 1, s"nFiles must be positive: $nFiles")
-    val mask = 1L << bits
-    // pmod, not %: negative keys must still land in [0, mask) or the
-    // z/hilbert coordinates go negative and the curve order is garbage
-    val base = df.select(col(idCol).cast("long").as("id"),
-        pmod(col(keyA).cast("long"), lit(mask)).as("ka"),
-        pmod(col(keyB).cast("long"), lit(mask)).as("kb"))
-      .withColumn("z", graft.load.Sinks.zValue(col("ka"), col("kb"), bits))
-      // one-shot: the keys feed two independent global sorts plus two
-      // probe panels — pin them once so the scan/mask runs once
-      .localCheckpoint(true)
-    val n = base.count()
-    require(n > 0, "skippingAudit needs a non-empty table")
-
-    val env = layoutEnvelopes(base,
-      Seq("linear_a" -> col("ka"), "zorder" -> col("z")), nFiles, n)
-      .localCheckpoint(true) // one-shot: 2 layouts × 2 dims of range joins below
-
-    def hits(dim: String, probes: DataFrame, lo: String, hi: String): DataFrame =
-      probes.join(env, col("p") >= col(lo) && col("p") <= col(hi))
-        .groupBy("layout")
-        .agg(count(lit(1)).as("files_hit"))
-        .crossJoin(broadcast(probes.agg(count(lit(1)).as("n_probes"))))
-        .select(col("layout"), lit(dim).as("dim"),
-          lit(nFiles.toLong).as("n_files"), col("n_probes"), col("files_hit"))
-
-    val probesA = base.select(col("ka").as("p")).distinct()
-      .filter(col("p") % probeModA === 1)
-    val probesB = base.select(col("kb").as("p")).distinct()
-      .filter(col("p") % probeModB === 3)
-    hits("a", probesA, "min_a", "max_a")
-      .unionByName(hits("b", probesB, "min_b", "max_b"))
-  }
+                    probeModA: Int = 97, probeModB: Int = 61): DataFrame =
+    layoutAudit("skippingAudit", df, keyA, keyB, idCol, nFiles, bits, probeModA, probeModB,
+      hilbert = false)
 
   /** File-level BLOOM-FILTER skipping audit — the pruning structure for
     * the workload min/max envelopes cannot help: point lookups on a key
@@ -248,28 +217,47 @@ object Layout {
     * measured version of that claim on the actual key distribution — what
     * an OPTIMIZE CLUSTER BY decision should read.
     *
-    * Scale shape identical to [[skippingAudit]]: each layout costs the one
-    * global sort its WRITE would cost (distributed rank via
-    * range-partition + zipWithIndex, never a single-partition window);
-    * envelopes and probes are file-/keyspace-sized.
+    * Scale shape identical to [[skippingAudit]] (both run
+    * [[layoutAudit]]): each layout costs the one global sort its WRITE
+    * would cost (distributed rank via range-partition + zipWithIndex,
+    * never a single-partition window); envelopes and probes are
+    * file-/keyspace-sized.
     */
   def curveAudit(df: DataFrame, keyA: String, keyB: String, idCol: String,
                  nFiles: Int = 64, bits: Int = 8,
-                 probeModA: Int = 97, probeModB: Int = 61): DataFrame = {
+                 probeModA: Int = 97, probeModB: Int = 61): DataFrame =
+    layoutAudit("curveAudit", df, keyA, keyB, idCol, nFiles, bits, probeModA, probeModB,
+      hilbert = true)
+
+  /** The one body of [[skippingAudit]] and [[curveAudit]], which differ
+    * only in whether the Hilbert layout joins `linear_a` and `zorder`:
+    * mask both keys to `bits` low bits, pin the keys (and their curve
+    * coordinates) once, rank every layout in one pass
+    * ([[layoutEnvelopes]]), then count the files each probe panel opens
+    * per (layout, dim). `op` names the caller in the empty-table error.
+    */
+  private def layoutAudit(op: String, df: DataFrame, keyA: String, keyB: String,
+                          idCol: String, nFiles: Int, bits: Int,
+                          probeModA: Int, probeModB: Int, hilbert: Boolean): DataFrame = {
     require(nFiles >= 1, s"nFiles must be positive: $nFiles")
     val mask = 1L << bits
+    // pmod, not %: negative keys must still land in [0, mask) or the
+    // z/hilbert coordinates go negative and the curve order is garbage
     val masked = df.select(col(idCol).cast("long").as("id"),
         pmod(col(keyA).cast("long"), lit(mask)).as("ka"),
         pmod(col(keyB).cast("long"), lit(mask)).as("kb"))
       .withColumn("z", graft.load.Sinks.zValue(col("ka"), col("kb"), bits))
-    val base = withHilbert(masked, "ka", "kb", bits).localCheckpoint(true) // one-shot: three layout sorts share it
+    // one-shot: the keys feed every layout's sort plus two probe panels —
+    // pin them once so the scan/mask runs once
+    val base = (if (hilbert) withHilbert(masked, "ka", "kb", bits) else masked)
+      .localCheckpoint(true)
     val n = base.count()
-    require(n > 0, "curveAudit needs a non-empty table")
+    require(n > 0, s"$op needs a non-empty table")
 
-    val env = layoutEnvelopes(base,
-      Seq("linear_a" -> col("ka"), "zorder" -> col("z"), "hilbert" -> col("h")),
-      nFiles, n)
-      .localCheckpoint(true) // one-shot: 3 layouts × 2 dims of range joins below
+    val layouts = Seq("linear_a" -> col("ka"), "zorder" -> col("z")) ++
+      (if (hilbert) Seq("hilbert" -> col("h")) else Nil)
+    val env = layoutEnvelopes(base, layouts, nFiles, n)
+      .localCheckpoint(true) // one-shot: layouts × 2 dims of range joins below
 
     def hits(dim: String, probes: DataFrame, lo: String, hi: String): DataFrame =
       probes.join(env, col("p") >= col(lo) && col("p") <= col(hi))

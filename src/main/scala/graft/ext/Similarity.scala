@@ -127,23 +127,14 @@ object Similarity {
     * via nPlanes (fewer planes ⇒ bigger buckets ⇒ higher recall); pass
     * [[adaptivePlanes]] of the corpus count to keep buckets ~constant-size
     * at any scale, and `maxBucketCandidates` to hard-bound skewed buckets.
+    * Body: [[bucketTopK]] over the query's own bucket.
     */
   def lshTopK(queries: DataFrame, corpus: DataFrame, k: Int, dim: Int, nPlanes: Int = 8,
               idCol: String = "vec_id", vecCol: String = "embedding",
               maxBucketCandidates: Option[Int] = None): DataFrame = {
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
       .withColumn("bucket", lshBucket(col("qv"), dim, nPlanes))
-    val c = capPerBucket(
-      corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
-        .withColumn("bucket", lshBucket(col("cv"), dim, nPlanes)),
-      "neighbor_id", maxBucketCandidates)
-    val scored = c.join(broadcast(q), Seq("bucket"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("score", round(cosine(col("qv"), col("cv")), 6))
-    val w = Window.partitionBy("query_id").orderBy(col("score").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "score", "rank")
+    bucketTopK(q, corpus, k, dim, nPlanes, idCol, vecCol, maxBucketCandidates)
   }
 
   /** Multi-probe LSH top-k (Lv et al., VLDB 2007, public paper): each
@@ -156,11 +147,11 @@ object Similarity {
     * set keeps the operator reproducible and the recall win measurable
     * (probes=0 degenerates to [[lshTopK]], asserted by spec).
     *
-    * Scale shape: identical to [[lshTopK]] with the query side expanded
-    * (probes+1)×, which is the small broadcast side; each corpus vector
-    * still lives in exactly ONE bucket, so probed buckets are disjoint
-    * and no candidate dedup is needed. The per-bucket candidate cap
-    * applies unchanged.
+    * Scale shape: [[bucketTopK]], as for [[lshTopK]], with the query side
+    * expanded (probes+1)×, which is the small broadcast side; each corpus
+    * vector still lives in exactly ONE bucket, so probed buckets are
+    * disjoint and no candidate dedup is needed. The per-bucket candidate
+    * cap applies unchanged.
     */
   def multiProbeLshTopK(queries: DataFrame, corpus: DataFrame, k: Int, dim: Int,
                         nPlanes: Int = 8, probes: Int = 3,
@@ -173,6 +164,18 @@ object Similarity {
         (Seq(col("bucket0")) ++
           (0 until probes).map(p => col("bucket0").bitwiseXOR(lit(1L << p)))): _*)))
       .select("query_id", "qv", "bucket")
+    bucketTopK(q, corpus, k, dim, nPlanes, idCol, vecCol, maxBucketCandidates)
+  }
+
+  /** The one body of [[lshTopK]] and [[multiProbeLshTopK]], which differ
+    * only in which buckets a query probes: `q` (query_id, qv, bucket)
+    * arrives already bucketed, one row per probed bucket. Buckets the
+    * corpus, caps each bucket, joins on the bucket with the query side
+    * broadcast, scores by rounded cosine and keeps each query's top `k`.
+    */
+  private def bucketTopK(q: DataFrame, corpus: DataFrame, k: Int, dim: Int, nPlanes: Int,
+                         idCol: String, vecCol: String,
+                         maxBucketCandidates: Option[Int]): DataFrame = {
     val c = capPerBucket(
       corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
         .withColumn("bucket", lshBucket(col("cv"), dim, nPlanes)),

@@ -491,22 +491,6 @@ object TimeSeries {
         max(col("s")).as("max_stat"))
   }
 
-  /** EXACT sample autocorrelation of the hourly event-count series at lags
-    * 1..`maxLag` — the seasonality detector (a spike at lag 24 is daily
-    * rhythm; a flat ACF says the q142/q182 seasonal models have nothing to
-    * model). Integer end to end: the series is the zero-gapfilled hourly
-    * grid, deviations are n-scaled (`dev_t = n·c_t − S`, the exact
-    * mean-centering that never forms the fractional mean), and
-    * `acf_ppm = num_k·10⁶ div den` where `num_k = Σ dev_t·dev_{t+k}`,
-    * `den = Σ dev_t²`. Cauchy–Schwarz keeps |acf_ppm| ≤ 10⁶; the one
-    * product that can outgrow a long (num·10⁶) runs in DECIMAL(38,0) —
-    * the q278 wide-integer device — so the envelope is den < 2⁶³
-    * (n_hours³·maxcount² — months of hours at 10⁵ events/hour).
-    *
-    * Scale shape: one fact-scan hour aggregate; everything after runs on
-    * the hour keyspace (grid join, lag equi-join of keyspace × maxLag
-    * rows, two map-combined sums). No windows, no per-row state.
-    */
   /** EXACT ordinary-least-squares trend of the hourly event-count series
     * — the load-growth line a capacity forecast reads. Closed-form OLS on
     * the zero-gapfilled grid with every moment an integer sum:
@@ -514,7 +498,8 @@ object TimeSeries {
     * per hour, ×10⁶) with the wide products in DECIMAL(38,0); intercept
     * (the t=0 level, ×10⁶) and the fit's R² (×10⁶, from
     * `num² / (den·Syy)`) ride the same device. One fact aggregate, one
-    * grid, one 5-sum moment aggregate — nothing else.
+    * grid, one 6-sum moment aggregate ([[olsTrend]]) — nothing else. A
+    * constant series (Syy = 0) scores slope 0 and R² 0.
     *
     * Exactness envelope: every moment and moment DIFFERENCE is
     * DECIMAL(38,0) (Σc² alone passes 2⁶³ at ~1e9 events/hour on a
@@ -533,24 +518,7 @@ object TimeSeries {
       .join(counts, Seq("h"), "left")
       .select((col("h") - col("h0")).as("t"),
         coalesce(col("c"), lit(0L)).as("c"))
-    series
-      .agg(count(lit(1)).as("n"), sum("t").as("st"), sum("c").as("sc"),
-        // moments in DECIMAL(38,0): at the envelope (multi-year grid,
-        // ~1e9 events/hour) Σc² alone passes 2^63 — BIGINT would wrap
-        sum(expr("CAST(t AS DECIMAL(38,0)) * t")).as("stt"),
-        sum(expr("CAST(t AS DECIMAL(38,0)) * c")).as("stc"),
-        sum(expr("CAST(c AS DECIMAL(38,0)) * c")).as("scc"))
-      .select(col("n").as("n_hours"),
-        expr("n * stc - CAST(st AS DECIMAL(38,0)) * sc").as("num"),
-        expr("n * stt - CAST(st AS DECIMAL(38,0)) * st").as("den"),
-        expr("n * scc - CAST(sc AS DECIMAL(38,0)) * sc").as("syy"),
-        col("st"), col("sc"), col("stt"), col("stc"))
-      .select(col("n_hours"),
-        expr("CAST(num AS DECIMAL(38,0)) * 1000000 div den").as("slope_ppm"),
-        expr("(CAST(sc AS DECIMAL(38,0)) * stt - CAST(st AS DECIMAL(38,0)) * stc) * 1000000 div den")
-          .as("intercept_ppm"),
-        expr("CAST(num AS DECIMAL(38,0)) * num * 1000000 div (CAST(den AS DECIMAL(38,0)) * syy)")
-          .as("r2_ppm"))
+    olsTrend(series, key = None)
   }
 
   /** Per-key OLS hourly trend — [[trendFit]] fitted independently for
@@ -558,10 +526,7 @@ object TimeSeries {
     * slopes are comparable across keys and a key absent for an hour
     * counts 0 there): the "which segments are trending, how fast, how
     * well does a line explain it" table. Same closed-form integer
-    * moments, DECIMAL(38,0) products, ppm boundaries; `r2_ppm` takes a
-    * `greatest(·, 1)` floor because a per-key series CAN be constant
-    * (syy = 0) — the numerator is provably 0 there too, so the guarded
-    * division still emits the exact 0.
+    * moments, DECIMAL(38,0) products, ppm boundaries ([[olsTrend]]).
     *
     * Scale shape: one (key, hour) map-combined aggregate over facts;
     * the gapfilled grid is keys × hours rows (keyspace-sized), and the
@@ -580,26 +545,55 @@ object TimeSeries {
       .join(counts, Seq("k", "h"), "left")
       .select(col("k"), (col("h") - col("h0")).as("t"),
         coalesce(col("c"), lit(0L)).as("c"))
-    series.groupBy("k")
+    olsTrend(series, key = Some("k"))
+  }
+
+  /** The one body of [[trendFit]] and [[trendFitByKey]], which differ only
+    * in the grid they fit: the 6-moment aggregate over a (t, c) series,
+    * grouped by the `key` column when there is one (emitted as `key`),
+    * then slope, intercept and R² in ppm. The moments are DECIMAL(38,0):
+    * at the envelope (multi-year grid, ~1e9 events/hour) Σc² alone passes
+    * 2^63 — BIGINT would wrap. `r2_ppm` divides by `greatest(den·Syy, 1)`
+    * because a series CAN be constant (Syy = 0); the numerator is then
+    * provably 0 too, so the guarded division emits the exact 0.
+    */
+  private def olsTrend(series: DataFrame, key: Option[String]): DataFrame = {
+    val keyOut = key.map(k => col(k).as("key")).toSeq
+    series.groupBy(key.map(col).toSeq: _*)
       .agg(count(lit(1)).as("n"), sum("t").as("st"), sum("c").as("sc"),
-        // DECIMAL(38,0) moments — same overflow envelope note as trendFit
         sum(expr("CAST(t AS DECIMAL(38,0)) * t")).as("stt"),
         sum(expr("CAST(t AS DECIMAL(38,0)) * c")).as("stc"),
         sum(expr("CAST(c AS DECIMAL(38,0)) * c")).as("scc"))
-      .select(col("k").as("key"), col("n").as("n_hours"),
+      .select(keyOut ++ Seq(col("n").as("n_hours"),
         expr("n * stc - CAST(st AS DECIMAL(38,0)) * sc").as("num"),
         expr("n * stt - CAST(st AS DECIMAL(38,0)) * st").as("den"),
         expr("n * scc - CAST(sc AS DECIMAL(38,0)) * sc").as("syy"),
-        col("st"), col("sc"), col("stt"), col("stc"))
-      .select(col("key"), col("n_hours"),
+        col("st"), col("sc"), col("stt"), col("stc")): _*)
+      .select(keyOut.map(_ => col("key")) ++ Seq(col("n_hours"),
         expr("CAST(num AS DECIMAL(38,0)) * 1000000 div den").as("slope_ppm"),
         expr("(CAST(sc AS DECIMAL(38,0)) * stt - CAST(st AS DECIMAL(38,0)) * stc) * 1000000 div den")
           .as("intercept_ppm"),
         expr("CAST(num AS DECIMAL(38,0)) * num * 1000000" +
           " div greatest(CAST(den AS DECIMAL(38,0)) * syy, CAST(1 AS DECIMAL(38,0)))")
-          .as("r2_ppm"))
+          .as("r2_ppm")): _*)
   }
 
+  /** EXACT sample autocorrelation of the hourly event-count series at lags
+    * 1..`maxLag` — the seasonality detector (a spike at lag 24 is daily
+    * rhythm; a flat ACF says the q142/q182 seasonal models have nothing to
+    * model). Integer end to end: the series is the zero-gapfilled hourly
+    * grid, deviations are n-scaled (`dev_t = n·c_t − S`, the exact
+    * mean-centering that never forms the fractional mean), and
+    * `acf_ppm = num_k·10⁶ div den` where `num_k = Σ dev_t·dev_{t+k}`,
+    * `den = Σ dev_t²`. Cauchy–Schwarz keeps |acf_ppm| ≤ 10⁶; the one
+    * product that can outgrow a long (num·10⁶) runs in DECIMAL(38,0) —
+    * the q278 wide-integer device — so the envelope is den < 2⁶³
+    * (n_hours³·maxcount² — months of hours at 10⁵ events/hour).
+    *
+    * Scale shape: one fact-scan hour aggregate; everything after runs on
+    * the hour keyspace (grid join, lag equi-join of keyspace × maxLag
+    * rows, two map-combined sums). No windows, no per-row state.
+    */
   def acf(events: DataFrame, tsCol: String, maxLag: Int): DataFrame = {
     require(maxLag >= 1, "maxLag must be >= 1")
     val counts = events

@@ -3,9 +3,7 @@ package graft.extract
 import java.util.zip.ZipFile
 import javax.xml.parsers.DocumentBuilderFactory
 import scala.collection.mutable
-import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.w3c.dom.Element
 
 /** Minimal Excel reader (S11, reference portfolio-etl.py:491, :515 uses
@@ -15,11 +13,12 @@ import org.w3c.dom.Element
   *
   * Spark has no built-in Excel source; the reference's Excel inputs are
   * small mapping/feed files (README.md:19-20 sanctions flat-file mode), so
-  * this is a deliberate driver-side connector: unzip the OOXML container,
-  * parse `xl/worksheets/sheet1.xml` + `xl/sharedStrings.xml` with the
-  * JDK's DOM parser, and hand Spark a DataFrame (first row = header, all
-  * columns string — downstream casts are the engine's job, same as the
-  * CSV path). Fact-scale data must arrive as Parquet/CSV; this connector
+  * this is a deliberately simple parser: unzip the OOXML container, parse
+  * `xl/worksheets/sheet1.xml` + `xl/sharedStrings.xml` with the JDK's DOM
+  * parser into rows of strings (first row = header — downstream casts are
+  * the engine's job, same as the CSV path). Spark reads it through the
+  * `graft-excel` source ([[graft.sources.ExcelDataSource]]), one workbook
+  * per task. Fact-scale data must arrive as Parquet/CSV; this connector
   * deliberately does not pretend to scale.
   */
 object Excel {
@@ -105,23 +104,16 @@ object Excel {
     } finally zip.close()
   }
 
-  /** XLSX → DataFrame, all string columns, header from row 1. */
-  def read(spark: SparkSession, path: String): DataFrame = {
-    val (header, rows) = readSheet(path)
-    val schema = StructType(header.map(h => StructField(h, StringType)))
-    val data = rows.map { r =>
-      Row.fromSeq(header.indices.map(i => if (i < r.length) r(i) else null))
-    }
-    spark.createDataFrame(data.asJava, schema)
-  }
-
   /** Excel-backed FileFeed read: same canonical (sku, qty, site) contract
-    * and sentinel fallback as Feeds.read. A legacy-.xls rejection is NOT
-    * mapped to the sentinel — a format mismatch must surface, only a
-    * genuinely absent/broken feed degrades to the reference's 1-row marker.
+    * and sentinel fallback as Feeds.read. The sheet reads through the
+    * `graft-excel` source ([[graft.sources.ExcelDataSource]]), whose load
+    * already parses the workbook's header, so an absent or broken workbook
+    * fails here and degrades to the reference's 1-row marker; the rows
+    * parse in the scan. A legacy-.xls rejection is NOT mapped to the
+    * sentinel — a format mismatch must surface.
     */
   def readFeed(spark: SparkSession, feed: FileFeed): DataFrame =
-    try Feeds.project(read(spark, feed.path), feed)
+    try Feeds.project(spark.read.format("graft-excel").load(feed.path), feed)
     catch {
       case e: UnsupportedOperationException => throw e
       case scala.util.control.NonFatal(e) =>

@@ -13,9 +13,9 @@ import org.apache.spark.unsafe.types.UTF8String
 /** DataSourceV2 front-end for the OOXML reader (S11) —
   * `spark.read.format("graft-excel").load(path)`.
   *
-  * Upgrades `extract/Excel.read` from a driver-side `createDataFrame` to a
-  * first-class source: the workbook is parsed on the EXECUTOR inside a
-  * `PartitionReader`, column pruning is pushed into the scan
+  * The one way Spark reads a workbook (`Excel.readFeed` goes through it
+  * too), as a first-class source: the workbook is parsed on the EXECUTOR
+  * inside a `PartitionReader`, column pruning is pushed into the scan
   * (`SupportsPushDownRequiredColumns` — a `select(one_col)` reads only that
   * header's cells into rows), and the source composes with everything a
   * real table does (SQL `USING graft-excel`, joins, caching). All columns
@@ -33,8 +33,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * (small, static mapping dirs in practice) race left undefined. Sheet XML itself
   * is not splittable, and the sanctioned inputs are small dim/mapping
   * files (README.md:19-20); paths must be visible from executors
-  * (local/NFS — same contract as the driver-side reader this replaces).
-  * The schema comes from the first workbook's header; other workbooks are
+  * (local/NFS). The schema comes from the first workbook's header; other workbooks are
   * matched by header NAME per file (a column absent from a workbook reads
   * as null — union-by-name semantics, like the CSV feed union).
   */

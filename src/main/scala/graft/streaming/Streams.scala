@@ -652,21 +652,8 @@ object Streams {
     * is the same expression evaluated in batch mode).
     */
   def viewToPurchase(events: DataFrame, horizon: String = "30 minutes",
-                     watermark: String = "1 hour"): DataFrame = {
-    val views = events.filter(col("event_type") === "view")
-      .select(col("user_id"), col("ts").as("view_ts"), col("event_id").as("view_id"))
-      .withWatermark("view_ts", watermark)
-    val buys = events.filter(col("event_type") === "purchase")
-      .select(col("user_id").as("buy_user"), col("ts").as("buy_ts"),
-        col("event_id").as("buy_id"))
-      .withWatermark("buy_ts", watermark)
-    views.join(buys,
-      col("user_id") === col("buy_user") &&
-        col("buy_ts") >= col("view_ts") &&
-        col("buy_ts") <= col("view_ts") + expr(s"interval $horizon"))
-      .select(col("user_id"), col("view_id"), col("buy_id"),
-        col("view_ts"), col("buy_ts"))
-  }
+                     watermark: String = "1 hour"): DataFrame =
+    viewPurchaseJoin(events, horizon, watermark, "inner")
 
   /** [[viewToPurchase]]'s LEFT OUTER form: views that convert emit their
     * (view, purchase) pair exactly as the inner join does; views that DON'T
@@ -679,7 +666,16 @@ object Streams {
     * at the watermark, the outer semantics add no retention.
     */
   def viewToPurchaseOuter(events: DataFrame, horizon: String = "30 minutes",
-                          watermark: String = "1 hour"): DataFrame = {
+                          watermark: String = "1 hour"): DataFrame =
+    viewPurchaseJoin(events, horizon, watermark, "leftOuter")
+
+  /** The one body of [[viewToPurchase]] and [[viewToPurchaseOuter]],
+    * which differ only in `joinType`: watermarked views and purchases,
+    * joined on the user with buy_ts bounded to [view_ts, view_ts +
+    * horizon] so both sides' state is evicted at the watermark.
+    */
+  private def viewPurchaseJoin(events: DataFrame, horizon: String, watermark: String,
+                               joinType: String): DataFrame = {
     val views = events.filter(col("event_type") === "view")
       .select(col("user_id"), col("ts").as("view_ts"), col("event_id").as("view_id"))
       .withWatermark("view_ts", watermark)
@@ -691,7 +687,7 @@ object Streams {
       col("user_id") === col("buy_user") &&
         col("buy_ts") >= col("view_ts") &&
         col("buy_ts") <= col("view_ts") + expr(s"interval $horizon"),
-      "leftOuter")
+      joinType)
       .select(col("user_id"), col("view_id"), col("buy_id"),
         col("view_ts"), col("buy_ts"))
   }

@@ -510,4 +510,36 @@ class JpegSpec extends AnyFunSuite {
         r.getLong(9) == ch(2))
     }
   }
+
+  test("synthetic payload bytes are pinned: one SHA-256 per encoder over ids 0..39") {
+    // the decode tests compare pixels against the closed form, so a
+    // reordered DHT or a changed APP0 would still pass them; q383 and
+    // q388 read these bytes, not only the decoded pixels
+    def digest(payload: Long => Array[Byte]): String = {
+      val md = java.security.MessageDigest.getInstance("SHA-256")
+      (0L until 40L).foreach(id => md.update(payload(id)))
+      md.digest().map(b => f"${b & 0xff}%02x").mkString
+    }
+    val got = Seq(
+      "baseline" -> digest(Jpeg.synthJpegPayload(_)),
+      "baseline, restart every 2 MCUs" -> digest(Jpeg.synthJpegPayload(_, restartInterval = 2)),
+      "4:2:0" -> digest(Jpeg.synthJpeg420Payload(_)),
+      "4:2:0, restart every 2 MCUs" -> digest(Jpeg.synthJpeg420Payload(_, restartInterval = 2)),
+      "progressive" -> digest(Jpeg.synthJpegProgressivePayload),
+      "quality-scaled DQT" -> digest(Jpeg.synthJpegQualityPayload))
+    val want = Seq(
+      "baseline" ->
+        "400402f3e075d42ad32eaf18107ad92af663fd2bc0cf802bd777a04bb6d843b7",
+      "baseline, restart every 2 MCUs" ->
+        "a5729bf9c4dd912bfb7f7587bb56a0a5a3d740059664268b093c00933f2d17cb",
+      "4:2:0" ->
+        "0e990e8b5e91d51ccea51ff71dae0ee83c8f94263b49e350fb50829778fc43ae",
+      "4:2:0, restart every 2 MCUs" ->
+        "bbf9afa7aca62dcfae1a53c447a362e1a495d71f8d54b50b3a2d08a3ab7b6144",
+      "progressive" ->
+        "a35d3b7968675b1ef4a8e528a57cd1cfec82c84d33218de49716ce2a2366496c",
+      "quality-scaled DQT" ->
+        "b7e296db825fab68c6b079a635551f57b697de7ad363c3582cccad2bfb197188")
+    assert(got == want)
+  }
 }

@@ -491,6 +491,16 @@ class TimeSeriesSpec extends SparkSpec {
     assert(r.getLong(3) == 1000000L)
   }
 
+  test("trendFit: a constant series scores slope 0 and r2 = 0 instead of dividing by zero") {
+    // 2 events in each of hours 0..3: syy = 0, so the unguarded r² division
+    // raised DIVIDE_BY_ZERO under ANSI mode; the keyed fit's floor emits 0
+    val rows = (0 to 3).flatMap(h => (0 until 2).map(i =>
+      Row(new Timestamp(h * 3600000L + i * 1000L))))
+    val r = TimeSeries.trendFit(df("ts TIMESTAMP", rows), "ts").collect().head
+    assert((r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)) ==
+      ((4L, 0L, 2000000L, 0L)))
+  }
+
   test("trendFitByKey: independent fits per key on the common grid; constant series scores r2 = 0") {
     // key "up": c = 1 + 2t (the trendFit line); key "flat": c = 2 every
     // hour (syy = 0 → guarded r² division emits exactly 0, slope 0);

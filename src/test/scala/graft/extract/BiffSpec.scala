@@ -24,8 +24,8 @@ class BiffSpec extends SparkSpec {
   }
 
   test(".xls and .xlsx of the same sheet produce identical DataFrames") {
-    val xls = Excel.read(spark, writeXls(cells))
-    val xlsx = Excel.read(spark, writeXlsx(cells))
+    val xls = spark.read.format("graft-excel").load(writeXls(cells))
+    val xlsx = spark.read.format("graft-excel").load(writeXlsx(cells))
     assert(xls.schema == xlsx.schema)
     assert(rowSet(xls) == rowSet(xlsx))
   }
