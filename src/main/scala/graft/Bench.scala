@@ -72,7 +72,7 @@ object Bench {
     * hashing to 0. Order-insensitive, so two plans of one query compare
     * equal whatever their partitioning. */
   private[graft] def checksum(df: DataFrame): (Long, Long) = {
-    val r = df.select(count(lit(1)), bit_xor(xxhash64(df.columns.map(col): _*))).head()
+    val r = df.select(count(lit(1)), bit_xor(xxhash64(df.columns.toSeq.map(col): _*))).head()
     (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
   }
 

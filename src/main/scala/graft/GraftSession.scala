@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import graft.functions.{CosineSimilarity, DotProduct, LongL2Squared, RepetitionFunctions, RepetitionStats, ShingleCodes, ShingleFunctions, ShingleStrings, VectorFunctions}
 
 /** SparkSessionExtensions installer for the engine's native expressions.
   *
@@ -13,105 +12,52 @@ import graft.functions.{CosineSimilarity, DotProduct, LongL2Squared, RepetitionF
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier(VectorFunctions.DotName),
-      new ExpressionInfo(classOf[DotProduct].getName, VectorFunctions.DotName),
-      (args: Seq[Expression]) => DotProduct(args(0), args(1))))
-    ext.injectFunction((
-      FunctionIdentifier(VectorFunctions.CosineName),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, VectorFunctions.CosineName),
-      (args: Seq[Expression]) => CosineSimilarity(args(0), args(1))))
-    ext.injectFunction((
-      FunctionIdentifier(VectorFunctions.L2SqName),
-      new ExpressionInfo(classOf[LongL2Squared].getName, VectorFunctions.L2SqName),
-      (args: Seq[Expression]) => LongL2Squared(args(0), args(1))))
-    ext.injectFunction((
-      FunctionIdentifier(VectorFunctions.SortedInterName),
-      new ExpressionInfo(classOf[functions.SortedInterCount].getName,
-        VectorFunctions.SortedInterName),
-      (args: Seq[Expression]) => functions.SortedInterCount(args(0), args(1))))
-    ext.injectFunction((
-      FunctionIdentifier(ShingleFunctions.CodesName),
-      new ExpressionInfo(classOf[ShingleCodes].getName, ShingleFunctions.CodesName),
-      (args: Seq[Expression]) => ShingleCodes(args(0))))
-    ext.injectFunction((
-      FunctionIdentifier(ShingleFunctions.StringsName),
-      new ExpressionInfo(classOf[ShingleStrings].getName, ShingleFunctions.StringsName),
-      (args: Seq[Expression]) => ShingleStrings(args(0))))
-    ext.injectFunction((
-      FunctionIdentifier(ShingleFunctions.RollingName),
-      new ExpressionInfo(classOf[functions.RollingFp].getName, ShingleFunctions.RollingName),
-      (args: Seq[Expression]) => functions.RollingFp(args(0))))
-    ext.injectFunction((
-      FunctionIdentifier(ShingleFunctions.TrigramHashesName),
-      new ExpressionInfo(classOf[functions.TrigramMixHashes].getName,
-        ShingleFunctions.TrigramHashesName),
-      // j selects the hash family member and must be a plan-time literal
-      (args: Seq[Expression]) => functions.TrigramMixHashes(args(0),
-        args(1).eval().asInstanceOf[Int])))
-    ext.injectFunction((
-      FunctionIdentifier(RepetitionFunctions.Name),
-      new ExpressionInfo(classOf[RepetitionStats].getName, RepetitionFunctions.Name),
-      (args: Seq[Expression]) => RepetitionStats(args(0))))
-    ext.injectFunction((
-      FunctionIdentifier(functions.NgramFunctions.Name),
-      new ExpressionInfo(classOf[functions.WordNgrams].getName, functions.NgramFunctions.Name),
-      (args: Seq[Expression]) => {
-        // first two-arg function in this registry: guard arity so a SQL
-        // call with the wrong count gets an analysis-time message, not an
-        // IndexOutOfBoundsException from args(1)
-        require(args.length == 2,
-          s"${functions.NgramFunctions.Name} requires exactly 2 arguments (tokens, n), got ${args.length}")
-        functions.WordNgrams(args(0), args(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier(functions.BottomKFunctions.Name),
-      new ExpressionInfo(classOf[functions.BottomKDistinct].getName,
-        functions.BottomKFunctions.Name),
-      functions.BottomKFunctions.build))
-    ext.injectFunction((
-      FunctionIdentifier(functions.NormalizeFunctions.Name),
-      new ExpressionInfo(classOf[functions.CleanText].getName,
-        functions.NormalizeFunctions.Name),
-      (args: Seq[Expression]) => functions.CleanText(args(0))))
-    ext.injectFunction((
-      FunctionIdentifier(functions.LogBucketFunctions.IdName),
-      new ExpressionInfo(classOf[functions.LogBucketId].getName,
-        functions.LogBucketFunctions.IdName),
-      // subBits selects the bucket geometry and must be a plan-time literal
-      (args: Seq[Expression]) => functions.LogBucketId(args(0),
-        args(1).eval().asInstanceOf[Int])))
-    ext.injectFunction((
-      FunctionIdentifier(functions.LogBucketFunctions.RepName),
-      new ExpressionInfo(classOf[functions.LogBucketRep].getName,
-        functions.LogBucketFunctions.RepName),
-      (args: Seq[Expression]) => functions.LogBucketRep(args(0),
-        args(1).eval().asInstanceOf[Int])))
-    ext.injectFunction((
-      FunctionIdentifier(functions.LogBucketFunctions.BinLenName),
-      new ExpressionInfo(classOf[functions.BinLength].getName,
-        functions.LogBucketFunctions.BinLenName),
-      (args: Seq[Expression]) => functions.BinLength(args(0))))
-    ext.injectFunction((
-      FunctionIdentifier(functions.TokenCountFunctions.Name),
-      new ExpressionInfo(classOf[functions.TokenCount].getName,
-        functions.TokenCountFunctions.Name),
-      (args: Seq[Expression]) => functions.TokenCount(args(0))))
-    ext.injectFunction((
-      FunctionIdentifier(functions.TextStatsFunctions.Name),
-      new ExpressionInfo(classOf[functions.TextStats].getName,
-        functions.TextStatsFunctions.Name),
-      (args: Seq[Expression]) => functions.TextStats(args(0))))
-    ext.injectFunction((
-      FunctionIdentifier(functions.CollapseWsFunctions.Name),
-      new ExpressionInfo(classOf[functions.CollapseWs].getName,
-        functions.CollapseWsFunctions.Name),
-      (args: Seq[Expression]) => functions.CollapseWs(args(0))))
+    GraftExtensions.sqlFunctions.foreach { case (name, cls, build) =>
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(cls.getName, name), build))
+    }
     // HOF dot-product pattern → fused native loop (pure perf rewrite)
     ext.injectOptimizerRule(_ => graft.plans.RewriteHofDotProduct)
     // whole-operator as-of join: AsOfJoinPlan → AsOfJoinExec
     ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
   }
+}
+
+object GraftExtensions {
+  import functions._
+
+  /** The `graft_*` SQL functions: (name, expression class, builder). */
+  private val sqlFunctions: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
+    (VectorFunctions.DotName, classOf[DotProduct], a => DotProduct(a(0), a(1))),
+    (VectorFunctions.CosineName, classOf[CosineSimilarity], a => CosineSimilarity(a(0), a(1))),
+    (VectorFunctions.L2SqName, classOf[LongL2Squared], a => LongL2Squared(a(0), a(1))),
+    (VectorFunctions.SortedInterName, classOf[SortedInterCount],
+      a => SortedInterCount(a(0), a(1))),
+    (ShingleFunctions.CodesName, classOf[ShingleCodes], a => ShingleCodes(a(0))),
+    (ShingleFunctions.StringsName, classOf[ShingleStrings], a => ShingleStrings(a(0))),
+    (ShingleFunctions.RollingName, classOf[RollingFp], a => RollingFp(a(0))),
+    // j selects the hash family member and must be a plan-time literal
+    (ShingleFunctions.TrigramHashesName, classOf[TrigramMixHashes],
+      a => TrigramMixHashes(a(0), a(1).eval().asInstanceOf[Int])),
+    (RepetitionFunctions.Name, classOf[RepetitionStats], a => RepetitionStats(a(0))),
+    (NgramFunctions.Name, classOf[WordNgrams], a => {
+      // guard arity so a SQL call with the wrong count gets an
+      // analysis-time message, not an IndexOutOfBoundsException from a(1)
+      require(a.length == 2,
+        s"${NgramFunctions.Name} requires exactly 2 arguments (tokens, n), got ${a.length}")
+      WordNgrams(a(0), a(1))
+    }),
+    (BottomKFunctions.Name, classOf[BottomKDistinct], BottomKFunctions.build),
+    (NormalizeFunctions.Name, classOf[CleanText], a => CleanText(a(0))),
+    // subBits selects the bucket geometry and must be a plan-time literal
+    (LogBucketFunctions.IdName, classOf[LogBucketId],
+      a => LogBucketId(a(0), a(1).eval().asInstanceOf[Int])),
+    (LogBucketFunctions.RepName, classOf[LogBucketRep],
+      a => LogBucketRep(a(0), a(1).eval().asInstanceOf[Int])),
+    (LogBucketFunctions.BinLenName, classOf[BinLength], a => BinLength(a(0))),
+    (TokenCountFunctions.Name, classOf[TokenCount], a => TokenCount(a(0))),
+    (TextStatsFunctions.Name, classOf[TextStats], a => TextStats(a(0))),
+    (CollapseWsFunctions.Name, classOf[CollapseWs], a => CollapseWs(a(0))))
 }
 
 /** Session factory with the engine's scale-tuned defaults: AQE (runtime

@@ -599,7 +599,6 @@ object Oracles {
        |  CAST((cum - n_tokens) // $budget AS BIGINT) AS pack_seq
        |FROM c""".stripMargin
 
-  /** Mirrors Packing.clusterSplit over the minhashClusters derivation. */
   /** q164 oracle: overlapping token-window chunking — same chunk-count
     * arithmetic, DuckDB's 1-based inclusive list slice mirrors Spark's
     * (start, length) slice, windows re-joined with single spaces.
@@ -636,6 +635,7 @@ object Oracles {
        |FROM clus""".stripMargin
   }
 
+  /** Mirrors Packing.clusterSplit over the minhashClusters derivation. */
   def clusterSplit(trainPct: Int, k: Int = 16, rowsPerBand: Int = 4): String =
     s"""WITH clus AS (SELECT * FROM (${minhashClusters(k, rowsPerBand)}))
        |SELECT doc_id, cluster_rep,
@@ -869,8 +869,8 @@ object Oracles {
 
   /** Mirrors Similarity.ivfTopK: centroid assignment → nProbe probes →
     * candidate join on centroid id → exact re-rank.
-    */
-  /** `corpusWhere` (e.g. "AND label = 2") narrows the searchable corpus —
+    *
+    * `corpusWhere` (e.g. "AND label = 2") narrows the searchable corpus —
     * the q155 filtered-ANN variant; the probe/centroid side is unchanged
     * (the index is built once, the predicate gates candidates).
     */
@@ -905,13 +905,6 @@ object Oracles {
        |$dotsCte,
        |${rankTail(k)}""".stripMargin
 
-  /** q156 oracle: MMR diversity rerank — candidate CTE = the q18 brute
-    * cosine derivation cut at `candidates`, pair similarities over the
-    * DISTINCT candidate id pairs (query-independent, like the engine),
-    * then `k−1` unrolled greedy rounds. λ/(1−λ) are derived by the same
-    * `ppm/10⁶` IEEE division the Spark side uses; the MMR score is
-    * re-rounded to 6 decimals before the rank, id tie-break after.
-    */
   /** The greedy-MMR CTE tail over a `cand (query_id, neighbor_id, score)`
     * CTE already in scope: candidate pair cosines + first pick + `k−1`
     * unrolled rounds, ending in `sel$k`. Shared by q156 (brute-cosine
@@ -955,6 +948,13 @@ object Oracles {
        |${steps.mkString(",\n")}""".stripMargin
   }
 
+  /** q156 oracle: MMR diversity rerank — candidate CTE = the q18 brute
+    * cosine derivation cut at `candidates`, pair similarities over the
+    * DISTINCT candidate id pairs (query-independent, like the engine),
+    * then `k−1` unrolled greedy rounds. λ/(1−λ) are derived by the same
+    * `ppm/10⁶` IEEE division the Spark side uses; the MMR score is
+    * re-rounded to 6 decimals before the rank, id tie-break after.
+    */
   def mmrRerank(queryMod: Int, candidates: Int, k: Int, lambdaPpm: Long): String =
     s"""WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id % $queryMod = 0),
        |corp AS (SELECT vec_id AS neighbor_id, embedding AS nv FROM embeddings),
@@ -2824,11 +2824,6 @@ object Oracles {
        |FROM mo, bo, eo""".stripMargin
   }
 
-  /** Mirrors the q289 CountSketch drift readout: two half-corpus signed
-    * sketches at the CsJ block subtracted cell-wise, probe-panel median
-    * estimates (exact middle order statistic over depth rows) next to
-    * exact per-user deltas.
-    */
   /** q293: hourly CountSketch cells over events (unit weights) — the
     * same CsJ hash family replayed per hour; mirrors the mode-adaptive
     * Streams.countSketchHourly run as a batch frame.
@@ -2913,6 +2908,11 @@ object Oracles {
        |FROM s""".stripMargin
   }
 
+  /** Mirrors the q289 CountSketch drift readout: two half-corpus signed
+    * sketches at the CsJ block subtracted cell-wise, probe-panel median
+    * estimates (exact middle order statistic over depth rows) next to
+    * exact per-user deltas.
+    */
   def countSketchDrift(depth: Int, width: Int, probeMod: Int,
                        probeResidue: Int): String = {
     val cellRows = (0 until depth).map(r =>
@@ -3136,11 +3136,6 @@ object Oracles {
       |GROUP BY GROUPING SETS ((l_returnflag, l_linestatus),
       |  (l_returnflag), (l_linestatus))""".stripMargin
 
-  /** q101 oracle: per-node triangle counts on the part co-purchase graph —
-    * same degree-orientation as Graph.triangleCounts (row-value comparison
-    * `(d, id)` mirrors Spark's struct ordering), so each triangle is
-    * counted from its unique oriented wedge in both engines.
-    */
   /** q141 oracle: the fixed-round k-core peel replayed as `rounds` nested
     * CTE rounds — per round a degree aggregate and an endpoint IN-filter,
     * over the same minPairs-thresholded co-occurrence edges the engine
@@ -3173,12 +3168,6 @@ object Oracles {
        |GROUP BY node_id""".stripMargin
   }
 
-  /** q146 oracle: fixed-round synchronous label propagation replayed as
-    * round-unrolled MATERIALIZED CTEs (same inlining hazard as [[kCore]]);
-    * the per-node arg-max is a `row_number` over `(count DESC, label)` —
-    * the same most-frequent/min-label tie-break as the engine's
-    * `max(struct(c, -lbl))`.
-    */
   /** The shared label-propagation CTE prefix (e0/sym/l0..l`rounds`) —
     * q146 reads the final labels, q284 builds the modularity report on
     * top of the same chain.
@@ -3210,6 +3199,12 @@ object Oracles {
        |), ${steps.mkString(", ")}""".stripMargin
   }
 
+  /** q146 oracle: fixed-round synchronous label propagation replayed as
+    * round-unrolled MATERIALIZED CTEs (same inlining hazard as [[kCore]]);
+    * the per-node arg-max is a `row_number` over `(count DESC, label)` —
+    * the same most-frequent/min-label tie-break as the engine's
+    * `max(struct(c, -lbl))`.
+    */
   def labelPropagation(rounds: Int, minPairs: Long): String =
     s"""WITH ${labelPropCtes(rounds, minPairs)}
        |SELECT id AS node_id, lbl AS community FROM l$rounds""".stripMargin
@@ -3305,6 +3300,11 @@ object Oracles {
        |SELECT id AS node_id, dist FROM d$rounds""".stripMargin
   }
 
+  /** q101 oracle: per-node triangle counts on the part co-purchase graph —
+    * same degree-orientation as Graph.triangleCounts (row-value comparison
+    * `(d, id)` mirrors Spark's struct ordering), so each triangle is
+    * counted from its unique oriented wedge in both engines.
+    */
   val triangleCounts: String =
     """WITH und AS (
       |  SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
@@ -5066,7 +5066,6 @@ object Oracles {
       |  CAST(SUM(CASE WHEN n = 1 THEN 1 ELSE 0 END) * 1000000 // COUNT(*) AS BIGINT) AS bounce_ppm
       |FROM sess GROUP BY 1""".stripMargin
 
-  /** q225: one-time vs repeat buyers per nation. */
   /** q226: real-container media decode. Mirrors Multimodal.probeMedia by
     * recomputing every PARSED field analytically from the synthetic
     * corpus' closed-form definition (even doc_id → 8×8 24-bpp BMP whose
@@ -5487,6 +5486,7 @@ object Oracles {
        |GROUP BY 1, 2""".stripMargin
   }
 
+  /** q225: one-time vs repeat buyers per nation. */
   val oneTimeBuyers: String =
     """WITH pc AS (
       |  SELECT o_custkey, CAST(COUNT(*) AS BIGINT) AS n_orders
@@ -6574,13 +6574,6 @@ object Oracles {
        |  END AS BIGINT) AS alloc_tokens
        |FROM fl CROSS JOIN agg""".stripMargin
 
-  /** CTE chain replaying Pca exactly: quantize → exact HUGEINT moments →
-    * centered n-scaled covariance scaled to BIGINT by `n²·10⁴` (HUGEINT
-    * `//` truncates toward zero, measured identical to Spark's DECIMAL
-    * `div` and Scala BigInt `/`) → `iterations` unrolled power steps
-    * renormalizing to ‖v‖∞ = 1000 → deterministic sign fix. The final
-    * signed-loading CTE is named `ld` (1-based dim index `i`).
-    */
   /** Moment CTEs: quantize → exact HUGEINT sums → covariance scaled to
     * BIGINT by `n²·10⁴` (named `pc`).
     */
@@ -6629,6 +6622,13 @@ object Oracles {
     (Seq(head) ++ steps :+ tail).mkString(",\n")
   }
 
+  /** CTE chain replaying Pca exactly: quantize → exact HUGEINT moments →
+    * centered n-scaled covariance scaled to BIGINT by `n²·10⁴` (HUGEINT
+    * `//` truncates toward zero, measured identical to Spark's DECIMAL
+    * `div` and Scala BigInt `/`) → `iterations` unrolled power steps
+    * renormalizing to ‖v‖∞ = 1000 → deterministic sign fix. The final
+    * signed-loading CTE is named `ld` (1-based dim index `i`).
+    */
   private def pcaCtes(iterations: Int, dim: Int = 64): String =
     pcaMomentCtes(dim) + ",\n" + pcaPowerCtes("p", "pc", iterations, dim) +
       ",\nld AS MATERIALIZED (SELECT i, lv FROM pld)"

@@ -409,6 +409,20 @@ object Clustering {
       cand("query_id") === qdist("qid")), k)
   }
 
+  /** Frees the storage blocks behind an eagerly `localCheckpoint`ed frame.
+    * `Dataset.unpersist` is a no-op for checkpoint data (not a cacheManager
+    * entry) and `Dataset.rdd` derives a NEW RDD, so the only handle on the
+    * materialized blocks is the `LogicalRDD` leaf's backing RDD. Dropping
+    * the reference works too, but only frees at the ContextCleaner's next
+    * periodic GC — this releases a superseded round's blocks immediately.
+    */
+  private[ext] def unpersistCheckpoint(df: DataFrame): Unit =
+    df.queryExecution.logical match {
+      case lr: org.apache.spark.sql.execution.LogicalRDD =>
+        lr.rdd.unpersist(blocking = false)
+      case _ => () // not a checkpoint leaf — nothing materialized to free
+    }
+
   /** k-center greedy coreset selection (farthest-point traversal —
     * Gonzalez 1985's 2-approximation; the active-learning core-set
     * selector of Sener & Savarese 2018, arXiv:1708.00489, public paper):
@@ -438,20 +452,6 @@ object Clustering {
     * the quantized corpus is pinned once so passes re-read columnar
     * blocks, not the source.
     */
-  /** Frees the storage blocks behind an eagerly `localCheckpoint`ed frame.
-    * `Dataset.unpersist` is a no-op for checkpoint data (not a cacheManager
-    * entry) and `Dataset.rdd` derives a NEW RDD, so the only handle on the
-    * materialized blocks is the `LogicalRDD` leaf's backing RDD. Dropping
-    * the reference works too, but only frees at the ContextCleaner's next
-    * periodic GC — this releases a superseded round's blocks immediately.
-    */
-  private[ext] def unpersistCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.logical match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => () // not a checkpoint leaf — nothing materialized to free
-    }
-
   def kCenterGreedy(embeddings: DataFrame, k: Int,
                     idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     require(k >= 1, "k must be >= 1")

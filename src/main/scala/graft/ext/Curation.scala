@@ -96,15 +96,6 @@ object Curation {
         col("n_bigrams"), col("avg_logprob"))
   }
 
-  /** The full corpus→train-shards story: [[curate]] continued through the
-    * leakage-safe cluster split (every near-dup cluster lands wholly on one
-    * side — the SAME clusters the dedup stage derived, one subtree in the
-    * plan) and per-split sequence packing (packs never cross the split
-    * boundary). Output: one row per surviving doc with its shard address
-    * (split, bucket, pack_seq) — exactly what a writer partitioned by
-    * (split, bucket) would consume. Still ONE lazy plan; the only shuffles
-    * are the composed operators' own key exchanges.
-    */
   /** Dedup-cascade attrition report — the funnel a corpus build publishes
     * next to its output: exact dedup → MinHash near-dup clusters →
     * semantic (SemDeDup) pruning, each stage fed the PREVIOUS stage's
@@ -156,6 +147,15 @@ object Curation {
       .withColumn("removed", col("rows_in") - col("rows_out"))
   }
 
+  /** The full corpus→train-shards story: [[curate]] continued through the
+    * leakage-safe cluster split (every near-dup cluster lands wholly on one
+    * side — the SAME clusters the dedup stage derived, one subtree in the
+    * plan) and per-split sequence packing (packs never cross the split
+    * boundary). Output: one row per surviving doc with its shard address
+    * (split, bucket, pack_seq) — exactly what a writer partitioned by
+    * (split, bucket) would consume. Still ONE lazy plan; the only shuffles
+    * are the composed operators' own key exchanges.
+    */
   def curateToShards(docs: DataFrame,
                      permille: Seq[(String, Int)], defaultPermille: Int,
                      minQuality: Double, trainPct: Int,

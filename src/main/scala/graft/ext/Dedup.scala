@@ -367,16 +367,25 @@ object Dedup {
     * the output is the sign of Σ_tokens (2·bit_i(hash(token)) − 1).
     */
   def simHash(docs: DataFrame, bits: Int = 32,
-              idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+              idCol: String = "doc_id", textCol: String = "text"): DataFrame =
+    simHashOf(docs, encodeToken, bits, idCol, textCol)
+
+  /** The one SimHash body: [[simHash]] and [[simHash64]] differ only in
+    * the token encoder ([[encodeToken]] or [[encodeToken64]]) and in how
+    * many of its low bits vote. Per document, bit i of the output is set
+    * when more of its tokens have bit i set than clear.
+    */
+  private def simHashOf(docs: DataFrame, encode: Column => Column, bits: Int,
+                        idCol: String, textCol: String): DataFrame = {
     val toks = docs.select(col(idCol),
       explode(TextAnalysis.tokens(col(textCol))).as("t"))
-      .withColumn("x", encodeToken(col("t")))
+      .withColumn("x", encode(col("t")))
     val sums = (0 until bits).map(i =>
       sum(shiftright(col("x"), i) % 2L * 2L - 1L).as(s"s$i"))
-    val agg = toks.groupBy(col(idCol)).agg(sums.head, sums.tail: _*)
-    agg.select(col(idCol),
-      (0 until bits).map(i => when(col(s"s$i") > 0, lit(1L << i)).otherwise(lit(0L)))
-        .reduce(_ + _).as("simhash"))
+    toks.groupBy(col(idCol)).agg(sums.head, sums.tail: _*)
+      .select(col(idCol),
+        (0 until bits).map(i => when(col(s"s$i") > 0, lit(1L << i)).otherwise(lit(0L)))
+          .reduce(_ + _).as("simhash"))
   }
 
   /** Hamming distance between two simhash longs (for pairing buckets). */
@@ -468,17 +477,8 @@ object Dedup {
     * ~98% of ALL pairs on template-heavy corpora (round-2 measurement).
     */
   def simHash64(docs: DataFrame,
-                idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val toks = docs.select(col(idCol),
-      explode(TextAnalysis.tokens(col(textCol))).as("t"))
-      .withColumn("x", encodeToken64(col("t")))
-    val sums = (0 until SimHash64Bits).map(i =>
-      sum(shiftright(col("x"), i) % 2L * 2L - 1L).as(s"s$i"))
-    val agg = toks.groupBy(col(idCol)).agg(sums.head, sums.tail: _*)
-    agg.select(col(idCol),
-      (0 until SimHash64Bits).map(i => when(col(s"s$i") > 0, lit(1L << i)).otherwise(lit(0L)))
-        .reduce(_ + _).as("simhash"))
-  }
+                idCol: String = "doc_id", textCol: String = "text"): DataFrame =
+    simHashOf(docs, encodeToken64, SimHash64Bits, idCol, textCol)
 
   /** Hash dispatch: 64 → the wide hash, else the narrow parameterized one. */
   private def simHashFor(docs: DataFrame, bits: Int, idCol: String, textCol: String): DataFrame =

@@ -196,24 +196,6 @@ object Funnel {
     byType.unionByName(none)
   }
 
-  /** Deterministic A/B conversion comparison: users hash-assign to two
-    * arms (`mixHash(user; 360) mod 2` — family member 360 reserved for
-    * experiment assignment, disjoint from every other consumer), each
-    * arm reports its user count, converted-user count and conversion
-    * rate in exact ppm, and the two-proportion z-test verdict — computed
-    * ENTIRELY in cross-multiplied integer arithmetic (the q137 rate-
-    * anomaly policy): with diff = conv_a·n_b − conv_b·n_a, C = conv_a +
-    * conv_b, N = n_a + n_b, significance at z = zNum/zDen is
-    * `diff² · N · zDen² > zNum² · C · (N−C) · n_a · n_b` — algebraically
-    * identical to |p̂_a − p̂_b| > z·√(p̂(1−p̂)(1/n_a+1/n_b)), no sqrt, no
-    * float, bit-identical in any engine. DECIMAL(38,0) carries the
-    * products (bounded to ~10³⁶ for arms up to ~10⁷ users at z = 1.96;
-    * rescale zDen for bigger arms).
-    *
-    * Scale shape: one distinct-user pass, one distinct-converter pass
-    * (both partial-agg'd), a 2-row arm aggregate folded to one row — the
-    * fact stream is never joined row-to-row.
-    */
   /** Difference-in-differences readout (Card & Krueger's design, public
     * literature): the treated arm's before→after conversion-rate change
     * MINUS the control arm's — the causal estimate when both arms share
@@ -258,6 +240,24 @@ object Funnel {
         (col("r_t1_ppm") - col("r_t0_ppm")) - (col("r_c1_ppm") - col("r_c0_ppm")))
   }
 
+  /** Deterministic A/B conversion comparison: users hash-assign to two
+    * arms (`mixHash(user; 360) mod 2` — family member 360 reserved for
+    * experiment assignment, disjoint from every other consumer), each
+    * arm reports its user count, converted-user count and conversion
+    * rate in exact ppm, and the two-proportion z-test verdict — computed
+    * ENTIRELY in cross-multiplied integer arithmetic (the q137 rate-
+    * anomaly policy): with diff = conv_a·n_b − conv_b·n_a, C = conv_a +
+    * conv_b, N = n_a + n_b, significance at z = zNum/zDen is
+    * `diff² · N · zDen² > zNum² · C · (N−C) · n_a · n_b` — algebraically
+    * identical to |p̂_a − p̂_b| > z·√(p̂(1−p̂)(1/n_a+1/n_b)), no sqrt, no
+    * float, bit-identical in any engine. DECIMAL(38,0) carries the
+    * products (bounded to ~10³⁶ for arms up to ~10⁷ users at z = 1.96;
+    * rescale zDen for bigger arms).
+    *
+    * Scale shape: one distinct-user pass, one distinct-converter pass
+    * (both partial-agg'd), a 2-row arm aggregate folded to one row — the
+    * fact stream is never joined row-to-row.
+    */
   def armConversionTest(events: DataFrame, convType: String = "purchase",
                         zNum: Long = 196, zDen: Long = 100,
                         userCol: String = "user_id",
@@ -378,22 +378,6 @@ object Funnel {
         expr(s"(cast(theta_ppm as $d38) * nn) div dy").as("varred_ppm"))
   }
 
-  /** Dwell-time accounting: how long users sit in each state, where an
-    * event's dwell is the time until the SAME user's next event (the
-    * session-replay / engagement primitive behind time-on-page and
-    * state-occupancy reports). Each user's last event has no successor and
-    * contributes nothing (open intervals are unbounded, not zero — summing
-    * them as 0 would bias means down). All arithmetic is integer
-    * microseconds — `unix_micros` difference, totals, and a floor-division
-    * mean — so the output is bit-exact in any engine; ties on the
-    * timestamp are totally ordered by the event id (the
-    * [[transitionCounts]] rule). Output: one row per event type
-    * `(typeCol, n_intervals, total_dwell_us, mean_dwell_us)`.
-    *
-    * Scale shape: ONE user-key shuffle for the `lead` window (per-user
-    * state only, no global sort), then an aggregate whose keyspace is
-    * |event types| — constant-sized at any corpus scale.
-    */
   /** CEP-style event-pattern matches — MATCH_RECOGNIZE's
     * `START (^ABSENT)* END WITHIN horizon` shape: per user, every
     * `startType` event followed by an `endType` event within `horizonUs`
@@ -446,6 +430,22 @@ object Funnel {
         col("lag_us"))
   }
 
+  /** Dwell-time accounting: how long users sit in each state, where an
+    * event's dwell is the time until the SAME user's next event (the
+    * session-replay / engagement primitive behind time-on-page and
+    * state-occupancy reports). Each user's last event has no successor and
+    * contributes nothing (open intervals are unbounded, not zero — summing
+    * them as 0 would bias means down). All arithmetic is integer
+    * microseconds — `unix_micros` difference, totals, and a floor-division
+    * mean — so the output is bit-exact in any engine; ties on the
+    * timestamp are totally ordered by the event id (the
+    * [[transitionCounts]] rule). Output: one row per event type
+    * `(typeCol, n_intervals, total_dwell_us, mean_dwell_us)`.
+    *
+    * Scale shape: ONE user-key shuffle for the `lead` window (per-user
+    * state only, no global sort), then an aggregate whose keyspace is
+    * |event types| — constant-sized at any corpus scale.
+    */
   def dwellTimes(events: DataFrame, tsCol: String = "ts",
                  userCol: String = "user_id",
                  typeCol: String = "event_type",
@@ -604,24 +604,6 @@ object Funnel {
       .groupBy("lag_hours").agg(count(lit(1)).as("users"))
   }
 
-  /** Cohort retention matrix: users are cohorted by their first active
-    * day; each (cohort_day, day_offset) cell counts the cohort's users
-    * active exactly `day_offset` days after first touch, with the
-    * retention rate (active ÷ cohort size, exact integer division rounded
-    * to 6 decimals). Offset 0 rows equal the cohort sizes by construction
-    * — a free self-consistency check the spec asserts.
-    *
-    * Scale shape: ONE corpus exchange. Events repartition on user, the
-    * (user, day) dedup then needs no exchange of its own (hash on `user`
-    * already clusters `(user, day)` — Spark's subset rule), and the
-    * cohort day is a `min` window over the SAME user partitioning (sort
-    * within partitions, no exchange) instead of a groupBy + self-join,
-    * which the 10× probe showed re-shuffling the corpus a second time
-    * (0.78 → 14.1 s, 18×). Everything after is keyspace-sized: the
-    * matrix aggregate's keyspace is days² at worst, and cohort sizes
-    * come from the one first-day row each user already carries
-    * (day == cohort_day), broadcast back onto the matrix.
-    */
   /** EXACT rolling active users: for every day in the stream's span, the
     * count of distinct users active in the trailing `windowDays` window
     * ([d − windowDays + 1, d]) — the WAU/MAU dashboard series. Exact
@@ -696,6 +678,24 @@ object Funnel {
       sum("week_cents").over(w).as("cum_cents"))
   }
 
+  /** Cohort retention matrix: users are cohorted by their first active
+    * day; each (cohort_day, day_offset) cell counts the cohort's users
+    * active exactly `day_offset` days after first touch, with the
+    * retention rate (active ÷ cohort size, exact integer division rounded
+    * to 6 decimals). Offset 0 rows equal the cohort sizes by construction
+    * — a free self-consistency check the spec asserts.
+    *
+    * Scale shape: ONE corpus exchange. Events repartition on user, the
+    * (user, day) dedup then needs no exchange of its own (hash on `user`
+    * already clusters `(user, day)` — Spark's subset rule), and the
+    * cohort day is a `min` window over the SAME user partitioning (sort
+    * within partitions, no exchange) instead of a groupBy + self-join,
+    * which the 10× probe showed re-shuffling the corpus a second time
+    * (0.78 → 14.1 s, 18×). Everything after is keyspace-sized: the
+    * matrix aggregate's keyspace is days² at worst, and cohort sizes
+    * come from the one first-day row each user already carries
+    * (day == cohort_day), broadcast back onto the matrix.
+    */
   def retentionCohorts(events: DataFrame, tsCol: String = "ts",
                        userCol: String = "user_id"): DataFrame = {
     val perUser = org.apache.spark.sql.expressions.Window.partitionBy(col(userCol))

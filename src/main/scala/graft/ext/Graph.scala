@@ -133,8 +133,8 @@ object Graph {
     * first cut ran two full distinct exchanges plus two more to align
     * the join — 4 corpus-sized exchanges where this shape pays 1
     * (the [[associationRules]] layout, which always had it).
-    */
-  /** `dedup = false` skips the final (u, v) distinct — ONLY for consumers
+    *
+    * `dedup = false` skips the final (u, v) distinct — ONLY for consumers
     * that re-dedup the pair stream themselves before any counting (e.g.
     * [[kCore]], whose first step is a (u, v)-keyed dropDuplicates over
     * the symmetrized list): the downstream result is bit-identical and

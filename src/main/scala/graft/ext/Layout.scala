@@ -37,7 +37,7 @@ object Layout {
       .sortWithinPartitions(sortCols.map(col): _*)
     val schema = StructType(sorted.schema.fields :+
       StructField("rnk", LongType, nullable = false))
-    val rdd = sorted.rdd.zipWithIndex.map { case (r, i) => Row.fromSeq(r.toSeq :+ i) }
+    val rdd = sorted.rdd.zipWithIndex().map { case (r, i) => Row.fromSeq(r.toSeq :+ i) }
     sorted.sparkSession.createDataFrame(rdd, schema)
   }
 
@@ -275,22 +275,6 @@ object Layout {
       .unionByName(hits("b", probesB, "min_b", "max_b"))
   }
 
-  /** Rendezvous (highest-random-weight) sharding audit — the shard
-    * assignment a 100 TB ingest uses when the shard count must be able
-    * to CHANGE without reshuffling the world: doc → argmax over shards
-    * of h(doc, shard). Growing S → S+1 relocates ONLY the docs whose
-    * new argmax is the new shard (≈ 1/(S+1) of them) — consistent
-    * hashing's property without the ring (Thaler & Ravishankar 1996,
-    * public literature; [[LayoutSpec]] proves the property). Weights are
-    * [[Dedup.affineHash]] over the combined (doc·S + shard) key —
-    * overflow-safe, identical in SQL. Output: one row per shard with its
-    * doc count and share (ppm of total) — the balance audit.
-    *
-    * Scale shape: the doc×S weight relation is a narrow map (S is a
-    * constant, not data), the argmax is one map-combined max(struct)
-    * aggregate keyed by doc, counts are one S-sized aggregate; the
-    * 1-row total broadcasts back (share-of-total device).
-    */
   /** Per-doc rendezvous assignment: (idCol, shard). Weights are one
     * narrow map over doc×S; argmax is one max(struct) aggregate with a
     * deterministic tiebreak (largest weight, then smallest shard).
@@ -316,6 +300,22 @@ object Layout {
       .select(col("d").as(idCol), col("__m.s").as("shard"))
   }
 
+  /** Rendezvous (highest-random-weight) sharding audit — the shard
+    * assignment a 100 TB ingest uses when the shard count must be able
+    * to CHANGE without reshuffling the world: doc → argmax over shards
+    * of h(doc, shard). Growing S → S+1 relocates ONLY the docs whose
+    * new argmax is the new shard (≈ 1/(S+1) of them) — consistent
+    * hashing's property without the ring (Thaler & Ravishankar 1996,
+    * public literature; [[LayoutSpec]] proves the property). Weights are
+    * [[Dedup.affineHash]] over the combined (doc·S + shard) key —
+    * overflow-safe, identical in SQL. Output: one row per shard with its
+    * doc count and share (ppm of total) — the balance audit.
+    *
+    * Scale shape: the doc×S weight relation is a narrow map (S is a
+    * constant, not data), the argmax is one map-combined max(struct)
+    * aggregate keyed by doc, counts are one S-sized aggregate; the
+    * 1-row total broadcasts back (share-of-total device).
+    */
   def rendezvousShards(docs: DataFrame, nShards: Int,
                        idCol: String = "doc_id"): DataFrame = {
     val counts = rendezvousAssign(docs, nShards, idCol)

@@ -22,8 +22,8 @@ object Packing {
     * (packs never cross buckets) and each bucket's window is a bounded
     * partition. On a cluster, nBuckets ≈ parallelism × small-constant;
     * pack identity is the (bucket, seq) pair.
-    */
-  /** `extraKeys` prepend to the pack partitioning (packs never cross an
+    *
+    * `extraKeys` prepend to the pack partitioning (packs never cross an
     * extra key's boundary — e.g. pack within each train/eval split) and
     * ride through to the output. `carryCols` pass through to the output
     * WITHOUT joining the packing partitioning — letting a caller keep

@@ -39,15 +39,6 @@ object Profile {
       .select(col("p.col_name"), col("p.n_rows"), col("p.n_nonnull"), col("p.n_distinct"))
   }
 
-  /** Column-level drift between two snapshots of the same table — the
-    * schema-health diff a pipeline runs between loads to catch a feed
-    * silently going null-heavy or a key column collapsing its
-    * cardinality. Each side is one [[profile]] pass; the join is
-    * per-COLUMN (profile output rows), so the comparison is
-    * metadata-sized regardless of table size. Null rates are integer ppm
-    * (`10⁶·nulls div rows` — BIGINT-exact cross-engine), drift is the
-    * signed ppm delta, and distinct cardinality moves as a signed count.
-    */
   /** Pre-join skew report: for a planned `left ⋈ right` equi-join, the
     * top-k keys by PREDICTED output fan-out (cnt_left · cnt_right) — the
     * diagnosis a 100 TB join runs BEFORE shipping data, because one
@@ -73,6 +64,15 @@ object Profile {
       .orderBy(col("est_rows").desc, col("key")).limit(k)
   }
 
+  /** Column-level drift between two snapshots of the same table — the
+    * schema-health diff a pipeline runs between loads to catch a feed
+    * silently going null-heavy or a key column collapsing its
+    * cardinality. Each side is one [[profile]] pass; the join is
+    * per-COLUMN (profile output rows), so the comparison is
+    * metadata-sized regardless of table size. Null rates are integer ppm
+    * (`10⁶·nulls div rows` — BIGINT-exact cross-engine), drift is the
+    * signed ppm delta, and distinct cardinality moves as a signed count.
+    */
   def profileDrift(before: DataFrame, after: DataFrame,
                    cols: Seq[String]): DataFrame = {
     def side(df: DataFrame, sfx: String): DataFrame =

@@ -106,19 +106,6 @@ object RankStats {
           " END").as("spearman_ppm"))
   }
 
-  /** Mann–Whitney rank-sum effect (Mann & Whitney 1947, public
-    * literature) between two groups — the AUC reading: `auc_ppm` =
-    * P(a > b) + ½P(a = b) for a random pair drawn across groups, the
-    * common-language effect size and exactly the ROC-AUC of "predict A
-    * when the value is larger". EXACT via the by-value collapse: one
-    * (value → per-group counts) aggregate, one running-sum window over
-    * DISTINCT values, then Σ cntA·cumB pair-counting — never the n_a·n_b
-    * pair materialization. `u2` = 2U (twice the U statistic) stays
-    * integer under ties.
-    *
-    * Scale shape: facts reduce to the distinct-value keyspace in one
-    * map-combined aggregate; the window sorts distinct values only.
-    */
   /** Two-sample Kolmogorov–Smirnov statistic (Kolmogorov 1933 /
     * Smirnov 1939, public literature), EXACT: D = max over observed
     * values of |F_a(v) − F_b(v)|, evaluated as the integer cross-product
@@ -164,6 +151,19 @@ object RankStats {
           " d * 1000000 div (CAST(n_a AS DECIMAL(38,0)) * n_b) END").as("ks_ppm"))
   }
 
+  /** Mann–Whitney rank-sum effect (Mann & Whitney 1947, public
+    * literature) between two groups — the AUC reading: `auc_ppm` =
+    * P(a > b) + ½P(a = b) for a random pair drawn across groups, the
+    * common-language effect size and exactly the ROC-AUC of "predict A
+    * when the value is larger". EXACT via the by-value collapse: one
+    * (value → per-group counts) aggregate, one running-sum window over
+    * DISTINCT values, then Σ cntA·cumB pair-counting — never the n_a·n_b
+    * pair materialization. `u2` = 2U (twice the U statistic) stays
+    * integer under ties.
+    *
+    * Scale shape: facts reduce to the distinct-value keyspace in one
+    * map-combined aggregate; the window sorts distinct values only.
+    */
   def rankSumAuc(df: DataFrame, grpCol: Column, aValue: String,
                  valueCol: Column): DataFrame = {
     import org.apache.spark.sql.expressions.Window

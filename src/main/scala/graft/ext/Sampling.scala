@@ -62,7 +62,7 @@ object Sampling {
     // caller's column order so the sample is a true row-subset of df
     df.withColumn("__esn_h", h)
       .join(winners, Seq(groupCol, "__esn_h"), "left_semi")
-      .select(df.columns.map(col): _*)
+      .select(df.columns.toSeq.map(col): _*)
   }
 
   /** Per-group quantile ESTIMATES from a bounded coordinated sample — the
@@ -122,32 +122,6 @@ object Sampling {
     df.filter(h < round(w * M).cast("long"))
   }
 
-  /** Deterministic global training shuffle: every row gets a shard and a
-    * position inside it, both pure functions of (id, seed) — the final
-    * "randomize the corpus before the trainer reads it" step, reproducible
-    * across engines, partitionings and reruns (unlike `orderBy(rand())`).
-    *
-    * shard = affine-hash(id; seed) mod nShards; position = rank of a
-    * SECOND independent affine hash within the shard (id tie-break for
-    * hash collisions). Output: (idCol, shard, pos).
-    *
-    * Both hashes are [[Dedup.mixHash]] (affine ∘ x⁵ ∘ affine): a plain
-    * affine step `a·x + b mod P` stays linear (never wraps) for ids below
-    * ~P/a, so its low bits inherit the multiplier's parity (a = 37j+11
-    * is even for odd j — one step would put EVERY row in shard 0 for
-    * power-of-two nShards) and its order is just id order — and STACKING
-    * affine steps cannot help, because their composition mod P is again
-    * affine (see the mixHash scaladoc). Family members 100+8·seed …
-    * 105+8·seed are disjoint from every other consumer (sampling j=7,
-    * packing j=9, MinHash signatures j=0..k-1, sketches 200+): reusing
-    * the sampling member would make shard a function of the keep/drop
-    * hash, and a sampled-then-shuffled corpus would degenerate into the
-    * low shards.
-    *
-    * Scale: one exchange on `shard` + a per-shard sort — never a global
-    * sort. Shards are hash-balanced, so the sort is (corpus/nShards) per
-    * task; pick nShards ≈ a few × executor count at 100 TB.
-    */
   /** Token-budgeted domain mixing: per `strataCol` domain, take documents
     * in deterministic hash order until the domain's character/token budget
     * is reached (the doc that crosses the boundary is included — standard
@@ -448,6 +422,32 @@ object Sampling {
           .as("kept"))
   }
 
+  /** Deterministic global training shuffle: every row gets a shard and a
+    * position inside it, both pure functions of (id, seed) — the final
+    * "randomize the corpus before the trainer reads it" step, reproducible
+    * across engines, partitionings and reruns (unlike `orderBy(rand())`).
+    *
+    * shard = affine-hash(id; seed) mod nShards; position = rank of a
+    * SECOND independent affine hash within the shard (id tie-break for
+    * hash collisions). Output: (idCol, shard, pos).
+    *
+    * Both hashes are [[Dedup.mixHash]] (affine ∘ x⁵ ∘ affine): a plain
+    * affine step `a·x + b mod P` stays linear (never wraps) for ids below
+    * ~P/a, so its low bits inherit the multiplier's parity (a = 37j+11
+    * is even for odd j — one step would put EVERY row in shard 0 for
+    * power-of-two nShards) and its order is just id order — and STACKING
+    * affine steps cannot help, because their composition mod P is again
+    * affine (see the mixHash scaladoc). Family members 100+8·seed …
+    * 105+8·seed are disjoint from every other consumer (sampling j=7,
+    * packing j=9, MinHash signatures j=0..k-1, sketches 200+): reusing
+    * the sampling member would make shard a function of the keep/drop
+    * hash, and a sampled-then-shuffled corpus would degenerate into the
+    * low shards.
+    *
+    * Scale: one exchange on `shard` + a per-shard sort — never a global
+    * sort. Shards are hash-balanced, so the sort is (corpus/nShards) per
+    * task; pick nShards ≈ a few × executor count at 100 TB.
+    */
   def deterministicShuffle(df: DataFrame, nShards: Int, idCol: String = "doc_id",
                            seed: Int = 0): DataFrame = {
     require(nShards > 0, "nShards must be positive")
@@ -560,27 +560,6 @@ object Sampling {
     */
   val PoissonThresholds: Seq[Int] = Seq(3679, 7358, 9197, 9810, 9963, 9994, 9999)
 
-  /** ONE-PASS Poisson bootstrap confidence interval for the mean of an
-    * integer metric column (Chamandy et al., "Estimating Uncertainty for
-    * Massive Data Streams", Google 2012 — public): resample r reweights
-    * every row by an independent deterministic Poisson(1) count (hash →
-    * inverse CDF above). The corpus is scanned ONCE: each row explodes
-    * into its m+1 (replicate, weight) pairs in-task (slot 0 = the base
-    * weight 1, slots 1..m = replicates, each weight computed from the
-    * replicate index as a column), and ONE (replicate → Σwx, Σw) hash
-    * aggregate collapses them — map-side combine means only m+1 summary
-    * rows per partition cross the shuffle, and both the plan size and the
-    * aggregate width are CONSTANT in m, so whole-stage codegen never
-    * bails (a per-row array of m precomputed weights was an O(m)
-    * expression tree that blew up well below the permitted m=500). The
-    * classic resample-loop would scan 100 TB once per replicate.
-    *
-    * CI bounds are nearest-rank order statistics of the resample means
-    * (`rank = ⌈m·p‰/1000⌉`, the q236 rank rule): means are IEEE
-    * divisions of exact integer sums rounded to 6 decimals, and rank
-    * selection reads the sorted multiset, so ties cannot perturb the
-    * selected VALUE — bit-identical in any engine.
-    */
   /** [[bootstrapMeanCI]]'s single scan+aggregate, pre-checkpoint — the
     * stage whose plan shape the codegen spec pins. The expensive S-box
     * mix runs ONCE PER ROW before the melt (`p5 = perm5(affine(id,
@@ -618,6 +597,27 @@ object Sampling {
       .agg(sum(col("w") * col("__x")).as("sx"), sum("w").as("nw"))
   }
 
+  /** ONE-PASS Poisson bootstrap confidence interval for the mean of an
+    * integer metric column (Chamandy et al., "Estimating Uncertainty for
+    * Massive Data Streams", Google 2012 — public): resample r reweights
+    * every row by an independent deterministic Poisson(1) count (hash →
+    * inverse CDF above). The corpus is scanned ONCE: each row explodes
+    * into its m+1 (replicate, weight) pairs in-task (slot 0 = the base
+    * weight 1, slots 1..m = replicates, each weight computed from the
+    * replicate index as a column), and ONE (replicate → Σwx, Σw) hash
+    * aggregate collapses them — map-side combine means only m+1 summary
+    * rows per partition cross the shuffle, and both the plan size and the
+    * aggregate width are CONSTANT in m, so whole-stage codegen never
+    * bails (a per-row array of m precomputed weights was an O(m)
+    * expression tree that blew up well below the permitted m=500). The
+    * classic resample-loop would scan 100 TB once per replicate.
+    *
+    * CI bounds are nearest-rank order statistics of the resample means
+    * (`rank = ⌈m·p‰/1000⌉`, the q236 rank rule): means are IEEE
+    * divisions of exact integer sums rounded to 6 decimals, and rank
+    * selection reads the sorted multiset, so ties cannot perturb the
+    * selected VALUE — bit-identical in any engine.
+    */
   def bootstrapMeanCI(df: DataFrame, idCol: String, valueCol: Column,
                       resamples: Int = 100, loPermille: Int = 25,
                       hiPermille: Int = 975): DataFrame = {

@@ -69,19 +69,6 @@ object Search {
     starts.groupBy(col(idCol)).agg(count(lit(1)).as("n_matches"))
   }
 
-  /** BM25 top-k over a fixed query-token set.
-    *
-    * score(d) = Σ_t idfQ(t) · tf·(k1+1) / (tf + k1·(1−b + b·dl/avgdl)),
-    * with idfQ(t) = ((N+1)·1000) div (df+1) (rational fixed-point — the
-    * [[TfIdf]] policy) and dl/avgdl as (dl·N·1000) div Σdl scaled back by
-    * 1000.0. Per-token scores round to 6 decimals; the Σ_t adds one
-    * conditional aggregate per query token in FIXED query order (each
-    * covers ≤1 row per doc, so no order-unstable float sum exists).
-    *
-    * Scale: tf is one hash agg over the (tiny) matching postings; df and
-    * the corpus totals are broadcast; ranking is a row_number window that
-    * compiles to WindowGroupLimit.
-    */
   /** Conjunctive (AND) search: the top-k docs containing EVERY query
     * token at least once, ranked by total query-term frequency with a
     * doc-id tie-break. The boolean-retrieval primitive BM25 relaxes —
@@ -110,6 +97,19 @@ object Search {
       .limit(k)
   }
 
+  /** BM25 top-k over a fixed query-token set.
+    *
+    * score(d) = Σ_t idfQ(t) · tf·(k1+1) / (tf + k1·(1−b + b·dl/avgdl)),
+    * with idfQ(t) = ((N+1)·1000) div (df+1) (rational fixed-point — the
+    * [[TfIdf]] policy) and dl/avgdl as (dl·N·1000) div Σdl scaled back by
+    * 1000.0. Per-token scores round to 6 decimals; the Σ_t adds one
+    * conditional aggregate per query token in FIXED query order (each
+    * covers ≤1 row per doc, so no order-unstable float sum exists).
+    *
+    * Scale: tf is one hash agg over the (tiny) matching postings; df and
+    * the corpus totals are broadcast; ranking is a row_number window that
+    * compiles to WindowGroupLimit.
+    */
   def bm25TopK(docs: DataFrame, queryTokens: Seq[String], k: Int = 10,
                k1: Double = 1.2, b: Double = 0.75,
                idCol: String = "doc_id", textCol: String = "text"): DataFrame = {

@@ -317,7 +317,7 @@ object Sketch {
     */
   def cmEstimate(sketch: DataFrame, queries: DataFrame, itemCol: Column,
                  depth: Int = 4, width: Int = 2048): DataFrame = {
-    val keep = queries.columns
+    val keep = queries.columns.toSeq
     // same single-evaluation guard as countMinSketch
     val pre = queries.select(keep.map(col) :+ itemCol.as("__cm_x"): _*)
     val buckets = array((0 until depth).map(r =>
@@ -429,23 +429,6 @@ object Sketch {
 
   // ------------------------------------------------ relational bitmap index
 
-  /** Bitmap index over a non-negative integer key, per group, stored
-    * RELATIONALLY: one row per (group, 64-bit word index) holding the
-    * packed word — the roaring-bitmap idea re-expressed as a relation, so
-    * it builds with one hash aggregate and composes with plain joins.
-    *
-    * `bit_or` is idempotent (the HLL-register property), so the input
-    * needs NO pre-distinct: raw fact rows aggregate straight into the
-    * bitmap with map-side partial combine, and per-partition bitmaps merge
-    * by the same `bit_or` — exactly the mergeable-sketch contract. State
-    * is O(groups · keyspace/64) words (absent word ⇔ all-zero), not
-    * O(rows); at 100 TB the fact table collapses to a few KB per group in
-    * one shuffle.
-    *
-    * Unlike the [[hllRegisters]] estimate, the bitmap is EXACT — it IS the
-    * key set — and set algebra (∩, ∪, \) becomes a word-index equi-join
-    * plus `bit_count`, all codegen built-ins.
-    */
   /** mixHash family block for CountSketch: bucket r uses (440+4r, 441+4r),
     * sign r uses (442+4r, 443+4r) — depth ≤ 5 claims 440–459.
     */
@@ -636,6 +619,23 @@ object Sketch {
         "n_nonmember_keys", "n_false_pass", "fp_ppm")
   }
 
+  /** Bitmap index over a non-negative integer key, per group, stored
+    * RELATIONALLY: one row per (group, 64-bit word index) holding the
+    * packed word — the roaring-bitmap idea re-expressed as a relation, so
+    * it builds with one hash aggregate and composes with plain joins.
+    *
+    * `bit_or` is idempotent (the HLL-register property), so the input
+    * needs NO pre-distinct: raw fact rows aggregate straight into the
+    * bitmap with map-side partial combine, and per-partition bitmaps merge
+    * by the same `bit_or` — exactly the mergeable-sketch contract. State
+    * is O(groups · keyspace/64) words (absent word ⇔ all-zero), not
+    * O(rows); at 100 TB the fact table collapses to a few KB per group in
+    * one shuffle.
+    *
+    * Unlike the [[hllRegisters]] estimate, the bitmap is EXACT — it IS the
+    * key set — and set algebra (∩, ∪, \) becomes a word-index equi-join
+    * plus `bit_count`, all codegen built-ins.
+    */
   def bitmapIndex(df: DataFrame, groupCol: String, keyCol: String): DataFrame =
     df.select(col(groupCol),
         expr(s"$keyCol div 64").as("w"),
@@ -719,6 +719,20 @@ object Sketch {
 
   // ------------------------------------------- log-linear quantile sketch
 
+  /** The (bucket_id, rep) SQL expressions over a non-negative BIGINT
+    * column named `xCol` — shared by the batch histogram and the
+    * streaming twin ([[graft.streaming.Streams.logHistHourly]]) so the
+    * two sketches are positionally identical and merge by adding counts.
+    *
+    * Emits the native [[graft.functions.LogBucketId]]/[[graft.functions.LogBucketRep]]
+    * codegen expressions (one LZCNT + two shifts per row); the DuckDB
+    * oracle keeps the portable `length(bin(x))` spelling, so every green
+    * oracle row doubles as an equivalence proof for the native kernel.
+    */
+  def logBucketSql(xCol: String, subBits: Int): (String, String) =
+    (s"${graft.functions.LogBucketFunctions.IdName}($xCol, $subBits)",
+     s"${graft.functions.LogBucketFunctions.RepName}($xCol, $subBits)")
+
   /** Log-linear histogram sketch over a non-negative integer measure —
     * the rank/quantile member of the sketch family (HLL = cardinality,
     * CM = frequency, Bloom = membership, KMV = similarity). The exact
@@ -742,20 +756,6 @@ object Sketch {
     * passes both the exact-hash oracle gate and the layout-invariance
     * gate: counts are commutative, and no float fold exists anywhere.
     */
-  /** The (bucket_id, rep) SQL expressions over a non-negative BIGINT
-    * column named `xCol` — shared by the batch histogram and the
-    * streaming twin ([[graft.streaming.Streams.logHistHourly]]) so the
-    * two sketches are positionally identical and merge by adding counts.
-    *
-    * Emits the native [[graft.functions.LogBucketId]]/[[graft.functions.LogBucketRep]]
-    * codegen expressions (one LZCNT + two shifts per row); the DuckDB
-    * oracle keeps the portable `length(bin(x))` spelling, so every green
-    * oracle row doubles as an equivalence proof for the native kernel.
-    */
-  def logBucketSql(xCol: String, subBits: Int): (String, String) =
-    (s"${graft.functions.LogBucketFunctions.IdName}($xCol, $subBits)",
-     s"${graft.functions.LogBucketFunctions.RepName}($xCol, $subBits)")
-
   def logHistogram(df: DataFrame, value: Column, groupCols: Seq[String],
                    subBits: Int = 4): DataFrame = {
     val (id, rep) = logBucketSql("__x", subBits)

@@ -116,8 +116,8 @@ object SuffixDedup {
     * stays constant-width — doubling wins again, so the seam stays at 4.
     *
     * `toks` is (d, __ws); output (d, p, rd, rp), positions 1-based.
-    */
-  /** Callers pin `toks` (see [[windowClasses]] / the climb entry points),
+    *
+    * Callers pin `toks` (see [[windowClasses]] / the climb entry points),
     * so both gram evaluations below are cheap cached scans — the window
     * STRINGS are never pinned, only streamed. Below the limit the
     * (already dup-pruned) rep table broadcasts, so the position stream

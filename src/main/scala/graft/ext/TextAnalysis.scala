@@ -324,23 +324,6 @@ object TextAnalysis {
       .agg(min(col("v")).as("threshold"), min(col("cum")).as("n_le"))
   }
 
-  /** Top-k collocations (adjacent-token bigrams) ranked by association
-    * lift — the PMI-style "these words travel together" signal a corpus
-    * curator uses to spot boilerplate templates and multiword terms.
-    * Lift is computed in integer parts-per-million, no logarithm:
-    * lift = p(xy)/(p(x)·p(y)) = c_xy·N_uni² / (N_bi·c_x·c_y), evaluated
-    * as one DECIMAL(38,0) integral division — libm's `log` is NOT
-    * bit-reproducible across engines, integer ratios are. Ties at the
-    * cut break on (w1, w2), so the top-k set is a deterministic total
-    * order, not a float coin flip.
-    *
-    * Scale shape: bigrams come straight off each document's token array
-    * (`transform` over indices — no position self-join, no second
-    * explode-shuffle); unigram and bigram counts are partial-agg'd
-    * hash aggregates on vocabulary-sized keyspaces; the totals are a
-    * 1-row broadcast; the final top-k is a TakeOrdered over the
-    * (already count-pruned) bigram relation — k rows to the driver.
-    */
   /** Dataset card — the datasheet a corpus release ships (Gebru et al.
     * 2018, arXiv:1803.09010 "Datasheets for Datasets" flavor, reduced to
     * the machine-checkable rows): corpus size (docs/chars/tokens), exact
@@ -476,6 +459,23 @@ object TextAnalysis {
           " ELSE (ppm_a - ppm_b) * (ppm_a - ppm_b) * 1000000" +
           " div (ppm_a + ppm_b) END").as("chi2_ppm"))
 
+  /** Top-k collocations (adjacent-token bigrams) ranked by association
+    * lift — the PMI-style "these words travel together" signal a corpus
+    * curator uses to spot boilerplate templates and multiword terms.
+    * Lift is computed in integer parts-per-million, no logarithm:
+    * lift = p(xy)/(p(x)·p(y)) = c_xy·N_uni² / (N_bi·c_x·c_y), evaluated
+    * as one DECIMAL(38,0) integral division — libm's `log` is NOT
+    * bit-reproducible across engines, integer ratios are. Ties at the
+    * cut break on (w1, w2), so the top-k set is a deterministic total
+    * order, not a float coin flip.
+    *
+    * Scale shape: bigrams come straight off each document's token array
+    * (`transform` over indices — no position self-join, no second
+    * explode-shuffle); unigram and bigram counts are partial-agg'd
+    * hash aggregates on vocabulary-sized keyspaces; the totals are a
+    * 1-row broadcast; the final top-k is a TakeOrdered over the
+    * (already count-pruned) bigram relation — k rows to the driver.
+    */
   def collocations(docs: DataFrame, minCount: Long = 5, k: Int = 50,
                    textCol: String = "text"): DataFrame = {
     val toksAll = docs.select(tokens(lower(col(textCol))).as("w"))

@@ -1,6 +1,7 @@
 package graft.ext
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 
 /** Time-series shaping over event streams — the resample/regularize step a
@@ -19,6 +20,11 @@ import org.apache.spark.sql.functions._
   * produced).
   */
 object TimeSeries {
+
+  /** Epoch hour (BIGINT) of the timestamp column or SQL expression `ts`:
+    * the one hour bucketing of every h-keyed grid and count in this file.
+    */
+  private def hourOf(ts: String): Column = expr(s"unix_micros($ts) div 3600000000")
 
   /** Per-group exact OLS trend (slope + intercept of y over x) from the
     * closed-form normal equations, computed ENTIRELY in integer sums:
@@ -86,20 +92,6 @@ object TimeSeries {
       .select(groupCols.map(col) :+ col("n") :+ col("slope") :+ col("intercept"): _*)
   }
 
-  /** Per-group Pearson correlation of one x column against several y
-    * columns, from the same one-pass integer second-moment family as
-    * [[groupTrend]]: every Σ (x, y, x², y², xy) is an exact DECIMAL(38,0)
-    * aggregate with map-side partial combine — ONE shuffle on the group
-    * key, O(1) state per group, all y-correlations from the same pass.
-    * Inputs must be integral (units/cents/basis points — the money rule);
-    * the float boundary is the final r = num/(√denx·√deny), where both
-    * engines divide/sqrt the IDENTICAL exact integers (the √ makes the
-    * quotient irrational, so the 6-decimal round has no half-way boundary
-    * the way a pure integer ratio does — the [[groupTrend]] hazard).
-    *
-    * Degenerate groups (either variance zero) emit NULL r rather than a
-    * division error.
-    */
   /** Exact per-group POPULATION variance of an integral column, in ppm of
     * the unit²: `(n·Σx² − (Σx)²) · 10⁶ div n²` — the [[groupTrend]]
     * moment family with one variable. All sums are exact DECIMAL(38,0)
@@ -120,6 +112,20 @@ object TimeSeries {
       .select(groupCols.map(col) :+ col("n") :+ col("var_ppm"): _*)
   }
 
+  /** Per-group Pearson correlation of one x column against several y
+    * columns, from the same one-pass integer second-moment family as
+    * [[groupTrend]]: every Σ (x, y, x², y², xy) is an exact DECIMAL(38,0)
+    * aggregate with map-side partial combine — ONE shuffle on the group
+    * key, O(1) state per group, all y-correlations from the same pass.
+    * Inputs must be integral (units/cents/basis points — the money rule);
+    * the float boundary is the final r = num/(√denx·√deny), where both
+    * engines divide/sqrt the IDENTICAL exact integers (the √ makes the
+    * quotient irrational, so the 6-decimal round has no half-way boundary
+    * the way a pure integer ratio does — the [[groupTrend]] hazard).
+    *
+    * Degenerate groups (either variance zero) emit NULL r rather than a
+    * division error.
+    */
   def groupCorr(df: DataFrame, groupCols: Seq[String], xCol: String,
                 yCols: Seq[String]): DataFrame = {
     require(yCols.nonEmpty, "groupCorr needs at least one y column")
@@ -205,22 +211,6 @@ object TimeSeries {
     events.select(col(keyCol)).distinct().crossJoin(hours)
   }
 
-  /** Trailing-window rate anomalies on the dense hourly grid: an hour is
-    * flagged when its count deviates from the preceding `lookback` hours'
-    * mean by more than `z` sample standard deviations — evaluated
-    * INTEGER-EXACTLY by cross-multiplying the z-test:
-    * (x − S/m)² > z²·(mQ − S²)/(m(m−1))  ⟺  (m−1)·(mx − S)² > z²·m·(mQ − S²),
-    * with m = window rows, S = Σx, Q = Σx². No float, no sqrt, no
-    * rounding boundary — the flag is bit-identical in any engine. Running
-    * over the GAP-FILLED grid means silent hours count as 0 (a dead
-    * stream is a dip anomaly, which is exactly the alert a rate monitor
-    * exists for). Warm-up hours with fewer than `minPrior` prior rows are
-    * not judged.
-    *
-    * Scale shape: the window runs over the AGGREGATED grid (keys × hours
-    * rows, partitioned by key) — never over fact rows; the fact table is
-    * touched only by [[gapFillHourly]]'s two scan-aggregates.
-    */
   /** The [[rateAnomalies]] z-test as plain Scala, shared with the
     * streaming twin ([[graft.streaming.Streams.rateAnomalyState]]) so the
     * two cannot drift: same cross-multiplied integers, same flag.
@@ -246,6 +236,22 @@ object TimeSeries {
     }
   }
 
+  /** Trailing-window rate anomalies on the dense hourly grid: an hour is
+    * flagged when its count deviates from the preceding `lookback` hours'
+    * mean by more than `z` sample standard deviations — evaluated
+    * INTEGER-EXACTLY by cross-multiplying the z-test:
+    * (x − S/m)² > z²·(mQ − S²)/(m(m−1))  ⟺  (m−1)·(mx − S)² > z²·m·(mQ − S²),
+    * with m = window rows, S = Σx, Q = Σx². No float, no sqrt, no
+    * rounding boundary — the flag is bit-identical in any engine. Running
+    * over the GAP-FILLED grid means silent hours count as 0 (a dead
+    * stream is a dip anomaly, which is exactly the alert a rate monitor
+    * exists for). Warm-up hours with fewer than `minPrior` prior rows are
+    * not judged.
+    *
+    * Scale shape: the window runs over the AGGREGATED grid (keys × hours
+    * rows, partitioned by key) — never over fact rows; the fact table is
+    * touched only by [[gapFillHourly]]'s two scan-aggregates.
+    */
   def rateAnomalies(events: DataFrame, tsCol: String = "ts",
                     keyCol: String = "event_type", lookback: Int = 24,
                     minPrior: Int = 12, z: Int = 3): DataFrame =
@@ -267,9 +273,22 @@ object TimeSeries {
 
   private def rateAnomaliesFromGrid(grid: DataFrame, keyCol: String,
                                     lookback: Int, minPrior: Int,
-                                    z: Int): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(keyCol).orderBy("hour").rowsBetween(-lookback, -1)
+                                    z: Int): DataFrame =
+    zTestOnGrid(grid, keyCol,
+      Window.partitionBy(keyCol).orderBy("hour").rowsBetween(-lookback, -1),
+      Nil, "window_n", minPrior, z)
+
+  /** The one body of [[rateAnomalies]] and [[seasonalAnomalies]], which
+    * differ only in the baseline window `w` (the trailing `lookback` rows
+    * of a key, or every earlier row of the same key and hour-of-week slot)
+    * and in the names of their output columns: the running (m, s, q)
+    * moments of `n_events` over `w`, then the [[zFlagMoments]] test in
+    * Column form. `carry` names grid columns emitted after the count (the
+    * seasonal slot); `nName` names the emitted m.
+    */
+  private def zTestOnGrid(grid: DataFrame, keyCol: String, w: WindowSpec,
+                          carry: Seq[String], nName: String, minPrior: Int,
+                          z: Int): DataFrame = {
     val x = col("n_events")
     val dev = col("m") * x - col("s")
     grid
@@ -279,22 +298,11 @@ object TimeSeries {
       .filter(col("m") >= minPrior)
       .filter((col("m") - 1) * dev * dev >
         lit(z.toLong * z) * col("m") * (col("m") * col("q") - col("s") * col("s")))
-      .select(col(keyCol), col("hour"), x,
-        col("m").as("window_n"),
-        when(dev < 0, lit("dip")).otherwise(lit("spike")).as("direction"))
+      .select(Seq(col(keyCol), col("hour"), x) ++ carry.map(col) ++ Seq(
+        col("m").as(nName),
+        when(dev < 0, lit("dip")).otherwise(lit("spike")).as("direction")): _*)
   }
 
-  /** Forward fill (last observation carried forward) on the dense hourly
-    * grid: per key and hour, the max of `valueCol` observed that hour
-    * (`v`, NULL on gap hours) and the last non-null observation at or
-    * before it (`v_ff`, NULL only before a key's first observation) — the
-    * resample→ffill step that turns sparse sensor/price events into a
-    * regular series. `max` per hour keeps the pre-fill aggregate
-    * order-independent (bit-exact in any engine, unlike a float sum); the
-    * fill itself is one `last(ignoreNulls)` running window per key over
-    * the ALREADY-AGGREGATED grid — O(keys × hours) rows, partitioned by
-    * key, so the window never sees fact rows and never single-threads.
-    */
   /** Seasonal-profile rate anomalies: each hour is judged against the
     * SAME hour-of-week slot in prior weeks — the weekly-rhythm complement
     * to [[rateAnomalies]]' trailing window, which flags every Monday
@@ -330,36 +338,32 @@ object TimeSeries {
       keyCol, minPrior, z)
 
   private def seasonalAnomaliesFromGrid(grid: DataFrame, keyCol: String,
-                                        minPrior: Int, z: Int): DataFrame = {
-    val how = pmod(expr("unix_micros(hour) div 3600000000"), lit(168L))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(keyCol), col("how")).orderBy("hour")
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-    val x = col("n_events")
-    val dev = col("m") * x - col("s")
-    grid
-      .withColumn("how", how)
-      .withColumn("m", count(x).over(w))
-      .withColumn("s", sum(x).over(w))
-      .withColumn("q", sum(x * x).over(w))
-      .filter(col("m") >= minPrior)
-      .filter((col("m") - 1) * dev * dev >
-        lit(z.toLong * z) * col("m") * (col("m") * col("q") - col("s") * col("s")))
-      .select(col(keyCol), col("hour"), x, col("how"),
-        col("m").as("slot_n"),
-        when(dev < 0, lit("dip")).otherwise(lit("spike")).as("direction"))
-  }
+                                        minPrior: Int, z: Int): DataFrame =
+    zTestOnGrid(grid.withColumn("how", pmod(hourOf("hour"), lit(168L))), keyCol,
+      Window.partitionBy(col(keyCol), col("how")).orderBy("hour")
+        .rowsBetween(Window.unboundedPreceding, -1),
+      Seq("how"), "slot_n", minPrior, z)
 
+  /** Forward fill (last observation carried forward) on the dense hourly
+    * grid: per key and hour, the max of `valueCol` observed that hour
+    * (`v`, NULL on gap hours) and the last non-null observation at or
+    * before it (`v_ff`, NULL only before a key's first observation) — the
+    * resample→ffill step that turns sparse sensor/price events into a
+    * regular series. `max` per hour keeps the pre-fill aggregate
+    * order-independent (bit-exact in any engine, unlike a float sum); the
+    * fill itself is one `last(ignoreNulls)` running window per key over
+    * the ALREADY-AGGREGATED grid — O(keys × hours) rows, partitioned by
+    * key, so the window never sees fact rows and never single-threads.
+    */
   def forwardFillHourly(events: DataFrame, tsCol: String = "ts",
                         keyCol: String = "event_type",
                         valueCol: String = "value"): DataFrame = {
     val hourly = events
       .groupBy(col(keyCol), date_trunc("hour", col(tsCol)).as("hour"))
       .agg(max(col(valueCol)).as("v"))
-    val w = org.apache.spark.sql.expressions.Window
+    val w = Window
       .partitionBy(keyCol).orderBy(col("hour"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-        org.apache.spark.sql.expressions.Window.currentRow)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     grid(events, tsCol, keyCol)
       .join(hourly, Seq(keyCol, "hour"), "left")
       .withColumn("v_ff", last(col("v"), ignoreNulls = true).over(w))
@@ -412,7 +416,7 @@ object TimeSeries {
     require(alphaNum > 0 && alphaDen > alphaNum, "need 0 < alpha < 1")
     require(depth >= 1 && math.pow(alphaDen.toDouble, depth) < 1e17,
       "b^depth must stay far below 2^63")
-    val w = org.apache.spark.sql.expressions.Window
+    val w = Window
       .partitionBy(keyCol).orderBy(col("hour"))
     val weights = (0 until depth).map { i =>
       alphaNum.toLong * math.pow(alphaDen - alphaNum, i).toLong *
@@ -460,7 +464,6 @@ object TimeSeries {
                   hourCol: String = "hour", xCol: String = "n_events",
                   trainN: Int = 96, slackDiv: Int = 20,
                   hMult: Int = 8): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(trainN >= 1 && slackDiv >= 1 && hMult >= 1, "bad cusum params")
     val byKey = Window.partitionBy(col(keyCol)).orderBy(col(hourCol))
     val rn = series.select(col(keyCol), col(hourCol), col(xCol).cast("long").as("x"))
@@ -486,7 +489,7 @@ object TimeSeries {
         count(lit(1)).as("n_monitored"),
         sum(when(col("alarm"), 1L).otherwise(0L)).as("n_alarms"),
         coalesce(min(when(col("alarm"),
-          expr(s"unix_micros($hourCol) div 3600000000"))), lit(-1L))
+          hourOf(hourCol))), lit(-1L))
           .as("first_alarm_hour"),
         max(col("s")).as("max_stat"))
   }
@@ -499,7 +502,8 @@ object TimeSeries {
     * (the t=0 level, ×10⁶) and the fit's R² (×10⁶, from
     * `num² / (den·Syy)`) ride the same device. One fact aggregate, one
     * grid, one 6-sum moment aggregate ([[olsTrend]]) — nothing else. A
-    * constant series (Syy = 0) scores slope 0 and R² 0.
+    * constant series (Syy = 0) scores slope 0 and R² 0; a one-hour series
+    * (den = 0) has no line and scores NULL slope and intercept.
     *
     * Exactness envelope: every moment and moment DIFFERENCE is
     * DECIMAL(38,0) (Σc² alone passes 2⁶³ at ~1e9 events/hour on a
@@ -508,54 +512,39 @@ object TimeSeries {
     * to stay within 38 digits; past it ANSI mode raises rather than
     * wrapping. slope/intercept have no such bound.
     */
-  def trendFit(events: DataFrame, tsCol: String): DataFrame = {
-    val counts = events
-      .select(expr(s"unix_micros($tsCol) div 3600000000").as("h"))
-      .groupBy("h").agg(count(lit(1)).as("c"))
-    val bounds = counts.agg(min("h").as("h0"), max("h").as("h1"))
-    val series = bounds
-      .select(explode(sequence(col("h0"), col("h1"))).as("h"), col("h0"))
-      .join(counts, Seq("h"), "left")
-      .select((col("h") - col("h0")).as("t"),
-        coalesce(col("c"), lit(0L)).as("c"))
-    olsTrend(series, key = None)
-  }
+  def trendFit(events: DataFrame, tsCol: String): DataFrame =
+    olsTrend(hourlyGrid(events, tsCol), key = None)
 
   /** Per-key OLS hourly trend — [[trendFit]] fitted independently for
     * every `keyCol` value on the COMMON hourly grid (global [h0, h1], so
     * slopes are comparable across keys and a key absent for an hour
     * counts 0 there): the "which segments are trending, how fast, how
     * well does a line explain it" table. Same closed-form integer
-    * moments, DECIMAL(38,0) products, ppm boundaries ([[olsTrend]]).
+    * moments, DECIMAL(38,0) products, ppm boundaries ([[olsTrend]]); a
+    * one-hour grid scores every key NULL slope and intercept.
     *
     * Scale shape: one (key, hour) map-combined aggregate over facts;
     * the gapfilled grid is keys × hours rows (keyspace-sized), and the
     * moment pass is one hash aggregate over it. Nothing iterates.
     */
-  def trendFitByKey(events: DataFrame, tsCol: String, keyCol: String): DataFrame = {
-    val counts = events
-      .select(col(keyCol).as("k"),
-        expr(s"unix_micros($tsCol) div 3600000000").as("h"))
-      .groupBy("k", "h").agg(count(lit(1)).as("c"))
-      .localCheckpoint(true) // one-shot: feeds bounds, the key set, and the grid join
-    val bounds = counts.agg(min("h").as("h0"), max("h").as("h1"))
-    val series = counts.select("k").distinct()
-      .crossJoin(broadcast(bounds))
-      .select(col("k"), explode(sequence(col("h0"), col("h1"))).as("h"), col("h0"))
-      .join(counts, Seq("k", "h"), "left")
-      .select(col("k"), (col("h") - col("h0")).as("t"),
-        coalesce(col("c"), lit(0L)).as("c"))
-    olsTrend(series, key = Some("k"))
-  }
+  def trendFitByKey(events: DataFrame, tsCol: String, keyCol: String): DataFrame =
+    olsTrend(gridFromHourCounts(events
+      .select(col(keyCol).as("k"), hourOf(tsCol).as("h"))
+      .groupBy("k", "h").agg(count(lit(1)).as("c")), Some("k")), key = Some("k"))
 
-  /** The one body of [[trendFit]] and [[trendFitByKey]], which differ only
-    * in the grid they fit: the 6-moment aggregate over a (t, c) series,
-    * grouped by the `key` column when there is one (emitted as `key`),
-    * then slope, intercept and R² in ppm. The moments are DECIMAL(38,0):
-    * at the envelope (multi-year grid, ~1e9 events/hour) Σc² alone passes
-    * 2^63 — BIGINT would wrap. `r2_ppm` divides by `greatest(den·Syy, 1)`
-    * because a series CAN be constant (Syy = 0); the numerator is then
-    * provably 0 too, so the guarded division emits the exact 0.
+  /** The one OLS fit of the file — [[trendFit]], [[trendFitByKey]] and
+    * both conformal bands ([[conformalBand]]) differ only in the grid they
+    * fit: the 6-moment aggregate over a (t, c) series, grouped by the
+    * `key` column when there is one (emitted as `key`), then slope,
+    * intercept and R² in ppm (a caller that reads only the line leaves Σc²
+    * and R² to column pruning). The moments are DECIMAL(38,0): at the
+    * envelope (multi-year grid, ~1e9 events/hour) Σc² alone passes 2^63 —
+    * BIGINT would wrap. A one-hour series has den = 0 and no line, so
+    * slope and intercept are NULL there (the [[groupTrend]] and
+    * [[trendFitSeasonal]] policy) rather than a division error. `r2_ppm`
+    * divides by `greatest(den·Syy, 1)` because a series CAN be constant
+    * (Syy = 0); the numerator is then provably 0 too, so the guarded
+    * division emits the exact 0.
     */
   private def olsTrend(series: DataFrame, key: Option[String]): DataFrame = {
     val keyOut = key.map(k => col(k).as("key")).toSeq
@@ -570,9 +559,10 @@ object TimeSeries {
         expr("n * scc - CAST(sc AS DECIMAL(38,0)) * sc").as("syy"),
         col("st"), col("sc"), col("stt"), col("stc")): _*)
       .select(keyOut.map(_ => col("key")) ++ Seq(col("n_hours"),
-        expr("CAST(num AS DECIMAL(38,0)) * 1000000 div den").as("slope_ppm"),
-        expr("(CAST(sc AS DECIMAL(38,0)) * stt - CAST(st AS DECIMAL(38,0)) * stc) * 1000000 div den")
-          .as("intercept_ppm"),
+        expr("CASE WHEN den = 0 THEN NULL" +
+          " ELSE CAST(num AS DECIMAL(38,0)) * 1000000 div den END").as("slope_ppm"),
+        expr("CASE WHEN den = 0 THEN NULL ELSE (CAST(sc AS DECIMAL(38,0)) * stt" +
+          " - CAST(st AS DECIMAL(38,0)) * stc) * 1000000 div den END").as("intercept_ppm"),
         expr("CAST(num AS DECIMAL(38,0)) * num * 1000000" +
           " div greatest(CAST(den AS DECIMAL(38,0)) * syy, CAST(1 AS DECIMAL(38,0)))")
           .as("r2_ppm")): _*)
@@ -597,7 +587,7 @@ object TimeSeries {
   def acf(events: DataFrame, tsCol: String, maxLag: Int): DataFrame = {
     require(maxLag >= 1, "maxLag must be >= 1")
     val counts = events
-      .select(expr(s"unix_micros($tsCol) div 3600000000").as("h"))
+      .select(hourOf(tsCol).as("h"))
       .groupBy("h").agg(count(lit(1)).as("c"))
     val bounds = counts.agg(min("h").as("h0"), max("h").as("h1"),
       sum("c").as("s"))
@@ -627,12 +617,9 @@ object TimeSeries {
   /** The [[trendFit]] grid: zero-gapfilled hourly counts as
     * (h absolute hour, t = h − h0, c), keyspace-sized.
     */
-  private def hourlyGrid(events: DataFrame, tsCol: String): DataFrame = {
-    val counts = events
-      .select(expr(s"unix_micros($tsCol) div 3600000000").as("h"))
-      .groupBy("h").agg(count(lit(1)).as("c"))
-    gridFromHourCounts(counts)
-  }
+  private def hourlyGrid(events: DataFrame, tsCol: String): DataFrame =
+    gridFromHourCounts(events.select(hourOf(tsCol).as("h"))
+      .groupBy("h").agg(count(lit(1)).as("c")))
 
   /** [[hourlyGrid]] from PRE-AGGREGATED (hour timestamp, c) counts — the
     * stream emitters' closed-window rows — summing duplicate hours (e.g.
@@ -641,16 +628,31 @@ object TimeSeries {
   private def hourlyGridFromCounts(counts: DataFrame, hourCol: String,
                                    cCol: String): DataFrame =
     gridFromHourCounts(counts
-      .select(expr(s"unix_micros($hourCol) div 3600000000").as("h"),
+      .select(hourOf(hourCol).as("h"),
         col(cCol).cast("long").as("c0"))
       .groupBy("h").agg(sum("c0").as("c")))
 
-  private def gridFromHourCounts(counts: DataFrame): DataFrame =
-    counts.agg(min("h").as("h0"), max("h").as("h1"))
-      .select(explode(sequence(col("h0"), col("h1"))).as("h"), col("h0"))
-      .join(counts, Seq("h"), "left")
-      .select(col("h"), (col("h") - col("h0")).as("t"),
-        coalesce(col("c"), lit(0L)).as("c"))
+  /** The one zero-filled hour grid of the file: sparse (h, c) counts, or
+    * (key, h, c) ones when `key` names a key column, become the dense
+    * (key?, h, t = h − h0, c) grid over the global [h0, h1] span, so every
+    * key is fitted on the common grid and an absent hour counts 0. Keyed
+    * counts are read three times (bounds, key set, grid join), so they
+    * are materialized once and the 1-row bounds are broadcast to the key
+    * set; the global spine is the bounds row itself.
+    */
+  private def gridFromHourCounts(hourCounts: DataFrame,
+                                 key: Option[String] = None): DataFrame = {
+    val counts =
+      if (key.isEmpty) hourCounts
+      else hourCounts.localCheckpoint(true) // one-shot: feeds bounds, the key set, and the grid join
+    val bounds = counts.agg(min("h").as("h0"), max("h").as("h1"))
+    val keys = key.map(col).toSeq
+    key.fold(bounds)(k => counts.select(k).distinct().crossJoin(broadcast(bounds)))
+      .select(keys ++ Seq(explode(sequence(col("h0"), col("h1"))).as("h"), col("h0")): _*)
+      .join(counts, key.toSeq :+ "h", "left")
+      .select(keys ++ Seq(col("h"), (col("h") - col("h0")).as("t"),
+        coalesce(col("c"), lit(0L)).as("c")): _*)
+  }
 
   /** Split-conformal prediction band around the [[trendFit]] line — the
     * finite-sample-valid "how far can an hour stray before it's an
@@ -660,7 +662,8 @@ object TimeSeries {
     * (ppm-floored) line; q̂ is the score at rank
     * ⌈(1−α)(n+1)⌉ (clamped to n), giving P(|resid| ≤ q̂) ≥ 1−α on
     * exchangeable hours. `cover_ppm` reads the empirical coverage back —
-    * ≥ (1−α) by construction, a self-check the gate hashes.
+    * ≥ (1−α) by construction, a self-check the gate hashes. A one-hour
+    * grid has no line: slope, intercept and q̂ read NULL, coverage 0.
     *
     * Scale shape: one fact aggregate → keyspace-sized grid; the rank
     * window sorts only grid hours (never facts). Residual arithmetic in
@@ -669,7 +672,7 @@ object TimeSeries {
     */
   def conformalTrendInterval(events: DataFrame, tsCol: String,
                              alphaPpm: Long = 100000L): DataFrame =
-    conformalFromSeries(hourlyGrid(events, tsCol), alphaPpm)
+    conformalBand(hourlyGrid(events, tsCol), keyed = false, alphaPpm)
 
   /** [[conformalTrendInterval]] fed by PRE-AGGREGATED hourly counts —
     * the streaming emitters' sufficient statistic
@@ -677,139 +680,88 @@ object TimeSeries {
     * (hour, key, c) shape per closed window) — instead of raw facts:
     * counts collapse per hour, gap-fill to the observed [min, max] hour
     * span, and run the IDENTICAL fit + calibration code path
-    * ([[conformalFromSeries]] is shared, not duplicated), so a stream-fed
+    * ([[conformalBand]] is shared, not duplicated), so a stream-fed
     * band equals the batch band over the same events bit-for-bit.
     * Batch twin (oracle-verified): q302_conformal_band / q328.
     */
   def conformalBandFromCounts(counts: DataFrame, hourCol: String = "hour",
                               cCol: String = "c",
                               alphaPpm: Long = 100000L): DataFrame =
-    conformalFromSeries(hourlyGridFromCounts(counts, hourCol, cCol), alphaPpm)
-
-  /** Shared core of the global conformal band: `series` is the dense
-    * (t, c) hourly grid, whichever side (facts or emitted counts) built it.
-    */
-  private def conformalFromSeries(grid: DataFrame,
-                                  alphaPpm: Long): DataFrame = {
-    require(alphaPpm >= 1 && alphaPpm <= 999999,
-      s"alphaPpm must be in [1, 999999]: $alphaPpm")
-    val series = grid.localCheckpoint(true) // one-shot: fit AND residual pass share the grid
-    val fit = series
-      .agg(count(lit(1)).as("n"), sum("t").as("st"), sum("c").as("sc"),
-        // DECIMAL(38,0) moments — same overflow envelope note as trendFit
-        sum(expr("CAST(t AS DECIMAL(38,0)) * t")).as("stt"),
-        sum(expr("CAST(t AS DECIMAL(38,0)) * c")).as("stc"))
-      .select(col("n").as("n_hours"),
-        expr("n * stc - CAST(st AS DECIMAL(38,0)) * sc").as("num"),
-        expr("n * stt - CAST(st AS DECIMAL(38,0)) * st").as("den"),
-        col("st"), col("sc"), col("stt"), col("stc"))
-      .select(col("n_hours"),
-        expr("CAST(num AS DECIMAL(38,0)) * 1000000 div den").as("slope_ppm"),
-        expr("(CAST(sc AS DECIMAL(38,0)) * stt - CAST(st AS DECIMAL(38,0)) * stc) * 1000000 div den")
-          .as("intercept_ppm"))
-    val ranked = series.crossJoin(broadcast(fit))
-      .select(col("n_hours"), col("slope_ppm"), col("intercept_ppm"),
-        expr("abs(CAST(c AS DECIMAL(38,0)) * 1000000" +
-          " - CAST(slope_ppm AS DECIMAL(38,0)) * t - intercept_ppm)").as("a"))
-      .withColumn("rn", row_number().over(
-        // keyspace-sized window: input is collapsed/bounded before this sort
-        org.apache.spark.sql.expressions.Window.orderBy(col("a"))))
-    val qhat = ranked
-      .filter(col("rn") === expr(s"least(greatest(CAST(1 AS BIGINT)," +
-        s" ((1000000 - $alphaPpm) * (n_hours + 1) + 999999) div 1000000), n_hours)"))
-      .select(col("a").as("qhat"))
-    ranked.crossJoin(broadcast(qhat))
-      .agg(max("n_hours").as("n_hours"), max("slope_ppm").as("slope_ppm"),
-        max("intercept_ppm").as("intercept_ppm"),
-        expr("CAST(max(qhat) AS BIGINT)").as("qhat_ppm"),
-        sum(when(col("a") <= col("qhat"), 1L).otherwise(0L)).as("n_cover"))
-      .select(col("n_hours"), col("slope_ppm"), col("intercept_ppm"),
-        expr(s"least(greatest(CAST(1 AS BIGINT)," +
-          s" ((1000000 - $alphaPpm) * (n_hours + 1) + 999999) div 1000000), n_hours)")
-          .as("cal_rank"),
-        col("qhat_ppm"),
-        expr("n_cover * 1000000 div n_hours").as("cover_ppm"))
-  }
+    conformalBand(hourlyGridFromCounts(counts, hourCol, cCol), keyed = false,
+      alphaPpm)
 
   /** Per-key [[conformalTrendInterval]] — a SEPARATE split-conformal
     * band around each key's [[trendFitByKey]] line on the common grid:
     * the per-segment "page when this segment's hour strays past q̂"
     * thresholds, each with its own finite-sample guarantee (exchangeable
     * hours within a key). Same exact integer residuals; the rank window
-    * partitions by key, so every sort is keyspace-sized.
+    * partitions by key, so every sort is keyspace-sized. A one-hour grid
+    * reads NULL slope, intercept and q̂ for every key.
     */
   def conformalTrendIntervalByKey(events: DataFrame, tsCol: String,
                                   keyCol: String,
                                   alphaPpm: Long = 100000L): DataFrame =
-    conformalByKeyFromHourCounts(events
-      .select(col(keyCol).as("key"),
-        expr(s"unix_micros($tsCol) div 3600000000").as("h"))
-      .groupBy("key", "h").agg(count(lit(1)).as("c")), alphaPpm)
+    conformalBand(gridFromHourCounts(events
+      .select(col(keyCol).as("key"), hourOf(tsCol).as("h"))
+      .groupBy("key", "h").agg(count(lit(1)).as("c")), Some("key")),
+      keyed = true, alphaPpm)
 
   /** [[conformalTrendIntervalByKey]] fed by PRE-AGGREGATED per-key hourly
     * counts (the [[graft.streaming.Streams.decayedCountsHourly]] emitter's
     * (hour, key, c) closed-window rows) instead of raw facts — the
-    * identical per-key fit + calibration code path
-    * ([[conformalByKeyFromHourCounts]] is shared), so the stream-fed
-    * per-segment bands equal the batch bands bit-for-bit.
-    * Batch twin (oracle-verified): q322_conformal_by_key / q329.
+    * identical per-key fit + calibration code path ([[conformalBand]] is
+    * shared), so the stream-fed per-segment bands equal the batch bands
+    * bit-for-bit. Batch twin (oracle-verified): q322_conformal_by_key / q329.
     */
   def conformalByKeyFromCounts(counts: DataFrame, keyCol: String = "key",
                                hourCol: String = "hour", cCol: String = "c",
                                alphaPpm: Long = 100000L): DataFrame =
-    conformalByKeyFromHourCounts(counts
-      .select(col(keyCol).as("key"),
-        expr(s"unix_micros($hourCol) div 3600000000").as("h"),
+    conformalBand(gridFromHourCounts(counts
+      .select(col(keyCol).as("key"), hourOf(hourCol).as("h"),
         col(cCol).cast("long").as("c0"))
-      .groupBy("key", "h").agg(sum("c0").as("c")), alphaPpm)
+      .groupBy("key", "h").agg(sum("c0").as("c")), Some("key")),
+      keyed = true, alphaPpm)
 
-  /** Shared core of the per-key conformal band: input is the SPARSE
-    * (key, h, c) hourly counts, whichever side built them; gap-fill to
-    * the global hour span and calibrate per key.
+  /** The one body of the four conformal bands, global and per key, over
+    * the dense grid whichever side (facts or emitted counts) built it. The
+    * global and the keyed band differ only in their key: with `keyed` the
+    * fit, q̂ and the coverage are per `key` (equi-joined on it, rank window
+    * partitioned by it); without, the 1-row fit and q̂ are broadcast and
+    * the output also reads back the calibration rank `cal_rank`. The fit
+    * is [[olsTrend]]'s, so a one-hour grid reads NULL slope, intercept and
+    * q̂ (every residual is NULL) and `cover_ppm` 0.
     */
-  private def conformalByKeyFromHourCounts(hourCounts: DataFrame,
-                                           alphaPpm: Long): DataFrame = {
+  private def conformalBand(grid: DataFrame, keyed: Boolean,
+                            alphaPpm: Long): DataFrame = {
     require(alphaPpm >= 1 && alphaPpm <= 999999,
       s"alphaPpm must be in [1, 999999]: $alphaPpm")
-    import org.apache.spark.sql.expressions.Window
-    val counts = hourCounts.localCheckpoint(true) // one-shot: bounds AND the grid join read it
-    val bounds = counts.agg(min("h").as("h0"), max("h").as("h1"))
-    val series = counts.select("key").distinct()
-      .crossJoin(broadcast(bounds))
-      .select(col("key"), explode(sequence(col("h0"), col("h1"))).as("h"), col("h0"))
-      .join(counts, Seq("key", "h"), "left")
-      .select(col("key"), (col("h") - col("h0")).as("t"),
-        coalesce(col("c"), lit(0L)).as("c"))
-      .localCheckpoint(true) // one-shot: fit AND scoring pass share the series
-    val fit = series.groupBy("key")
-      .agg(count(lit(1)).as("n_hours"), sum("t").as("st"), sum("c").as("sc"),
-        // DECIMAL(38,0) moments — same overflow envelope note as trendFit
-        sum(expr("CAST(t AS DECIMAL(38,0)) * t")).as("stt"),
-        sum(expr("CAST(t AS DECIMAL(38,0)) * c")).as("stc"))
-      .select(col("key"), col("n_hours"),
-        expr("(n_hours * stc - CAST(st AS DECIMAL(38,0)) * sc) * 1000000" +
-          " div (n_hours * stt - CAST(st AS DECIMAL(38,0)) * st)").as("slope_ppm"),
-        expr("(CAST(sc AS DECIMAL(38,0)) * stt - CAST(st AS DECIMAL(38,0)) * stc) * 1000000" +
-          " div (n_hours * stt - CAST(st AS DECIMAL(38,0)) * st)").as("intercept_ppm"))
-    val ranked = series.join(fit, Seq("key"))
-      .select(col("key"), col("n_hours"), col("slope_ppm"), col("intercept_ppm"),
+    val keys = if (keyed) Seq(col("key")) else Nil
+    def attach(left: DataFrame, right: DataFrame): DataFrame =
+      if (keyed) left.join(right, Seq("key")) else left.crossJoin(broadcast(right))
+    val series = grid.select(keys ++ Seq(col("t"), col("c")): _*)
+      .localCheckpoint(true) // one-shot: fit AND residual pass share the grid
+    val fit = olsTrend(series, if (keyed) Some("key") else None)
+      .select(keys ++ Seq(col("n_hours"), col("slope_ppm"), col("intercept_ppm")): _*)
+    val calRank = expr(s"least(greatest(CAST(1 AS BIGINT)," +
+      s" ((1000000 - $alphaPpm) * (n_hours + 1) + 999999) div 1000000), n_hours)")
+    val ranked = attach(series, fit)
+      .select(keys ++ Seq(col("n_hours"), col("slope_ppm"), col("intercept_ppm"),
         expr("abs(CAST(c AS DECIMAL(38,0)) * 1000000" +
-          " - CAST(slope_ppm AS DECIMAL(38,0)) * t - intercept_ppm)").as("a"))
+          " - CAST(slope_ppm AS DECIMAL(38,0)) * t - intercept_ppm)").as("a")): _*)
       .withColumn("rn", row_number().over(
-        Window.partitionBy("key").orderBy(col("a"))))
-    val qhat = ranked
-      .filter(col("rn") === expr(s"least(greatest(CAST(1 AS BIGINT)," +
-        s" ((1000000 - $alphaPpm) * (n_hours + 1) + 999999) div 1000000), n_hours)"))
-      .select(col("key"), col("a").as("qhat"))
-    ranked.join(qhat, Seq("key"))
-      .groupBy("key")
+        // keyspace-sized window: input is collapsed/bounded before this sort
+        Window.partitionBy(keys: _*).orderBy(col("a"))))
+    val qhat = ranked.filter(col("rn") === calRank)
+      .select(keys :+ col("a").as("qhat"): _*)
+    attach(ranked, qhat)
+      .groupBy(keys: _*)
       .agg(max("n_hours").as("n_hours"), max("slope_ppm").as("slope_ppm"),
         max("intercept_ppm").as("intercept_ppm"),
         expr("CAST(max(qhat) AS BIGINT)").as("qhat_ppm"),
         sum(when(col("a") <= col("qhat"), 1L).otherwise(0L)).as("n_cover"))
-      .select(col("key"), col("n_hours"), col("slope_ppm"), col("intercept_ppm"),
-        col("qhat_ppm"),
-        expr("n_cover * 1000000 div n_hours").as("cover_ppm"))
+      .select(keys ++ Seq(col("n_hours"), col("slope_ppm"), col("intercept_ppm")) ++
+        (if (keyed) Nil else Seq(calRank.as("cal_rank"))) ++
+        Seq(col("qhat_ppm"), expr("n_cover * 1000000 div n_hours").as("cover_ppm")): _*)
   }
 
   /** Pettitt changepoint test (Pettitt 1979, public literature) on the
@@ -851,7 +803,6 @@ object TimeSeries {
     pettittFromSeries(hourlyGridFromCounts(counts, hourCol, cCol))
 
   private def pettittFromSeries(grid: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val series = grid.localCheckpoint(true) // one-shot: n, ranks, and the U-scan share it
     val n1 = series.agg(count(lit(1)).as("n"))
     val byV = series.groupBy("c").agg(count(lit(1)).as("m"))
@@ -903,7 +854,7 @@ object TimeSeries {
     val med = pairs
       .withColumn("rn", row_number().over(
         // keyspace-sized window: input is collapsed/bounded before this sort
-        org.apache.spark.sql.expressions.Window.orderBy(col("s"))))
+        Window.orderBy(col("s"))))
       .crossJoin(broadcast(np))
       .filter(col("rn") === expr("(n_pairs + 1) div 2"))
       .select(col("n_pairs"), col("s").as("slope_ppm"))
@@ -914,7 +865,7 @@ object TimeSeries {
           " - CAST(slope_ppm AS DECIMAL(38,0)) * t").as("i"))
       .withColumn("rn", row_number().over(
         // keyspace-sized window: input is collapsed/bounded before this sort
-        org.apache.spark.sql.expressions.Window.orderBy(col("i"))))
+        Window.orderBy(col("i"))))
       .crossJoin(broadcast(nh))
       .filter(col("rn") === expr("(n_hours + 1) div 2"))
       .select(col("n_hours"), col("n_pairs"), col("slope_ppm"),
@@ -975,7 +926,7 @@ object TimeSeries {
     crossCorrFromSeries(
       events.filter(col(keyCol).isin(keyA, keyB))
         .select((col(keyCol) === keyA).as("isA"),
-          expr(s"unix_micros($tsCol) div 3600000000").as("h")),
+          hourOf(tsCol).as("h")),
       maxLag)
   }
 
@@ -992,7 +943,7 @@ object TimeSeries {
     crossCorrFromSeries(
       counts.filter(col(keyCol).isin(keyA, keyB))
         .select((col(keyCol) === keyA).as("isA"),
-          expr(s"unix_micros($hourCol) div 3600000000").as("h"),
+          hourOf(hourCol).as("h"),
           col(cCol).cast("long").as("w")),
       maxLag)
   }
@@ -1057,7 +1008,6 @@ object TimeSeries {
     */
   def burstiness(events: DataFrame, tsCol: String = "ts",
                  keyCol: String = "event_type"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     events
       .select(col(keyCol).as("key"),
         expr(s"unix_micros($tsCol) div 1000").as("tms"))
@@ -1127,7 +1077,6 @@ object TimeSeries {
     runsTestFromSeries(hourlyGridFromCounts(counts, hourCol, cCol))
 
   private def runsTestFromSeries(grid: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val series = grid.select(col("t"), col("c")).localCheckpoint(true) // one-shot: median AND run-scan share it
     val n1 = series.agg(count(lit(1)).as("n"))
     val byV = series.groupBy("c").agg(count(lit(1)).as("m"))
@@ -1237,16 +1186,6 @@ object TimeSeries {
           .as("intercept_ppm"))
   }
 
-  /** Recency-weighted engagement per key with EXACT dyadic decay: an
-    * event aged `a` hours (vs the corpus's max hour) weighs
-    * 2^(−⌊a / halfLife⌋), floored at 2^(−maxShift). Weights are exact
-    * powers of two carried as shifted integers (weight·2^maxShift), so
-    * the sum is exact in DECIMAL(38,0) and the readout
-    * `decayed_ppm = score·10⁶ div 2^maxShift` is the decayed-equivalent
-    * event count in ppm — no float decay drift, bit-identical on any
-    * layout. One (key, hour) map-combined aggregate over facts plus a
-    * broadcast 1-row max; nothing iterates.
-    */
   /** The decayed-engagement TIME SERIES from an (key, h, c) hourly-count
     * relation (h in epoch hours — e.g. the emission of
     * [[graft.streaming.Streams.decayedCountsHourly]]): for every
@@ -1262,38 +1201,52 @@ object TimeSeries {
     * join.
     */
   def decayedSnapshotsFromCounts(counts: DataFrame, halfLifeHours: Int = 24,
-                                 maxShift: Int = 40): DataFrame = {
-    require(halfLifeHours >= 1, s"halfLifeHours must be >= 1: $halfLifeHours")
-    require(maxShift >= 1 && maxShift <= 62, s"maxShift in [1, 62]: $maxShift")
-    val snaps = counts.select(col("h").as("snap_h")).distinct()
-    counts.join(broadcast(snaps), col("h") <= col("snap_h"))
-      .select(col("key"), col("snap_h"), col("c"),
-        expr(s"shiftleft(CAST(1 AS BIGINT), CAST($maxShift" +
-          s" - least((snap_h - h) div $halfLifeHours, $maxShift) AS INT))").as("wt"))
-      .groupBy("key", "snap_h")
-      .agg(sum("c").as("n_events"),
-        expr("sum(CAST(wt AS DECIMAL(38,0)) * c)").as("score"))
-      .select(col("key"), col("snap_h"), col("n_events"),
-        expr(s"score * 1000000 div ${1L << maxShift}").as("decayed_ppm"))
-  }
+                                 maxShift: Int = 40): DataFrame =
+    dyadicDecay(counts.join(broadcast(counts.select(col("h").as("snap_h")).distinct()),
+      col("h") <= col("snap_h")), Seq("key", "snap_h"), "snap_h - h",
+      halfLifeHours, maxShift)
 
+  /** Recency-weighted engagement per key with EXACT dyadic decay: an
+    * event aged `a` hours (vs the corpus's max hour) weighs
+    * 2^(−⌊a / halfLife⌋), floored at 2^(−maxShift). Weights are exact
+    * powers of two carried as shifted integers (weight·2^maxShift), so
+    * the sum is exact in DECIMAL(38,0) and the readout
+    * `decayed_ppm = score·10⁶ div 2^maxShift` is the decayed-equivalent
+    * event count in ppm — no float decay drift, bit-identical on any
+    * layout. One (key, hour) map-combined aggregate over facts plus a
+    * broadcast 1-row max; nothing iterates.
+    */
   def decayedCountByKey(events: DataFrame, tsCol: String, keyCol: String,
                         halfLifeHours: Int = 24, maxShift: Int = 40): DataFrame = {
+    val counts = events
+      .select(col(keyCol).as("k"), hourOf(tsCol).as("h"))
+      .groupBy("k", "h").agg(count(lit(1)).as("c"))
+    dyadicDecay(counts.crossJoin(broadcast(counts.agg(max("h").as("now")))),
+      Seq("k"), "now - h", halfLifeHours, maxShift)
+      .withColumnRenamed("k", "key")
+  }
+
+  /** The one body of the dyadic decay, shared by [[decayedCountByKey]]
+    * (age against the corpus's last hour) and [[decayedSnapshotsFromCounts]]
+    * (age against every snapshot hour), which differ only in the (h, c)
+    * rows they pair with an as-of hour and in the columns they group by:
+    * the parameter checks, the shifted-integer weight
+    * `2^(maxShift − min(age div halfLife, maxShift))` of each hour's count
+    * for the SQL `age` expression, the exact DECIMAL(38,0) score per group
+    * and its ppm readout.
+    */
+  private def dyadicDecay(aged: DataFrame, groupCols: Seq[String], age: String,
+                          halfLifeHours: Int, maxShift: Int): DataFrame = {
     require(halfLifeHours >= 1, s"halfLifeHours must be >= 1: $halfLifeHours")
     require(maxShift >= 1 && maxShift <= 62, s"maxShift in [1, 62]: $maxShift")
-    val counts = events
-      .select(col(keyCol).as("k"),
-        expr(s"unix_micros($tsCol) div 3600000000").as("h"))
-      .groupBy("k", "h").agg(count(lit(1)).as("c"))
-    val now = counts.agg(max("h").as("now"))
-    counts.crossJoin(broadcast(now))
-      .select(col("k"), col("c"),
+    val groups = groupCols.map(col)
+    aged.select(groups ++ Seq(col("c"),
         expr(s"shiftleft(CAST(1 AS BIGINT), CAST($maxShift" +
-          s" - least((now - h) div $halfLifeHours, $maxShift) AS INT))").as("wt"))
-      .groupBy("k")
+          s" - least(($age) div $halfLifeHours, $maxShift) AS INT))").as("wt")): _*)
+      .groupBy(groups: _*)
       .agg(sum("c").as("n_events"),
         expr("sum(CAST(wt AS DECIMAL(38,0)) * c)").as("score"))
-      .select(col("k").as("key"), col("n_events"),
-        expr(s"score * 1000000 div ${1L << maxShift}").as("decayed_ppm"))
+      .select(groups ++ Seq(col("n_events"),
+        expr(s"score * 1000000 div ${1L << maxShift}").as("decayed_ppm")): _*)
   }
 }

@@ -301,17 +301,6 @@ object Warehouse {
         col("rev_window"))
   }
 
-  /** Snapshot differencing (CDC): classify every key of two table
-    * snapshots as `insert` (new key), `delete` (gone key), or `update`
-    * (key present in both, any compared column changed). Unchanged keys
-    * are dropped — on a 100 TB snapshot pair the output is proportional to
-    * the CHANGE volume, not the table.
-    *
-    * Scale shape: one full-outer shuffle join on the key columns — the
-    * minimal possible data movement for a diff — followed by a narrow
-    * classify/filter. Null-safe equality (`<=>`) makes a null→value column
-    * transition count as a change instead of vanishing.
-    */
   /** Pareto contribution analysis (80/20 report): per group, its total,
     * exact ppm share of the grand total, cumulative share in descending-
     * contribution order (group-name ties broken ascending), and whether
@@ -343,6 +332,17 @@ object Warehouse {
       .withColumn("pareto_head", col("cum_ppm") <= headPpm)
   }
 
+  /** Snapshot differencing (CDC): classify every key of two table
+    * snapshots as `insert` (new key), `delete` (gone key), or `update`
+    * (key present in both, any compared column changed). Unchanged keys
+    * are dropped — on a 100 TB snapshot pair the output is proportional to
+    * the CHANGE volume, not the table.
+    *
+    * Scale shape: one full-outer shuffle join on the key columns — the
+    * minimal possible data movement for a diff — followed by a narrow
+    * classify/filter. Null-safe equality (`<=>`) makes a null→value column
+    * transition count as a change instead of vanishing.
+    */
   def snapshotDiff(before: DataFrame, after: DataFrame, keys: Seq[String],
                    compare: Seq[String]): DataFrame = {
     val b = before.select((keys ++ compare).map(col): _*).toDF(
@@ -390,17 +390,6 @@ object Warehouse {
       .agg(count(lit(1)).as("n"), sum("l_quantity").as("qty"),
         sum(revenueTerm).as("revenue"))
 
-  /** SCD2 history build from an event stream: per user, collapse
-    * consecutive duplicate `event_type` values and emit validity intervals
-    * [valid_from, valid_to) — valid_to null for the current state. The
-    * slowly-changing-dimension shape every warehouse derives from a
-    * change-event feed.
-    *
-    * Scale shape: one shuffle on the entity key; both windows (lag to
-    * detect change points, lead for interval ends) share the same
-    * (user_id × ts) sort, so Spark plans a single Sort + two Window ops
-    * over it, no second exchange.
-    */
   /** Compaction plan over a file-level profile (the q227 `fileProfile`
     * shape: tbl, file, n_rows): assign consecutive files to merge bins of
     * ~`targetRows` rows and emit one manifest row per bin — the policy
@@ -429,6 +418,17 @@ object Warehouse {
         min("file").as("first_file"), max("file").as("last_file"))
   }
 
+  /** SCD2 history build from an event stream: per user, collapse
+    * consecutive duplicate `event_type` values and emit validity intervals
+    * [valid_from, valid_to) — valid_to null for the current state. The
+    * slowly-changing-dimension shape every warehouse derives from a
+    * change-event feed.
+    *
+    * Scale shape: one shuffle on the entity key; both windows (lag to
+    * detect change points, lead for interval ends) share the same
+    * (user_id × ts) sort, so Spark plans a single Sort + two Window ops
+    * over it, no second exchange.
+    */
   def scd2Intervals(events: DataFrame): DataFrame = {
     val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
     val changes = events

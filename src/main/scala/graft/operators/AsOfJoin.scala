@@ -70,7 +70,7 @@ object AsOfJoin {
     // ONE projection: sequential withColumn calls would null the matched
     // ts first and every later column's staleness test would then read
     // the already-nulled value and pass
-    out.select(out.columns.map { c =>
+    out.select(out.columns.toSeq.map { c =>
       if (c.startsWith(prefix))
         when(stale, lit(null).cast(out.schema(c).dataType)).otherwise(col(c)).as(c)
       else col(c)
@@ -97,7 +97,7 @@ object AsOfJoin {
 
   private def scan(left: DataFrame, right: DataFrame, keys: Seq[String],
                    tsCol: String, prefix: String, mode: Mode): DataFrame = {
-    val payloadCols = right.columns.filterNot(c => keys.contains(c) || c == tsCol)
+    val payloadCols = right.columns.toSeq.filterNot(c => keys.contains(c) || c == tsCol)
     val clash = (left.columns ++ right.columns).filter(reserved)
     require(clash.isEmpty, s"asOf reserved column names present in input: ${clash.mkString(", ")}")
     val outClash = left.columns.toSet
@@ -112,7 +112,7 @@ object AsOfJoin {
     val lt = left.select(
       keys.map(col) ++ Seq(
         col(tsCol).as("__t"),
-        struct(left.columns.map(col): _*).as("__lv"),
+        struct(left.columns.toSeq.map(col): _*).as("__lv"),
         lit(null).cast(rvType).as("__rv"),
         lit(0).as("__side")): _*)
     // a right row with null ts can never be a latest-≤ match, but would
@@ -192,7 +192,7 @@ object AsOfJoin {
   def asOfSliced(left: DataFrame, right: DataFrame, keys: Seq[String], tsCol: String,
                  sliceWidthMs: Long, prefix: String = "asof_"): DataFrame = {
     require(sliceWidthMs > 0, "sliceWidthMs must be positive")
-    val payloadCols = right.columns.filterNot(c => keys.contains(c) || c == tsCol)
+    val payloadCols = right.columns.toSeq.filterNot(c => keys.contains(c) || c == tsCol)
     val reservedSliced = reserved ++ Set("__um", "__slice", "__rn", "__sv", "__prev", "__f")
     val clash = (left.columns ++ right.columns).filter(reservedSliced)
     require(clash.isEmpty, s"asOfSliced reserved column names present in input: ${clash.mkString(", ")}")
@@ -214,7 +214,7 @@ object AsOfJoin {
     val lt = withSlice(left.select(
       keys.map(col) ++ Seq(
         col(tsCol).as("__t"),
-        struct(left.columns.map(col): _*).as("__lv"),
+        struct(left.columns.toSeq.map(col): _*).as("__lv"),
         lit(null).cast(rvType).as("__rv"),
         lit(0).as("__side")): _*))
     val rt = withSlice(right

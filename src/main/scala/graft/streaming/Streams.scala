@@ -695,8 +695,8 @@ object Streams {
   /** Wires a streaming read of the events parquet directory into any of the
     * transforms above (schema must be supplied — streaming reads don't
     * infer).
-    */
-  /** `maxFilesPerTrigger > 0` paces a backfill: each micro-batch ingests
+    *
+    * `maxFilesPerTrigger > 0` paces a backfill: each micro-batch ingests
     * at most that many files, so replaying months of history runs as many
     * small exactly-once batches instead of one giant one — state stores,
     * watermarks and sinks advance incrementally, and a failure loses one
@@ -1047,15 +1047,6 @@ object Streams {
         TimeMode.EventTime(), OutputMode.Append())
   }
 
-  /** Offline audit of a streaming query's STATE via the state-store data
-    * source (`format("statestore")`): reads the keyed state rows straight
-    * out of a checkpoint — no replay, no touching the running query. The
-    * operational missing piece at scale: "which keys hold state, and
-    * what" is otherwise invisible inside a 1000-executor job's RocksDB
-    * files. `stateVarName` selects a named transformWithState slot (e.g.
-    * [[UserActivityProcessor]]'s "activity"); leave empty for classic
-    * stateful operators (aggregations, dedup, stream-stream joins).
-    */
   /** Idempotent version step for [[incrementalAggSink]]: merge `batch`'s
     * delta aggregate into the newest stored version PRECEDING `batchId`
     * and write the result as version `batchId`. Re-running a batch id
@@ -1101,6 +1092,15 @@ object Streams {
       .option("checkpointLocation", checkpointDir)
       .start()
 
+  /** Offline audit of a streaming query's STATE via the state-store data
+    * source (`format("statestore")`): reads the keyed state rows straight
+    * out of a checkpoint — no replay, no touching the running query. The
+    * operational missing piece at scale: "which keys hold state, and
+    * what" is otherwise invisible inside a 1000-executor job's RocksDB
+    * files. `stateVarName` selects a named transformWithState slot (e.g.
+    * [[UserActivityProcessor]]'s "activity"); leave empty for classic
+    * stateful operators (aggregations, dedup, stream-stream joins).
+    */
   def readStateStore(spark: SparkSession, checkpointDir: String,
                      stateVarName: String = ""): DataFrame = {
     // path = the checkpoint ROOT (the source resolves state/ and the

@@ -36,7 +36,7 @@ object Clean {
     * [[coerceDouble]].
     */
   def normalize(df: DataFrame, skuCol: String = "sku"): DataFrame = {
-    val lowered = df.select(df.columns.map(c => lower(col(c).cast("string")).as(c)): _*)
+    val lowered = df.select(df.columns.toSeq.map(c => lower(col(c).cast("string")).as(c)): _*)
     lowered.withColumn(skuCol, trim(col(skuCol)))
   }
 

@@ -524,4 +524,31 @@ class TimeSeriesSpec extends SparkSpec {
     // r2 = 900·1e6/1500 = 600000
     assert(out("late") == ((4L, 1500000L, -1000000L, 600000L)))
   }
+
+  test("one-hour corpus: the trend fits and conformal bands read NULL slope, intercept and qhat instead of DIVIDE_BY_ZERO") {
+    // 3 events inside 10:00-10:59: every grid is one hour long, so the OLS
+    // denominator n·Σt² − (Σt)² is 0 and there is no line to fit
+    assert(spark.conf.get("spark.sql.ansi.enabled") == "true")
+    val oneHour = df("event_type STRING, ts TIMESTAMP", Seq(
+      Row("a", ts("2024-01-01 10:05:00")),
+      Row("a", ts("2024-01-01 10:30:00")),
+      Row("b", ts("2024-01-01 10:59:00"))))
+    def unfitted(r: Row, nullCols: String*): Unit = {
+      assert(r.getAs[Long]("n_hours") == 1L, r)
+      nullCols.foreach(c => assert(r.isNullAt(r.fieldIndex(c)), s"$c in $r"))
+    }
+    val line = Seq("slope_ppm", "intercept_ppm")
+    val fit = TimeSeries.trendFit(oneHour, "ts").collect()
+    assert(fit.length == 1)
+    unfitted(fit.head, line: _*)
+    val byKey = TimeSeries.trendFitByKey(oneHour, "ts", "event_type").collect()
+    assert(byKey.map(_.getAs[String]("key")).sorted.toSeq == Seq("a", "b"))
+    byKey.foreach(unfitted(_, line: _*))
+    val band = TimeSeries.conformalTrendInterval(oneHour, "ts").collect()
+    assert(band.length == 1)
+    unfitted(band.head, line :+ "qhat_ppm": _*)
+    val bands = TimeSeries.conformalTrendIntervalByKey(oneHour, "ts", "event_type").collect()
+    assert(bands.map(_.getAs[String]("key")).sorted.toSeq == Seq("a", "b"))
+    bands.foreach(unfitted(_, line :+ "qhat_ppm": _*))
+  }
 }
