@@ -2087,10 +2087,9 @@ object SparkEntry {
     },
 
     // PNG face of the codec seam (q30/q226 are the BMP/WAV faces): real
-    // CRC32-correct PNG containers round-trip through the SAME unchanged
-    // HeaderCodec.probe — a third format through the seam is the
-    // pluggability proof the seam was built for; the closed-form IDAT
-    // span keeps the oracle analytic (it never parses a byte)
+    // CRC32-correct PNG containers round-trip through Png.writePng and
+    // Png.decodeFull; the closed-form pixel grid keeps the oracle
+    // analytic (it never parses a byte)
     "q244_png_probe" -> { (s, d) =>
       implicit val sp: SparkSession = s
       graft.ext.Multimodal.probePng(Tables.documents(s, d))

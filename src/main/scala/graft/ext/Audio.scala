@@ -96,7 +96,7 @@ object Audio {
 
   // ------------------------------------------------------- RIFF parse
 
-  import Riff.{u16le, u32le, fourcc}
+  import Riff.{u16le, u32le, fourcc, put16le, put32le, putTag}
 
   final case class WavInfo(formatTag: Int, channels: Int, sampleRate: Int,
                            blockAlign: Int, bitsPerSample: Int,
@@ -215,20 +215,12 @@ object Audio {
   private[ext] def synthG711Payload(id: Long): Array[Byte] = {
     val n = 64
     val out = new Array[Byte](44 + n)
-    def p16(o: Int, v: Int): Unit = {
-      out(o) = (v & 0xff).toByte; out(o + 1) = ((v >> 8) & 0xff).toByte
-    }
-    def p32(o: Int, v: Long): Unit = {
-      var i = 0
-      while (i < 4) { out(o + i) = ((v >> (8 * i)) & 0xff).toByte; i += 1 }
-    }
-    def ptag(o: Int, s: String): Unit =
-      (0 until 4).foreach(i => out(o + i) = s.charAt(i).toByte)
-    ptag(0, "RIFF"); p32(4, 36L + n); ptag(8, "WAVE")
-    ptag(12, "fmt "); p32(16, 16)
-    p16(20, if (id % 2 == 0) 7 else 6) // µ-law / A-law
-    p16(22, 1); p32(24, 8000); p32(28, 8000); p16(32, 1); p16(34, 8)
-    ptag(36, "data"); p32(40, n)
+    putTag(out, 0, "RIFF"); put32le(out, 4, 36L + n); putTag(out, 8, "WAVE")
+    putTag(out, 12, "fmt "); put32le(out, 16, 16)
+    put16le(out, 20, if (id % 2 == 0) 7 else 6) // µ-law / A-law
+    put16le(out, 22, 1); put32le(out, 24, 8000); put32le(out, 28, 8000)
+    put16le(out, 32, 1); put16le(out, 34, 8)
+    putTag(out, 36, "data"); put32le(out, 40, n)
     var k = 0
     while (k < n) {
       out(44 + k) = ((((id * 7 + k * 13) % 256) + 256) % 256).toByte
@@ -248,25 +240,18 @@ object Audio {
   private[ext] def synthAdpcmPayload(id: Long): Array[Byte] = {
     val blockAlign = 36
     val out = new Array[Byte](12 + 8 + 20 + 8 + 4 + 8 + blockAlign)
-    def p16(o: Int, v: Int): Unit = {
-      out(o) = (v & 0xff).toByte; out(o + 1) = ((v >> 8) & 0xff).toByte
-    }
-    def p32(o: Int, v: Long): Unit = {
-      var i = 0
-      while (i < 4) { out(o + i) = ((v >> (8 * i)) & 0xff).toByte; i += 1 }
-    }
-    def ptag(o: Int, s: String): Unit =
-      (0 until 4).foreach(i => out(o + i) = s.charAt(i).toByte)
-    ptag(0, "RIFF"); p32(4, out.length - 8L); ptag(8, "WAVE")
-    ptag(12, "fmt "); p32(16, 20)
-    p16(20, 0x11); p16(22, 1); p32(24, 8000)
-    p32(28, 8000L * blockAlign / 65); p16(32, blockAlign); p16(34, 4)
-    p16(36, 2); p16(38, 65) // cbSize, wSamplesPerBlock
-    ptag(40, "fact"); p32(44, 4); p32(48, 65)
-    ptag(52, "data"); p32(56, blockAlign)
+    putTag(out, 0, "RIFF"); put32le(out, 4, out.length - 8L)
+    putTag(out, 8, "WAVE")
+    putTag(out, 12, "fmt "); put32le(out, 16, 20)
+    put16le(out, 20, 0x11); put16le(out, 22, 1); put32le(out, 24, 8000)
+    put32le(out, 28, 8000L * blockAlign / 65); put16le(out, 32, blockAlign)
+    put16le(out, 34, 4)
+    put16le(out, 36, 2); put16le(out, 38, 65) // cbSize, wSamplesPerBlock
+    putTag(out, 40, "fact"); put32le(out, 44, 4); put32le(out, 48, 65)
+    putTag(out, 52, "data"); put32le(out, 56, blockAlign)
     val base = 60
     val p0 = (((id * 31) % 4096 + 4096) % 4096 - 2048).toInt
-    p16(base, p0 & 0xffff)
+    put16le(out, base, p0 & 0xffff)
     out(base + 2) = (((id % 89) + 89) % 89).toByte
     out(base + 3) = 0
     var k = 0

@@ -4,8 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Baseline JPEG (ITU-T T.81 / ISO 10918-1 sequential DCT, public spec)
-  * decode in pure JVM — closing the next-most-common container after the
-  * round-10 PNG decoder (reference: juliusmeinl4/Portfolio1-ETL has no
+  * decode in pure JVM — closing the next-most-common container after
+  * PNG ([[Png.decodeFull]]) (reference: juliusmeinl4/Portfolio1-ETL has no
   * media path at all; this is extension surface for the 100 TB training-
   * data pipeline tier, where JPEG is the dominant image payload).
   *
@@ -316,7 +316,7 @@ object Jpeg {
           if (width <= 0 || height <= 0 || (nComp != 1 && nComp != 3))
             return None
           if (width > (1 << 16) || height > (1 << 16)) return None
-          // Adversarial-dims guard (decodePng's 1 GiB posture): the scan
+          // Adversarial-dims guard (Png.decodeFull's 1 GiB posture): the scan
           // allocates per-plane Int arrays at padded-MCU resolution, so a
           // crafted 32768x32768x3 SOF0 would demand ~12 GiB and kill the
           // task with OutOfMemoryError instead of degrading to None.

@@ -43,26 +43,35 @@ object Multimodal {
     * codec; the stub derives stable pseudo-features from the raw bytes so
     * the pipeline is testable end-to-end. [[HeaderCodec]] is the real
     * pure-JVM sibling for container formats whose headers parse without a
-    * decoder library (BMP, RIFF/WAV), [[HeaderCodec.decodePng]] the full
-    * PNG pixel decode, and [[Jpeg.decode]] the full baseline-JPEG pixel
-    * decode (q375) — the stub's remaining honest scope is progressive
-    * JPEG, subsampled chroma, and video/audio codecs.
+    * decoder library (BMP, RIFF/WAV) and for PNG, whose pixels it decodes
+    * with [[Png.decodeFull]] (8/16-bit, palette, Adam7), and
+    * [[Jpeg.decode]] the full baseline-JPEG pixel decode (q375) — the
+    * stub's remaining honest scope is progressive JPEG, subsampled
+    * chroma, and video/audio codecs.
     */
   object StubCodec extends MediaCodec {
     /** ??? in spirit: replace with a real decode when codecs exist. */
     def decodeAndFeaturize(r: MediaRow, frameEvery: Int): MediaFeatures = {
-      val bytes = r.payload
-      var sum = 0L; var checksum = 1469598103934665603L // FNV-1a offset
-      var i = 0
-      while (i < bytes.length) {
-        sum += bytes(i) & 0xff
-        checksum = (checksum ^ (bytes(i) & 0xff)) * 1099511628211L
-        i += 1
-      }
-      val frames = if (frameEvery <= 0) 0 else (bytes.length + frameEvery - 1) / frameEvery
-      MediaFeatures(r.media_id, r.kind, bytes.length, checksum,
-        if (bytes.isEmpty) 0.0 else sum.toDouble / bytes.length, frames)
+      val n = r.payload.length
+      val frames = if (frameEvery <= 0) 0 else (n + frameEvery - 1) / frameEvery
+      featuresOver(r, r.kind, r.payload, 0, n, frames)
     }
+  }
+
+  /** The features of `len` content bytes of `b` from `off`: their count,
+    * FNV-1a checksum and mean, with `frames` as given.
+    */
+  private def featuresOver(r: MediaRow, kind: String, b: Array[Byte],
+                           off: Int, len: Int, frames: Int): MediaFeatures = {
+    var sum = 0L; var checksum = 1469598103934665603L // FNV-1a offset
+    var i = off
+    while (i < off + len) {
+      sum += b(i) & 0xff
+      checksum = (checksum ^ (b(i) & 0xff)) * 1099511628211L
+      i += 1
+    }
+    MediaFeatures(r.media_id, kind, len, checksum,
+      if (len == 0) 0.0 else sum.toDouble / len, frames)
   }
 
   /** Real pure-JVM header/content parsing for the three container formats
@@ -72,28 +81,23 @@ object Multimodal {
     * extraction, chunk walking, bounds checks, checksum verification —
     * with features computed over the CONTENT bytes the header locates
     * (the pixel array / the data chunk), not the whole file. PNG goes
-    * further: [[decodePng]] is a FULL pure-JVM decode — zlib inflate via
-    * the JDK's `Inflater` plus complete scanline filter reconstruction —
-    * so PNG features are computed over REAL reconstructed pixels.
+    * further: [[Png.decodeFull]] is a FULL pure-JVM decode — zlib inflate
+    * via the JDK's `Inflater`, complete scanline filter reconstruction,
+    * Adam7 deinterlacing, palette resolution, 16-bit samples — so PNG
+    * features are computed over REAL reconstructed pixels (palette
+    * images as their RGB8 expansion, 16-bit ones as big-endian pairs).
     * Anything that fails validation falls back to [[StubCodec]]'s
     * whole-payload features, the production posture for an unknown
     * container; a PNG whose header parses but whose pixels don't decode
-    * (palette, 16-bit, interlaced) gets the located-span features.
+    * (a truncated or corrupt IDAT stream) gets the located-span features.
     *
     * frames: BMP/PNG → 1 (stills); WAV → ceil(samples / frameEvery) where
     * a sample is one blockAlign-sized PCM frame — frameEvery plays the
     * "samples per analysis window" role.
     */
   object HeaderCodec extends MediaCodec {
-    private def u16(b: Array[Byte], o: Int): Int =
-      (b(o) & 0xff) | ((b(o + 1) & 0xff) << 8)
-    private def u32(b: Array[Byte], o: Int): Long =
-      (b(o) & 0xffL) | ((b(o + 1) & 0xffL) << 8) |
-        ((b(o + 2) & 0xffL) << 16) | ((b(o + 3) & 0xffL) << 24)
-    private def i32(b: Array[Byte], o: Int): Int = u32(b, o).toInt
-    private def be32(b: Array[Byte], o: Int): Long =
-      ((b(o) & 0xffL) << 24) | ((b(o + 1) & 0xffL) << 16) |
-        ((b(o + 2) & 0xffL) << 8) | (b(o + 3) & 0xffL)
+    import Riff.{u16le, u32le}
+    import Png.be32
 
     final case class ProbedHeader(fmt: String, width: Int, height: Int,
                                   sampleRate: Int, channels: Int,
@@ -105,11 +109,11 @@ object Multimodal {
       */
     private[ext] def probe(b: Array[Byte]): Option[ProbedHeader] = {
       if (b.length >= 54 && b(0) == 'B' && b(1) == 'M') {
-        val pixelOff = u32(b, 10)
-        val dibSize = u32(b, 14)
-        val w = i32(b, 18)
-        val h = i32(b, 22)
-        val bpp = u16(b, 28)
+        val pixelOff = u32le(b, 10)
+        val dibSize = u32le(b, 14)
+        val w = u32le(b, 18).toInt
+        val h = u32le(b, 22).toInt
+        val bpp = u16le(b, 28)
         // height may be negative (top-down rows); magnitude is the dim
         if (dibSize >= 40 && w > 0 && h != 0 && bpp > 0 &&
             pixelOff >= 54 && pixelOff <= b.length) {
@@ -136,11 +140,11 @@ object Multimodal {
         while (off + 8 <= b.length && (dataOff < 0 || rate == 0)) {
           val io = off.toInt // safe: off + 8 <= b.length <= Int.MaxValue
           val id = new String(b, io, 4, "US-ASCII")
-          val size = u32(b, io + 4) // Long in [0, 2^32-1] — never negative
+          val size = u32le(b, io + 4) // Long in [0, 2^32-1] — never negative
           if (id == "fmt " && off + 8 + 16 <= b.length) {
-            channels = u16(b, io + 10)
-            rate = u32(b, io + 12)
-            blockAlign = u16(b, io + 20)
+            channels = u16le(b, io + 10)
+            rate = u32le(b, io + 12)
+            blockAlign = u16le(b, io + 20)
           } else if (id == "data") {
             dataOff = io + 8
             // size >= 0 and dataOff <= b.length here, so dataLen >= 0:
@@ -198,148 +202,14 @@ object Multimodal {
       } else None
     }
 
-    final case class PngImage(width: Int, height: Int, bpp: Int,
-                              pixels: Array[Byte])
-
-    /** FULL PNG decode in pure JVM — the "decoder-library boundary"
-      * excuse does not hold for PNG because zlib ships in the JDK
-      * (`java.util.zip.Inflater`): signature + IHDR validation (CRC32-
-      * verified), whole-chunk walk with per-IDAT CRC verification, IDAT
-      * concatenation (a spec requirement — the zlib stream may span any
-      * number of chunks), inflate to EXACTLY height·(1+width·bpp) raw
-      * bytes, and per-scanline filter reconstruction for the whole
-      * non-interlaced 8-bit repertoire (None / Sub / Up / Average /
-      * Paeth; color types gray, gray+alpha, truecolor, RGBA). Returns
-      * the reconstructed pixel bytes (filter bytes stripped) or None for
-      * anything malformed / unsupported (palette, 16-bit, interlaced,
-      * truncated or over-long zlib stream, CRC mismatch, dimensions past
-      * the 2^24 per-axis bound or the 1 GiB raw-size guard — the axis
-      * bound is checked FIRST so the raw-size product cannot wrap
-      * 64-bit on adversarial u32 dims) — the caller falls back to
-      * [[StubCodec]], the unknown-container posture.
-      */
-    private[ext] def decodePng(b: Array[Byte]): Option[PngImage] = {
-      val sigOk = b.length >= 45 && (b(0) & 0xff) == 0x89 && b(1) == 'P' &&
-        b(2) == 'N' && b(3) == 'G' && b(4) == 0x0d && b(5) == 0x0a &&
-        b(6) == 0x1a && b(7) == 0x0a && be32(b, 8) == 13L &&
-        b(12) == 'I' && b(13) == 'H' && b(14) == 'D' && b(15) == 'R'
-      if (!sigOk) None
-      else {
-        val ihdrCrc = new java.util.zip.CRC32()
-        ihdrCrc.update(b, 12, 17)
-        val w = be32(b, 16); val h = be32(b, 20)
-        val bitDepth = b(24) & 0xff; val colorType = b(25) & 0xff
-        val bpp = colorType match {
-          case 0 => 1; case 2 => 3; case 4 => 2; case 6 => 4; case _ => -1
-        }
-        // dimension bound BEFORE the product: w,h are untrusted u32 —
-        // at 2^32−1 the h·(1+w·bpp) product wraps 64-bit and could slip
-        // past the 1 GiB guard below (then hi·stride overflows Int at
-        // allocation). w,h ≤ 2^24 keeps the product ≤ 2^50: no wrap.
-        val dimsOk = w > 0 && h > 0 && w <= (1L << 24) && h <= (1L << 24)
-        val rawLen = if (!dimsOk) -1L else h * (1L + w * bpp)
-        if (ihdrCrc.getValue != be32(b, 29) || bpp < 0 || bitDepth != 8 ||
-            (b(26) & 0xff) != 0 || (b(27) & 0xff) != 0 ||
-            (b(28) & 0xff) != 0 || rawLen <= 0 || rawLen > (1L << 30)) None
-        else {
-          // chunk walk: concatenate every CRC-valid IDAT. Untrusted
-          // lengths stay Long (same posture as the WAV walk).
-          val idat = new java.io.ByteArrayOutputStream()
-          var off = 33L
-          var bad = false; var sawEnd = false
-          while (!bad && !sawEnd && off + 8 <= b.length) {
-            val io = off.toInt
-            val len = be32(b, io)
-            if (off + 12 + len > b.length) bad = true // truncated chunk
-            else {
-              if (b(io + 4) == 'I' && b(io + 5) == 'D' &&
-                  b(io + 6) == 'A' && b(io + 7) == 'T') {
-                val c = new java.util.zip.CRC32()
-                c.update(b, io + 4, 4 + len.toInt)
-                if (c.getValue != be32(b, io + 8 + len.toInt)) bad = true
-                else idat.write(b, io + 8, len.toInt)
-              } else if (b(io + 4) == 'I' && b(io + 5) == 'E' &&
-                         b(io + 6) == 'N' && b(io + 7) == 'D') sawEnd = true
-              off += 12 + len
-            }
-          }
-          if (bad || idat.size() == 0) None
-          else {
-            // inflate to exactly rawLen bytes — shorter or longer is
-            // malformed (the declared dims fix the stream size)
-            val raw = new Array[Byte](rawLen.toInt)
-            val inf = new java.util.zip.Inflater()
-            inf.setInput(idat.toByteArray)
-            var got = 0; var stalled = false
-            try {
-              while (got < raw.length && !inf.finished() && !stalled) {
-                val m = inf.inflate(raw, got, raw.length - got)
-                if (m == 0 && (inf.needsInput() || inf.needsDictionary()))
-                  stalled = true
-                got += m
-              }
-              if (!stalled && got == raw.length && !inf.finished() &&
-                  inf.inflate(new Array[Byte](1)) > 0) stalled = true // over-long
-            } catch { case _: java.util.zip.DataFormatException => stalled = true }
-            finally inf.end()
-            if (stalled || got != raw.length) None
-            else {
-              // filter reconstruction, scanline by scanline
-              val wi = w.toInt; val hi = h.toInt
-              val stride = wi * bpp
-              val px = new Array[Byte](hi * stride)
-              var r = 0; var badFilter = false
-              while (!badFilter && r < hi) {
-                val f = raw(r * (1 + stride)) & 0xff
-                if (f > 4) badFilter = true
-                else {
-                  var i = 0
-                  while (i < stride) {
-                    val x = raw(r * (1 + stride) + 1 + i) & 0xff
-                    val a = if (i >= bpp) px(r * stride + i - bpp) & 0xff else 0
-                    val up = if (r > 0) px((r - 1) * stride + i) & 0xff else 0
-                    val c = if (r > 0 && i >= bpp) px((r - 1) * stride + i - bpp) & 0xff else 0
-                    val pred = f match {
-                      case 0 => 0
-                      case 1 => a
-                      case 2 => up
-                      case 3 => (a + up) / 2
-                      case 4 =>
-                        val p = a + up - c
-                        val pa = math.abs(p - a); val pb = math.abs(p - up)
-                        val pc = math.abs(p - c)
-                        if (pa <= pb && pa <= pc) a else if (pb <= pc) up else c
-                    }
-                    px(r * stride + i) = ((x + pred) & 0xff).toByte
-                    i += 1
-                  }
-                  r += 1
-                }
-              }
-              if (badFilter) None else Some(PngImage(wi, hi, bpp, px))
-            }
-          }
-        }
-      }
-    }
-
     def decodeAndFeaturize(r: MediaRow, frameEvery: Int): MediaFeatures =
       probe(r.payload) match {
         case Some(h) if h.fmt == "png" =>
           // real decode first; header-span features only if the pixel
-          // decode fails (palette/16-bit/interlaced/foreign)
-          decodePng(r.payload) match {
+          // decode fails (a truncated or corrupt stream)
+          Png.decodeFull(r.payload) match {
             case Some(img) =>
-              var sum = 0L; var checksum = 1469598103934665603L
-              var i = 0
-              while (i < img.pixels.length) {
-                sum += img.pixels(i) & 0xff
-                checksum = (checksum ^ (img.pixels(i) & 0xff)) * 1099511628211L
-                i += 1
-              }
-              MediaFeatures(r.media_id, "png", img.pixels.length, checksum,
-                if (img.pixels.isEmpty) 0.0
-                else sum.toDouble / img.pixels.length, 1)
+              featuresOver(r, "png", img.pixels, 0, img.pixels.length, 1)
             case None => spanFeatures(r, h, frameEvery)
           }
         case Some(h) => spanFeatures(r, h, frameEvery)
@@ -348,22 +218,13 @@ object Multimodal {
 
     private def spanFeatures(r: MediaRow, h: ProbedHeader,
                              frameEvery: Int): MediaFeatures = {
-      val bytes = r.payload
-      var sum = 0L; var checksum = 1469598103934665603L
-      var i = h.contentOff
-      while (i < h.contentOff + h.contentLen) {
-        sum += bytes(i) & 0xff
-        checksum = (checksum ^ (bytes(i) & 0xff)) * 1099511628211L
-        i += 1
-      }
       val frames =
         if (h.fmt != "wav") 1 // stills: bmp, undecodable png
         else {
           val samples = h.contentLen / h.blockAlign
           if (frameEvery <= 0) 0 else (samples + frameEvery - 1) / frameEvery
         }
-      MediaFeatures(r.media_id, h.fmt, h.contentLen, checksum,
-        if (h.contentLen == 0) 0.0 else sum.toDouble / h.contentLen, frames)
+      featuresOver(r, h.fmt, r.payload, h.contentOff, h.contentLen, frames)
     }
   }
 
@@ -552,24 +413,18 @@ object Multimodal {
     * encode → header-parse → featurize chain into an exact-hash check.
     */
   private[ext] def synthPayload(mediaId: Long, kind: String): Array[Byte] = {
-    def p16(b: Array[Byte], o: Int, v: Int): Unit = {
-      b(o) = (v & 0xff).toByte; b(o + 1) = ((v >> 8) & 0xff).toByte
-    }
-    def p32(b: Array[Byte], o: Int, v: Long): Unit = {
-      var i = 0
-      while (i < 4) { b(o + i) = ((v >> (8 * i)) & 0xff).toByte; i += 1 }
-    }
+    import Riff.{put16le, put32le, putTag}
     if (kind == "image") {
       val px = 192 // 8 rows × 24 row-bytes (8 px × 3 B, already 4-aligned)
       val b = new Array[Byte](54 + px)
       b(0) = 'B'; b(1) = 'M'
-      p32(b, 2, 54L + px)  // file size
-      p32(b, 10, 54L)      // pixel-array offset
-      p32(b, 14, 40L)      // BITMAPINFOHEADER size
-      p32(b, 18, 8L)       // width
-      p32(b, 22, 8L)       // height (bottom-up)
-      p16(b, 26, 1)        // planes
-      p16(b, 28, 24)       // bpp
+      put32le(b, 2, 54L + px)  // file size
+      put32le(b, 10, 54L)      // pixel-array offset
+      put32le(b, 14, 40L)      // BITMAPINFOHEADER size
+      put32le(b, 18, 8L)       // width
+      put32le(b, 22, 8L)       // height (bottom-up)
+      put16le(b, 26, 1)        // planes
+      put16le(b, 28, 24)       // bpp
       var k = 0
       while (k < px) {
         b(54 + k) = ((mediaId * 31 + k * 7) % 251).toByte
@@ -579,22 +434,19 @@ object Multimodal {
     } else {
       val dataLen = 128 // 64 samples × 2 B
       val b = new Array[Byte](44 + dataLen)
-      b(0) = 'R'; b(1) = 'I'; b(2) = 'F'; b(3) = 'F'
-      p32(b, 4, 36L + dataLen)
-      b(8) = 'W'; b(9) = 'A'; b(10) = 'V'; b(11) = 'E'
-      b(12) = 'f'; b(13) = 'm'; b(14) = 't'; b(15) = ' '
-      p32(b, 16, 16L)      // fmt chunk size
-      p16(b, 20, 1)        // PCM
-      p16(b, 22, 1)        // mono
-      p32(b, 24, 16000L)   // sample rate
-      p32(b, 28, 32000L)   // byte rate
-      p16(b, 32, 2)        // block align
-      p16(b, 34, 16)       // bits per sample
-      b(36) = 'd'; b(37) = 'a'; b(38) = 't'; b(39) = 'a'
-      p32(b, 40, dataLen.toLong)
+      putTag(b, 0, "RIFF"); put32le(b, 4, 36L + dataLen)
+      putTag(b, 8, "WAVE"); putTag(b, 12, "fmt ")
+      put32le(b, 16, 16L)      // fmt chunk size
+      put16le(b, 20, 1)        // PCM
+      put16le(b, 22, 1)        // mono
+      put32le(b, 24, 16000L)   // sample rate
+      put32le(b, 28, 32000L)   // byte rate
+      put16le(b, 32, 2)        // block align
+      put16le(b, 34, 16)       // bits per sample
+      putTag(b, 36, "data"); put32le(b, 40, dataLen.toLong)
       var s = 0
       while (s < 64) {
-        p16(b, 44 + 2 * s, ((mediaId * 13 + s * 5) % 65536).toInt)
+        put16le(b, 44 + 2 * s, ((mediaId * 13 + s * 5) % 65536).toInt)
         s += 1
       }
       b
@@ -604,102 +456,27 @@ object Multimodal {
   /** The closed-form pixel byte grid behind [[synthPngPayload]]: byte k
     * (row-major over w·h·bpp reconstructed scanline bytes) is
     * `(id·17 + k·11) mod 251` — what an external oracle computes
-    * analytically, and what [[HeaderCodec.decodePng]] must reproduce
+    * analytically, and what [[Png.decodeFull]] must reproduce
     * through the full deflate→filter→inflate→unfilter round trip.
     */
   private[ext] def synthPngPixel(mediaId: Long, k: Int): Int =
     ((mediaId * 17 + k * 11) % 251).toInt
 
-  /** A REAL decodable PNG: signature, CRC32-correct IHDR (16×16, 8-bit
-    * truecolor), a GENUINE zlib IDAT stream — scanlines are filtered with
-    * the full filter repertoire (row r uses filter r mod 5, so None / Sub
-    * / Up / Average / Paeth are ALL exercised) and deflated with the
-    * JDK's Deflater — split across TWO IDAT chunks (decoders must
-    * concatenate before inflating, per spec), and IEND. Every chunk CRC
-    * is a genuine CRC32. The reconstructed pixel bytes are the closed
-    * form [[synthPngPixel]], so the oracle never touches zlib: decode ∘
-    * encode = identity is exactly what the exact-hash check proves.
+  /** A REAL decodable PNG written by [[Png.writePng]]: 16×16, 8-bit
+    * truecolor, non-interlaced — row r uses filter r mod 5, so None / Sub
+    * / Up / Average / Paeth are ALL exercised — with the zlib stream
+    * split across TWO IDAT chunks. The reconstructed pixel bytes are the
+    * closed form [[synthPngPixel]], so the oracle never touches zlib:
+    * decode ∘ encode = identity is exactly what the exact-hash check
+    * proves.
     */
-  private[ext] def synthPngPayload(mediaId: Long): Array[Byte] = {
-    val w = 16; val h = 16; val bpp = 3
-    val stride = w * bpp
-    val px = new Array[Int](h * stride)
-    var k = 0
-    while (k < px.length) { px(k) = synthPngPixel(mediaId, k); k += 1 }
-    // filter scanlines (the encode side of the PNG filter spec)
-    val raw = new Array[Byte](h * (1 + stride))
-    var r = 0
-    while (r < h) {
-      val f = r % 5
-      raw(r * (1 + stride)) = f.toByte
-      var i = 0
-      while (i < stride) {
-        val x = px(r * stride + i)
-        val a = if (i >= bpp) px(r * stride + i - bpp) else 0
-        val b0 = if (r > 0) px((r - 1) * stride + i) else 0
-        val c = if (r > 0 && i >= bpp) px((r - 1) * stride + i - bpp) else 0
-        val pred = f match {
-          case 0 => 0
-          case 1 => a
-          case 2 => b0
-          case 3 => (a + b0) / 2
-          case 4 =>
-            val p = a + b0 - c
-            val pa = math.abs(p - a); val pb = math.abs(p - b0)
-            val pc = math.abs(p - c)
-            if (pa <= pb && pa <= pc) a else if (pb <= pc) b0 else c
-        }
-        raw(r * (1 + stride) + 1 + i) = ((x - pred) & 0xff).toByte
-        i += 1
-      }
-      r += 1
-    }
-    // deflate (deterministic for fixed input + default settings)
-    val defl = new java.util.zip.Deflater()
-    defl.setInput(raw); defl.finish()
-    val zbuf = new Array[Byte](raw.length + 64)
-    var zlen = 0
-    while (!defl.finished()) zlen += defl.deflate(zbuf, zlen, zbuf.length - zlen)
-    defl.end()
-    // assemble: sig + IHDR + two IDATs (split mid-stream) + IEND
-    val n1 = zlen / 2; val n2 = zlen - n1
-    val b = new Array[Byte](8 + 25 + (12 + n1) + (12 + n2) + 12)
-    def pbe32(o: Int, v: Long): Unit = {
-      var i = 0
-      while (i < 4) { b(o + i) = ((v >> (8 * (3 - i))) & 0xff).toByte; i += 1 }
-    }
-    def ptype(o: Int, t: String): Unit = {
-      var i = 0
-      while (i < 4) { b(o + i) = t.charAt(i).toByte; i += 1 }
-    }
-    def crcAt(o: Int, from: Int, len: Int): Unit = {
-      val c = new java.util.zip.CRC32()
-      c.update(b, from, len)
-      pbe32(o, c.getValue)
-    }
-    Array[Int](0x89, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a)
-      .zipWithIndex.foreach { case (v, i) => b(i) = v.toByte }
-    pbe32(8, 13L); ptype(12, "IHDR")
-    pbe32(16, w.toLong); pbe32(20, h.toLong)
-    b(24) = 8; b(25) = 2            // bit depth, truecolor
-    b(26) = 0; b(27) = 0; b(28) = 0 // compression, filter, interlace
-    crcAt(29, 12, 17)
-    var o = 33
-    pbe32(o, n1.toLong); ptype(o + 4, "IDAT")
-    System.arraycopy(zbuf, 0, b, o + 8, n1)
-    crcAt(o + 8 + n1, o + 4, 4 + n1)
-    o += 12 + n1
-    pbe32(o, n2.toLong); ptype(o + 4, "IDAT")
-    System.arraycopy(zbuf, n1, b, o + 8, n2)
-    crcAt(o + 8 + n2, o + 4, 4 + n2)
-    o += 12 + n2
-    pbe32(o, 0L); ptype(o + 4, "IEND")
-    crcAt(o + 8, o + 4, 4)
-    b
-  }
+  private[ext] def synthPngPayload(mediaId: Long): Array[Byte] =
+    Png.writePng(16, 16, colorType = 2, bitDepth = 8, interlaced = false,
+      palette = Array.emptyByteArray, (x, y) => Array.tabulate(3)(c =>
+        synthPngPixel(mediaId, (y * 16 + x) * 3 + c).toByte))
 
   /** The PNG face of [[probeMedia]] (q244): build a real PNG per doc and
-    * FULLY DECODE it back with [[HeaderCodec.decodePng]] — inflate the
+    * FULLY DECODE it back with [[Png.decodeFull]] — inflate the
     * two-chunk zlib stream, reconstruct every scanline through all five
     * filters — emitting the decoded dimensions and PIXEL statistics. The
     * oracle recomputes every field from the closed-form pixel definition
@@ -713,7 +490,7 @@ object Multimodal {
     docs.select(col("doc_id")).as[Long].mapPartitions { ids =>
       ids.map { id =>
         val p = synthPngPayload(id)
-        HeaderCodec.decodePng(p) match {
+        Png.decodeFull(p) match {
           case Some(img) =>
             var sum = 0L
             var i = 0
@@ -743,7 +520,7 @@ object Multimodal {
     docs.select(col("doc_id")).as[Long].mapPartitions { ids =>
       ids.map { id =>
         val p = synthPngPayload(id)
-        HeaderCodec.decodePng(p) match {
+        Png.decodeFull(p) match {
           case Some(img) =>
             var sum = 0L; var wsum = 0L
             val ch = new Array[Long](3)

@@ -3,34 +3,77 @@ package graft.ext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Full-repertoire PNG decode — closing the three documented seams of
-  * the round-10 decoder ([[Multimodal.HeaderCodec.decodePng]]: 8-bit
-  * non-interlaced gray/rgb/alpha only): ADAM7 INTERLACING (the PNG
-  * sibling of progressive JPEG — seven sub-images on power-of-two
-  * grids, each filtered independently, scattered into the final
-  * raster), INDEXED COLOR (PLTE chunk, CRC-verified, indices resolved
-  * to RGB8), and 16-BIT samples (big-endian pairs; filters operate on
-  * BYTES with bpp = bytes-per-complete-pixel, per the spec). The
-  * original decoder stays untouched under its green operators; this
-  * object is the generalized path with its own corpus and oracle.
+/** The PNG codec: one decoder ([[decodeFull]]) and one writer
+  * ([[writePng]]) for every PNG the engine reads or builds. The decoder
+  * covers bit depths 8/16, every standard color type, and ADAM7
+  * INTERLACING (the PNG sibling of progressive JPEG — seven sub-images
+  * on power-of-two grids, each filtered independently, scattered into
+  * the final raster); INDEXED COLOR resolves through the CRC-verified
+  * PLTE chunk to RGB8, and 16-bit samples stay big-endian pairs
+  * (filters operate on BYTES with bpp = bytes-per-complete-pixel, per
+  * the spec). [[Multimodal.HeaderCodec]], q244 and q365 decode through
+  * it as q390 does, and [[Multimodal.synthPngPayload]] writes through
+  * the same writer as [[synthPngFullPayload]].
   *
-  * Same zero-dependency posture (zlib via `java.util.zip`), same
-  * degrade-to-None contract for malformed/out-of-scope payloads
-  * (bit depths < 8, private color types, dimension bombs).
+  * Zero-dependency posture (zlib via `java.util.zip`), degrade-to-None
+  * contract for malformed/out-of-scope payloads (bit depths < 8,
+  * private color types, dimension bombs).
   */
 object Png {
 
-  private def be32(b: Array[Byte], o: Int): Long =
+  private[ext] def be32(b: Array[Byte], o: Int): Long =
     ((b(o) & 0xffL) << 24) | ((b(o + 1) & 0xffL) << 16) |
       ((b(o + 2) & 0xffL) << 8) | (b(o + 3) & 0xffL)
+
+  private def putBe32(b: Array[Byte], o: Int, v: Long): Unit = {
+    var i = 0
+    while (i < 4) { b(o + i) = ((v >> (8 * (3 - i))) & 0xff).toByte; i += 1 }
+  }
+
+  private val Signature: Array[Byte] =
+    Array(0x89, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a).map(_.toByte)
 
   // Adam7 pass grids: xStart, yStart, xStep, yStep (PNG spec §8.2)
   private val Adam7: Array[(Int, Int, Int, Int)] = Array(
     (0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
     (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2))
 
+  /** Each pass's grid and its width × height in pixels: the whole
+    * raster as one pass, or Adam7's seven (small images leave some
+    * EMPTY — no scanlines, not even filter bytes).
+    */
+  private def passes(w: Int, h: Int, interlaced: Boolean)
+      : Array[((Int, Int, Int, Int), (Int, Int))] =
+    if (!interlaced) Array(((0, 0, 1, 1), (w, h)))
+    else Adam7.map { case g @ (x0, y0, dx, dy) =>
+      (g, ((w - x0 + dx - 1) / dx, (h - y0 + dy - 1) / dy))
+    }
+
+  /** Samples per pixel of a color type, -1 for a private one. */
+  private def channelsOf(colorType: Int): Int = colorType match {
+    case 0 => 1; case 2 => 3; case 3 => 1; case 4 => 2; case 6 => 4
+    case _ => -1
+  }
+
   final case class PngFull(width: Int, height: Int, channels: Int,
                            bitDepth: Int, pixels: Array[Byte])
+
+  /** The scanline filter predictor (PNG spec §9.2) for filter `f` from
+    * the byte's reconstructed neighbours: `a` left, `up` above, `c`
+    * upper-left (0 off the pass's edge). The writer subtracts it, the
+    * decoder adds it back.
+    */
+  private def predict(f: Int, a: Int, up: Int, c: Int): Int = f match {
+    case 0 => 0
+    case 1 => a
+    case 2 => up
+    case 3 => (a + up) / 2
+    case _ =>
+      val p = a + up - c
+      val pa = math.abs(p - a); val pb = math.abs(p - up)
+      val pc = math.abs(p - c)
+      if (pa <= pb && pa <= pc) a else if (pb <= pc) up else c
+  }
 
   /** Reverse one pass's scanline filters in place into `dst` (tightly
     * packed passW×passH), reading filtered bytes from `raw` at
@@ -51,18 +94,7 @@ object Png {
         val up = if (r > 0) dst((r - 1) * stride + i) & 0xff else 0
         val c = if (r > 0 && i >= bpp) dst((r - 1) * stride + i - bpp) & 0xff
                 else 0
-        val pred = f match {
-          case 0 => 0
-          case 1 => a
-          case 2 => up
-          case 3 => (a + up) / 2
-          case _ =>
-            val p = a + up - c
-            val pa = math.abs(p - a); val pb = math.abs(p - up)
-            val pc = math.abs(p - c)
-            if (pa <= pb && pa <= pc) a else if (pb <= pc) up else c
-        }
-        dst(r * stride + i) = ((x + pred) & 0xff).toByte
+        dst(r * stride + i) = ((x + predict(f, a, up, c)) & 0xff).toByte
         i += 1
       }
       off += 1 + stride
@@ -74,8 +106,12 @@ object Png {
   /** Decode the full supported repertoire: bit depths 8/16, color types
     * 0/2/3/4/6, interlace 0/1. Palette images resolve to RGB8 (3
     * channels, depth 8 in the result); 16-bit output keeps big-endian
-    * byte pairs. None on anything malformed or out of scope — with the
-    * same defensive catch as [[Jpeg.decode]] so a residual
+    * byte pairs. None on anything malformed or out of scope — bad
+    * signature or IHDR/IDAT/PLTE CRC, dimensions past the 2^24 per-axis
+    * bound or the 1 GiB raw-size guard (the axis bound is checked FIRST
+    * so the raw-size product cannot wrap on adversarial u32 dims), a
+    * chunk length past the end, a truncated or over-long zlib stream —
+    * with the same defensive catch as [[Jpeg.decode]] so a residual
     * out-of-bounds read on an adversarial stream degrades instead of
     * crashing the task.
     */
@@ -87,9 +123,9 @@ object Png {
     }
 
   private def decodeFullImpl(b: Array[Byte]): Option[PngFull] = {
-    val sigOk = b.length >= 45 && (b(0) & 0xff) == 0x89 && b(1) == 'P' &&
-      b(2) == 'N' && b(3) == 'G' && b(4) == 0x0d && b(5) == 0x0a &&
-      b(6) == 0x1a && b(7) == 0x0a && be32(b, 8) == 13L &&
+    val sigOk = b.length >= 45 &&
+      Signature.indices.forall(i => b(i) == Signature(i)) &&
+      be32(b, 8) == 13L &&
       b(12) == 'I' && b(13) == 'H' && b(14) == 'D' && b(15) == 'R'
     if (!sigOk) return None
     val ihdrCrc = new java.util.zip.CRC32()
@@ -98,23 +134,15 @@ object Png {
     val w = be32(b, 16); val h = be32(b, 20)
     val bitDepth = b(24) & 0xff; val colorType = b(25) & 0xff
     val interlace = b(28) & 0xff
-    val channels = colorType match {
-      case 0 => 1; case 2 => 3; case 3 => 1; case 4 => 2; case 6 => 4
-      case _ => -1
-    }
+    val channels = channelsOf(colorType)
     if (channels < 0 || (b(26) & 0xff) != 0 || (b(27) & 0xff) != 0 ||
         interlace > 1) return None
     if (bitDepth != 8 && !(bitDepth == 16 && colorType != 3)) return None
     if (w <= 0 || h <= 0 || w > (1L << 24) || h > (1L << 24)) return None
     val bpp = channels * (bitDepth / 8)
-    // raw stream length: per-pass scanlines (empty passes contribute
-    // nothing, not even filter bytes)
-    val passes: Array[(Int, Int)] =
-      if (interlace == 0) Array((w.toInt, h.toInt))
-      else Adam7.map { case (x0, y0, dx, dy) =>
-        (((w - x0 + dx - 1) / dx).toInt, ((h - y0 + dy - 1) / dy).toInt)
-      }
-    val rawLen = passes.map { case (pw, ph) =>
+    val wi = w.toInt; val hi = h.toInt
+    val passList = passes(wi, hi, interlace == 1)
+    val rawLen = passList.map { case (_, (pw, ph)) =>
       if (pw <= 0 || ph <= 0) 0L else ph.toLong * (1L + pw.toLong * bpp)
     }.sum
     if (rawLen <= 0 || rawLen > (1L << 30)) return None
@@ -159,13 +187,12 @@ object Png {
     finally inf.end()
     if (stalled || got != raw.length) return None
     // unfilter each pass, scatter to the final raster
-    val wi = w.toInt; val hi = h.toInt
     val stride = wi * bpp
     val px = new Array[Byte](hi * stride)
     var rawOff = 0
     var p = 0
-    while (p < passes.length) {
-      val (pw, ph) = passes(p)
+    while (p < passList.length) {
+      val ((x0, y0, dx, dy), (pw, ph)) = passList(p)
       if (pw > 0 && ph > 0) {
         if (interlace == 0) {
           // the single pass IS the raster — unfilter straight into px
@@ -177,7 +204,6 @@ object Png {
           val used = unfilterPass(raw, rawOff, dst, pw, ph, bpp)
           if (used < 0) return None
           rawOff += used
-          val (x0, y0, dx, dy) = Adam7(p)
           var j = 0
           while (j < ph) {
             var i = 0
@@ -227,16 +253,17 @@ object Png {
   private[ext] def gray16(id: Long, x: Int, y: Int, w: Int): Int =
     (((id * 257 + (y * w + x) * 101) % 65536 + 65536) % 65536).toInt
 
+  /** One chunk: big-endian body length, type, body, CRC32 of type+body. */
   private def chunk(out: java.io.ByteArrayOutputStream, name: String,
                     body: Array[Byte]): Unit = {
-    def w32(v: Long): Unit =
-      (3 to 0 by -1).foreach(i => out.write(((v >> (8 * i)) & 0xff).toInt))
-    w32(body.length)
-    val tagAndBody = name.getBytes("US-ASCII") ++ body
-    out.write(tagAndBody, 0, tagAndBody.length)
+    val c = new Array[Byte](12 + body.length)
+    putBe32(c, 0, body.length)
+    System.arraycopy(name.getBytes("US-ASCII"), 0, c, 4, 4)
+    System.arraycopy(body, 0, c, 8, body.length)
     val crc = new java.util.zip.CRC32()
-    crc.update(tagAndBody)
-    w32(crc.getValue)
+    crc.update(c, 4, 4 + body.length)
+    putBe32(c, 8 + body.length, crc.getValue)
+    out.write(c, 0, c.length)
   }
 
   /** Forward-filter a pass's raw samples with filter id (globalRow % 5)
@@ -258,70 +285,37 @@ object Png {
         val up = if (r > 0) samples((r - 1) * stride + i) & 0xff else 0
         val c = if (r > 0 && i >= bpp) samples((r - 1) * stride + i - bpp) & 0xff
                 else 0
-        val pred = f match {
-          case 0 => 0
-          case 1 => a
-          case 2 => up
-          case 3 => (a + up) / 2
-          case _ =>
-            val p = a + up - c
-            val pa = math.abs(p - a); val pb = math.abs(p - up)
-            val pc = math.abs(p - c)
-            if (pa <= pb && pa <= pc) a else if (pb <= pc) up else c
-        }
-        out.write((x - pred) & 0xff)
+        out.write((x - predict(f, a, up, c)) & 0xff)
         i += 1
       }
       r += 1
     }
   }
 
-  /** A REAL PNG covering the generalized repertoire, variant id % 4:
-    *   0 — Adam7 interlaced truecolor 8-bit, 21×13 (odd dims: partial
-    *       passes of every shape)
-    *   1 — indexed color (PLTE, 32 entries), 16×16 non-interlaced
-    *   2 — 16-bit grayscale, 12×9 non-interlaced (big-endian pairs)
-    *   3 — Adam7 interlaced PALETTE, 3×3 (several EMPTY passes — the
-    *       zero-scanline edge every interlace implementation gets wrong
-    *       first)
-    * Scanline filters cycle through all five types; IDAT is split into
-    * two chunks (spec: the zlib stream may span chunks).
+  /** The one PNG writer: signature, CRC32-correct IHDR, PLTE when
+    * `palette` is non-empty, the image's GENUINE zlib stream split
+    * across TWO IDAT chunks at its midpoint (spec: the zlib stream may
+    * span chunks, so decoders must concatenate before inflating), and
+    * IEND. `sample(x, y)` gives pixel (x, y)'s bytes (bpp of them); each
+    * pass (one, or Adam7's seven when `interlaced`) is filtered with
+    * filter id (scanline number across passes) mod 5, so every filter
+    * type appears, and deflated with the JDK's Deflater (deterministic
+    * for fixed input and default settings).
     */
-  private[ext] def synthPngFullPayload(id: Long): Array[Byte] = {
-    val variant = (((id % 4) + 4) % 4).toInt
-    val (w, h, colorType, bitDepth) = variant match {
-      case 0 => (21, 13, 2, 8)
-      case 1 => (16, 16, 3, 8)
-      case 2 => (12, 9, 0, 16)
-      case _ => (3, 3, 3, 8)
-    }
-    val channels = if (colorType == 2) 3 else 1
-    val bpp = channels * (bitDepth / 8)
-    val interlaced = variant == 0 || variant == 3
-    def sampleBytes(x: Int, y: Int): Array[Byte] = variant match {
-      case 0 => Array.tabulate(3)(c => rgbSample(id, x, y, c, w).toByte)
-      case 1 | 3 => Array(palIndex(id, x, y, w).toByte)
-      case _ =>
-        val v = gray16(id, x, y, w)
-        Array((v >> 8).toByte, (v & 0xff).toByte)
-    }
+  private[ext] def writePng(w: Int, h: Int, colorType: Int, bitDepth: Int,
+                            interlaced: Boolean, palette: Array[Byte],
+                            sample: (Int, Int) => Array[Byte]): Array[Byte] = {
+    val bpp = channelsOf(colorType) * (bitDepth / 8)
     val rawOut = new java.io.ByteArrayOutputStream()
-    val passes =
-      if (!interlaced) Array(((0, 0, 1, 1), (w, h)))
-      else Adam7.map { case g @ (x0, y0, dx, dy) =>
-        (g, ((w - x0 + dx - 1) / dx, (h - y0 + dy - 1) / dy))
-      }
     var rowBase = 0
-    passes.foreach { case ((x0, y0, dx, dy), (pw, ph)) =>
-      if (pw > 0 && ph > 0) {
-        val samples = new Array[Byte](pw * ph * bpp)
-        for (j <- 0 until ph; i <- 0 until pw) {
-          val sb = sampleBytes(x0 + i * dx, y0 + j * dy)
-          System.arraycopy(sb, 0, samples, (j * pw + i) * bpp, bpp)
-        }
-        filterPass(samples, pw, ph, bpp, rowBase, rawOut)
-        rowBase += ph
-      }
+    for (((x0, y0, dx, dy), (pw, ph)) <- passes(w, h, interlaced)
+         if pw > 0 && ph > 0) {
+      val samples = new Array[Byte](pw * ph * bpp)
+      for (j <- 0 until ph; i <- 0 until pw)
+        System.arraycopy(sample(x0 + i * dx, y0 + j * dy), 0, samples,
+          (j * pw + i) * bpp, bpp)
+      filterPass(samples, pw, ph, bpp, rowBase, rawOut)
+      rowBase += ph
     }
     val deflated = {
       val d = new java.util.zip.Deflater()
@@ -333,24 +327,49 @@ object Png {
       buf.toByteArray
     }
     val out = new java.io.ByteArrayOutputStream()
-    out.write(Array(0x89, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a)
-      .map(_.toByte), 0, 8)
+    out.write(Signature, 0, 8)
     val ihdr = new Array[Byte](13)
-    def p32(a: Array[Byte], o: Int, v: Int): Unit =
-      (0 until 4).foreach(i => a(o + i) = ((v >> (8 * (3 - i))) & 0xff).toByte)
-    p32(ihdr, 0, w); p32(ihdr, 4, h)
+    putBe32(ihdr, 0, w); putBe32(ihdr, 4, h)
     ihdr(8) = bitDepth.toByte; ihdr(9) = colorType.toByte
-    ihdr(10) = 0; ihdr(11) = 0; ihdr(12) = if (interlaced) 1 else 0
+    ihdr(12) = if (interlaced) 1 else 0 // compression, filter stay 0
     chunk(out, "IHDR", ihdr)
-    if (colorType == 3)
-      chunk(out, "PLTE", Array.tabulate(96)(i =>
-        palEntry(id, i / 3, i % 3).toByte))
+    if (palette.nonEmpty) chunk(out, "PLTE", palette)
     val split = deflated.length / 2
     chunk(out, "IDAT", java.util.Arrays.copyOfRange(deflated, 0, split))
     chunk(out, "IDAT",
       java.util.Arrays.copyOfRange(deflated, split, deflated.length))
     chunk(out, "IEND", Array.emptyByteArray)
     out.toByteArray
+  }
+
+  /** A REAL PNG covering the decoder's repertoire, variant id % 4:
+    *   0 — Adam7 interlaced truecolor 8-bit, 21×13 (odd dims: partial
+    *       passes of every shape)
+    *   1 — indexed color (PLTE, 32 entries), 16×16 non-interlaced
+    *   2 — 16-bit grayscale, 12×9 non-interlaced (big-endian pairs)
+    *   3 — Adam7 interlaced PALETTE, 3×3 (several EMPTY passes — the
+    *       zero-scanline edge every interlace implementation gets wrong
+    *       first)
+    */
+  private[ext] def synthPngFullPayload(id: Long): Array[Byte] = {
+    val variant = (((id % 4) + 4) % 4).toInt
+    val (w, h, colorType, bitDepth) = variant match {
+      case 0 => (21, 13, 2, 8)
+      case 1 => (16, 16, 3, 8)
+      case 2 => (12, 9, 0, 16)
+      case _ => (3, 3, 3, 8)
+    }
+    val palette =
+      if (colorType != 3) Array.emptyByteArray
+      else Array.tabulate(96)(i => palEntry(id, i / 3, i % 3).toByte)
+    writePng(w, h, colorType, bitDepth, variant == 0 || variant == 3,
+      palette, (x, y) => variant match {
+        case 0 => Array.tabulate(3)(c => rgbSample(id, x, y, c, w).toByte)
+        case 1 | 3 => Array(palIndex(id, x, y, w).toByte)
+        case _ =>
+          val v = gray16(id, x, y, w)
+          Array((v >> 8).toByte, (v & 0xff).toByte)
+      })
   }
 
   final case class PngFullStats(media_id: Long, variant: Int, width: Int,

@@ -578,7 +578,10 @@ object TimeSeries {
     * `den = Σ dev_t²`. Cauchy–Schwarz keeps |acf_ppm| ≤ 10⁶; the one
     * product that can outgrow a long (num·10⁶) runs in DECIMAL(38,0) —
     * the q278 wide-integer device — so the envelope is den < 2⁶³
-    * (n_hours³·maxcount² — months of hours at 10⁵ events/hour).
+    * (n_hours³·maxcount² — months of hours at 10⁵ events/hour). A
+    * constant series (every hour the same count, so den = 0) has no
+    * autocorrelation: `acf_ppm` is NULL at every lag, the policy
+    * [[crossCorrelation]]'s `xcf2_ppm` follows.
     *
     * Scale shape: one fact-scan hour aggregate; everything after runs on
     * the hour keyspace (grid join, lag equi-join of keyspace × maxLag
@@ -611,7 +614,8 @@ object TimeSeries {
       .agg(sum(col("dev_x") * col("dev")).as("num"))
     num.crossJoin(broadcast(den))
       .select(col("lag"), col("n_hours"),
-        expr("CAST(num AS DECIMAL(38,0)) * 1000000 div den").as("acf_ppm"))
+        expr("CASE WHEN den = 0 THEN NULL" +
+          " ELSE CAST(num AS DECIMAL(38,0)) * 1000000 div den END").as("acf_ppm"))
   }
 
   /** The [[trendFit]] grid: zero-gapfilled hourly counts as

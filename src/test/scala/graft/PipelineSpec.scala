@@ -7,7 +7,7 @@ import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLong
 import scala.jdk.CollectionConverters._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import graft.SparkSpec
 import graft.extract.{Feeds, FileFeed, Payloads}
 import graft.load.Sinks
@@ -62,7 +62,7 @@ class PipelineSpec extends SparkSpec {
     df("sku STRING, qty DOUBLE", Seq(Row("set-1", 1.0)))) // no site col (U2)
 
   private def outputRows(o: Pipeline.Outputs): Seq[Seq[String]] =
-    o.productIterator.map { case d: DataFrame => rowSet(d) }.toSeq
+    o.productIterator.map { case d: Dataset[_] => rowSet(d.toDF()) }.toSeq
 
   /** A one-file CSV feed of `rows` order lines over two SKUs. */
   private def csvFeed(rows: Int): DataFrame = {

@@ -5,6 +5,66 @@ import graft.SparkSpec
 
 class MultimodalSpec extends SparkSpec {
 
+  /** A one-IDAT PNG encoded by hand, independent of [[Png]] so the
+    * decoder is checked against code it does not share: `h` rows of `w`
+    * pixels of `bpp` 8-bit samples (`px`, row-major), row r filtered with
+    * `filters(r)`, IHDR/IDAT/IEND with their CRC32s.
+    */
+  private def handPng(w: Int, h: Int, colorType: Int, bpp: Int,
+                      px: Array[Int], filters: Seq[Int]): Array[Byte] = {
+    val stride = w * bpp
+    val raw = new Array[Byte](h * (1 + stride))
+    for (r <- 0 until h) {
+      val f = filters(r)
+      raw(r * (1 + stride)) = f.toByte
+      for (i <- 0 until stride) {
+        val x = px(r * stride + i)
+        val a = if (i >= bpp) px(r * stride + i - bpp) else 0
+        val b = if (r > 0) px((r - 1) * stride + i) else 0
+        val c = if (r > 0 && i >= bpp) px((r - 1) * stride + i - bpp) else 0
+        val pred = f match {
+          case 0 => 0
+          case 1 => a
+          case 2 => b
+          case 3 => (a + b) / 2
+          case 4 =>
+            val pp = a + b - c
+            val pa = math.abs(pp - a); val pb = math.abs(pp - b)
+            val pc = math.abs(pp - c)
+            if (pa <= pb && pa <= pc) a else if (pb <= pc) b else c
+        }
+        raw(r * (1 + stride) + 1 + i) = ((x - pred) & 0xff).toByte
+      }
+    }
+    val defl = new java.util.zip.Deflater()
+    defl.setInput(raw); defl.finish()
+    val z = new Array[Byte](raw.length + 64)
+    var zn = 0
+    while (!defl.finished()) zn += defl.deflate(z, zn, z.length - zn)
+    defl.end()
+    val out = new Array[Byte](8 + 25 + 12 + zn + 12)
+    def pbe32(o: Int, v: Long): Unit =
+      for (i <- 0 until 4) out(o + i) = ((v >> (8 * (3 - i))) & 0xff).toByte
+    def ptype(o: Int, t: String): Unit =
+      for (i <- 0 until 4) out(o + i) = t.charAt(i).toByte
+    def crcAt(o: Int, from: Int, len: Int): Unit = {
+      val cc = new java.util.zip.CRC32(); cc.update(out, from, len)
+      pbe32(o, cc.getValue)
+    }
+    Array(0x89, 'P'.toInt, 'N'.toInt, 'G'.toInt, 0x0d, 0x0a, 0x1a, 0x0a)
+      .zipWithIndex.foreach { case (v, i) => out(i) = v.toByte }
+    pbe32(8, 13L); ptype(12, "IHDR")
+    pbe32(16, w.toLong); pbe32(20, h.toLong)
+    out(24) = 8; out(25) = colorType.toByte
+    crcAt(29, 12, 17)
+    pbe32(33, zn.toLong); ptype(37, "IDAT")
+    System.arraycopy(z, 0, out, 41, zn)
+    crcAt(41 + zn, 37, 4 + zn)
+    pbe32(45 + zn, 0L); ptype(49 + zn, "IEND")
+    crcAt(53 + zn, 49 + zn, 4)
+    out
+  }
+
   test("binary payload plumbing: features are deterministic and binary is pruned") {
     val docs = df("doc_id BIGINT, text STRING", Seq(
       Row(0L, "hello world"), Row(1L, "abc")))
@@ -192,8 +252,8 @@ class MultimodalSpec extends SparkSpec {
 
   test("decodePng: inflate + all-five-filter reconstruction reproduces the closed-form pixels") {
     for (id <- Seq(0L, 3L, 12L, 251L)) {
-      val img = Multimodal.HeaderCodec.decodePng(Multimodal.synthPngPayload(id)).get
-      assert((img.width, img.height, img.bpp) == ((16, 16, 3)))
+      val img = Png.decodeFull(Multimodal.synthPngPayload(id)).get
+      assert((img.width, img.height, img.channels) == ((16, 16, 3)))
       assert((0 until 768).forall(k =>
         (img.pixels(k) & 0xff) == Multimodal.synthPngPixel(id, k)))
     }
@@ -201,7 +261,7 @@ class MultimodalSpec extends SparkSpec {
 
   test("decodePng: agrees with the JDK's own ImageIO decoder pixel-for-pixel") {
     val p = Multimodal.synthPngPayload(77L)
-    val ours = Multimodal.HeaderCodec.decodePng(p).get
+    val ours = Png.decodeFull(p).get
     val theirs = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(p))
     assert(theirs.getWidth == 16 && theirs.getHeight == 16)
     for (y <- 0 until 16; x <- 0 until 16) {
@@ -223,123 +283,21 @@ class MultimodalSpec extends SparkSpec {
       0, 255, 128,
       77, 78, 80,
       5, 4, 200)
-    val raw = new Array[Byte](h * (1 + w))
-    for (r <- 0 until h) {
-      raw(r * (1 + w)) = r.toByte
-      for (i <- 0 until w) {
-        val x = px(r * w + i)
-        val a = if (i >= 1) px(r * w + i - 1) else 0
-        val b = if (r > 0) px((r - 1) * w + i) else 0
-        val c = if (r > 0 && i >= 1) px((r - 1) * w + i - 1) else 0
-        val pred = r match {
-          case 0 => 0
-          case 1 => a
-          case 2 => b
-          case 3 => (a + b) / 2
-          case 4 =>
-            val pp = a + b - c
-            val pa = math.abs(pp - a); val pb = math.abs(pp - b)
-            val pc = math.abs(pp - c)
-            if (pa <= pb && pa <= pc) a else if (pb <= pc) b else c
-        }
-        raw(r * (1 + w) + 1 + i) = ((x - pred) & 0xff).toByte
-      }
-    }
-    val defl = new java.util.zip.Deflater()
-    defl.setInput(raw); defl.finish()
-    val z = new Array[Byte](raw.length + 64)
-    var zn = 0
-    while (!defl.finished()) zn += defl.deflate(z, zn, z.length - zn)
-    defl.end()
-    val b = new Array[Byte](8 + 25 + 12 + zn + 12)
-    def pbe32(o: Int, v: Long): Unit =
-      for (i <- 0 until 4) b(o + i) = ((v >> (8 * (3 - i))) & 0xff).toByte
-    def ptype(o: Int, t: String): Unit =
-      for (i <- 0 until 4) b(o + i) = t.charAt(i).toByte
-    def crcAt(o: Int, from: Int, len: Int): Unit = {
-      val c = new java.util.zip.CRC32(); c.update(b, from, len)
-      pbe32(o, c.getValue)
-    }
-    Array(0x89, 'P'.toInt, 'N'.toInt, 'G'.toInt, 0x0d, 0x0a, 0x1a, 0x0a)
-      .zipWithIndex.foreach { case (v, i) => b(i) = v.toByte }
-    pbe32(8, 13L); ptype(12, "IHDR")
-    pbe32(16, w.toLong); pbe32(20, h.toLong)
-    b(24) = 8; b(25) = 0 // gray-8
-    crcAt(29, 12, 17)
-    pbe32(33, zn.toLong); ptype(37, "IDAT")
-    System.arraycopy(z, 0, b, 41, zn)
-    crcAt(41 + zn, 37, 4 + zn)
-    pbe32(45 + zn, 0L); ptype(49 + zn, "IEND")
-    crcAt(53 + zn, 49 + zn, 4)
-    val img = Multimodal.HeaderCodec.decodePng(b).get
-    assert((img.width, img.height, img.bpp) == ((w, h, 1)))
+    val img = Png.decodeFull(handPng(w, h, 0, 1, px, 0 until h)).get
+    assert((img.width, img.height, img.channels) == ((w, h, 1)))
     assert(img.pixels.map(_ & 0xff).toSeq == px.toSeq)
   }
 
   test("decodePng: RGBA and gray+alpha color types reconstruct exactly (ImageIO cross-check)") {
-    // hand-encode a 2×3 image in each remaining supported color type,
-    // one filter per row, and require both our decoder and the JDK's to
-    // read back the exact channel bytes
-    def encode(w: Int, h: Int, colorType: Int, bpp: Int, px: Array[Int],
-               filters: Seq[Int]): Array[Byte] = {
-      val stride = w * bpp
-      val raw = new Array[Byte](h * (1 + stride))
-      for (r <- 0 until h) {
-        val f = filters(r)
-        raw(r * (1 + stride)) = f.toByte
-        for (i <- 0 until stride) {
-          val x = px(r * stride + i)
-          val a = if (i >= bpp) px(r * stride + i - bpp) else 0
-          val b = if (r > 0) px((r - 1) * stride + i) else 0
-          val c = if (r > 0 && i >= bpp) px((r - 1) * stride + i - bpp) else 0
-          val pred = f match {
-            case 0 => 0
-            case 1 => a
-            case 2 => b
-            case 3 => (a + b) / 2
-            case 4 =>
-              val pp = a + b - c
-              val pa = math.abs(pp - a); val pb = math.abs(pp - b)
-              val pc = math.abs(pp - c)
-              if (pa <= pb && pa <= pc) a else if (pb <= pc) b else c
-          }
-          raw(r * (1 + stride) + 1 + i) = ((x - pred) & 0xff).toByte
-        }
-      }
-      val defl = new java.util.zip.Deflater()
-      defl.setInput(raw); defl.finish()
-      val z = new Array[Byte](raw.length + 64)
-      var zn = 0
-      while (!defl.finished()) zn += defl.deflate(z, zn, z.length - zn)
-      defl.end()
-      val out = new Array[Byte](8 + 25 + 12 + zn + 12)
-      def pbe32(o: Int, v: Long): Unit =
-        for (i <- 0 until 4) out(o + i) = ((v >> (8 * (3 - i))) & 0xff).toByte
-      def ptype(o: Int, t: String): Unit =
-        for (i <- 0 until 4) out(o + i) = t.charAt(i).toByte
-      def crcAt(o: Int, from: Int, len: Int): Unit = {
-        val cc = new java.util.zip.CRC32(); cc.update(out, from, len)
-        pbe32(o, cc.getValue)
-      }
-      Array(0x89, 'P'.toInt, 'N'.toInt, 'G'.toInt, 0x0d, 0x0a, 0x1a, 0x0a)
-        .zipWithIndex.foreach { case (v, i) => out(i) = v.toByte }
-      pbe32(8, 13L); ptype(12, "IHDR")
-      pbe32(16, w.toLong); pbe32(20, h.toLong)
-      out(24) = 8; out(25) = colorType.toByte
-      crcAt(29, 12, 17)
-      pbe32(33, zn.toLong); ptype(37, "IDAT")
-      System.arraycopy(z, 0, out, 41, zn)
-      crcAt(41 + zn, 37, 4 + zn)
-      pbe32(45 + zn, 0L); ptype(49 + zn, "IEND")
-      crcAt(53 + zn, 49 + zn, 4)
-      out
-    }
+    // hand-encode a 2×3 image in each remaining 8-bit color type, one
+    // filter per row, and require both our decoder and the JDK's to read
+    // back the exact channel bytes
     val rnd = new scala.util.Random(5)
     // RGBA (color type 6, bpp 4): alpha varies to catch channel swaps
     val rgba = Array.fill(2 * 3 * 4)(rnd.nextInt(256))
-    val pRgba = encode(2, 3, 6, 4, rgba, Seq(4, 1, 2))
-    val dRgba = Multimodal.HeaderCodec.decodePng(pRgba).get
-    assert((dRgba.width, dRgba.height, dRgba.bpp) == ((2, 3, 4)))
+    val pRgba = handPng(2, 3, 6, 4, rgba, Seq(4, 1, 2))
+    val dRgba = Png.decodeFull(pRgba).get
+    assert((dRgba.width, dRgba.height, dRgba.channels) == ((2, 3, 4)))
     assert(dRgba.pixels.map(_ & 0xff).toSeq == rgba.toSeq)
     val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(pRgba))
     for (y <- 0 until 3; x <- 0 until 2) {
@@ -352,12 +310,13 @@ class MultimodalSpec extends SparkSpec {
     }
     // gray+alpha (color type 4, bpp 2)
     val ga = Array.fill(2 * 3 * 2)(rnd.nextInt(256))
-    val dGa = Multimodal.HeaderCodec.decodePng(encode(2, 3, 4, 2, ga, Seq(0, 3, 4))).get
-    assert((dGa.width, dGa.height, dGa.bpp) == ((2, 3, 2)))
+    val dGa = Png.decodeFull(handPng(2, 3, 4, 2, ga, Seq(0, 3, 4))).get
+    assert((dGa.width, dGa.height, dGa.channels) == ((2, 3, 2)))
     assert(dGa.pixels.map(_ & 0xff).toSeq == ga.toSeq)
-    // unsupported: palette (type 3) must decline, not mis-decode
-    assert(Multimodal.HeaderCodec.decodePng(
-      encode(2, 3, 3, 1, Array.fill(6)(1), Seq(0, 0, 0))).isEmpty)
+    // palette (type 3) with no PLTE chunk to resolve the indices through
+    // must decline, not mis-decode
+    assert(Png.decodeFull(
+      handPng(2, 3, 3, 1, Array.fill(6)(1), Seq(0, 0, 0))).isEmpty)
   }
 
   test("decodePng/probe: corrupted CRC, huge dims, forged chunk length all rejected safely") {
@@ -365,27 +324,73 @@ class MultimodalSpec extends SparkSpec {
     val badCrc = good.clone()
     badCrc(30) = (badCrc(30) ^ 0xff).toByte // flip an IHDR CRC byte
     assert(Multimodal.HeaderCodec.probe(badCrc).isEmpty)
-    assert(Multimodal.HeaderCodec.decodePng(badCrc).isEmpty)
+    assert(Png.decodeFull(badCrc).isEmpty)
     val badDim = good.clone()
     badDim(16) = 0x80.toByte // width bit 31 set -> > Int.MaxValue
     assert(Multimodal.HeaderCodec.probe(badDim).isEmpty)
-    assert(Multimodal.HeaderCodec.decodePng(badDim).isEmpty)
+    assert(Png.decodeFull(badDim).isEmpty)
     // IDAT length forged to 2^32-1: the Long walk must terminate (clamp,
     // not wrap) and the decoder must reject the truncated chunk
     val badLen = good.clone()
     for (i <- 0 until 4) badLen(33 + i) = 0xff.toByte
     val h = Multimodal.HeaderCodec.probe(badLen)
     assert(h.isDefined && h.get.contentLen == badLen.length - 41)
-    assert(Multimodal.HeaderCodec.decodePng(badLen).isEmpty)
+    assert(Png.decodeFull(badLen).isEmpty)
     // truncated zlib stream (first IDAT only, second dropped) → reject;
     // the featurize path then falls back to located-span features
     val h1 = Multimodal.HeaderCodec.probe(good).get
     val truncated = java.util.Arrays.copyOfRange(good, 0,
       41 + h1.contentLen + 4) // sig+IHDR+IDAT1+its CRC, no IDAT2/IEND
-    assert(Multimodal.HeaderCodec.decodePng(truncated).isEmpty)
+    assert(Png.decodeFull(truncated).isEmpty)
     val f = Multimodal.HeaderCodec.decodeAndFeaturize(
       Multimodal.MediaRow(3L, "image", truncated, 16, 16, 0), 16)
     assert(f.kind == "png" && f.n_bytes == h1.contentLen)
+  }
+
+  test("HeaderCodec featurizes the decoded pixels of Adam7, palette and 16-bit PNGs") {
+    // ids 0-3 of the q390 corpus: Adam7 RGB8, palette, 16-bit gray,
+    // Adam7 palette — none of them a plain 8-bit non-interlaced image
+    for (id <- 0L to 3L) {
+      val p = Png.synthPngFullPayload(id)
+      val px = Png.decodeFull(p).get.pixels
+      var sum = 0L; var fnv = 1469598103934665603L
+      px.foreach { b => sum += b & 0xff; fnv = (fnv ^ (b & 0xff)) * 1099511628211L }
+      val f = Multimodal.HeaderCodec.decodeAndFeaturize(
+        Multimodal.MediaRow(id, "image", p, 0, 0, 0), 16)
+      assert((f.kind, f.frames_sampled) == (("png", 1)), s"id $id")
+      assert((f.n_bytes, f.checksum) == ((px.length, fnv)), s"id $id")
+      assert(math.abs(f.mean_byte - sum.toDouble / px.length) < 1e-12)
+    }
+  }
+
+  test("synthetic payload writers: CRC32 and length of ids 0-7 are pinned") {
+    // (length, CRC32) per id 0..7, taken before the PNG writers and the
+    // RIFF/BMP byte helpers were shared; any change to a payload byte
+    // moves the oracle-checked queries that read these corpora
+    val pinned: Seq[(String, Long => Array[Byte], Seq[(Int, Long)])] = Seq(
+      ("synthPngPayload", Multimodal.synthPngPayload, Seq(
+        (281, 643459334L), (282, 1673203762L), (284, 410840106L), (282, 1205717754L),
+        (282, 3235127069L), (283, 4286609936L), (280, 1477834633L), (283, 3686954103L))),
+      ("synthPngFullPayload", Png.synthPngFullPayload, Seq(
+        (452, 2256028508L), (270, 3336779855L), (197, 324559106L), (200, 2463730056L),
+        (454, 2256957223L), (260, 1418072941L), (199, 1509164680L), (200, 1046812112L))),
+      ("synthPayload image", Multimodal.synthPayload(_, "image"), Seq(
+        (246, 1185796542L), (246, 379041294L), (246, 1376465920L), (246, 534542482L),
+        (246, 1366624163L), (246, 2711780616L), (246, 1049214748L), (246, 2571244949L))),
+      ("synthPayload audio", Multimodal.synthPayload(_, "audio"), Seq(
+        (172, 1556393655L), (172, 777154421L), (172, 1357271522L), (172, 3452979867L),
+        (172, 2835678698L), (172, 3820439435L), (172, 1613718831L), (172, 2200892043L))),
+      ("synthG711Payload", Audio.synthG711Payload, Seq(
+        (108, 2299242959L), (108, 3117932739L), (108, 3514199722L), (108, 2770892680L),
+        (108, 1717701288L), (108, 4215476829L), (108, 2900203025L), (108, 3589366273L))),
+      ("synthAdpcmPayload", Audio.synthAdpcmPayload, Seq(
+        (96, 3711979039L), (96, 299780850L), (96, 2866205406L), (96, 3635769320L),
+        (96, 2463231182L), (96, 2907950748L), (96, 1790441999L), (96, 1489936785L))))
+    for ((name, write, pins) <- pinned; id <- 0 until 8) {
+      val b = write(id.toLong)
+      val crc = new java.util.zip.CRC32(); crc.update(b)
+      assert((b.length, crc.getValue) == pins(id), s"$name($id)")
+    }
   }
 
   test("HeaderCodec falls back to StubCodec whole-payload features on unknown bytes") {

@@ -478,6 +478,16 @@ class TimeSeriesSpec extends SparkSpec {
     assert(go == Map(1L -> -666666L, 2L -> 166666L))
   }
 
+  test("acf: a constant series yields NULL at every lag instead of dividing by zero") {
+    // 2 events in each of hours 0..3: every dev is 0, so den = 0 and the
+    // unguarded num·10⁶ div den raised DIVIDE_BY_ZERO under ANSI mode
+    val rows = (0 to 3).flatMap(h => (0 until 2).map(i =>
+      Row(new Timestamp(h * 3600000L + i * 1000L))))
+    val out = TimeSeries.acf(df("ts TIMESTAMP", rows), "ts", maxLag = 2)
+      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.isNullAt(2))).toMap
+    assert(out == Map(1L -> ((4L, true)), 2L -> ((4L, true))))
+  }
+
   test("trendFit: a perfect line recovers slope, intercept, R2 = 1 exactly") {
     // counts c = 1 + 2t over hours 0..3 → slope 2e6 ppm, intercept 1e6,
     // r2 1e6 (num=40, den=20, syy=80 — hand-traced moments)

@@ -621,7 +621,7 @@ class StreamsSpec extends SparkSpec {
       .format("memory").queryName("rate_anoms")
       .outputMode(OutputMode.Append).start()
     try {
-      val (b1, b2) = all.splitAt(all.indexWhere(_.ts.getHours >= 10))
+      val (b1, b2) = all.splitAt(all.indexWhere(_.ts.toLocalDateTime.getHour >= 10))
       mem.addData(b1: _*); q.processAllAvailable()
       mem.addData(b2: _*); q.processAllAvailable()
       val streamed = spark.table("rate_anoms").collect()
