@@ -22,7 +22,8 @@ import graft.functions.VectorFunctions
   * Spark's `div` and DuckDB's `//` both truncate toward zero, verified on
   * negative operands.
   *
-  * Scale shape per Lloyd's iteration:
+  * Scale shape per Lloyd's iteration (the same with every key of a
+  * subspace-keyed run, see `lloyd`):
   *   - assignment: corpus × BROADCAST centroid table (k·dim longs), the
   *     fused-codegen distance per pair, then `min(struct(dist, cid))` per
   *     vector — a PARTIAL aggregate, so map-side combine reduces the n·k
@@ -89,37 +90,58 @@ object Clustering {
     kmeansTrain(embeddings, seedMod, iterations, idCol, vecCol)._1
 
   /** [[kmeansAssign]] plus the trained centroid table itself
-    * (`(cid, quantized vector)`, sorted by cid) — the PQ codebook trainer
-    * needs the centroids, not just the assignment.
+    * (`(cid, quantized vector)`, sorted by cid). One unkeyed run of the
+    * [[lloyd]] trainer that [[pqCodebooks]] runs keyed by subspace.
     */
   def kmeansTrain(embeddings: DataFrame, seedMod: Int = 0, iterations: Int = 2,
                   idCol: String = "vec_id", vecCol: String = "embedding")
       : (DataFrame, Seq[(Long, Seq[Long])]) = {
-    // the iterative working set: quantize ONCE and pin it (the standard
-    // cache-the-training-input pattern) — every Lloyd's pass re-reads
-    // these blocks instead of re-scanning and re-quantizing the source
-    val q = embeddings.select(
+    val (assigned, cent) = lloyd(embeddings.select(
       col(idCol).cast(LongType).as("vec_id"),
-      quantize(col(vecCol)).as("qv"))
-      .pin()
+      quantize(col(vecCol)).as("qv")), 0, seedMod, iterations)
+    (assigned, cent.map(r => (r.getLong(0), r.getSeq[Long](1))))
+  }
 
-    val mod: Long = if (seedMod > 0) seedMod.toLong else adaptiveSeedMod(q.count())
+  /** Lloyd's k-means over the quantized corpus `(vec_id, qv)` — or, with
+    * `keys > 0`, over `keys` independent corpora stacked as
+    * `(s, vec_id, qv)` (`s` in `0 until keys`, every key holding the same
+    * vec_id set), trained as ONE loop with `s` added to every key: one
+    * pin, one count, one seed collect and one collect per iteration
+    * return every key's centroids, instead of one driver loop per key.
+    * Returns the final assignment `(s?, vec_id, cluster, dist)` and the
+    * trained centroids `(s?, cid, cv)` sorted by `(s, cid)`. Each key gets
+    * exactly the centroids an unkeyed run over its own slice gets: the
+    * seed modulus is `√` of the per-key row count and the seed rule
+    * `vec_id % mod = 0` is the same in every key. Unkeyed, the assignment
+    * crosses the corpus with the broadcast centroids; keyed, it is an
+    * equi-join on `s`.
+    */
+  private def lloyd(stack: DataFrame, keys: Int, seedMod: Int, iterations: Int)
+      : (DataFrame, Seq[Row]) = {
+    // the iterative working set, quantized by the caller: pin it ONCE (the
+    // standard cache-the-training-input pattern) — every Lloyd's pass
+    // re-reads these blocks instead of re-scanning and re-quantizing the
+    // source
+    val q = stack.pin()
+    val key = if (keys > 0) Seq("s") else Nil
+    def cols(names: String*): Seq[Column] = (key ++ names).map(col)
+    def sorted(rows: Array[Row]): Seq[Row] =
+      rows.sortBy(r => (if (keys > 0) r.getInt(0) else 0, r.getLong(key.size))).toSeq
 
-    // seed centroids: a deterministic id-spread subset, k ≈ n / mod
-    var cent: Array[(Long, Seq[Long])] =
-      q.filter(col("vec_id") % mod === 0)
-        .select(col("vec_id"), col("qv"))
-        .collect()
-        .map(r => (r.getLong(0), r.getSeq[Long](1)))
-        .sortBy(_._1)
+    val mod: Long =
+      if (seedMod > 0) seedMod.toLong else adaptiveSeedMod(q.count() / math.max(keys, 1))
 
-    val spark = embeddings.sparkSession
+    // seed centroids: a deterministic id-spread subset, k ≈ n / mod per key
+    var cent: Seq[Row] =
+      sorted(q.filter(col("vec_id") % mod === 0).select(cols("vec_id", "qv"): _*).collect())
 
-    // (vec_id, cluster, dist): corpus × broadcast centroids through the
-    // fused-codegen distance, reduced by a PARTIAL min(struct) aggregate —
-    // map-side combine collapses the n·k candidate stream to n rows
-    // before the single vec_id shuffle. Struct ordering is field-order
-    // lexicographic ⇒ (min dist, min cid) tie-break.
+    val spark = stack.sparkSession
+    val keyFields = key.map(StructField(_, IntegerType, nullable = false))
+
+    // (s?, vec_id, cluster, dist): corpus × broadcast centroids through
+    // the fused-codegen distance, reduced by a PARTIAL min(struct)
+    // aggregate. Struct ordering is field-order lexicographic ⇒ (min dist,
+    // min cid) tie-break.
     // NOTE (r13): the struct buffer forces SortAggregate; the
     // DECIMAL(38,0) `dist·2⁶⁴ + (cid + 2⁶³)` packing (HashAggregate-
     // eligible, identical argmin — the SuffixDedup packDP device)
@@ -129,31 +151,30 @@ object Clustering {
     // every one of the n·k candidate rows. Reverted — the packing pays
     // where the aggregate input is the dominant stream (the suffix
     // gram/position relations), not here.
-    def assigned: DataFrame =
-      q.crossJoin(broadcast(centroidFrame(spark,
-          cent.toSeq.map { case (cid, cv) => Row(cid, cv) })))
-        .select(col("vec_id"), col("cid"), l2sq(col("qv"), col("cv")).as("dist"))
-        .groupBy("vec_id")
+    def assigned: DataFrame = {
+      val c = broadcast(centroidFrame(spark, cent, keyFields: _*))
+      (if (keys > 0) q.join(c, key) else q.crossJoin(c))
+        .select(cols("vec_id", "cid") :+ l2sq(col("qv"), col("cv")).as("dist"): _*)
+        .groupBy(cols("vec_id"): _*)
         .agg(min(struct(col("dist"), col("cid"))).as("best"))
-        .select(col("vec_id"), col("best.cid").as("cluster"),
-          col("best.dist").as("dist"))
+        .select(cols("vec_id") ++ Seq(col("best.cid").as("cluster"),
+          col("best.dist").as("dist")): _*)
+    }
 
     for (_ <- 1 to iterations) {
       // per-(cluster, dim) truncated-mean update: join the assignment back
       // to the pinned corpus on vec_id, then ONE partial-agg shuffle
-      cent = q.join(assigned.select("vec_id", "cluster"), "vec_id")
-        .select(col("cluster"), posexplode(col("qv")).as(Seq("pos", "v")))
-        .groupBy("cluster", "pos")
+      cent = sorted(q.join(assigned.select(cols("vec_id", "cluster"): _*), key :+ "vec_id")
+        .select(cols("cluster") :+ posexplode(col("qv")).as(Seq("pos", "v")): _*)
+        .groupBy(cols("cluster", "pos"): _*)
         .agg(expr("sum(v) div count(1)").as("m"))
-        .groupBy("cluster")
+        .groupBy(cols("cluster"): _*)
         .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
           x => x.getField("m")).as("cv"))
-        .collect()
-        .map(r => (r.getLong(0), r.getSeq[Long](1)))
-        .sortBy(_._1)
+        .collect())
     }
 
-    (assigned, cent.toSeq)
+    (assigned, cent)
   }
 
   /** Driver-held centroids `(cid, cv)` as a DataFrame to broadcast, each
@@ -186,25 +207,36 @@ object Clustering {
     (0 until subspaces).map(s => slice(checked, s * sub + 1, sub))
   }
 
-  /** PQ codebooks over the corpus: one [[kmeansTrain]] codebook per
-    * subspace slice. Returns the codes `(neighbor_id, cs, code)` — the
-    * corpus as `subspaces` small integer codes per vector, the only form
-    * of it the query side reads — and the codeword table `(s, cid, cv)`.
+  /** PQ codebooks over the corpus, trained as ONE [[lloyd]] run keyed by
+    * subspace: the corpus is quantized once and stacked as
+    * `(s, vec_id, qv)`, key `s < subspaces` holding slice `s` (quantizing
+    * is element-wise, so a slice of the quantized vector is the quantized
+    * slice) and, with `coarse`, key `subspaces` holding the full vector —
+    * the IVF coarse quantizer, trained exactly as [[kmeansTrain]] trains
+    * it. Returns the final assignment `(s, vec_id, cluster, dist)` of
+    * every key, the codeword table `(s, cid, cv)` of the subspace keys,
+    * and the coarse centroids `(cid, cv)` (none without `coarse`).
     */
-  private def pqCodebooks(corpus: DataFrame, subspaces: Int, iterations: Int,
-                          idCol: String, vecCol: String): (DataFrame, DataFrame) = {
-    val parts = pqSlices(col(vecCol), subspaces).map { v =>
-      kmeansTrain(corpus.select(col(idCol).cast(LongType).as("vec_id"),
-        v.as("embedding")), 0, iterations)
-    }.zipWithIndex
-    val codes = parts.map { case ((a, _), s) =>
-      a.select(col("vec_id").as("neighbor_id"), lit(s).as("cs"), col("cluster").as("code"))
-    }.reduce(_ union _)
-    val codewords = centroidFrame(corpus.sparkSession,
-      parts.flatMap { case ((_, cents), s) => cents.map { case (cid, cv) => Row(s, cid, cv) } },
-      StructField("s", IntegerType, nullable = false))
-    (codes, codewords)
+  private[ext] def pqCodebooks(corpus: DataFrame, subspaces: Int, iterations: Int,
+                               idCol: String, vecCol: String, coarse: Boolean)
+      : (DataFrame, DataFrame, Seq[Row]) = {
+    val q = corpus.select(col(idCol).cast(LongType).as("vec_id"), quantize(col(vecCol)).as("qv"))
+    val keys = pqSlices(col("qv"), subspaces) ++ (if (coarse) Seq(col("qv")) else Nil)
+    val stack = q.select(col("vec_id"), posexplode(array(keys: _*)).as(Seq("s", "qv")))
+      .select("s", "vec_id", "qv")
+    val (assigned, cents) = lloyd(stack, keys.size, 0, iterations)
+    val (pq, cells) = cents.partition(_.getInt(0) < subspaces)
+    (assigned,
+      centroidFrame(corpus.sparkSession, pq, StructField("s", IntegerType, nullable = false)),
+      cells.map(r => Row(r.getLong(1), r.get(2))))
   }
+
+  /** The PQ codes `(neighbor_id, cs, code)` of a [[pqCodebooks]]
+    * assignment — the corpus as `subspaces` small integer codes per
+    * vector, the only form of it the query side reads.
+    */
+  private[ext] def pqCodes(assigned: DataFrame): DataFrame =
+    assigned.select(col("vec_id").as("neighbor_id"), col("s").as("cs"), col("cluster").as("code"))
 
   /** The asymmetric-distance (ADC) table `(qidCol, s, cid, d)`: each
     * query's exact integer L2² from its own subspace slice to every
@@ -255,7 +287,9 @@ object Clustering {
   def pqTopK(queries: DataFrame, corpus: DataFrame, k: Int, subspaces: Int = 4,
              iterations: Int = 2, idCol: String = "vec_id",
              vecCol: String = "embedding"): DataFrame = {
-    val (codes, codewords) = pqCodebooks(corpus, subspaces, iterations, idCol, vecCol)
+    val (assigned, codewords, _) =
+      pqCodebooks(corpus, subspaces, iterations, idCol, vecCol, coarse = false)
+    val codes = pqCodes(assigned)
     val qdist = adcTable(queries, codewords, subspaces, "query_id", idCol, vecCol)
     adcTopK(codes.join(qdist, codes("cs") === qdist("s") && codes("code") === qdist("cid")), k)
   }
@@ -380,25 +414,30 @@ object Clustering {
     * touches nProbe cells' code lists through one cell-keyed equi-join,
     * the codeword distance table is queries×k_pq·subspaces rows broadcast,
     * and the ADC sum partial-aggregates per (query, candidate). Training
-    * is the [[kmeansTrain]] driver loop, subspaces + 1 times.
+    * is ONE keyed [[pqCodebooks]] run: the coarse quantizer is the
+    * `subspaces + 1`-th key of the subspace-keyed k-means, so the corpus
+    * is stacked and pinned once and every Lloyd's iteration is one
+    * collect for all the codebooks, not one driver loop per codebook.
     */
   def ivfPqTopK(queries: DataFrame, corpus: DataFrame, k: Int, nProbe: Int = 3,
                 subspaces: Int = 4, iterations: Int = 2,
                 idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    // coarse quantizer over the full vectors
-    val (coarse, coarseCents) = kmeansTrain(corpus, 0, iterations, idCol, vecCol)
-    val (pqCodes, codewords) = pqCodebooks(corpus, subspaces, iterations, idCol, vecCol)
-    val codes = pqCodes.join(
-      coarse.select(col("vec_id").as("neighbor_id"), col("cluster").as("cell")), "neighbor_id")
+    // one training for the PQ codebooks and the coarse quantizer (key
+    // `subspaces`); the final assignment is pinned once, and both the codes
+    // and the coarse cells read the pinned rows
+    val (stacked, codewords, cellCents) =
+      pqCodebooks(corpus, subspaces, iterations, idCol, vecCol, coarse = true)
+    val assigned = stacked.pin()
+    val codes = pqCodes(assigned.filter(col("s") < subspaces)).join(
+      assigned.filter(col("s") === subspaces)
+        .select(col("vec_id").as("neighbor_id"), col("cluster").as("cell")), "neighbor_id")
 
     // each query probes its nProbe nearest coarse cells (integer L2²,
     // ties → lower cell id — the oracle's (dist, cid) row_number order)
     val qq = queries.select(col(idCol).cast(LongType).as("query_id"),
       quantize(col(vecCol)).as("qv"))
     val pw = Window.partitionBy("query_id").orderBy(col("d"), col("cid"))
-    val coarseCentDf = centroidFrame(corpus.sparkSession,
-      coarseCents.map { case (cid, cv) => Row(cid, cv) })
-    val probes = qq.crossJoin(broadcast(coarseCentDf))
+    val probes = qq.crossJoin(broadcast(centroidFrame(corpus.sparkSession, cellCents)))
       .select(col("query_id"), col("cid"), l2sq(col("qv"), col("cv")).as("d"))
       .withColumn("rn", row_number().over(pw)).filter(col("rn") <= nProbe)
       .select(col("query_id"), col("cid").as("cell"))

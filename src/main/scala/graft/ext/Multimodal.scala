@@ -202,18 +202,18 @@ object Multimodal {
       } else None
     }
 
+    /** A PNG is decoded first ([[Png.decodeFull]] declines any payload
+      * without the PNG signature at once), so its IHDR is parsed once;
+      * header-span features only if there is no pixel decode (a BMP, a
+      * WAV, or a truncated or corrupt PNG stream).
+      */
     def decodeAndFeaturize(r: MediaRow, frameEvery: Int): MediaFeatures =
-      probe(r.payload) match {
-        case Some(h) if h.fmt == "png" =>
-          // real decode first; header-span features only if the pixel
-          // decode fails (a truncated or corrupt stream)
-          Png.decodeFull(r.payload) match {
-            case Some(img) =>
-              featuresOver(r, "png", img.pixels, 0, img.pixels.length, 1)
-            case None => spanFeatures(r, h, frameEvery)
-          }
-        case Some(h) => spanFeatures(r, h, frameEvery)
-        case None => StubCodec.decodeAndFeaturize(r, frameEvery)
+      Png.decodeFull(r.payload) match {
+        case Some(img) => featuresOver(r, "png", img.pixels, 0, img.pixels.length, 1)
+        case None => probe(r.payload) match {
+          case Some(h) => spanFeatures(r, h, frameEvery)
+          case None => StubCodec.decodeAndFeaturize(r, frameEvery)
+        }
       }
 
     private def spanFeatures(r: MediaRow, h: ProbedHeader,

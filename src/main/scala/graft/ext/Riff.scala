@@ -3,8 +3,8 @@ package graft.ext
 /** Shared RIFF primitives (little-endian scalars + fourcc match) for
   * the RIFF-family container walks — WAV ([[Audio.parseWav]], the
   * [[Multimodal.HeaderCodec]] probe) and AVI ([[Video.parseAvi]]) read
-  * these identically, and the synthetic WAV/BMP payload writers write
-  * through the `put` side; one definition keeps a future bounds tweak
+  * these identically, and the synthetic WAV/BMP/AVI payload writers
+  * write through the `put` side; one definition keeps a future bounds tweak
   * from silently missing a copy.
   */
 private[ext] object Riff {

@@ -82,16 +82,19 @@ object Video {
     */
   private[ext] def synthMjpegPayload(id: Long): Array[Byte] = {
     val frames = (0 until 4).map(f => Jpeg.synthJpegPayload(4 * id + f))
-    val out = new java.io.ByteArrayOutputStream()
-    def w32(v: Long): Unit =
-      (0 until 4).foreach(i => out.write(((v >> (8 * i)) & 0xff).toInt))
-    def tag(s: String): Unit = s.foreach(c => out.write(c.toInt))
     def pad(n: Int): Int = n + (n & 1)
     val strlSize = 4 + 8 + 56 + 8 + 40
     val hdrlSize = 4 + 8 + 56 + 8 + strlSize
     val moviSize = 4 + frames.map(f => 8 + pad(f.length)).sum
     val idx1Size = 16 * frames.length
     val riffSize = 4 + 8 + hdrlSize + 8 + moviSize + 8 + idx1Size
+    // written at a cursor into the sized buffer; a frame's word-alignment
+    // pad byte is skipped over and stays zero
+    val b = new Array[Byte](riffSize + 8)
+    var o = 0
+    def w32(v: Long): Unit = { Riff.put32le(b, o, v); o += 4 }
+    def w16(v: Int): Unit = { Riff.put16le(b, o, v); o += 2 }
+    def tag(s: String): Unit = { Riff.putTag(b, o, s); o += 4 }
     tag("RIFF"); w32(riffSize); tag("AVI ")
     tag("LIST"); w32(hdrlSize); tag("hdrl")
     tag("avih"); w32(56)
@@ -108,13 +111,13 @@ object Video {
     w32(0); w32(0) // rcFrame
     tag("strf"); w32(40)
     w32(40); w32(16); w32(16) // biSize, width, height
-    out.write(1); out.write(0); out.write(24); out.write(0) // planes, bitCount
+    w16(1); w16(24) // planes, bitCount
     tag("MJPG"); w32(0); w32(0); w32(0); w32(0); w32(0) // biCompression...
     tag("LIST"); w32(moviSize); tag("movi")
     frames.foreach { f =>
       tag("00dc"); w32(f.length)
-      out.write(f, 0, f.length)
-      if ((f.length & 1) == 1) out.write(0) // word alignment
+      System.arraycopy(f, 0, b, o, f.length)
+      o += pad(f.length) // word alignment
     }
     tag("idx1"); w32(idx1Size)
     var off = 4 // offsets are relative to the 'movi' type fourcc
@@ -122,7 +125,7 @@ object Video {
       tag("00dc"); w32(0x10); w32(off); w32(f.length) // AVIIF_KEYFRAME
       off += 8 + pad(f.length)
     }
-    out.toByteArray
+    b
   }
 
   final case class MjpegStats(media_id: Long, n_frames: Int,

@@ -197,6 +197,70 @@ class ClusteringSpec extends SparkSpec {
     assert(q.contains("expects 64-dim vectors, got 32-dim"), q)
   }
 
+  test("pqCodebooks: the keyed training equals one kmeansTrain per slice and on the full vectors") {
+    import org.apache.spark.sql.functions.{col, slice}
+    // 24 vectors on a quarter grid: adaptive seeding (m = 8) seeds ids 0,
+    // 8 and 16 in every key; id 1 is the exact midpoint of ids 0 and 8, so
+    // it sits at equal distance from both seeds in every slice and in the
+    // full vector (the tie goes to the lower cid)
+    def v(i: Long) = Seq.tabulate(64)(j => ((i * 5 + j) % 4) * 0.25)
+    val mid = v(0).zip(v(8)).map { case (a, b) => (a + b) / 2 }
+    val corpus = vecs((0L until 24L).map(i => i -> (if (i == 1L) mid else v(i))): _*)
+    def assignment(a: org.apache.spark.sql.DataFrame) =
+      a.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq.sorted
+    def keyed(a: org.apache.spark.sql.DataFrame, s: Int) =
+      assignment(a.filter(col("s") === s).select("vec_id", "cluster", "dist"))
+    def rows(d: org.apache.spark.sql.DataFrame) =
+      d.collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSeq.sorted
+
+    val single = (0 until 4).map(s => Clustering.kmeansTrain(corpus.select(col("vec_id"),
+      slice(col("embedding"), s * 16 + 1, 16).as("embedding"))))
+    val full = Clustering.kmeansTrain(corpus)
+    val (stacked, codewords, cells) =
+      Clustering.pqCodebooks(corpus, 4, 2, "vec_id", "embedding", coarse = true)
+
+    val wantCodewords = single.zipWithIndex.flatMap { case ((_, cents), s) =>
+      cents.map { case (cid, cv) => (s, cid, cv) }
+    }
+    assert(codewords.collect().map(r => (r.getInt(0), r.getLong(1), r.getSeq[Long](2))).toSeq ==
+      wantCodewords)
+    val wantCodes = single.zipWithIndex.flatMap { case ((a, _), s) =>
+      assignment(a).map { case (id, cluster, _) => (s, id, cluster) }
+    }.sorted
+    assert(rows(Clustering.pqCodes(stacked.filter(col("s") < 4))
+      .select("cs", "neighbor_id", "code")) == wantCodes)
+    (0 until 4).foreach(s => assert(keyed(stacked, s) == assignment(single(s)._1), s"slice $s"))
+    assert(cells.map(r => (r.getLong(0), r.getSeq[Long](1))) == full._2)
+    assert(keyed(stacked, 4) == assignment(full._1))
+
+    // without the coarse key (the pqTopK training) the codebooks are the same
+    val (pqOnly, pqCodewords, noCells) =
+      Clustering.pqCodebooks(corpus, 4, 2, "vec_id", "embedding", coarse = false)
+    assert(noCells.isEmpty)
+    assert(pqCodewords.collect().map(r => (r.getInt(0), r.getLong(1), r.getSeq[Long](2))).toSeq ==
+      wantCodewords)
+    (0 until 4).foreach(s => assert(keyed(pqOnly, s) == assignment(single(s)._1), s"slice $s"))
+  }
+
+  test("ivfPqTopK builds with a pinned number of jobs: one keyed training, not one per codebook") {
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.functions.col
+    val emb = graft.Tables.embeddings(spark, "/root/testdata/sf0.001")
+    val q = emb.filter(col("vec_id") % 50 === 0)
+    val jobs = new AtomicInteger
+    listening(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    })(Clustering.ivfPqTopK(q, emb, k = 5))
+    // building the frame trains all five codebooks (the coarse quantizer
+    // and 4 PQ subspaces) as one loop: one pin of the stacked corpus, one
+    // count, one seed collect, one collect per Lloyd's iteration (2), and
+    // one pin of the final assignment, plus the AQE stage jobs those
+    // shuffles start: 19 measured. Training each codebook in its own
+    // loop, as five driver loops, started 80.
+    assert(jobs.get <= 19, s"${jobs.get} jobs to build ivfPqTopK")
+  }
+
   test("kCenterGreedy: farthest-point order with exact integer radii") {
     // 1-D layout (padded to 2 dims): 0, 10, 5, 0.001(dim2), 20
     val d = vecs(

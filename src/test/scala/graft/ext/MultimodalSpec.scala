@@ -365,7 +365,8 @@ class MultimodalSpec extends SparkSpec {
 
   test("synthetic payload writers: CRC32 and length of ids 0-7 are pinned") {
     // (length, CRC32) per id 0..7, taken before the PNG writers and the
-    // RIFF/BMP byte helpers were shared; any change to a payload byte
+    // RIFF/BMP byte helpers were shared (the MJPEG AVI's before its writer
+    // moved onto the Riff helpers); any change to a payload byte
     // moves the oracle-checked queries that read these corpora
     val pinned: Seq[(String, Long => Array[Byte], Seq[(Int, Long)])] = Seq(
       ("synthPngPayload", Multimodal.synthPngPayload, Seq(
@@ -385,7 +386,10 @@ class MultimodalSpec extends SparkSpec {
         (108, 1717701288L), (108, 4215476829L), (108, 2900203025L), (108, 3589366273L))),
       ("synthAdpcmPayload", Audio.synthAdpcmPayload, Seq(
         (96, 3711979039L), (96, 299780850L), (96, 2866205406L), (96, 3635769320L),
-        (96, 2463231182L), (96, 2907950748L), (96, 1790441999L), (96, 1489936785L))))
+        (96, 2463231182L), (96, 2907950748L), (96, 1790441999L), (96, 1489936785L))),
+      ("synthMjpegPayload", Video.synthMjpegPayload, Seq(
+        (1342, 4238673833L), (1340, 1359313482L), (1348, 1925607403L), (1344, 832187132L),
+        (1344, 1763054671L), (1342, 4037419763L), (1346, 4245132049L), (1344, 4022487115L))))
     for ((name, write, pins) <- pinned; id <- 0 until 8) {
       val b = write(id.toLong)
       val crc = new java.util.zip.CRC32(); crc.update(b)
