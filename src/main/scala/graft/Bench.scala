@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{bit_xor, col, count, expr, lit, xxhash64}
 object Bench {
 
@@ -29,52 +29,7 @@ object Bench {
       s.range(3200L).repartition(320).count(); () }))
 
   private def calibrate(spark: SparkSession): Seq[(String, Double)] =
-    calibrationProbes.map { case (name, fn) =>
-      val t0 = System.nanoTime()
-      fn(spark)
-      (name, (System.nanoTime() - t0) / 1e9)
-    }
-
-  /** Names a failure on stderr, as Verify does; stdout stays the one JSON
-    * line, and a failed rep still counts its query in `failed`. */
-  private def report(what: String, e: Throwable): Unit =
-    System.err.println(s"[bench] $what failed: ${e.getClass.getName}: ${e.getMessage}")
-
-  /** The bench session: `local[SPARK_GRAFT_CPUS]` (default 4), console
-    * logging at ERROR. */
-  private[graft] def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt)
-      .config("spark.ui.enabled", "false")
-      // a WARN mid-run (e.g. SparkStringUtils plan truncation) can land
-      // between stdout flushes and corrupt the single JSON result line the
-      // driver parses — BENCH_r03 came back "parsed: null" exactly this way.
-      // Nothing below ERROR may write to the console during a bench run.
-      .config("spark.sql.debug.maxToStringFields", "2000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark
-  }
-
-  /** Timed probe: whole-row xxhash64 checksum folded with bit_xor, NOT
-    * `count()`. Under `count()` ColumnPruning deletes any operator whose
-    * outputs the count never references — e.g. a composed as-of join's
-    * entire window collapses to union+filter, timing a plan that never
-    * computes the match (round-4 finding; SCALING.md). Hashing every
-    * output column forces the full operator semantics to execute; the
-    * probe itself costs O(output rows), negligible for every registered
-    * query. This makes BENCH_r04+ a step SLOWER than r01-r03 on queries
-    * whose tail was previously pruned — the honest number.
-    */
-  private[graft] def probe(df: DataFrame): Unit = checksum(df)
-
-  /** The probe's value: (row count, whole-row hash), an empty result
-    * hashing to 0. Order-insensitive, so two plans of one query compare
-    * equal whatever their partitioning. */
-  private[graft] def checksum(df: DataFrame): (Long, Long) = {
-    val r = df.select(count(lit(1)), bit_xor(xxhash64(df.columns.toSeq.map(col): _*))).head()
-    (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-  }
+    calibrationProbes.map { case (name, fn) => (name, Runner.timed(fn(spark))._2) }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -82,12 +37,15 @@ object Bench {
     // plan-cache interaction from neighboring queries in the long run)
     // cannot masquerade as a regression — the round-2 q08 lesson
     val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt)
-    val spark = session()
+    // SPARK_GRAFT_BENCH_ONLY=q55,q57 restricts the run to queries whose
+    // name starts with one of the comma-separated prefixes — for iterating
+    // on one query without paying the full suite
+    val named = Runner.select("SPARK_GRAFT_BENCH_ONLY")
     // runtime codegen-bailout detection (the q296 lesson: a silent
     // interpreted-mode fallback is invisible to plan strings and costs
     // up to 36×) — any query that executes interpreted is NAMED in the
     // bench record under "codegen_bailouts" and flips its codegen_ok
-    CodegenWatch.install()
+    val spark = Runner.session()
     // absorb session/codegen/parquet-footer/page-cache warmup outside the
     // timings: one scan per base table (the first timed query would
     // otherwise pay the whole corpus's cold IO), then run in stable name
@@ -95,33 +53,11 @@ object Bench {
     spark.range(1000000).selectExpr("sum(id)").collect()
     Seq("lineitem", "part", "orders", "customer", "supplier",
         "events", "documents", "embeddings").foreach { t =>
-      try spark.read.parquet(s"$sfDir/$t.parquet").count()
-      catch { case e: Throwable => report(s"warm-up scan of $t", e) }
+      Runner.attempt("bench", s"warm-up scan of $t")(spark.read.parquet(s"$sfDir/$t.parquet").count())
     }
     SparkEntry.queries.headOption.foreach { case (name, fn) =>
-      try probe(fn(spark, sfDir)) catch { case e: Throwable => report(s"warm-up $name", e) }
+      Runner.attempt("bench", s"warm-up $name")(Runner.checksum(fn(spark, sfDir)))
     }
-    // (name, best seconds, ok): a throwing query is reported in `failed` and
-    // its partial elapsed time excluded from `value` instead of silently
-    // counted; a query that fails any rep is failed (no silent best-of),
-    // and a failed rep's fast-abort elapsed never pollutes the reported min.
-    // Reps run as FULL PASSES over the suite (rep loop outside the query
-    // loop), not back-to-back per query: the round-3 driver run showed
-    // minutes-long transient machine load (co-resident verify/oracle
-    // processes) poisoning ALL consecutive reps of the early queries
-    // (q02 2.1s→28.2s while late queries improved) — spacing a query's
-    // reps minutes apart decorrelates the min from any one load spike
-    // SPARK_GRAFT_BENCH_ONLY=q55,q57 restricts the run to queries whose
-    // name starts with one of the comma-separated prefixes — for iterating
-    // on one query without paying the full suite
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-    val named = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.exists(n.startsWith)) }
-    // an empty selection (typo'd prefix, empty var) must fail loudly — a
-    // zero-query run would print total=0 with failed=[] and read as healthy
-    require(named.nonEmpty,
-      s"SPARK_GRAFT_BENCH_ONLY=${only.map(_.mkString(","))} matches no registered query")
     // calibration warmup (JIT/codegen for the probes themselves), then
     // the FIRST sample; MID lands after the middle pass, LAST after the
     // final pass — three spaced snapshots of machine state per run
@@ -129,53 +65,48 @@ object Bench {
     // Skipped entirely for SPARK_GRAFT_BENCH_ONLY runs: drift correction
     // only compares full-suite snapshots, and the probes would add tens
     // of seconds of fixed cost to the one-query iteration loop.
-    val calibrated = only.isEmpty
+    val calibrated = !sys.env.contains("SPARK_GRAFT_BENCH_ONLY")
     if (calibrated) calibrationProbes.foreach { case (name, fn) =>
-      try fn(spark) catch { case e: Throwable => report(s"calibration warm-up $name", e) } }
+      Runner.attempt("bench", s"calibration warm-up $name")(fn(spark)) }
     val calSamples = scala.collection.mutable.ArrayBuffer.empty[Seq[(String, Double)]]
     if (calibrated) calSamples += calibrate(spark)
     val midAfterPass = math.max(1, (reps + 1) / 2)
+    // Reps run as FULL PASSES over the suite (rep loop outside the query
+    // loop), not back-to-back per query: the round-3 suite run showed
+    // minutes-long transient machine load (co-resident verify/oracle
+    // processes) poisoning ALL consecutive reps of the early queries
+    // (q02 2.1s→28.2s while late queries improved) — spacing a query's
+    // reps minutes apart decorrelates the min from any one load spike
     val passes = (1 to reps).map { rep =>
       val pass = named.map { case (name, fn) =>
-        CodegenWatch.drain() // discard anything attributed to prior work
-        val t0 = System.nanoTime()
-        val ok = try { probe(fn(spark, sfDir)); true }
-          catch { case e: Throwable => report(s"$name rep $rep", e); false }
-        val codegenOk = CodegenWatch.drain().isEmpty
-        (name, (System.nanoTime() - t0) / 1e9, ok, codegenOk)
-      }
+        name -> Runner.attempt("bench", s"$name rep $rep")(Runner.checksum(fn(spark, sfDir)))
+      }.toMap
       if (calibrated && (rep == midAfterPass || rep == reps))
         calSamples += calibrate(spark)
       pass
     }
+    // (name, best seconds, ok): a throwing query is reported in `failed` and
+    // its partial elapsed time excluded from `value` instead of silently
+    // counted; a query that fails any rep is failed (no silent best-of),
+    // and a failed rep's fast-abort elapsed never pollutes the reported min.
     val results = named.map { case (name, _) =>
-      val times = passes.map(p => p.find(_._1 == name).get).map(t => (t._2, t._3))
-      val good = times.collect { case (t, true) => t }
-      (name, (if (good.nonEmpty) good else times.map(_._1)).min, times.forall(_._2))
+      val runs = passes.map(_(name))
+      val good = runs.filter(_.ok).map(_.seconds)
+      (name, (if (good.nonEmpty) good else runs.map(_.seconds)).min, runs.forall(_.ok))
     }
     // a query is codegen-clean only if NO rep recorded a fallback WARN
-    val bailed = named.map(_._1).filter { name =>
-      passes.exists(p => !p.find(_._1 == name).get._4)
-    }
-    val qs = results.map { case (k, v, _) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
+    val bailed = named.map(_._1).filter(name => passes.exists(_(name).bailouts.nonEmpty))
+    val qs = results.map { case (k, v, _) => s"${Runner.quote(k)}:$v" }.mkString("{", ",", "}")
     // per-query codegen_ok (directive: interpreted execution must be
     // visible in the bench record, not just wall-clock drift)
-    val cg = results.map { case (k, _, _) =>
-      s"\"" + k + "\":" + (!bailed.contains(k)) }.mkString("{", ",", "}")
-    val bailedJson = bailed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val failed = results.collect { case (k, _, false) => "\"" + k + "\"" }
-      .mkString("[", ",", "]")
+    val cg = results.map { case (k, _, _) => s"${Runner.quote(k)}:${!bailed.contains(k)}" }
+      .mkString("{", ",", "}")
+    val bailedJson = bailed.map(Runner.quote).mkString("[", ",", "]")
+    val failed = results.collect { case (k, _, false) => Runner.quote(k) }.mkString("[", ",", "]")
     val total = results.collect { case (_, v, true) => v }.sum
     // stop FIRST, then emit: executor/session shutdown must not interleave
-    // its own console output with the one line the driver machine-parses
+    // its own console output with the lines a reader machine-parses
     spark.stop()
-    // Two artifacts with distinct jobs (round-4 fix: the driver's tail
-    // window truncated the 225-entry per-query map off the FRONT of the
-    // stdout line, cutting the leading "metric" field → "parsed": null).
-    // stdout gets a SHORT line — total/failed/config, ~200 bytes, immune
-    // to tail truncation at any query count; the full per-query map lands
-    // only in BENCH_LOCAL.json on disk.
     // calibration object: probe name -> [first, mid, last] seconds (one
     // array entry per snapshot; drift tooling takes the median of all;
     // empty arrays on SPARK_GRAFT_BENCH_ONLY runs — drift never compares
@@ -184,33 +115,32 @@ object Bench {
       val samples = calSamples.map(_.find(_._1 == name).get._2)
       // Locale.ROOT: the f-interpolator is locale-dependent and a
       // decimal-comma locale would corrupt the JSON line
-      "\"" + name + "\":" + samples
+      Runner.quote(name) + ":" + samples
         .map(s => String.format(java.util.Locale.ROOT, "%.4f",
           Double.box(s)))
         .mkString("[", ",", "]")
     }.mkString("{", ",", "}")
     val fileLine = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failed,"codegen_ok":$cg,"codegen_bailouts":$bailedJson,"reps":$reps,"probe":"xxhash64-checksum","calibration":$calJson,"sf":"$sfDir"}"""
-    try java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_LOCAL.json"),
-      (fileLine + "\n").getBytes("UTF-8"))
-    catch { case e: Throwable => report("writing BENCH_LOCAL.json", e) }
-    // r13 (additions-only, VERDICT #2): the per-query map ALSO rides the
-    // stable result FILE so the driver's PERF comparison can read
-    // per-query seconds without depending on the gitignore state of
-    // BENCH_LOCAL.json. stdout stays the SHORT line — a 391-entry map
-    // (~14 KB) would overflow the driver's 2000-char stdout tail window
-    // and truncate the leading "metric" field off the front (the exact
-    // round-4 "parsed": null failure), losing the suite total.
-    val stdoutLine = s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"failed":$failed,"codegen_bailouts":$bailedJson,"reps":$reps,"probe":"xxhash64-checksum","calibration":$calJson,"sf":"$sfDir","queries_file":"BENCH_LOCAL.json","queries":$qs}"""
+    write("BENCH_LOCAL.json", fileLine)
+    // A reader may keep only a ~2000-char tail of stdout and parse its
+    // last line, so the total line stays SHORT and LAST (round-4 fix: a
+    // 225-entry map inline on that line got its leading "metric" field cut
+    // off the front → "parsed": null). The per-query map rides:
+    //  - on its own stdout line directly before the total line, where a
+    //    tail cut can shorten only the map line, never the total line;
+    //  - in BENCH_RESULT.json (the total line plus the map, one object)
+    //    and in BENCH_LOCAL.json (plus codegen_ok), stable files a reader
+    //    needs no log-prefix stripping for (BENCH_r04/r05 came back
+    //    "parsed": null when the stdout line carried sbt's "[info] ").
     val stdoutShort = s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"failed":$failed,"codegen_bailouts":$bailedJson,"reps":$reps,"probe":"xxhash64-checksum","calibration":$calJson,"sf":"$sfDir","queries_file":"BENCH_LOCAL.json"}"""
-    // Belt-and-braces for the driver's parser (BENCH_r04/r05 both came
-    // back "parsed": null — the stdout line carried sbt's "[info] "
-    // prefix): the exact stdout object also lands in a stable file the
-    // driver (or a human) can read without any log-prefix stripping.
-    try java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_RESULT.json"),
-      (stdoutLine + "\n").getBytes("UTF-8"))
-    catch { case e: Throwable => report("writing BENCH_RESULT.json", e) }
+    write("BENCH_RESULT.json", stdoutShort.dropRight(1) + s""","queries":$qs}""")
     System.out.flush(); System.err.flush()
+    println(qs)
     println(stdoutShort)
     System.out.flush()
   }
+
+  private def write(file: String, line: String): Unit =
+    Runner.attempt("bench", s"writing $file")(
+      java.nio.file.Files.write(java.nio.file.Paths.get(file), (line + "\n").getBytes("UTF-8")))
 }

@@ -21,9 +21,9 @@ import org.apache.logging.log4j.core.config.{LoggerConfig, Property}
   * wall-clock drift.
   *
   * This watch attaches one log4j2 appender to those loggers at WARN and
-  * records every fallback message into a concurrent queue. Bench and
-  * Verify drain the queue around each query, so a bailing query is NAMED
-  * in the round record (`codegen_ok` per query in BENCH_LOCAL.json;
+  * records every fallback message into a concurrent queue.
+  * [[Runner.attempt]] drains the queue before and after each query it
+  * runs, so a bailing query is NAMED in the round record (`codegen_ok` per query in BENCH_LOCAL.json;
   * `codegen_bailouts.json` in the Verify dump, gated red by
   * tools/gate.sh).
   *

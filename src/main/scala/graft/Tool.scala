@@ -3,13 +3,14 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardOpenOption}
 import org.apache.spark.ListenerBusDrain
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
+import Runner.{checksum, named, timed}
 
 /** Developer commands over the registered queries ([[SparkEntry.queries]]),
-  * sharing one session ([[Bench.session]]), one checksum
-  * ([[Bench.checksum]]) and one query selection:
+  * on the session, checksum and exact-name selection of [[Runner]]
+  * ([[Runner.session]], [[Runner.checksum]], [[Runner.named]]):
   *
   * {{{
   *   graft.Tool time  <sfDir> [--reps N] (<query>... | --top N)
@@ -54,10 +55,8 @@ object Tool {
     "       graft.Tool trace <sfDir> <outDir> <query>...",
     "       graft.Tool ab    <sfDir> <key>=<v1>|<v2> <query>...").mkString("\n")
 
-  private type Query = (SparkSession, String) => DataFrame
-
   def main(args: Array[String]): Unit = {
-    val spark = Bench.session()
+    val spark = Runner.session()
     val code = try run(spark, args) finally spark.stop()
     sys.exit(code)
   }
@@ -71,15 +70,6 @@ object Tool {
     case _ => System.err.println(Usage); 2
   }
 
-  /** The named registered queries in the given order, or every one sorted
-    * by name when `names` is empty; an unknown name fails before any runs. */
-  private def select(names: Seq[String]): Seq[(String, Query)] = {
-    val unknown = names.filterNot(SparkEntry.queries.contains)
-    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
-    val picked = if (names.isEmpty) SparkEntry.queries.keys.toSeq.sorted else names
-    picked.map(n => n -> SparkEntry.queries(n))
-  }
-
   /** Removes `flag value` from `args`, returning the value if present. */
   private def option(args: List[String], flag: String): (Option[String], List[String]) =
     args.indexOf(flag) match {
@@ -88,12 +78,6 @@ object Tool {
         require(i + 1 < args.length, s"$flag needs a value")
         (Some(args(i + 1)), args.patch(i, Nil, 2))
     }
-
-  private def timed[A](f: => A): (A, Double) = {
-    val t0 = System.nanoTime()
-    val a = f
-    (a, (System.nanoTime() - t0) / 1e9)
-  }
 
   /** Per-query seconds of the last `graft.Bench` run in the working
     * directory (its flat `"name":seconds` map), empty when there is none. */
@@ -116,9 +100,9 @@ object Tool {
     }
     val n = reps.fold(3)(_.toInt)
     require(n >= 1, "--reps must be at least 1")
-    select(targets).foreach { case (name, fn) =>
-      Bench.checksum(fn(spark, sfDir)) // warm-up
-      val ((rows, _), best) = (1 to n).map(_ => timed(Bench.checksum(fn(spark, sfDir)))).minBy(_._2)
+    named(targets).foreach { case (name, fn) =>
+      checksum(fn(spark, sfDir)) // warm-up
+      val ((rows, _), best) = (1 to n).map(_ => timed(checksum(fn(spark, sfDir)))).minBy(_._2)
       val prev = last.get(name).fold("")(s => f"  (last bench: $s%.2f s)")
       println(f"TIME $name%-28s $best%8.3f s  $rows%,d rows$prev")
     }
@@ -127,7 +111,7 @@ object Tool {
 
   private def plan(spark: SparkSession, sfDir: String, args: List[String]): Int = {
     val finalPlan = args.contains("--final")
-    select(args.filterNot(_ == "--final")).foreach { case (name, fn) =>
+    named(args.filterNot(_ == "--final")).foreach { case (name, fn) =>
       val df = fn(spark, sfDir)
       println(s"\n## $name\n")
       if (finalPlan) {
@@ -141,7 +125,7 @@ object Tool {
   private def trace(spark: SparkSession, sfDir: String, outDir: String,
                     names: Seq[String]): Int = {
     val dir = Files.createDirectories(Paths.get(outDir))
-    select(names).foreach { case (name, fn) =>
+    named(names).foreach { case (name, fn) =>
       val out = dir.resolve(s"${name}_trace.txt")
       Files.deleteIfExists(out)
       var n = 0
@@ -161,7 +145,7 @@ object Tool {
       // concurrent job would interleave into this query's file
       spark.listenerManager.register(listener)
       try {
-        Bench.probe(fn(spark, sfDir))
+        checksum(fn(spark, sfDir))
         // listener events post asynchronously: deliver every one posted
         // so far before the listener goes
         ListenerBusDrain(spark.sparkContext)
@@ -178,11 +162,11 @@ object Tool {
       case _ => throw new IllegalArgumentException(s"ab needs <key>=<v1>|<v2>, got '$arms'")
     }
     val prior = spark.conf.getOption(key)
-    val parity = try select(names).map { case (name, fn) =>
+    val parity = try named(names).map { case (name, fn) =>
       val results = values.map { v =>
         spark.conf.set(key, v)
-        Bench.checksum(fn(spark, sfDir)) // cold run, untimed
-        val (cs, warm) = timed(Bench.checksum(fn(spark, sfDir)))
+        checksum(fn(spark, sfDir)) // cold run, untimed
+        val (cs, warm) = timed(checksum(fn(spark, sfDir)))
         (v, cs, warm)
       }
       val ok = results.map(_._2).distinct.size == 1

@@ -1,7 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.{ArrayType, DecimalType, MapType, StructType}
 import java.nio.file.{Files, Paths}
+import Runner.quote
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -40,64 +40,39 @@ object Verify {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // name any query whose execution silently fell back to interpreted
-    // mode (codegen bailout) — dumped as codegen_bailouts.json below and
-    // gated red by tools/gate.sh
-    CodegenWatch.install()
-    new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_VERIFY_ONLY=q72,q73 → dump (and list oracles for) only
     // queries with a matching name prefix — local iteration aid, same
     // contract as the bench's SPARK_GRAFT_BENCH_ONLY; unset for the driver
-    val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-    def selected(name: String) = only.forall(_.exists(name.startsWith))
-    val bailouts = Seq.newBuilder[(String, Seq[String])]
-    SparkEntry.queries.foreach { case (name, fn) =>
-      if (selected(name)) {
-        CodegenWatch.drain() // anything stale belongs to the previous query
-        try {
-          val out = fn(spark, sfDir)
-          // fail THIS query loudly (missing output → red driver row)
-          // rather than shipping a shape the oracle compare cannot hash
-          assertHarnessSafe(name, out.schema)
-          out.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
-        } catch { case e: Throwable =>
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        }
-        val msgs = CodegenWatch.drain()
-        if (msgs.nonEmpty) bailouts += name -> msgs.distinct.take(3)
+    val selected = Runner.select("SPARK_GRAFT_VERIFY_ONLY")
+    val spark = Runner.session()
+    new java.io.File(outDir).mkdirs()
+    // name any query whose execution silently fell back to interpreted
+    // mode (codegen bailout) — dumped as codegen_bailouts.json below and
+    // gated red by tools/gate.sh
+    val bailouts = selected.flatMap { case (name, fn) =>
+      val run = Runner.attempt("verify", name) {
+        val out = fn(spark, sfDir)
+        // fail THIS query loudly (missing output → a red oracle row)
+        // rather than shipping a shape the oracle compare cannot hash
+        assertHarnessSafe(name, out.schema)
+        out.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
       }
+      if (run.bailouts.isEmpty) None else Some(name -> run.bailouts.distinct.take(3))
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     // {SF_DIR} templating: file-addressed oracles (q227's
     // parquet_file_metadata) need the data directory, which only this
     // dump knows; the driver runs the oracle against the same directory
     // it invoked Verify with, so substituting here keeps them in lockstep
+    val names = selected.map(_._1).toSet
     val json = SparkEntry.oracleSql
-      .filter { case (k, _) => selected(k) }
-      .map { case (k, v) => s"${q(k)}: ${q(v.replace("{SF_DIR}", sfDir))}" }
+      .filter { case (k, _) => names(k) }
+      .map { case (k, v) => s"${quote(k)}: ${quote(v.replace("{SF_DIR}", sfDir))}" }
       .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // {} when every query executed compiled — the healthy state gate.sh
     // asserts; a named entry is a q296-class silent 36× slowdown
-    val bailJson = bailouts.result()
-      .map { case (k, ms) => s"${q(k)}: ${ms.map(q).mkString("[", ",", "]")}" }
+    val bailJson = bailouts
+      .map { case (k, ms) => s"${quote(k)}: ${ms.map(quote).mkString("[", ",", "]")}" }
       .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/codegen_bailouts.json"), bailJson)
     if (bailJson != "{}")
