@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.ext.{Dedup, Similarity, Sketch, TextAnalysis, TfIdf}
+import graft.ext.Pin.PinOps
 import graft.transform.{Aggregate, Clean, Enrich, Inventory}
 
 /** Driver contract — see SURVEY.md §7 and the builder prompt.
@@ -423,7 +424,7 @@ object SparkEntry {
       // scale the scan arrives in thousands of splits and this repartition
       // is a no-op to omit.
       val vecs = TfIdf.tfidfVectors(Tables.documents(s, d), vocabSize = 64)
-        .localCheckpoint(true) // one-shot: query AND corpus sides read it
+        .pin() // one-shot: query AND corpus sides read it
       val corpus = vecs.repartition(s.sparkContext.defaultParallelism)
       Similarity.bruteForceTopK(vecs.filter(col("doc_id") % 10 === 0), corpus,
         k = 5, idCol = "doc_id", vecCol = "tfidf")
@@ -479,7 +480,7 @@ object SparkEntry {
       val tokCounts = docs.select(
         explode(TextAnalysis.tokens(lower(col("text")))).as("token"))
         .groupBy("token").agg(count(lit(1)).as("n"))
-        .localCheckpoint(true) // one-shot: sketch build AND exact arm share it
+        .pin() // one-shot: sketch build AND exact arm share it
       val sketch = Sketch.countMinSketchWeighted(
         tokCounts, Dedup.encodeToken(col("token")), col("n"))
       val top = tokCounts.orderBy(col("n").desc, col("token")).limit(50)
@@ -2483,7 +2484,7 @@ object SparkEntry {
         .groupBy("user_id")
         .agg(sum(when(col("h") < col("hs"), 1L).otherwise(0L)).as("c1"),
           sum(when(col("h") >= col("hs"), 1L).otherwise(0L)).as("c2"))
-        .localCheckpoint(true) // one-shot: feeds both sketches, probes, exact arm
+        .pin() // one-shot: feeds both sketches, probes, exact arm
       val cs1 = graft.ext.Sketch.countSketchWeighted(
         halves, col("user_id"), col("c1"), width = 64)
       val cs2 = graft.ext.Sketch.countSketchWeighted(

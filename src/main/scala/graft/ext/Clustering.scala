@@ -448,20 +448,6 @@ object Clustering {
       cand("query_id") === qdist("qid")), k)
   }
 
-  /** Frees the storage blocks behind an eagerly `localCheckpoint`ed frame.
-    * `Dataset.unpersist` is a no-op for checkpoint data (not a cacheManager
-    * entry) and `Dataset.rdd` derives a NEW RDD, so the only handle on the
-    * materialized blocks is the `LogicalRDD` leaf's backing RDD. Dropping
-    * the reference works too, but only frees at the ContextCleaner's next
-    * periodic GC — this releases a superseded round's blocks immediately.
-    */
-  private[ext] def unpersistCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.logical match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => () // not a checkpoint leaf — nothing materialized to free
-    }
-
   /** k-center greedy coreset selection (farthest-point traversal —
     * Gonzalez 1985's 2-approximation; the active-learning core-set
     * selector of Sener & Savarese 2018, arXiv:1708.00489, public paper):
@@ -521,7 +507,7 @@ object Clustering {
         chosen += ((id, d))
         if (chosen.size < k) { // last round needs no fold — skip the pass
           // unpersist the superseded round's checkpoint AFTER the new one
-          // materializes (eager localCheckpoint) — otherwise up to k full
+          // materializes (eager pin) — otherwise up to k full
           // (id, qv, min_d) copies pile up in block storage until the
           // ContextCleaner's next periodic GC, the opposite of the
           // O(1)-storage claim above
@@ -529,12 +515,12 @@ object Clustering {
           cur = cur.withColumn("min_d",
             least(col("min_d"), l2sq(col("qv"), typedLit(v))))
             .pin()
-          unpersistCheckpoint(prev)
+          Pin.release(prev)
         }
       }
     }
-    unpersistCheckpoint(cur)
-    unpersistCheckpoint(q)
+    Pin.release(cur)
+    Pin.release(q)
     import spark.implicits._
     chosen.toSeq.zipWithIndex
       .map { case ((id, d), r) => (r.toLong, id, d) }

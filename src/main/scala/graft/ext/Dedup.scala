@@ -657,7 +657,7 @@ object Dedup {
     val j = a.select(col(idCol).as("__id"), col(clusterCol).as("__ca"))
       .join(b.select(col(idCol).as("__id"), col(clusterCol).as("__cb")),
         Seq("__id"))
-      .localCheckpoint(true) // one-shot: four independent aggregates read it
+      .pin() // one-shot: four independent aggregates read it
     def pairSum(groups: Seq[String], out: String) =
       j.groupBy(groups.map(col): _*).agg(count(lit(1)).as("n"))
         .agg(coalesce(sum(expr("n * (n - 1) div 2")), lit(0L)).as(out))

@@ -825,7 +825,7 @@ object Funnel {
         lit("__start")))
       .withColumn("dst", when(col("event_type") === convType, lit("__conv"))
         .otherwise(col("event_type")))
-      .localCheckpoint(true) // one-shot: feeds transitions AND the null-end rows
+      .pin() // one-shot: feeds transitions AND the null-end rows
     val ends = j.filter(col("cv").isNull)
       .groupBy("user_id")
       .agg(max(struct(col("rn"), col("dst"))).as("m"))
@@ -835,7 +835,7 @@ object Funnel {
     val tppm = trans
       .join(trans.groupBy("src").agg(sum("cnt").as("out")), "src")
       .select(col("src"), col("dst"), expr(s"cnt * $scale div out").as("t_ppm"))
-      .localCheckpoint(true) // one-shot: variant cross AND base chain share it
+      .pin() // one-shot: variant cross AND base chain share it
     val spark = events.sparkSession
     val variants = tppm.select(col("src").as("removed"))
       .filter(col("removed") =!= "__start").distinct()
@@ -844,7 +844,7 @@ object Funnel {
     // removal semantics — mass flows to failure implicitly
     val tv = tppm.crossJoin(variants)
       .filter(col("dst") =!= col("removed"))
-      .localCheckpoint(true) // one-shot: every chain round re-joins this fixed relation
+      .pin() // one-shot: every chain round re-joins this fixed relation
     var p = tv.select(col("removed"), col("src").as("st"), lit(0L).as("p"))
       .distinct()
     for (_ <- 1 to rounds) {
@@ -857,8 +857,8 @@ object Funnel {
         .groupBy(col("removed"), col("src"))
         .agg(expr(s"sum(term) div $scale").as("p"))
         .withColumnRenamed("src", "st")
-        .pin() // per-round state: reliable under spark.graft.checkpointDir
-      Clustering.unpersistCheckpoint(prev) // no-op on the uncached seed
+        .pin() // per-round state: reliable under spark.checkpoint.dir
+      Pin.release(prev) // no-op on the uncached seed
     }
     val start = p.filter(col("st") === "__start")
     val base = start.filter(col("removed") === "__none")

@@ -705,11 +705,11 @@ object Graph {
         .agg(max(col(rCols.head)).as(rCols.head),
           rCols.tail.map(c => max(col(c)).as(c)): _*)
         .pin()
-      Clustering.unpersistCheckpoint(regs)
+      Pin.release(regs)
       regs = next
       out = out.unionByName(hist(t, regs))
     }
-    Clustering.unpersistCheckpoint(regs)
+    Pin.release(regs)
     out
   }
 
@@ -776,10 +776,10 @@ object Graph {
     var a: DataFrame = null
     for (_ <- 1 to iterations) {
       val aNext = halfStep(h, "h", "src", "dst", "a")
-      if (a != null) Clustering.unpersistCheckpoint(a) // superseded round
+      if (a != null) Pin.release(a) // superseded round
       a = aNext
       val hNext = halfStep(a, "a", "dst", "src", "h")
-      Clustering.unpersistCheckpoint(h) // aNext/hNext are eager — safe
+      Pin.release(h) // aNext/hNext are eager — safe
       h = hNext
     }
     // the final h and a checkpoints stay live — the result reads them

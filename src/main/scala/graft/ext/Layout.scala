@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import graft.ext.Pin.PinOps
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Physical-layout effectiveness audits.
@@ -126,19 +127,19 @@ object Layout {
     val files = base.crossJoin(broadcast(b))
       .select(col("key"),
         expr(s"(ord - o0) * ${nFiles}L div (o1 - o0 + 1)").as("file"))
-      .localCheckpoint(true) // one-shot: reused: envelopes, bits, probes, exact
+      .pin() // one-shot: reused: envelopes, bits, probes, exact
     def blooms(c: Column) = array((0 until k).map(i =>
       Dedup.mixHash(c, Sketch.BloomJ + 2 * i) % mBits): _*)
     val env = files.groupBy("file")
       .agg(min("key").as("kmin"), max("key").as("kmax"))
-    val fk = files.distinct().localCheckpoint(true) // one-shot: bloom bits AND envelopes read it
+    val fk = files.distinct().pin() // one-shot: bloom bits AND envelopes read it
     val bits = fk.select(col("file"), explode(blooms(col("key"))).as("pos"))
       .distinct()
-      .localCheckpoint(true) // one-shot: probe join AND fill-rate stats share it
+      .pin() // one-shot: probe join AND fill-rate stats share it
     val probes = files.select("key").distinct()
       .filter(col("key") % probeMod === probeResidue)
       .select(col("key").as("p"))
-      .localCheckpoint(true) // one-shot: bloom probe AND exact arm share it
+      .pin() // one-shot: bloom probe AND exact arm share it
     val pPos = probes.select(col("p"), explode(blooms(col("p"))).as("pos"))
     val bloomOpen = pPos.join(bits, "pos")
       .groupBy("p", "file").agg(count(lit(1)).as("nh"))
@@ -250,14 +251,14 @@ object Layout {
     // one-shot: the keys feed every layout's sort plus two probe panels —
     // pin them once so the scan/mask runs once
     val base = (if (hilbert) withHilbert(masked, "ka", "kb", bits) else masked)
-      .localCheckpoint(true)
+      .pin()
     val n = base.count()
     require(n > 0, s"$op needs a non-empty table")
 
     val layouts = Seq("linear_a" -> col("ka"), "zorder" -> col("z")) ++
       (if (hilbert) Seq("hilbert" -> col("h")) else Nil)
     val env = layoutEnvelopes(base, layouts, nFiles, n)
-      .localCheckpoint(true) // one-shot: layouts × 2 dims of range joins below
+      .pin() // one-shot: layouts × 2 dims of range joins below
 
     def hits(dim: String, probes: DataFrame, lo: String, hi: String): DataFrame =
       probes.join(env, col("p") >= col(lo) && col("p") <= col(hi))

@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.ext.Pin.PinOps
 
 /** In-engine trainable linear classifier — a batch perceptron with mean
   * updates over the native text-stats features, every step exact integer
@@ -71,20 +72,13 @@ object LinearModel {
       (col("f3") - mu.getLong(2)).as("f3"))
   }
 
-  private def unpersistCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.logical match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
-
   private def marginExpr(w: Array[Long]): Column =
     (0 until NumFeatures).map(k => lit(w(k)) * col(s"f$k")).reduce(_ + _)
 
   private[ext] def train(docs: DataFrame, positive: Column, epochs: Int,
                          textCol: String): Array[Long] = {
     require(epochs >= 1, "epochs must be >= 1")
-    val f = featureFrame(docs, positive, textCol).localCheckpoint(true) // one-shot: every epoch rescans fixed features
+    val f = featureFrame(docs, positive, textCol).pin() // one-shot: every epoch rescans fixed features
     var w = Array.fill(NumFeatures)(0L)
     // POCKET (Gallant 1990): the mean step oscillates on non-separable
     // data and the endpoint can land on a bad phase (observed: the
@@ -117,7 +111,7 @@ object LinearModel {
     }
     val mFinal = f.agg(missCountExpr(w)).head().getLong(0)
     if (mFinal < pocketMiss) pocket = w
-    unpersistCheckpoint(f)
+    Pin.release(f)
     pocket
   }
 

@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.ext.Pin.PinOps
 
 /** Multimodal-column plumbing (extension surface): image/audio/video travel
   * as opaque `binary` columns with typed metadata; decode/feature-extract
@@ -380,7 +381,7 @@ object Multimodal {
     */
   def frameDupStats(docs: DataFrame)(implicit spark: SparkSession): DataFrame = {
     val f = mediaFrames(docs).select(col("media_id"), col("checksum"))
-      .localCheckpoint(true) // one-shot: fp totals AND per-media rollup share it
+      .pin() // one-shot: fp totals AND per-media rollup share it
     val byFp = f.groupBy("checksum")
       .agg(count_distinct(col("media_id")).as("n_media"))
     f.join(byFp, "checksum")

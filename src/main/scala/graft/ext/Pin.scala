@@ -1,34 +1,36 @@
 package graft.ext
 
-import org.apache.spark.SparkContext
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 
-/** Per-round state pinning for the iterative tier (SuffixDedup's
-  * prefix-doubling, connected components, k-core peel, PageRank/HITS,
-  * BPE merges, k-means/k-center passes, greedy MMR) — one shared switch
-  * between the two Spark checkpoint postures:
+/** Every eager materialization in graft: the iterative tier's per-round
+  * state (SuffixDedup's prefix-doubling, connected components, k-core
+  * peel, PageRank/HITS, BPE merges, k-means/k-center passes, greedy MMR)
+  * and the one-shot pins of a relation several consumers read. One
+  * switch between the two Spark checkpoint postures, decided by the
+  * SparkContext's own checkpoint directory:
   *
-  *   - DEFAULT (`spark.graft.checkpointDir` unset): eager
-  *     `localCheckpoint` — blocks live on executor storage, zero
-  *     distributed-FS traffic, the right call for bench parity and any
-  *     single-JVM run. NON-RESILIENT: lineage is truncated, so losing an
-  *     executor loses blocks nothing can recompute and the job dies.
-  *   - RELIABLE (`spark.graft.checkpointDir` = an HDFS/object-store
-  *     path): eager `checkpoint()` through the configured directory —
-  *     each round's state survives executor loss, which is what a
-  *     multi-hour 100 TB iterative job needs (a lost executor at round
-  *     40 of a prefix-doubling climb must not restart the whole climb).
+  *   - DEFAULT (no checkpoint directory): eager `localCheckpoint` —
+  *     blocks live on executor storage, zero distributed-FS traffic, the
+  *     right call for bench parity and any single-JVM run. NON-RESILIENT:
+  *     lineage is truncated, so losing an executor loses blocks nothing
+  *     can recompute and the job dies.
+  *   - RELIABLE (`spark.checkpoint.dir` set at context start, or
+  *     `SparkContext.setCheckpointDir` called, with an HDFS/object-store
+  *     path): eager `checkpoint()` through that directory — each round's
+  *     state survives executor loss, which is what a multi-hour 100 TB
+  *     iterative job needs (a lost executor at round 40 of a
+  *     prefix-doubling climb must not restart the whole climb).
   *
   * Both postures return a Dataset backed by the SAME leaf shape (a
   * `LogicalRDD` over the materialized rows), so downstream plans are
-  * identical — [[PinSpec]] asserts results AND optimized-plan leaf class
-  * match across the switch. The config is read per call: it is a runtime
-  * conf (settable mid-session), and iterative operators already
-  * re-enter this helper once per round.
+  * identical — [[PinSpec]] asserts results AND leaf class match across
+  * the switch. The directory is read per call, so a context whose
+  * directory is set mid-session pins reliably from the next call on.
   *
   * ==Checkpoint retention==
   * In reliable mode every round's `checkpoint()` writes a NEW file set
-  * under the configured root, and Spark never deletes a superseded
+  * under the context's directory, and Spark never deletes a superseded
   * round's files on its own: `unpersist` is a storage-level no-op for a
   * `ReliableCheckpointRDD`, and the ContextCleaner only removes
   * checkpoint data when the (non-default)
@@ -39,51 +41,33 @@ import org.apache.spark.sql.DataFrame
   * the suffix tier, tens not thousands), but real distributed-FS space.
   * For multi-hour jobs set `cleanCheckpoints=true` (rounds drop their
   * upstream references, so GC reclaims superseded rounds while the climb
-  * runs), or point [[ConfKey]] at a job-scoped directory and delete it
-  * after the job — the checkpoint data has no value once the job ends.
+  * runs), or point `spark.checkpoint.dir` at a job-scoped directory and
+  * delete it after the job — the checkpoint data has no value once the
+  * job ends.
   */
 object Pin {
-  val ConfKey = "spark.graft.checkpointDir"
 
-  /** The exact (context, root) this helper last passed to
-    * `setCheckpointDir` — `getCheckpointDir` returns a scheme-qualified
-    * `<fs>:<root>/<UUID>` child, so no string test against it can
-    * reliably recover which ROOT was configured (a substring test
-    * false-positives when the new root is a prefix of the old one, e.g.
-    * `/data/ckpt` after `/data/ckpt2`, silently landing checkpoints
-    * under the stale root). Tracking the root we set is exact.
+  /** Eagerly materializes `df` and cuts its lineage: reliably when the
+    * SparkContext has a checkpoint directory, locally otherwise.
     */
-  @volatile private var lastSet: (SparkContext, String) = null
+  def pin(df: DataFrame): DataFrame =
+    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint(eager = true)
+    else df.localCheckpoint(eager = true)
 
-  /** Eagerly materializes `df` and cuts its lineage, local or reliable
-    * per [[ConfKey]]. The SparkContext checkpoint dir is set lazily on
-    * first reliable use (setCheckpointDir creates the directory) and
-    * re-set only when the configured root actually changes — re-invoking
-    * it per pin would scatter one UUID directory per round.
+  /** Frees the storage blocks behind a pinned frame. `Dataset.unpersist`
+    * is a no-op for checkpoint data (not a cacheManager entry) and
+    * `Dataset.rdd` derives a NEW RDD, so the only handle on the
+    * materialized blocks is the `LogicalRDD` leaf's backing RDD. Dropping
+    * the reference works too, but only frees at the ContextCleaner's next
+    * periodic GC — this releases a superseded round's blocks immediately.
     */
-  def pin(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    spark.conf.getOption(ConfKey).map(_.trim).filter(_.nonEmpty) match {
-      case Some(dir) =>
-        val sc = spark.sparkContext
-        val cached = lastSet
-        // re-point when the configured root changed (exact field compare —
-        // a substring test false-positives on prefix roots) OR when the
-        // context's dir no longer sits under the root (someone ELSE called
-        // setCheckpointDir on the shared context; containment is the only
-        // visibility we have into that, since the stored value is a
-        // scheme-qualified UUID child)
-        if (cached == null || (cached._1 ne sc) || cached._2 != dir ||
-            !sc.getCheckpointDir.exists(_.contains(dir))) {
-          sc.setCheckpointDir(dir)
-          lastSet = (sc, dir)
-        }
-        df.checkpoint(eager = true)
-      case None => df.localCheckpoint(eager = true)
+  def release(df: DataFrame): Unit =
+    df.queryExecution.logical match {
+      case lr: LogicalRDD => lr.rdd.unpersist(blocking = false)
+      case _ => () // not a pinned leaf — nothing materialized to free
     }
-  }
 
-  /** `df.pin()` — chain-position drop-in for `.localCheckpoint(true)`. */
+  /** `df.pin()` — chain-position form of [[pin]]. */
   implicit final class PinOps(private val df: DataFrame) extends AnyVal {
     def pin(): DataFrame = Pin.pin(df)
   }

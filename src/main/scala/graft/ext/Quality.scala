@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.ext.Pin.PinOps
 
 /** Data-quality operators: declarative constraint validation (the
   * Deequ-shaped check report a pipeline runs before publishing a table)
@@ -267,7 +268,7 @@ object Quality {
     val grid = spark.createDataFrame(benford.map { case (d, p) => (d.toLong, p) })
       .toDF("digit", "benford_ppm")
     val tot = counts.agg(sum("n_obs").as("n"))
-    broadcast(grid).join(counts, Seq("digit"), "left")
+    grid.join(counts, Seq("digit"), "left")
       .na.fill(0L, Seq("n_obs"))
       .crossJoin(broadcast(tot))
       .select(col("digit"), col("n_obs"),
@@ -572,7 +573,7 @@ object Quality {
     val obs = df.select(col(aCol).cast("string").as("a"),
         col(bCol).cast("string").as("b"))
       .groupBy("a", "b").agg(count(lit(1)).as("o"))
-      .localCheckpoint(true) // one-shot: feeds margins and the grid join
+      .pin() // one-shot: feeds margins and the grid join
     val rt = obs.groupBy("a").agg(sum("o").as("r"))
     val ct = obs.groupBy("b").agg(sum("o").as("c"))
     val n = obs.agg(sum("o").as("n"))

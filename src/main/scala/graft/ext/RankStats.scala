@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.ext.Pin.PinOps
 
 /** Exact rank statistics — the nonparametric correlation/effect-size
   * readouts an eval pipeline wants when the underlying scales are
@@ -135,7 +136,7 @@ object RankStats {
     // prefix sum past the conf threshold)
     val cum = cumSums(byValue, Seq(col("v")), Seq("ca", "cb"))
       .select(col("v"), col("__cum_ca").as("cum_a"), col("__cum_cb").as("cum_b"))
-      .localCheckpoint(true) // one-shot: feeds totals, the max, and the argmax
+      .pin() // one-shot: feeds totals, the max, and the argmax
     val tot = cum.agg(max("cum_a").as("n_a"), max("cum_b").as("n_b"))
     val gaps = cum.crossJoin(broadcast(tot))
       .select(col("v"), col("n_a"), col("n_b"),

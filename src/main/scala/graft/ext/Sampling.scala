@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.ext.Pin.PinOps
 
 /** Deterministic, engine-portable sampling for training-data pipelines.
   *
@@ -346,7 +347,7 @@ object Sampling {
         pmod(Dedup.mixHash(Dedup.encodeToken(col("__token")), DsirJ), lit(buckets.toLong)))
       .groupBy(col(idCol), col("__tgt"), col("__b"))
       .agg(count(lit(1)).as("__cnt"))
-      .localCheckpoint(true) // one-shot: bucket totals AND per-doc arms share it
+      .pin() // one-shot: bucket totals AND per-doc arms share it
     val bucketCounts = docBuckets.groupBy(col("__b"))
       .agg(sum("__cnt").as("__raw_n"),
         sum(when(col("__tgt"), col("__cnt")).otherwise(0L)).as("__tgt_n"))
@@ -628,7 +629,7 @@ object Sampling {
       s"bad permille bounds: $loPermille, $hiPermille")
     val m = resamples
     val sums = bootstrapSums(df, idCol, valueCol, m)
-      .localCheckpoint(true) // one-shot: m+1 rows; feeds base stats AND the melt
+      .pin() // one-shot: m+1 rows; feeds base stats AND the melt
     val base = sums.filter(col("pos") === 0)
       .select(col("nw").as("n"),
         round(col("sx").cast("double") / greatest(col("nw"), lit(1L)), 6).as("mean"))
@@ -637,7 +638,7 @@ object Sampling {
     val ranked = means
       // keyspace-sized window: input is collapsed/bounded before this sort
       .withColumn("rn", row_number().over(Window.orderBy(col("mean"))))
-      .localCheckpoint(true) // one-shot: m rows; read twice (lo and hi bound)
+      .pin() // one-shot: m rows; read twice (lo and hi bound)
     val lo = ranked.filter(col("rn") === (m * loPermille + 999) / 1000)
       .select(col("mean").as("ci_lo"))
     val hi = ranked.filter(col("rn") === (m * hiPermille + 999) / 1000)

@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.ext.Pin.PinOps
 
 /** Distributed, engine-portable sketches for corpus-scale profiling:
   * HyperLogLog registers (distinct counting), Count-Min (frequency
@@ -796,7 +797,7 @@ object Sketch {
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val cum = j.select(col("bucket_id"), col("ca"), col("cb"),
         sum("ca").over(wRun).as("cum_a"), sum("cb").over(wRun).as("cum_b"))
-      .localCheckpoint(true) // one-shot: bucket-keyspace rows; feeds totals + gaps
+      .pin() // one-shot: bucket-keyspace rows; feeds totals + gaps
     val tot = cum.agg(max("cum_a").as("n_a"), max("cum_b").as("n_b"))
     val wLag = Window.orderBy("bucket_id")
     cum.crossJoin(broadcast(tot))
@@ -835,7 +836,7 @@ object Sketch {
       // keyspace-sized window: input is collapsed/bounded before this sort
       .withColumn("g_prev", lag("g", 1).over(Window.orderBy("g")))
       .filter(col("g_prev").isNotNull)
-      .localCheckpoint(true) // one-shot: group-keyspace; feeds both pairing joins
+      .pin() // one-shot: group-keyspace; feeds both pairing joins
     val cur = base.join(m.select("g"), Seq("g"))
       .select(col("g"), col("bucket_id"), col("cnt").as("ca"))
     val prv = base.select(col("g").as("g_prev"), col("bucket_id"),

@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
+import graft.ext.Pin.PinOps
 
 /** Time-series shaping over event streams — the resample/regularize step a
   * metrics or training-data pipeline runs before windowed models: an event
@@ -190,7 +191,7 @@ object TimeSeries {
     val byKH = counts
       .select(col(keyCol), col(hourCol).as("hour"), col(cCol).cast("long").as("c0"))
       .groupBy(col(keyCol), col("hour")).agg(sum("c0").as("n_events"))
-      .localCheckpoint(true) // one-shot: feeds bounds, the key set, and the grid join
+      .pin() // one-shot: feeds bounds, the key set, and the grid join
     val bounds = byKH.agg(min("hour").as("h0"), max("hour").as("h1"))
     val hours = bounds.select(
       explode(sequence(col("h0"), col("h1"), expr("interval 1 hour"))).as("hour"))
@@ -601,7 +602,7 @@ object TimeSeries {
       .select((col("h") - col("h0")).as("t"),
         (col("n") * coalesce(col("c"), lit(0L)) - col("s")).as("dev"),
         col("n"))
-      .localCheckpoint(true) // one-shot: referenced by den and both lag-join sides
+      .pin() // one-shot: referenced by den and both lag-join sides
     val den = series.agg(sum(col("dev") * col("dev")).as("den"),
       max(col("n")).as("n_hours"))
     val lags = series
@@ -648,7 +649,7 @@ object TimeSeries {
                                  key: Option[String] = None): DataFrame = {
     val counts =
       if (key.isEmpty) hourCounts
-      else hourCounts.localCheckpoint(true) // one-shot: feeds bounds, the key set, and the grid join
+      else hourCounts.pin() // one-shot: feeds bounds, the key set, and the grid join
     val bounds = counts.agg(min("h").as("h0"), max("h").as("h1"))
     val keys = key.map(col).toSeq
     key.fold(bounds)(k => counts.select(k).distinct().crossJoin(broadcast(bounds)))
@@ -743,7 +744,7 @@ object TimeSeries {
     def attach(left: DataFrame, right: DataFrame): DataFrame =
       if (keyed) left.join(right, Seq("key")) else left.crossJoin(broadcast(right))
     val series = grid.select(keys ++ Seq(col("t"), col("c")): _*)
-      .localCheckpoint(true) // one-shot: fit AND residual pass share the grid
+      .pin() // one-shot: fit AND residual pass share the grid
     val fit = olsTrend(series, if (keyed) Some("key") else None)
       .select(keys ++ Seq(col("n_hours"), col("slope_ppm"), col("intercept_ppm")): _*)
     val calRank = expr(s"least(greatest(CAST(1 AS BIGINT)," +
@@ -807,7 +808,7 @@ object TimeSeries {
     pettittFromSeries(hourlyGridFromCounts(counts, hourCol, cCol))
 
   private def pettittFromSeries(grid: DataFrame): DataFrame = {
-    val series = grid.localCheckpoint(true) // one-shot: n, ranks, and the U-scan share it
+    val series = grid.pin() // one-shot: n, ranks, and the U-scan share it
     val n1 = series.agg(count(lit(1)).as("n"))
     val byV = series.groupBy("c").agg(count(lit(1)).as("m"))
     // keyspace-sized window: input is collapsed/bounded before this sort
@@ -823,7 +824,7 @@ object TimeSeries {
     val u = series.join(sv, Seq("c"))
       .withColumn("u", sum("s").over(wt))
       .filter(col("t") < col("n") - 1) // splits after hour 1..n−1 only
-      .localCheckpoint(true) // one-shot: feeds the max AND the argmax
+      .pin() // one-shot: feeds the max AND the argmax
     val kmax = u.agg(max(abs(col("u"))).as("k_stat"))
     u.crossJoin(broadcast(kmax))
       .filter(abs(col("u")) === col("k_stat"))
@@ -849,7 +850,7 @@ object TimeSeries {
     */
   def theilSenTrend(events: DataFrame, tsCol: String): DataFrame = {
     val series = hourlyGrid(events, tsCol)
-      .select(col("t"), col("c")).localCheckpoint(true) // one-shot: both sides of the pair join
+      .select(col("t"), col("c")).pin() // one-shot: both sides of the pair join
     val pairs = series.select(col("t").as("t1"), col("c").as("c1"))
       .join(series.select(col("t").as("t2"), col("c").as("c2")),
         col("t2") > col("t1"))
@@ -973,7 +974,7 @@ object TimeSeries {
       .select((col("h") - col("h0")).as("t"), col("n"),
         (col("n") * coalesce(col("ca"), lit(0L)) - col("sa")).as("deva"),
         (col("n") * coalesce(col("cb"), lit(0L)) - col("sb")).as("devb"))
-      .localCheckpoint(true) // one-shot: feeds both den aggregates and the lag join
+      .pin() // one-shot: feeds both den aggregates and the lag join
     val den = series.agg(
       expr("sum(CAST(deva AS DECIMAL(38,0)) * deva)").as("den_a"),
       expr("sum(CAST(devb AS DECIMAL(38,0)) * devb)").as("den_b"),
@@ -1081,7 +1082,7 @@ object TimeSeries {
     runsTestFromSeries(hourlyGridFromCounts(counts, hourCol, cCol))
 
   private def runsTestFromSeries(grid: DataFrame): DataFrame = {
-    val series = grid.select(col("t"), col("c")).localCheckpoint(true) // one-shot: median AND run-scan share it
+    val series = grid.select(col("t"), col("c")).pin() // one-shot: median AND run-scan share it
     val n1 = series.agg(count(lit(1)).as("n"))
     val byV = series.groupBy("c").agg(count(lit(1)).as("m"))
     // keyspace-sized window: input is collapsed/bounded before this sort
@@ -1113,7 +1114,7 @@ object TimeSeries {
   }
 
   private def mannKendallFromSeries(grid: DataFrame): DataFrame = {
-    val series = grid.select(col("t"), col("c")).localCheckpoint(true) // one-shot: both sides of the S-statistic join
+    val series = grid.select(col("t"), col("c")).pin() // one-shot: both sides of the S-statistic join
     val sStat = series.select(col("t").as("t1"), col("c").as("c1"))
       .join(series.select(col("t").as("t2"), col("c").as("c2")),
         col("t2") > col("t1"))

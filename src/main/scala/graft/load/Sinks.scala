@@ -4,6 +4,7 @@ import java.time.LocalDate
 import java.time.format.DateTimeFormatter
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions.{col, shiftleft, shiftright}
+import graft.ext.Pin.PinOps
 
 /** Sinks (K1-K3, reference portfolio-etl.py:618-650, :700-775).
   *
@@ -303,7 +304,7 @@ object Sinks {
       case other => throw new IllegalArgumentException(s"unknown layout in audit: $other")
     }
     val ranked = graft.ext.Layout.withGlobalRank(keyed, Seq("__lk", idCol))
-      .localCheckpoint(true) // one-shot: feeds the bin manifest AND the rewrite
+      .pin() // one-shot: feeds the bin manifest AND the rewrite
     val n = ranked.count()
     require(n > 0, "optimize needs a non-empty table")
     val binned = ranked.withColumn("part_bin", expr(s"rnk * ${nFiles}L div ${n}L"))
@@ -313,7 +314,7 @@ object Sinks {
         min("__kb").as("min_b"), max("__kb").as("max_b"))
       .withColumn("layout", lit(winner))
       .select("layout", "part_bin", "n_rows", "min_a", "max_a", "min_b", "max_b")
-      .localCheckpoint(true) // one-shot: manifest rows written AND returned
+      .pin() // one-shot: manifest rows written AND returned
     val tmp = path + ".__optimize_tmp__"
     binned.drop("__ka", "__kb", "__lk", "rnk")
       .repartition(nFiles, col("part_bin"))

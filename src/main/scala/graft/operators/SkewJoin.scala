@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.ext.Pin.PinOps
 
 /** Salted equi-join for skewed keys — the join-side companion of
   * [[graft.transform.Aggregate.saltedSum]].
@@ -108,7 +109,7 @@ object SkewJoin {
     require(Set("inner", "left_outer", "left").contains(joinType),
       s"plannedSaltedJoin supports inner/left_outer, not $joinType")
     val p = broadcast(plan.select(col("key").as("__sp_key"),
-      col("salt").as("__sp_salt")).localCheckpoint(true)) // one-shot: hot-key-sized; joined into BOTH sides
+      col("salt").as("__sp_salt")).pin()) // one-shot: hot-key-sized; joined into BOTH sides
     val saltedLeft = left
       .join(p, left(leftKey) === p("__sp_key"), "left")
       .withColumn("__sn", coalesce(col("__sp_salt"), lit(1)).cast("long"))

@@ -1,86 +1,80 @@
 package graft.ext
 
-import org.apache.spark.sql.Row
+import java.nio.file.{Files, Paths}
+import org.apache.spark.ReliableCheckpoint
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
+import graft.operators.SkewJoin
 
-/** The iterative tier's checkpoint switch: default `localCheckpoint`
-  * (bench parity) vs `spark.graft.checkpointDir`-gated reliable
-  * `checkpoint()` (executor-loss resilience for multi-hour jobs). Both
-  * must produce identical rows AND the identical plan leaf shape — the
-  * downstream plan must not know which posture pinned the state.
+/** The one materialization switch: `localCheckpoint` by default (bench
+  * parity), reliable `checkpoint()` when the SparkContext has a
+  * checkpoint directory (executor-loss resilience for multi-hour jobs).
+  * Both must produce identical rows AND the identical plan leaf shape —
+  * the downstream plan must not know which posture pinned the state.
   */
 class PinSpec extends SparkSpec {
 
-  private def withReliable[A](body: => A): A = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
-    spark.conf.set(Pin.ConfKey, dir)
-    try body finally spark.conf.unset(Pin.ConfKey)
+  private def withReliable[A](body: => A): A = ReliableCheckpoint(spark.sparkContext)(body)
+
+  /** The backing RDDs of the frames `Pin` cut into `d`'s plan. */
+  private def pinnedLeaves(d: DataFrame): Seq[RDD[_]] =
+    d.queryExecution.analyzed.collect { case lr: LogicalRDD => lr.rdd }
+
+  private def onDisk(file: String): Boolean = Files.exists(Paths.get(java.net.URI.create(file)))
+
+  /** Runs `op` in both postures: the same rows, and every pinned leaf of
+    * the reliable result is a checkpoint file, while no local one is. */
+  private def agreesAcrossPostures(op: => DataFrame): Unit = {
+    val local = op
+    val localRows = rowSet(local)
+    assert(localRows.nonEmpty)
+    assert(pinnedLeaves(local).nonEmpty && pinnedLeaves(local).forall(_.getCheckpointFile.isEmpty))
+    withReliable {
+      val reliable = op
+      assert(rowSet(reliable) == localRows)
+      val files = pinnedLeaves(reliable).map(_.getCheckpointFile)
+      assert(files.nonEmpty && files.forall(_.exists(onDisk)), files)
+    }
   }
 
   test("pin: identical rows and LogicalRDD leaf under both postures") {
     val base = df("id BIGINT, v BIGINT",
       (1L to 50L).map(i => Row(i, i * 7 % 13)))
     val local = Pin.pin(base.filter(col("v") > 2))
-    val reliable = withReliable(Pin.pin(base.filter(col("v") > 2)))
-    assert(rowSet(local) == rowSet(reliable))
-    // same leaf shape: both postures cut lineage into a LogicalRDD scan,
-    // so every downstream plan is identical across the switch
-    assert(local.queryExecution.logical.isInstanceOf[LogicalRDD])
-    assert(reliable.queryExecution.logical.isInstanceOf[LogicalRDD])
-    // reliable posture actually wrote through the configured directory
-    assert(spark.sparkContext.getCheckpointDir.isDefined)
-  }
-
-  test("pin: reliable mode sets the checkpoint root ONCE across rounds") {
-    val base = df("id BIGINT", (1L to 20L).map(Row(_)))
     withReliable {
-      Pin.pin(base)
-      val first = spark.sparkContext.getCheckpointDir
-      Pin.pin(base.filter(col("id") > 5))
-      Pin.pin(base.filter(col("id") > 10))
-      val after = spark.sparkContext.getCheckpointDir
-      // setCheckpointDir stores a <dir>/<UUID> child; re-invoking it per
-      // pin would rotate the UUID — the per-round helper must reuse it
-      assert(first.isDefined && first == after)
-      // stored path is scheme-qualified (file:<dir>/<UUID>) — contains,
-      // not startsWith, is the invariant the helper relies on
-      assert(first.get.contains(spark.conf.get(Pin.ConfKey)))
+      val reliable = Pin.pin(base.filter(col("v") > 2))
+      assert(rowSet(local) == rowSet(reliable))
+      // same leaf shape: both postures cut lineage into a LogicalRDD scan,
+      // so every downstream plan is identical across the switch
+      assert(local.queryExecution.logical.isInstanceOf[LogicalRDD])
+      assert(reliable.queryExecution.logical.isInstanceOf[LogicalRDD])
     }
   }
 
-  test("pin: switching to a root that is a substring of the old one re-points") {
+  test("pin: the context's checkpoint directory decides the posture, read per call") {
     val base = df("id BIGINT", (1L to 10L).map(Row(_)))
-    val parent = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
-    val oldRoot = s"$parent/ckpt2" // new root below is its strict prefix
-    val newRoot = s"$parent/ckpt"
-    spark.conf.set(Pin.ConfKey, oldRoot)
-    try {
-      Pin.pin(base)
-      assert(spark.sparkContext.getCheckpointDir.exists(_.contains(oldRoot)))
-      spark.conf.set(Pin.ConfKey, newRoot)
-      Pin.pin(base)
-      // a substring containment check would false-positive here (oldRoot
-      // contains newRoot) and keep writing under the stale root
-      val dir = spark.sparkContext.getCheckpointDir
-      assert(dir.exists(_.contains(newRoot)) && !dir.exists(_.contains(oldRoot)))
-    } finally spark.conf.unset(Pin.ConfKey)
+    assert(spark.sparkContext.getCheckpointDir.isEmpty)
+    assert(pinnedLeaves(Pin.pin(base)).forall(_.getCheckpointFile.isEmpty))
+    withReliable {
+      val files = pinnedLeaves(Pin.pin(base)).map(_.getCheckpointFile)
+      assert(files.size == 1 && files.forall(_.exists(onDisk)))
+    }
+    // the directory is cleared again, so later suites pin locally
+    assert(spark.sparkContext.getCheckpointDir.isEmpty)
+    assert(pinnedLeaves(Pin.pin(base)).forall(_.getCheckpointFile.isEmpty))
   }
 
-  test("pin: an externally re-pointed context checkpoint dir is restored to the root") {
+  test("release: frees a local pin's blocks and leaves an unpinned frame alone") {
     val base = df("id BIGINT", (1L to 10L).map(Row(_)))
-    withReliable {
-      Pin.pin(base)
-      val root = spark.conf.get(Pin.ConfKey)
-      assert(spark.sparkContext.getCheckpointDir.exists(_.contains(root)))
-      // another library steals the shared context's checkpoint dir
-      val foreign = java.nio.file.Files.createTempDirectory("graft-foreign").toString
-      spark.sparkContext.setCheckpointDir(foreign)
-      Pin.pin(base)
-      // the helper must notice (containment check) and re-point to ITS root
-      assert(spark.sparkContext.getCheckpointDir.exists(_.contains(root)))
-    }
+    val pinned = Pin.pin(base)
+    val rdd = pinnedLeaves(pinned).head
+    assert(spark.sparkContext.getPersistentRDDs.contains(rdd.id))
+    Pin.release(pinned)
+    assert(!spark.sparkContext.getPersistentRDDs.contains(rdd.id))
+    Pin.release(base) // a LocalRelation leaf: nothing to free
   }
 
   test("pin: an iterative operator (connected components) agrees across the switch") {
@@ -102,5 +96,36 @@ class PinSpec extends SparkSpec {
     val b = withReliable(rowSet(SuffixDedup.longestRepeat(docs)))
     assert(a == b)
     assert(a.head.startsWith("10|"))
+  }
+
+  test("pin: TimeSeries.theilSenTrend's pinned hour series agrees across the switch") {
+    val t0 = java.time.Instant.parse("2024-06-01T00:00:00Z").getEpochSecond
+    val events = df("event_id BIGINT, ts TIMESTAMP",
+      Seq(1, 3, 2, 5, 4, 6).zipWithIndex.flatMap { case (n, h) =>
+        (0 until n).map(i =>
+          Row(h * 100L + i, new java.sql.Timestamp((t0 + h * 3600L + 60 * i) * 1000L)))
+      })
+    agreesAcrossPostures(TimeSeries.theilSenTrend(events, "ts"))
+  }
+
+  test("pin: Layout.skippingAudit's pinned keys and envelopes agree across the switch") {
+    val grid = df("id BIGINT, a BIGINT, b BIGINT",
+      (0 until 256).map(i => Row(i.toLong, (i / 16).toLong, (i % 16).toLong)))
+    agreesAcrossPostures(Layout.skippingAudit(grid, "a", "b", "id", nFiles = 16, bits = 4,
+      probeModA = 5, probeModB = 7))
+  }
+
+  test("pin: RankStats.ksStatistic's pinned running sums agree across the switch") {
+    val d = df("g STRING, v BIGINT",
+      (0 until 60).map(i => Row(if (i % 3 == 0) "g0" else "g1", (i * 7 % 23).toLong)))
+    agreesAcrossPostures(RankStats.ksStatistic(d, col("g"), "g0", col("v")))
+  }
+
+  test("pin: SkewJoin.plannedSaltedJoin's pinned salt plan agrees across the switch") {
+    val fact = df("k BIGINT, v BIGINT",
+      (1 to 300).map(i => Row(if (i <= 240) 1L else i % 20 + 2L, i.toLong)))
+    val dim = df("dk BIGINT, name STRING", (1L to 15L).map(k => Row(k, s"name$k")))
+    agreesAcrossPostures(SkewJoin.plannedSaltedJoin(fact, "k", dim, "dk",
+      SkewJoin.saltPlan(fact, "k", targetRowsPerTask = 50L)))
   }
 }

@@ -1,8 +1,9 @@
 #!/usr/bin/env bash
 # Round-end evidence gate, one command: compile → FREEZE the classes →
 # two-scale oracle correctness (sf0.01 + sf0.1) → layout-determinism →
-# registry-freshness. Produces CORRECTNESS_TWOSCALE.json and
-# DETERMINISM.json in the repo root and exits nonzero if ANY piece fails,
+# the same under reliable pins → registry-freshness. Produces
+# CORRECTNESS_TWOSCALE.json and DETERMINISM.json in the repo root and
+# exits nonzero if ANY piece fails,
 # so a round can't ship with stale or partial gate evidence.
 #
 # The gate JVMs run against a frozen copy of target/scala-2.13/classes
@@ -69,6 +70,27 @@ echo "=== determinism (sf0.01, shuffle-partitions 5 vs 32) ==="
 SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-16}" \
   "${JAVA[@]}" graft.Determinism /root/testdata/sf0.01 DETERMINISM.json \
   2> "$tmp/det.log" | tail -2 || { echo "determinism FAILED"; tail -20 "$tmp/det.log"; fail=1; }
+
+echo "=== determinism under reliable pins (sf0.01, spark.checkpoint.dir set) ==="
+# with a context checkpoint directory every Pin.pin writes a reliable
+# checkpoint instead of a local one; no query's (rows, hash) at either
+# layout may differ from the default run above
+SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-16}" \
+  "${JAVA[@]}" -Dspark.checkpoint.dir="$tmp/ckpt" \
+  graft.Determinism /root/testdata/sf0.01 "$tmp/det_reliable.json" \
+  2> "$tmp/det_reliable.log" | tail -2 || { echo "reliable determinism FAILED"; tail -20 "$tmp/det_reliable.log"; fail=1; }
+python3 - DETERMINISM.json "$tmp/det_reliable.json" "$tmp/ckpt" <<'EOF' || fail=1
+import json, os, sys
+local, reliable = (json.load(open(p)) for p in sys.argv[1:3])
+bad = [q for q in sorted(set(local) | set(reliable))
+       if any(local.get(q, {}).get(k) != reliable.get(q, {}).get(k) for k in ("p5", "p32"))]
+rdds = sum(d.startswith("rdd-") for _, ds, _ in os.walk(sys.argv[3]) for d in ds)
+print(f"reliable pins: {rdds} checkpointed RDDs; {len(local) - len(bad)}/{len(local)} queries equal to the default run")
+for q in bad:
+    print(f"  {q}: default {local.get(q)} reliable {reliable.get(q)}")
+sys.exit(0 if rdds > 0 and not bad else 1)
+EOF
+rm -rf "$tmp/ckpt"
 
 echo "=== registry freshness ==="
 # every registered query must have been dumped by Verify (a query that

@@ -248,42 +248,6 @@ def lint_unpartitioned_windows(src_root="src/main/scala"):
     return len(bad)
 
 
-def lint_pin_boundary(src_root="src/main/scala"):
-    """Source lint (round-12 directive): the iterative tier pins per-round
-    state through ext/Pin.pin (localCheckpoint by default, reliable
-    checkpoint under spark.graft.checkpointDir). A DIRECT localCheckpoint
-    call elsewhere must therefore be a ONE-SHOT materialization (computed
-    once, read by several consumers, never re-pinned per round) and must
-    SAY so with a 'one-shot:' marker on the same line or within the 3
-    lines above — an unmarked site is either an iterative pin that lost
-    executor-loss resilience, or a one-shot whose author never checked.
-    """
-    import re, os, glob as g
-    pat = re.compile(r"\.localCheckpoint\(")
-    bad = []
-    for f in sorted(g.glob(os.path.join(src_root, "**", "*.scala"),
-                           recursive=True)):
-        if f.endswith(os.path.join("ext", "Pin.scala")):
-            continue
-        text = open(f).read()
-        lines = text.split("\n")
-        for m in pat.finditer(text):
-            ln = text[:m.start()].count("\n") + 1
-            line = lines[ln - 1]
-            # doc-comment prose mentioning the API is not a call site
-            if line.lstrip().startswith("*") or line.lstrip().startswith("//"):
-                continue
-            ctx = "\n".join(lines[max(0, ln - 4):ln])
-            if "one-shot:" not in ctx:
-                bad.append(f"{f}:{ln}")
-    for b in bad:
-        print(f"LINT: direct localCheckpoint outside Pin.scala without a "
-              f"'one-shot:' marker at {b} — iterative per-round pins must "
-              f"go through Pin.pin (reliable-checkpoint switch); one-shot "
-              f"materializations must justify themselves", flush=True)
-    return len(bad)
-
-
 def lint_doc_counts(repo_root):
     """Doc-drift lint (round-12 directive): README's test/suite/query
     counts must be DERIVED facts, not hand-maintained prose — round 11
@@ -336,7 +300,6 @@ def main():
     repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     src_root = os.path.join(repo_root, "src", "main", "scala")
     lint_fails = lint_unpartitioned_windows(src_root)
-    lint_fails += lint_pin_boundary(src_root)
     lint_fails += lint_doc_counts(repo_root)
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     report = {}
