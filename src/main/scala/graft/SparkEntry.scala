@@ -36,6 +36,84 @@ object SparkEntry {
     Aggregate.wholesaleAgg(
       Aggregate.retailAgg(Tables.sales(s, d)), Tables.skuMap(s, d))
 
+  /** Clicks `(event_id, user_id, ts)` and views `(user_id, ts, view_id)`,
+    * one view per (user, instant) keeping the largest id: the two sides
+    * every click→view as-of query joins (q39/q50/q52, q185–q187), so all
+    * of them answer over the same inputs and share one oracle shape.
+    */
+  private def clicksAndViews(s: SparkSession, d: String): (DataFrame, DataFrame) = {
+    val ev = Tables.events(s, d)
+    val clicks = ev.filter(col("event_type") === "click")
+      .select("event_id", "user_id", "ts")
+    val views = ev.filter(col("event_type") === "view")
+      .groupBy("user_id", "ts").agg(max("event_id").as("view_id"))
+    (clicks, views)
+  }
+
+  /** The bidirected supplier↔part graph `(src, dst)` of the graph tier
+    * (node ids 2·part and 2·supp+1, so the two id spaces cannot collide):
+    * each distinct lineitem edge plus its reverse.
+    */
+  private def supplierPartGraph(s: SparkSession, d: String): DataFrame = {
+    val e = Tables.lineitem(s, d).select(
+      (col("l_suppkey") * 2 + 1).as("src"), (col("l_partkey") * 2).as("dst"))
+      .distinct()
+    e.unionAll(e.select(col("dst").as("src"), col("src").as("dst")))
+  }
+
+  /** Orders as layout points `(oid, o_custkey, dday)`, dday the integer
+    * day since 1992-01-01: the two clustering keys every layout audit
+    * (q258, q282, q292) scores file skipping on.
+    */
+  private def orderDays(s: SparkSession, d: String): DataFrame =
+    Tables.orders(s, d).select(
+      col("o_orderkey").as("oid"), col("o_custkey"),
+      datediff(col("o_orderdate").cast("date"),
+        lit("1992-01-01").cast("date")).cast("long").as("dday"))
+
+  /** Customers as a privacy release `(c_nationkey, c_mktsegment,
+    * bal_band)`: the $1000 balance band in integer cents, so the
+    * k-anonymity, l-diversity and t-closeness audits (q229, q230, q262)
+    * read one quasi-identifier set and gate one release together.
+    */
+  private def customerBands(s: SparkSession, d: String): DataFrame =
+    Tables.customer(s, d).select(col("c_nationkey"), col("c_mktsegment"),
+      expr("CAST(round(c_acctbal * 100) AS BIGINT) div 100000")
+        .as("bal_band"))
+
+  /** Hybrid retrieval's fused list: the BM25 lexical arm (q85's terms,
+    * widened to top-20) and the brute-force cosine arm of query doc 0
+    * over `emb`, fused by RRF — q122 registers it and q161 diversifies it
+    * with the same `emb`.
+    */
+  private def hybridRrf(s: SparkSession, d: String, emb: DataFrame): DataFrame = {
+    val lex = graft.ext.Search.bm25TopK(
+        Tables.documents(s, d), Seq("join", "scan", "filter"), k = 20)
+      .select(col("doc_id"), col("rank"))
+    val sem = Similarity.bruteForceTopK(
+        emb.filter(col("vec_id") === 0), emb, k = 20)
+      .select(col("neighbor_id").as("doc_id"), col("rank"))
+    graft.ext.Search.rrfFuse(Seq(lex, sem), k = 10)
+  }
+
+  /** The retrieval eval stack's inputs (q295, q319, q345): the exact
+    * cosine arm's top-10 `(query_id, doc_id, rank)` for the every-50th
+    * panel, and its qrels `(query_id, doc_id)` — every other doc sharing
+    * the query's label — so the three metrics grade one ranking.
+    */
+  private def panelQrels(s: SparkSession, d: String): (DataFrame, DataFrame) = {
+    val emb = Tables.embeddings(s, d)
+    val queries = emb.filter(col("vec_id") % 50 === 0)
+    val ranking = Similarity.bruteForceTopK(queries, emb, k = 10)
+      .select(col("query_id"), col("neighbor_id").as("doc_id"), col("rank"))
+    val qrels = queries.select(col("vec_id").as("query_id"), col("label").as("ql"))
+      .join(emb.select(col("vec_id").as("doc_id"), col("label")),
+        col("ql") === col("label"))
+      .filter(col("query_id") =!= col("doc_id"))
+      .select(col("query_id"), col("doc_id"))
+    (ranking, qrels)
+  }
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // A1 retail units per SKU (portfolio-etl.py:610-615)
     "q01_retail_agg" -> ((s, d) => Aggregate.retailAgg(Tables.sales(s, d))),
@@ -258,11 +336,7 @@ object SparkEntry {
     // view at-or-before it (tag-union-scan: one key shuffle, no range
     // cross product; oracle = DuckDB's native ASOF LEFT JOIN)
     "q39_asof_join" -> { (s, d) =>
-      val ev = Tables.events(s, d)
-      val clicks = ev.filter(col("event_type") === "click")
-        .select("event_id", "user_id", "ts")
-      val views = ev.filter(col("event_type") === "view")
-        .groupBy("user_id", "ts").agg(max("event_id").as("view_id"))
+      val (clicks, views) = clicksAndViews(s, d)
       graft.operators.AsOfJoin.asOf(clicks, views, Seq("user_id"), "ts")
     },
 
@@ -271,11 +345,7 @@ object SparkEntry {
     // serialize a partition; boundary state propagates per key over slice
     // summaries (O(slices), not O(rows))
     "q50_asof_sliced" -> { (s, d) =>
-      val ev = Tables.events(s, d)
-      val clicks = ev.filter(col("event_type") === "click")
-        .select("event_id", "user_id", "ts")
-      val views = ev.filter(col("event_type") === "view")
-        .groupBy("user_id", "ts").agg(max("event_id").as("view_id"))
+      val (clicks, views) = clicksAndViews(s, d)
       graft.operators.AsOfJoin.asOfSliced(clicks, views, Seq("user_id"), "ts",
         sliceWidthMs = 24L * 3600 * 1000)
     },
@@ -284,11 +354,7 @@ object SparkEntry {
     // custom whole-operator path — AsOfJoinPlan logical node planned to
     // AsOfJoinExec (co-partitioned merge scan) by the injected strategy
     "q52_asof_native" -> { (s, d) =>
-      val ev = Tables.events(s, d)
-      val clicks = ev.filter(col("event_type") === "click")
-        .select("event_id", "user_id", "ts")
-      val views = ev.filter(col("event_type") === "view")
-        .groupBy("user_id", "ts").agg(max("event_id").as("view_id"))
+      val (clicks, views) = clicksAndViews(s, d)
       graft.plans.NativeAsOfJoin.asOf(clicks, views, Seq("user_id"), "ts")
     },
 
@@ -782,12 +848,7 @@ object SparkEntry {
     // unrollable rounds, one join + one agg per round, checkpointed edges;
     // integer damping arithmetic is bit-identical in any engine
     "q95_pagerank" -> { (s, d) =>
-      val e = Tables.lineitem(s, d).select(
-        (col("l_suppkey") * 2 + 1).as("src"), (col("l_partkey") * 2).as("dst"))
-        .distinct()
-      graft.ext.Graph.pageRank(
-        e.unionAll(e.select(col("dst").as("src"), col("src").as("dst"))),
-        iterations = 5)
+      graft.ext.Graph.pageRank(supplierPartGraph(s, d), iterations = 5)
     },
 
     // personalized PageRank: the q95 engine with teleport mass restricted
@@ -795,10 +856,7 @@ object SparkEntry {
     // related-item / trust propagation. Same two-arm broadcast/shuffle
     // gate; the seed flag rides the checkpointed node relation
     "q299_personalized_pagerank" -> { (s, d) =>
-      val e = Tables.lineitem(s, d).select(
-        (col("l_suppkey") * 2 + 1).as("src"), (col("l_partkey") * 2).as("dst"))
-        .distinct()
-      val sym = e.unionAll(e.select(col("dst").as("src"), col("src").as("dst")))
+      val sym = supplierPartGraph(s, d)
       val seeds = sym.select(col("src").as("id")).distinct()
         .filter(col("id") % 97 === 1)
       graft.ext.Graph.personalizedPageRank(sym, seeds, iterations = 4)
@@ -1071,14 +1129,7 @@ object SparkEntry {
     // (q18's kernel, query doc 0); integer-division contributions keep
     // the fused score BIGINT-exact
     "q122_rrf_fusion" -> { (s, d) =>
-      val emb = Tables.embeddings(s, d)
-      val lex = graft.ext.Search.bm25TopK(
-          Tables.documents(s, d), Seq("join", "scan", "filter"), k = 20)
-        .select(col("doc_id"), col("rank"))
-      val sem = Similarity.bruteForceTopK(
-          emb.filter(col("vec_id") === 0), emb, k = 20)
-        .select(col("neighbor_id").as("doc_id"), col("rank"))
-      graft.ext.Search.rrfFuse(Seq(lex, sem), k = 10)
+      hybridRrf(s, d, Tables.embeddings(s, d))
     },
 
     // extension: market-basket association rules over order baskets —
@@ -1414,13 +1465,7 @@ object SparkEntry {
     // ~0.03-scale RRF rel against [0,1] cosine redundancy
     "q161_hybrid_mmr" -> { (s, d) =>
       val emb = Tables.embeddings(s, d)
-      val lex = graft.ext.Search.bm25TopK(
-          Tables.documents(s, d), Seq("join", "scan", "filter"), k = 20)
-        .select(col("doc_id"), col("rank"))
-      val sem = Similarity.bruteForceTopK(
-          emb.filter(col("vec_id") === 0), emb, k = 20)
-        .select(col("neighbor_id").as("doc_id"), col("rank"))
-      val fused = graft.ext.Search.rrfFuse(Seq(lex, sem), k = 10)
+      val fused = hybridRrf(s, d, emb)
       Similarity.mmrSelect(
         fused.select(lit(0L).as("query_id"), col("doc_id").as("neighbor_id"),
           (col("rrf").cast("double") / 1000000).as("score")),
@@ -1609,11 +1654,7 @@ object SparkEntry {
     // older than 10 minutes null out — a projection over the same
     // one-shuffle tag-union-scan plan
     "q185_asof_tolerance" -> { (s, d) =>
-      val ev = Tables.events(s, d)
-      val clicks = ev.filter(col("event_type") === "click")
-        .select("event_id", "user_id", "ts")
-      val views = ev.filter(col("event_type") === "view")
-        .groupBy("user_id", "ts").agg(max("event_id").as("view_id"))
+      val (clicks, views) = clicksAndViews(s, d)
       graft.operators.AsOfJoin.asOfTolerance(clicks, views, Seq("user_id"), "ts",
         toleranceUs = 600L * 1000000)
     },
@@ -1621,22 +1662,14 @@ object SparkEntry {
     // forward as-of (merge_asof direction='forward'): each click enriched
     // with the user's NEXT view at-or-after it — the mirrored scan
     "q186_asof_forward" -> { (s, d) =>
-      val ev = Tables.events(s, d)
-      val clicks = ev.filter(col("event_type") === "click")
-        .select("event_id", "user_id", "ts")
-      val views = ev.filter(col("event_type") === "view")
-        .groupBy("user_id", "ts").agg(max("event_id").as("view_id"))
+      val (clicks, views) = clicksAndViews(s, d)
       graft.operators.AsOfJoin.asOfForward(clicks, views, Seq("user_id"), "ts")
     },
 
     // nearest as-of (merge_asof direction='nearest'): closest view either
     // side, ties backward — both window passes over ONE tagged union
     "q187_asof_nearest" -> { (s, d) =>
-      val ev = Tables.events(s, d)
-      val clicks = ev.filter(col("event_type") === "click")
-        .select("event_id", "user_id", "ts")
-      val views = ev.filter(col("event_type") === "view")
-        .groupBy("user_id", "ts").agg(max("event_id").as("view_id"))
+      val (clicks, views) = clicksAndViews(s, d)
       graft.operators.AsOfJoin.asOfNearest(clicks, views, Seq("user_id"), "ts")
     },
 
@@ -2234,10 +2267,7 @@ object SparkEntry {
     // at all (every file spans the full date range); z-order prunes BOTH
     // to ~√64 — the quantified OPTIMIZE decision, not the asserted one
     "q258_skipping_audit" -> { (s, d) =>
-      val base = Tables.orders(s, d).select(
-        col("o_orderkey").as("oid"), col("o_custkey"),
-        datediff(col("o_orderdate").cast("date"),
-          lit("1992-01-01").cast("date")).cast("long").as("dday"))
+      val base = orderDays(s, d)
       graft.ext.Layout.skippingAudit(base, "o_custkey", "dday", "oid",
         nFiles = 64, bits = 16)
     },
@@ -2274,9 +2304,7 @@ object SparkEntry {
     // "release only classes with t_ppm ≤ t"
     "q262_t_closeness" -> { (s, d) =>
       graft.ext.Quality.tClosenessAudit(
-        Tables.customer(s, d).select(col("c_nationkey"), col("c_mktsegment"),
-          expr("CAST(round(c_acctbal * 100) AS BIGINT) div 100000")
-            .as("bal_band")),
+        customerBands(s, d),
         Seq("c_nationkey", "bal_band"), "c_mktsegment")
     },
 
@@ -2365,11 +2393,7 @@ object SparkEntry {
     // split as q61); the float N(t) readout + BFS cross-check live in
     // GraphSpec
     "q273_hyperanf" -> { (s, d) =>
-      val e = Tables.lineitem(s, d).select(
-        (col("l_suppkey") * 2 + 1).as("src"), (col("l_partkey") * 2).as("dst"))
-        .distinct()
-      graft.ext.Graph.neighborhoodFunction(
-        e.unionAll(e.select(col("dst").as("src"), col("src").as("dst"))),
+      graft.ext.Graph.neighborhoodFunction(supplierPartGraph(s, d),
         rounds = 3, log2m = 4)
     },
 
@@ -2591,10 +2615,7 @@ object SparkEntry {
     // (Layout.hilbertSteps) evaluated in both engines; each layout costs
     // the one distributed sort its write would cost
     "q282_curve_shootout" -> { (s, d) =>
-      val base = Tables.orders(s, d).select(
-        col("o_orderkey").as("oid"), col("o_custkey"),
-        datediff(col("o_orderdate").cast("date"),
-          lit("1992-01-01").cast("date")).cast("long").as("dday"))
+      val base = orderDays(s, d)
       graft.ext.Layout.curveAudit(base, "o_custkey", "dday", "oid",
         nFiles = 64, bits = 8, probeModA = 13, probeModB = 11)
     },
@@ -2656,10 +2677,7 @@ object SparkEntry {
     // AND the rewrite geometry. Costs one global sort — what any
     // clustered rewrite pays
     "q292_optimize_manifest" -> { (s, d) =>
-      val base = Tables.orders(s, d).select(
-        col("o_orderkey").as("oid"), col("o_custkey"),
-        datediff(col("o_orderdate").cast("date"),
-          lit("1992-01-01").cast("date")).cast("long").as("dday"))
+      val base = orderDays(s, d)
       val dir = java.nio.file.Files.createTempDirectory("graft_q292")
         .toString + "/tbl"
       base.write.mode("overwrite").parquet(dir)
@@ -2704,16 +2722,8 @@ object SparkEntry {
     // from ONE Scala table (no log in either engine); ppm boundary in
     // DECIMAL(38,0). Ranking is panel×k, qrels the bounded eval set
     "q295_ndcg" -> { (s, d) =>
-      val emb = Tables.embeddings(s, d)
-      val queries = emb.filter(col("vec_id") % 50 === 0)
-      val ranking = Similarity.bruteForceTopK(queries, emb, k = 10)
-        .select(col("query_id"), col("neighbor_id").as("doc_id"), col("rank"))
-      val qrels = queries.select(col("vec_id").as("query_id"), col("label").as("ql"))
-        .join(emb.select(col("vec_id").as("doc_id"), col("label")),
-          col("ql") === col("label"))
-        .filter(col("query_id") =!= col("doc_id"))
-        .select(col("query_id"), col("doc_id"), lit(3).as("grade"))
-      graft.ext.Search.ndcgAtK(ranking, qrels, k = 10)
+      val (ranking, qrels) = panelQrels(s, d)
+      graft.ext.Search.ndcgAtK(ranking, qrels.withColumn("grade", lit(3)), k = 10)
     },
 
     // one-pass Poisson bootstrap: 100 full bootstrap replicates of the
@@ -2851,9 +2861,7 @@ object SparkEntry {
       // `div` is the cross-engine-identical spelling; a pmod floor
       // adjustment here would DIVERGE on negative balances
       graft.ext.Quality.kAnonymityAudit(
-        Tables.customer(s, d).select(col("c_nationkey"), col("c_mktsegment"),
-          expr("CAST(round(c_acctbal * 100) AS BIGINT) div 100000")
-            .as("bal_band")),
+        customerBands(s, d),
         Seq("c_nationkey", "c_mktsegment", "bal_band"), k = 5)
     },
 
@@ -2863,9 +2871,7 @@ object SparkEntry {
     // q229 so the two reports read as one release gate
     "q230_l_diversity" -> { (s, d) =>
       graft.ext.Quality.lDiversityAudit(
-        Tables.customer(s, d).select(col("c_nationkey"), col("c_mktsegment"),
-          expr("CAST(round(c_acctbal * 100) AS BIGINT) div 100000")
-            .as("bal_band")),
+        customerBands(s, d),
         Seq("c_nationkey", "bal_band"), "c_mktsegment", l = 3)
     },
 
@@ -3246,15 +3252,7 @@ object SparkEntry {
     // q261, nDCG q295): micro P@k, macro floored-ppm R@k, one row per
     // cutoff 1..10; all grids panel-sized
     "q319_pr_curve" -> { (s, d) =>
-      val emb = Tables.embeddings(s, d)
-      val queries = emb.filter(col("vec_id") % 50 === 0)
-      val ranking = Similarity.bruteForceTopK(queries, emb, k = 10)
-        .select(col("query_id"), col("neighbor_id").as("doc_id"), col("rank"))
-      val qrels = queries.select(col("vec_id").as("query_id"), col("label").as("ql"))
-        .join(emb.select(col("vec_id").as("doc_id"), col("label")),
-          col("ql") === col("label"))
-        .filter(col("query_id") =!= col("doc_id"))
-        .select(col("query_id"), col("doc_id"))
+      val (ranking, qrels) = panelQrels(s, d)
       graft.ext.Search.precisionRecallAtK(ranking, qrels, kMax = 10)
     },
 
@@ -3587,15 +3585,7 @@ object SparkEntry {
     // rank-sensitive single number q319's P/R curve folds into;
     // zero-relevant queries stay in the panel at 0
     "q345_avg_precision" -> { (s, d) =>
-      val emb = Tables.embeddings(s, d)
-      val queries = emb.filter(col("vec_id") % 50 === 0)
-      val ranking = Similarity.bruteForceTopK(queries, emb, k = 10)
-        .select(col("query_id"), col("neighbor_id").as("doc_id"), col("rank"))
-      val qrels = queries.select(col("vec_id").as("query_id"), col("label").as("ql"))
-        .join(emb.select(col("vec_id").as("doc_id"), col("label")),
-          col("ql") === col("label"))
-        .filter(col("query_id") =!= col("doc_id"))
-        .select(col("query_id"), col("doc_id"))
+      val (ranking, qrels) = panelQrels(s, d)
       graft.ext.Search.averagePrecisionAtK(ranking, qrels, kMax = 10)
     },
 
@@ -4027,7 +4017,18 @@ object SparkEntry {
     * support — strong ties are short edges, so shortest paths follow the
     * strongest co-purchase chains.
     */
-  private def weightedCoocEdges(s: SparkSession, d: String): DataFrame = {
+  private def weightedCoocEdges(s: SparkSession, d: String): DataFrame =
+    coocPairSupport(s, d).select(col("u"), col("v"), expr("1000 div pn").as("w"))
+
+  /** The ≥2-order part co-occurrence graph `(u, v)` shared by q141/q146. */
+  private def cooccurrenceEdges(s: SparkSession, d: String): DataFrame =
+    coocPairSupport(s, d).select("u", "v")
+
+  /** The `(u, v, pn)` part pairs bought together in ≥2 orders, u < v,
+    * behind both co-purchase graphs: one corpus exchange on the order
+    * key, then a co-located pair self-join and the exact support gate.
+    */
+  private def coocPairSupport(s: SparkSession, d: String): DataFrame = {
     val items = Tables.lineitem(s, d)
       .select(col("l_orderkey").as("g"), col("l_partkey").as("item"))
       .repartition(col("g")).dropDuplicates("g", "item")
@@ -4036,22 +4037,6 @@ object SparkEntry {
       .filter(col("u") < col("v"))
       .groupBy("u", "v").agg(count(lit(1)).as("pn"))
       .filter(col("pn") >= 2)
-      .select(col("u"), col("v"), expr("1000 div pn").as("w"))
-  }
-
-  /** The ≥2-order part co-occurrence graph shared by q141/q146: one
-    * corpus exchange on the order key, co-located pair self-join, exact
-    * pair-support gate.
-    */
-  private def cooccurrenceEdges(s: SparkSession, d: String): DataFrame = {
-    val items = Tables.lineitem(s, d)
-      .select(col("l_orderkey").as("g"), col("l_partkey").as("item"))
-      .repartition(col("g")).dropDuplicates("g", "item")
-    items.select(col("g"), col("item").as("u"))
-      .join(items.select(col("g"), col("item").as("v")), "g")
-      .filter(col("u") < col("v"))
-      .groupBy("u", "v").agg(count(lit(1)).as("pn"))
-      .filter(col("pn") >= 2).select("u", "v")
   }
 
   def oracleSql: Map[String, String] = Map(

@@ -277,26 +277,23 @@ object Audio {
     * the q375 media scale shape (scale = partitions, no exchange).
     */
   def g711Stats(docs: DataFrame)(implicit spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long].mapPartitions { ids =>
-      ids.map { id =>
-        decodeG711(synthG711Payload(id)) match {
-          case Some((name, pcm)) =>
-            var sum = 0L; var wsum = 0L
-            var mn = Int.MaxValue; var mx = Int.MinValue
-            var i = 0
-            while (i < pcm.length) {
-              val v: Int = pcm(i)
-              sum += v; wsum += i.toLong * v
-              if (v < mn) mn = v
-              if (v > mx) mx = v
-              i += 1
-            }
-            G711Stats(id, name, pcm.length, sum, wsum, mn, mx)
-          case None => G711Stats(id, "none", 0, 0L, 0L, 0, 0)
-        }
+    Multimodal.perDoc(docs) { id =>
+      decodeG711(synthG711Payload(id)) match {
+        case Some((name, pcm)) =>
+          var sum = 0L; var wsum = 0L
+          var mn = Int.MaxValue; var mx = Int.MinValue
+          var i = 0
+          while (i < pcm.length) {
+            val v: Int = pcm(i)
+            sum += v; wsum += i.toLong * v
+            if (v < mn) mn = v
+            if (v > mx) mx = v
+            i += 1
+          }
+          G711Stats(id, name, pcm.length, sum, wsum, mn, mx)
+        case None => G711Stats(id, "none", 0, 0L, 0L, 0, 0)
       }
-    }.toDF()
+    }
   }
 
   final case class AudioFeatures(media_id: Long, n_samples: Int,
@@ -311,28 +308,25 @@ object Audio {
     * one in-task pass per payload. Same narrow media shape as q386.
     */
   def audioFeatures(docs: DataFrame)(implicit spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long].mapPartitions { ids =>
-      ids.map { id =>
-        decodeG711(synthG711Payload(id)) match {
-          case Some((_, pcm)) =>
-            var energy = 0L
-            var zc = 0
-            var peak = 0
-            var i = 0
-            while (i < pcm.length) {
-              val v: Int = pcm(i)
-              energy += v.toLong * v
-              if (i > 0 && ((v < 0) != (pcm(i - 1) < 0))) zc += 1
-              val a = math.abs(v)
-              if (a > peak) peak = a
-              i += 1
-            }
-            AudioFeatures(id, pcm.length, energy, zc, peak)
-          case None => AudioFeatures(id, 0, 0L, 0, 0)
-        }
+    Multimodal.perDoc(docs) { id =>
+      decodeG711(synthG711Payload(id)) match {
+        case Some((_, pcm)) =>
+          var energy = 0L
+          var zc = 0
+          var peak = 0
+          var i = 0
+          while (i < pcm.length) {
+            val v: Int = pcm(i)
+            energy += v.toLong * v
+            if (i > 0 && ((v < 0) != (pcm(i - 1) < 0))) zc += 1
+            val a = math.abs(v)
+            if (a > peak) peak = a
+            i += 1
+          }
+          AudioFeatures(id, pcm.length, energy, zc, peak)
+        case None => AudioFeatures(id, 0, 0L, 0, 0)
       }
-    }.toDF()
+    }
   }
 
   final case class AdpcmStats(media_id: Long, n_samples: Int, pcm_sum: Long,
@@ -344,22 +338,19 @@ object Audio {
     * samples. Same narrow media shape as q386.
     */
   def adpcmStats(docs: DataFrame)(implicit spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long].mapPartitions { ids =>
-      ids.map { id =>
-        decodeImaAdpcm(synthAdpcmPayload(id)) match {
-          case Some((pcm, endPred, endIdx)) =>
-            var sum = 0L; var wsum = 0L
-            var i = 0
-            while (i < pcm.length) {
-              val v: Int = pcm(i)
-              sum += v; wsum += i.toLong * v
-              i += 1
-            }
-            AdpcmStats(id, pcm.length, sum, wsum, endPred, endIdx)
-          case None => AdpcmStats(id, 0, 0L, 0L, 0, -1)
-        }
+    Multimodal.perDoc(docs) { id =>
+      decodeImaAdpcm(synthAdpcmPayload(id)) match {
+        case Some((pcm, endPred, endIdx)) =>
+          var sum = 0L; var wsum = 0L
+          var i = 0
+          while (i < pcm.length) {
+            val v: Int = pcm(i)
+            sum += v; wsum += i.toLong * v
+            i += 1
+          }
+          AdpcmStats(id, pcm.length, sum, wsum, endPred, endIdx)
+        case None => AdpcmStats(id, 0, 0L, 0L, 0, -1)
       }
-    }.toDF()
+    }
   }
 }

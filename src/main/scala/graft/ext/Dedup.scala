@@ -733,6 +733,20 @@ object Dedup {
       .select("id_a", "id_b", "jaccard")
   }
 
+  /** Each document's distinct word n-grams `(outId, gram)`, through the
+    * native one-pass window builder (`graft_word_ngrams`: fewer than n
+    * tokens give no rows, the contract of the composed HOF form it
+    * replaced, pinned by WordNgramsSpec). Both contamination readouts
+    * ([[crossContamination]], [[evalContainment]]) gram both sides with
+    * it, so a train doc and an eval doc match on the same windows.
+    */
+  private def distinctWordGrams(df: DataFrame, n: Int, idCol: String, textCol: String,
+                                outId: String): DataFrame = {
+    val windows = graft.functions.NgramFunctions.wordNgrams(col("__ws"), n)
+    df.withColumn("__ws", TextAnalysis.tokens(col(textCol)))
+      .select(col(idCol).as(outId), explode(array_distinct(windows)).as("gram"))
+  }
+
   /** Eval-set decontamination: every train document sharing at least one
     * word n-gram window with ANY eval document, with the count of distinct
     * shared windows — the benchmark-leakage sweep a training pipeline runs
@@ -752,14 +766,7 @@ object Dedup {
   def crossContamination(train: DataFrame, eval: DataFrame, n: Int = 8,
                          idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     require(n >= 1, "n-gram size must be >= 1")
-    def grams(df: DataFrame, outId: String): DataFrame = {
-      // native one-pass window builder (graft_word_ngrams): < n tokens →
-      // empty array, same contract as the composed HOF form it replaced
-      // (equivalence pinned by WordNgramsSpec)
-      val windows = graft.functions.NgramFunctions.wordNgrams(col("__ws"), n)
-      df.withColumn("__ws", TextAnalysis.tokens(col(textCol)))
-        .select(col(idCol).as(outId), explode(array_distinct(windows)).as("gram"))
-    }
+    def grams(df: DataFrame, outId: String) = distinctWordGrams(df, n, idCol, textCol, outId)
     grams(train, "train_id")
       .join(grams(eval, "eval_id").select("gram").distinct(), Seq("gram"))
       .groupBy("train_id")
@@ -788,11 +795,7 @@ object Dedup {
   def evalContainment(train: DataFrame, eval: DataFrame, n: Int = 4,
                       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     require(n >= 1, "n-gram size must be >= 1")
-    def grams(df: DataFrame, outId: String): DataFrame = {
-      val windows = graft.functions.NgramFunctions.wordNgrams(col("__ws"), n)
-      df.withColumn("__ws", TextAnalysis.tokens(col(textCol)))
-        .select(col(idCol).as(outId), explode(array_distinct(windows)).as("gram"))
-    }
+    def grams(df: DataFrame, outId: String) = distinctWordGrams(df, n, idCol, textCol, outId)
     val eg = grams(eval, "eval_id")
     val totals = eg.groupBy("eval_id").agg(count(lit(1)).as("n_grams"))
     val contained = grams(train, "train_id").select("gram")

@@ -177,16 +177,13 @@ object Exif {
     * work; the closed-form oracle recomputes every field from id.
     */
   def exifStats(docs: DataFrame)(implicit spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long].mapPartitions { ids =>
-      ids.map { id =>
-        parseExif(synthExifPayload(id)) match {
-          case Some(e) =>
-            ExifStats(id, if (e.endianBig) "MM" else "II", e.orientation,
-              e.width, e.height, e.pixelX, e.iso)
-          case None => ExifStats(id, "none", 0, 0, 0, 0, 0)
-        }
+    Multimodal.perDoc(docs) { id =>
+      parseExif(synthExifPayload(id)) match {
+        case Some(e) =>
+          ExifStats(id, if (e.endianBig) "MM" else "II", e.orientation,
+            e.width, e.height, e.pixelX, e.iso)
+        case None => ExifStats(id, "none", 0, 0, 0, 0, 0)
       }
-    }.toDF()
+    }
   }
 }

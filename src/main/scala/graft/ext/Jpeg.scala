@@ -210,6 +210,35 @@ object Jpeg {
   private def be16(b: Array[Byte], o: Int): Int =
     ((b(o) & 0xff) << 8) | (b(o + 1) & 0xff)
 
+  /** Reads the tables of one DQT segment body `b[from, end)` into their
+    * slots of `qt`, each as 64 NATURAL-order entries (8- or 16-bit
+    * precision). False when a table names a slot or precision outside
+    * the spec or overruns the segment. The full decoder and the
+    * quality-estimation walk ([[quantTables]]) read tables through it, so
+    * both agree on what a stream's tables are.
+    */
+  private def readDqt(b: Array[Byte], from: Int, end: Int,
+                      qt: Array[Array[Int]]): Boolean = {
+    var o = from
+    while (o < end) {
+      val pq = (b(o) & 0xff) >> 4
+      val tq = b(o) & 0x0f
+      if (tq > 3 || pq > 1) return false
+      val n = if (pq == 0) 64 else 128
+      if (o + 1 + n > end) return false
+      val t = new Array[Int](64)
+      var k = 0
+      while (k < 64) {
+        t(Zigzag(k)) =
+          if (pq == 0) b(o + 1 + k) & 0xff else be16(b, o + 1 + 2 * k)
+        k += 1
+      }
+      qt(tq) = t
+      o += 1 + n
+    }
+    true
+  }
+
   /** Full baseline decode. None for anything outside the documented
     * scope or structurally malformed — the StubCodec fallback posture.
     * The marker walk bounds-checks each segment's declared length, and a
@@ -270,23 +299,7 @@ object Jpeg {
       val seg = p + 4
       m match {
         case 0xdb => // DQT: one or more tables
-          var o = seg
-          while (o < p + 2 + len) {
-            val pq = (b(o) & 0xff) >> 4
-            val tq = b(o) & 0x0f
-            if (tq > 3 || pq > 1) return None
-            val n = if (pq == 0) 64 else 128
-            if (o + 1 + n > p + 2 + len) return None
-            val t = new Array[Int](64)
-            var k = 0
-            while (k < 64) {
-              t(Zigzag(k)) =
-                if (pq == 0) b(o + 1 + k) & 0xff else be16(b, o + 1 + 2 * k)
-              k += 1
-            }
-            qt(tq) = t
-            o += 1 + n
-          }
+          if (!readDqt(b, seg, p + 2 + len, qt)) return None
         case 0xc4 => // DHT: one or more tables
           var o = seg
           while (o < p + 2 + len) {
@@ -635,13 +648,8 @@ object Jpeg {
         if (s == 0) {
           if (r == 15) k += 16 // ZRL
           else { // EOBn: run of (1 << r) + extra band-ends incl. this block
-            val extra =
-              if (r == 0) 0
-              else {
-                val v = rd.receive(r)
-                if (v == Int.MinValue) return false
-                v
-              }
+            val extra = if (r == 0) 0 else rd.receive(r)
+            if (extra == Int.MinValue) return false
             eobrun = (1 << r) + extra - 1
             return true
           }
@@ -681,13 +689,8 @@ object Jpeg {
           var newVal = 0
           if (s == 0) {
             if (r != 15) { // EOBn: rest of band gets corrections only
-              val extra =
-                if (r == 0) 0
-                else {
-                  val v = rd.receive(r)
-                  if (v == Int.MinValue) return false
-                  v
-                }
+              val extra = if (r == 0) 0 else rd.receive(r)
+              if (extra == Int.MinValue) return false
               eobrun = (1 << r) + extra
               done = true
             }
@@ -1169,6 +1172,25 @@ object Jpeg {
                                   px_wsum: Long, c0_sum: Long, c1_sum: Long,
                                   c2_sum: Long)
 
+  /** The pixel statistics every decoded-image query registers (q244,
+    * q365, q375 and its siblings): the unsigned byte sum, the
+    * position-weighted sum Σ k·px[k], which breaks on any reordering that
+    * keeps the multiset of bytes, and the sums of channels k mod 3. One
+    * loop, so that the JPEG and PNG queries and their closed-form oracles
+    * read the same fields the same way.
+    */
+  private[ext] def pixelSums(px: Array[Byte]): Array[Long] = {
+    var sum = 0L; var wsum = 0L
+    val ch = new Array[Long](3)
+    var i = 0
+    while (i < px.length) {
+      val v = px(i) & 0xff
+      sum += v; wsum += i.toLong * v; ch(i % 3) += v
+      i += 1
+    }
+    Array(sum, wsum, ch(0), ch(1), ch(2))
+  }
+
   /** The body of the three pixel-stats queries ([[jpegPixelStats]],
     * [[jpegProgressivePixelStats]], [[jpeg420PixelStats]]), which differ
     * only in the encoder that makes each doc's payload: decode it and
@@ -1177,26 +1199,16 @@ object Jpeg {
     */
   private def pixelStats(docs: DataFrame)(payload: Long => Array[Byte])(
       implicit spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long].mapPartitions { ids =>
-      ids.map { id =>
-        decode(payload(id)) match {
-          case Some(img) =>
-            var sum = 0L; var wsum = 0L
-            val ch = new Array[Long](3)
-            var i = 0
-            while (i < img.pixels.length) {
-              val v = img.pixels(i) & 0xff
-              sum += v; wsum += i.toLong * v; ch(i % 3) += v
-              i += 1
-            }
-            JpegPixelStats(id, img.width, img.height, img.nComp,
-              img.pixels.length, sum, wsum, ch(0), ch(1), ch(2))
-          case None =>
-            JpegPixelStats(id, 0, 0, 0, 0, 0L, 0L, 0L, 0L, 0L)
-        }
+    Multimodal.perDoc(docs) { id =>
+      decode(payload(id)) match {
+        case Some(img) =>
+          val Array(sum, wsum, c0, c1, c2) = pixelSums(img.pixels)
+          JpegPixelStats(id, img.width, img.height, img.nComp,
+            img.pixels.length, sum, wsum, c0, c1, c2)
+        case None =>
+          JpegPixelStats(id, 0, 0, 0, 0, 0L, 0L, 0L, 0L, 0L)
       }
-    }.toDF()
+    }
   }
 
   /** q375: build a real JFIF per doc and FULLY DECODE it — marker walk,
@@ -1273,36 +1285,17 @@ object Jpeg {
       if (b.length < 4 || (b(0) & 0xff) != 0xff || (b(1) & 0xff) != 0xd8)
         return None
       val qt = new Array[Array[Int]](4)
-      var any = false
       var p = 2
       while (p + 4 <= b.length) {
         if ((b(p) & 0xff) != 0xff) return None
         val m = b(p + 1) & 0xff
         if (m == 0xff) { p += 1 }
         else if (m == 0xd9 || m == 0xda) { // EOI or SOS: tables are final
-          return if (any) Some(qt) else None
+          return if (qt.exists(_ != null)) Some(qt) else None
         } else {
           val len = be16(b, p + 2)
           if (len < 2 || p + 2 + len > b.length) return None
-          if (m == 0xdb) {
-            var o = p + 4
-            while (o < p + 2 + len) {
-              val pq = (b(o) & 0xff) >> 4
-              val tq = b(o) & 0x0f
-              if (tq > 3 || pq > 1) return None
-              val n = if (pq == 0) 64 else 128
-              if (o + 1 + n > p + 2 + len) return None
-              val t = new Array[Int](64)
-              var k = 0
-              while (k < 64) {
-                t(Zigzag(k)) =
-                  if (pq == 0) b(o + 1 + k) & 0xff else be16(b, o + 1 + 2 * k)
-                k += 1
-              }
-              qt(tq) = t; any = true
-              o += 1 + n
-            }
-          }
+          if (m == 0xdb && !readDqt(b, p + 4, p + 2 + len, qt)) return None
           p += 2 + len
         }
       }
@@ -1361,25 +1354,22 @@ object Jpeg {
     * the exact-hash oracle. Narrow mapPartitions; payloads in-task.
     */
   def jpegQualityStats(docs: DataFrame)(implicit spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long].mapPartitions { ids =>
-      ids.map { id =>
-        quantTables(synthJpegQualityPayload(id)) match {
-          case Some(qt) if qt(0) != null && qt(1) != null =>
-            val lum = qt(0); val chr = qt(1)
-            var ls = 0L; var lw = 0L; var cs = 0L; var cw = 0L
-            var i = 0
-            while (i < 64) {
-              ls += lum(i); lw += i.toLong * lum(i)
-              cs += chr(i); cw += i.toLong * chr(i)
-              i += 1
-            }
-            JpegQualityStats(id, estimateQuality(lum, AnnexKLum),
-              estimateQuality(chr, AnnexKChr), ls, lw, cs, cw)
-          case _ => JpegQualityStats(id, 0, 0, 0L, 0L, 0L, 0L)
-        }
+    Multimodal.perDoc(docs) { id =>
+      quantTables(synthJpegQualityPayload(id)) match {
+        case Some(qt) if qt(0) != null && qt(1) != null =>
+          val lum = qt(0); val chr = qt(1)
+          var ls = 0L; var lw = 0L; var cs = 0L; var cw = 0L
+          var i = 0
+          while (i < 64) {
+            ls += lum(i); lw += i.toLong * lum(i)
+            cs += chr(i); cw += i.toLong * chr(i)
+            i += 1
+          }
+          JpegQualityStats(id, estimateQuality(lum, AnnexKLum),
+            estimateQuality(chr, AnnexKChr), ls, lw, cs, cw)
+        case _ => JpegQualityStats(id, 0, 0, 0L, 0L, 0L, 0L)
       }
-    }.toDF()
+    }
   }
 
   /** q380: [[jpegPixelStats]] over the 4:2:0 corpus — every doc gets a

@@ -1,5 +1,6 @@
 package graft.ext
 
+import scala.reflect.runtime.universe.TypeTag
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ext.Pin.PinOps
@@ -487,21 +488,15 @@ object Multimodal {
     * consumed in-task.
     */
   def probePng(docs: DataFrame)(implicit spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long].mapPartitions { ids =>
-      ids.map { id =>
-        val p = synthPngPayload(id)
-        Png.decodeFull(p) match {
-          case Some(img) =>
-            var sum = 0L
-            var i = 0
-            while (i < img.pixels.length) { sum += img.pixels(i) & 0xff; i += 1 }
-            ProbedMedia(id, "png", img.width, img.height, 0, 0,
-              img.pixels.length, sum)
-          case None => ProbedMedia(id, "unknown", 0, 0, 0, 0, p.length, 0L)
-        }
+    perDoc(docs) { id =>
+      val p = synthPngPayload(id)
+      Png.decodeFull(p) match {
+        case Some(img) =>
+          ProbedMedia(id, "png", img.width, img.height, 0, 0,
+            img.pixels.length, Jpeg.pixelSums(img.pixels)(0))
+        case None => ProbedMedia(id, "unknown", 0, 0, 0, 0, p.length, 0L)
       }
-    }.toDF()
+    }
   }
 
   final case class PngPixelStats(media_id: Long, width: Int, height: Int,
@@ -517,26 +512,27 @@ object Multimodal {
     * analytic while the engine exercises the full real decode.
     */
   def pngPixelStats(docs: DataFrame)(implicit spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long].mapPartitions { ids =>
-      ids.map { id =>
-        val p = synthPngPayload(id)
-        Png.decodeFull(p) match {
-          case Some(img) =>
-            var sum = 0L; var wsum = 0L
-            val ch = new Array[Long](3)
-            var i = 0
-            while (i < img.pixels.length) {
-              val v = img.pixels(i) & 0xff
-              sum += v; wsum += i.toLong * v; ch(i % 3) += v
-              i += 1
-            }
-            PngPixelStats(id, img.width, img.height, img.pixels.length,
-              sum, wsum, ch(0), ch(1), ch(2))
-          case None => PngPixelStats(id, 0, 0, 0, 0L, 0L, 0L, 0L, 0L)
-        }
+    perDoc(docs) { id =>
+      val p = synthPngPayload(id)
+      Png.decodeFull(p) match {
+        case Some(img) =>
+          val Array(sum, wsum, c0, c1, c2) = Jpeg.pixelSums(img.pixels)
+          PngPixelStats(id, img.width, img.height, img.pixels.length,
+            sum, wsum, c0, c1, c2)
+        case None => PngPixelStats(id, 0, 0, 0, 0L, 0L, 0L, 0L, 0L)
       }
-    }.toDF()
+    }
+  }
+
+  /** One row `f(id)` per doc id of `docs`, in one narrow mapPartitions:
+    * the shape of every synthetic-media query, which builds and decodes
+    * each payload in the task that owns its id, so no payload ever
+    * shuffles and the scale is the partition count.
+    */
+  private[ext] def perDoc[T <: Product : TypeTag](docs: DataFrame)(f: Long => T)(
+      implicit spark: SparkSession): DataFrame = {
+    import spark.implicits._
+    docs.select(col("doc_id")).as[Long].mapPartitions(_.map(f)).toDF()
   }
 
   /** A media table whose payloads are REAL BMP/WAV containers (by id

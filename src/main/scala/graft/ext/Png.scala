@@ -384,24 +384,15 @@ object Png {
     * never shuffle.
     */
   def pngFullStats(docs: DataFrame)(implicit spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long].mapPartitions { ids =>
-      ids.map { id =>
-        decodeFull(synthPngFullPayload(id)) match {
-          case Some(img) =>
-            var sum = 0L; var wsum = 0L
-            var i = 0
-            while (i < img.pixels.length) {
-              val v = img.pixels(i) & 0xff
-              sum += v; wsum += i.toLong * v
-              i += 1
-            }
-            PngFullStats(id, (((id % 4) + 4) % 4).toInt, img.width,
-              img.height, img.channels, img.bitDepth, img.pixels.length,
-              sum, wsum)
-          case None => PngFullStats(id, -1, 0, 0, 0, 0, 0, 0L, 0L)
-        }
+    Multimodal.perDoc(docs) { id =>
+      decodeFull(synthPngFullPayload(id)) match {
+        case Some(img) =>
+          val Array(sum, wsum, _, _, _) = Jpeg.pixelSums(img.pixels)
+          PngFullStats(id, (((id % 4) + 4) % 4).toInt, img.width,
+            img.height, img.channels, img.bitDepth, img.pixels.length,
+            sum, wsum)
+        case None => PngFullStats(id, -1, 0, 0, 0, 0, 0, 0L, 0L)
       }
-    }.toDF()
+    }
   }
 }

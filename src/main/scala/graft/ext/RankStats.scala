@@ -107,6 +107,21 @@ object RankStats {
           " END").as("spearman_ppm"))
   }
 
+  /** The by-value collapse of a two-group sample, `(v, ca, cb)`: each
+    * distinct value with its counts in group A (`grpCol = aValue`) and
+    * in group B (every other row, a null group included). Null values are
+    * excluded, since a null bucket would shift every running sum after
+    * it. [[ksStatistic]] and [[rankSumAuc]] both read it, so the KS gap
+    * and the AUC count the same two samples.
+    */
+  private def countsByValue(df: DataFrame, grpCol: Column, aValue: String,
+                            valueCol: Column): DataFrame =
+    df.select(when(grpCol === aValue, lit(1L)).otherwise(lit(0L)).as("isA"),
+        valueCol.as("v"))
+      .filter(col("v").isNotNull)
+      .groupBy("v")
+      .agg(sum("isA").as("ca"), sum(expr("1 - isA")).as("cb"))
+
   /** Two-sample Kolmogorov–Smirnov statistic (Kolmogorov 1933 /
     * Smirnov 1939, public literature), EXACT: D = max over observed
     * values of |F_a(v) − F_b(v)|, evaluated as the integer cross-product
@@ -121,16 +136,7 @@ object RankStats {
     */
   def ksStatistic(df: DataFrame, grpCol: Column, aValue: String,
                   valueCol: Column): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // null values are EXCLUDED: a null bucket in the by-value collapse
-    // would silently shift D; null-group rows count as group B by the
-    // === convention, which the filter below makes irrelevant for v
-    val byValue = df
-      .select(when(grpCol === aValue, lit(1L)).otherwise(lit(0L)).as("isA"),
-        valueCol.as("v"))
-      .filter(col("v").isNotNull)
-      .groupBy("v")
-      .agg(sum("isA").as("ca"), sum(expr("1 - isA")).as("cb"))
+    val byValue = countsByValue(df, grpCol, aValue, valueCol)
     // two-arm running sum over the collapsed distinct-value relation
     // ([[cumSums]] — single-partition window by default, distributed
     // prefix sum past the conf threshold)
@@ -167,14 +173,7 @@ object RankStats {
     */
   def rankSumAuc(df: DataFrame, grpCol: Column, aValue: String,
                  valueCol: Column): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // same null convention as [[ksStatistic]]: null values excluded
-    val byValue = df
-      .select(when(grpCol === aValue, lit(1L)).otherwise(lit(0L)).as("isA"),
-        valueCol.as("v"))
-      .filter(col("v").isNotNull)
-      .groupBy("v")
-      .agg(sum("isA").as("ca"), sum(expr("1 - isA")).as("cb"))
+    val byValue = countsByValue(df, grpCol, aValue, valueCol)
     // two-arm running sum ([[cumSums]]) over the collapsed relation
     val cum = cumSums(byValue, Seq(col("v")), Seq("cb"))
       .withColumn("cum_b_lt", col("__cum_cb") - col("cb"))

@@ -202,13 +202,7 @@ object Similarity {
               centroids: DataFrame, nProbe: Int = 3,
               idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val cent = centroids.select(col(idCol).as("cid"), col(vecCol).as("cv"))
-    val corp = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("nv"))
-
-    val aw = Window.partitionBy("neighbor_id").orderBy(col("s").desc, col("cid"))
-    val assign = corp.crossJoin(broadcast(cent))
-      .withColumn("s", round(cosine(col("nv"), col("cv")), 6))
-      .withColumn("rn", row_number().over(aw)).filter(col("rn") === 1)
-      .select("cid", "neighbor_id", "nv")
+    val assign = ivfAssign(corpus, cent, idCol, vecCol)
 
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
     val qw = Window.partitionBy("query_id").orderBy(col("s").desc, col("cid"))
@@ -357,6 +351,22 @@ object Similarity {
       .select("method", "total_hits", "expected", "recall_ppm")
   }
 
+  /** The IVF cell index `(cid, neighbor_id, nv)`: each corpus vector in
+    * the cell of its nearest centroid of `cent` `(cid, cv)` by rounded
+    * cosine, ties to the smaller cid (a broadcast linear scan, no
+    * shuffle). [[ivfTopK]] and [[ivfProbeCurve]] probe the same cells, so
+    * each arm of the curve equals ivfTopK at that probe count.
+    */
+  private def ivfAssign(corpus: DataFrame, cent: DataFrame,
+                        idCol: String, vecCol: String): DataFrame = {
+    val corp = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("nv"))
+    val aw = Window.partitionBy("neighbor_id").orderBy(col("s").desc, col("cid"))
+    corp.crossJoin(broadcast(cent))
+      .withColumn("s", round(cosine(col("nv"), col("cv")), 6))
+      .withColumn("rn", row_number().over(aw)).filter(col("rn") === 1)
+      .select("cid", "neighbor_id", "nv")
+  }
+
   /** Recall-vs-nProbe tuning curve for [[ivfTopK]]: one row per probe
     * count — the table an ANN deployment reads to pick its
     * latency/recall point (probe counts cost linearly; recall saturates
@@ -376,12 +386,7 @@ object Similarity {
       && probes.distinct.size == probes.size, s"bad probe list: $probes")
     val maxP = probes.max
     val cent = centroids.select(col(idCol).as("cid"), col(vecCol).as("cv"))
-    val corp = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("nv"))
-    val aw = Window.partitionBy("neighbor_id").orderBy(col("s").desc, col("cid"))
-    val assign = corp.crossJoin(broadcast(cent))
-      .withColumn("s", round(cosine(col("nv"), col("cv")), 6))
-      .withColumn("rn", row_number().over(aw)).filter(col("rn") === 1)
-      .select("cid", "neighbor_id", "nv")
+    val assign = ivfAssign(corpus, cent, idCol, vecCol)
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
     val qw = Window.partitionBy("query_id").orderBy(col("s").desc, col("cid"))
     val pr = q.crossJoin(broadcast(cent))

@@ -799,25 +799,38 @@ object Sketch {
         sum("ca").over(wRun).as("cum_a"), sum("cb").over(wRun).as("cum_b"))
       .pin() // one-shot: bucket-keyspace rows; feeds totals + gaps
     val tot = cum.agg(max("cum_a").as("n_a"), max("cum_b").as("n_b"))
-    val wLag = Window.orderBy("bucket_id")
-    cum.crossJoin(broadcast(tot))
+    ksInterval(cum.crossJoin(broadcast(tot))
       .select(col("bucket_id"), col("n_a"), col("n_b"), col("ca"), col("cb"),
         expr("CAST(cum_a AS DECIMAL(38,0)) * n_b" +
-          " - CAST(cum_b AS DECIMAL(38,0)) * n_a").as("dd"))
+          " - CAST(cum_b AS DECIMAL(38,0)) * n_a").as("dd")))
+  }
+
+  /** The certified KS readout of [[logHistKs]] and [[logHistKsSeries]]
+    * over rows `(keys…, bucket_id, ca, cb, n_a, n_b, dd)`, dd the scaled
+    * CDF gap n_b·cum_a − n_a·cum_b at the bucket's upper boundary: per
+    * key group, `ks_lo_ppm` is the largest boundary gap and `ks_hi_ppm`
+    * the largest gap either side's bucket mass can open past the previous
+    * boundary. One body, so the single pair and the series certify the
+    * same interval.
+    */
+  private def ksInterval(gaps: DataFrame, keys: String*): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val wLag = Window.partitionBy(keys.map(col): _*).orderBy("bucket_id")
+    gaps
       .withColumn("d_prev",
         coalesce(lag("dd", 1).over(wLag), expr("CAST(0 AS DECIMAL(38,0))")))
       .withColumn("hi_c",
         greatest(abs(col("d_prev") + expr("CAST(ca AS DECIMAL(38,0)) * n_b")),
           abs(col("d_prev") - expr("CAST(cb AS DECIMAL(38,0)) * n_a"))))
-      .groupBy("n_a", "n_b")
+      .groupBy((keys ++ Seq("n_a", "n_b")).map(col): _*)
       .agg(max(abs(col("dd"))).as("lo_s"), max("hi_c").as("hi_s"))
-      .select(col("n_a"), col("n_b"),
+      .select(keys.map(col) ++ Seq(col("n_a"), col("n_b"),
         expr("CASE WHEN n_a = 0 OR n_b = 0 THEN NULL ELSE" +
           " lo_s * 1000000 div (CAST(n_a AS DECIMAL(38,0)) * n_b) END")
           .as("ks_lo_ppm"),
         expr("CASE WHEN n_a = 0 OR n_b = 0 THEN NULL ELSE" +
           " hi_s * 1000000 div (CAST(n_a AS DECIMAL(38,0)) * n_b) END")
-          .as("ks_hi_ppm"))
+          .as("ks_hi_ppm")): _*)
   }
 
   /** [[logHistKs]] as a SERIES: for every group (hour/day/shard) with an
@@ -850,8 +863,7 @@ object Sketch {
     val wRun = Window.partitionBy("g").orderBy("bucket_id")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val wAll = Window.partitionBy("g")
-    val wLag = Window.partitionBy("g").orderBy("bucket_id")
-    j.select(col("g"), col("bucket_id"), col("ca"), col("cb"),
+    ksInterval(j.select(col("g"), col("bucket_id"), col("ca"), col("cb"),
         sum("ca").over(wRun).as("cum_a"), sum("cb").over(wRun).as("cum_b"))
       .select(col("g"), col("bucket_id"), col("ca"), col("cb"),
         col("cum_a"), col("cum_b"),
@@ -859,21 +871,8 @@ object Sketch {
       .select(col("g"), col("bucket_id"), col("ca"), col("cb"),
         col("n_a"), col("n_b"),
         expr("CAST(cum_a AS DECIMAL(38,0)) * n_b" +
-          " - CAST(cum_b AS DECIMAL(38,0)) * n_a").as("dd"))
-      .withColumn("d_prev",
-        coalesce(lag("dd", 1).over(wLag), expr("CAST(0 AS DECIMAL(38,0))")))
-      .withColumn("hi_c",
-        greatest(abs(col("d_prev") + expr("CAST(ca AS DECIMAL(38,0)) * n_b")),
-          abs(col("d_prev") - expr("CAST(cb AS DECIMAL(38,0)) * n_a"))))
-      .groupBy("g", "n_a", "n_b")
-      .agg(max(abs(col("dd"))).as("lo_s"), max("hi_c").as("hi_s"))
-      .select(col("g").as(groupCol), col("n_a"), col("n_b"),
-        expr("CASE WHEN n_a = 0 OR n_b = 0 THEN NULL ELSE" +
-          " lo_s * 1000000 div (CAST(n_a AS DECIMAL(38,0)) * n_b) END")
-          .as("ks_lo_ppm"),
-        expr("CASE WHEN n_a = 0 OR n_b = 0 THEN NULL ELSE" +
-          " hi_s * 1000000 div (CAST(n_a AS DECIMAL(38,0)) * n_b) END")
-          .as("ks_hi_ppm"))
+          " - CAST(cum_b AS DECIMAL(38,0)) * n_a").as("dd")), "g")
+      .withColumnRenamed("g", groupCol)
   }
 
   /** Merge per-shard/day/tenant histograms: counts add, bucket identity

@@ -141,29 +141,24 @@ object Video {
     * shape (scale = partitions, no exchange, frame loop in-task).
     */
   def mjpegStats(docs: DataFrame)(implicit spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long].mapPartitions { ids =>
-      ids.map { id =>
-        parseAvi(synthMjpegPayload(id)) match {
-          case Some(avi) =>
-            val sums = new Array[Long](4)
-            var total = 0L
-            var n = 0
-            avi.frames.zipWithIndex.foreach { case (fb, fi) =>
-              Jpeg.decode(fb).foreach { img =>
-                var s = 0L
-                var i = 0
-                while (i < img.pixels.length) { s += img.pixels(i) & 0xff; i += 1 }
-                if (fi < 4) sums(fi) = s
-                total += s
-                n += 1
-              }
+    Multimodal.perDoc(docs) { id =>
+      parseAvi(synthMjpegPayload(id)) match {
+        case Some(avi) =>
+          val sums = new Array[Long](4)
+          var total = 0L
+          var n = 0
+          avi.frames.zipWithIndex.foreach { case (fb, fi) =>
+            Jpeg.decode(fb).foreach { img =>
+              val s = Jpeg.pixelSums(img.pixels)(0)
+              if (fi < 4) sums(fi) = s
+              total += s
+              n += 1
             }
-            MjpegStats(id, n, avi.declaredFrames, avi.width, avi.height,
-              sums(0), sums(1), sums(2), sums(3), total)
-          case None => MjpegStats(id, 0, -1, 0, 0, 0L, 0L, 0L, 0L, 0L)
-        }
+          }
+          MjpegStats(id, n, avi.declaredFrames, avi.width, avi.height,
+            sums(0), sums(1), sums(2), sums(3), total)
+        case None => MjpegStats(id, 0, -1, 0, 0, 0L, 0L, 0L, 0L, 0L)
       }
-    }.toDF()
+    }
   }
 }

@@ -1,7 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.Platform
@@ -41,15 +40,9 @@ object CollapseWsUtil {
   }
 }
 
-case class CollapseWs(child: Expression) extends UnaryExpression with Serializable {
+case class CollapseWs(child: Expression) extends StringKernel {
 
-  override def nullIntolerant: Boolean = true
   override def dataType: DataType = StringType
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string input, got ${child.dataType.simpleString}")
 
   override protected def nullSafeEval(input: Any): Any =
     CollapseWsUtil.collapse(input.asInstanceOf[UTF8String])

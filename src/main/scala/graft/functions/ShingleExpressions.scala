@@ -36,7 +36,13 @@ object ShingleUtil {
 
   private val EmptyResult = new GenericArrayData(Array.emptyLongArray)
 
-  def codes3(s: UTF8String): ArrayData = {
+  /** The codepoints of `s`, decoded once: every kernel here and
+    * [[TextStatsUtil.stats]] index the text by codepoint, not by UTF-16
+    * char, so that a surrogate pair counts as one position in both
+    * engines. The array is trimmed only when the text has a surrogate
+    * pair, so ASCII and BMP text cost one allocation.
+    */
+  def codepoints(s: UTF8String): Array[Int] = {
     val str = s.toString
     val len = str.length
     val cps = new Array[Int](len)
@@ -48,6 +54,12 @@ object ShingleUtil {
       n += 1
       i += Character.charCount(cp)
     }
+    if (n == len) cps else java.util.Arrays.copyOf(cps, n)
+  }
+
+  def codes3(s: UTF8String): ArrayData = {
+    val cps = codepoints(s)
+    val n = cps.length
     if (n < 3) return EmptyResult
     val m = n - 2
     // open-addressed set, power-of-2 capacity ≥ 2m (load factor ≤ 0.5)
@@ -96,17 +108,8 @@ object ShingleUtil {
     */
   def rollingFp(s: UTF8String): Long = {
     val P = 2147483647L
-    val str = s.toString
-    val len = str.length
-    val cps = new Array[Int](len)
-    var n = 0
-    var i = 0
-    while (i < len) {
-      val cp = str.codePointAt(i)
-      cps(n) = cp
-      n += 1
-      i += Character.charCount(cp)
-    }
+    val cps = codepoints(s)
+    val n = cps.length
     if (n < 3) return 0L
     var acc = 0L
     var k = 0
@@ -135,17 +138,8 @@ object ShingleUtil {
     val P = 2147483647L
     val a1 = graft.ext.Dedup.hashA(j); val b1 = graft.ext.Dedup.hashB(j)
     val a2 = graft.ext.Dedup.hashA(j + 1); val b2 = graft.ext.Dedup.hashB(j + 1)
-    val str = s.toString
-    val len = str.length
-    val cps = new Array[Int](len)
-    var n = 0
-    var i = 0
-    while (i < len) {
-      val cp = str.codePointAt(i)
-      cps(n) = cp
-      n += 1
-      i += Character.charCount(cp)
-    }
+    val cps = codepoints(s)
+    val n = cps.length
     if (n < 3) return EmptyResult
     val m = n - 2
     val out = new Array[Long](m)
@@ -201,11 +195,12 @@ object ShingleUtil {
   }
 }
 
-/** `graft_shingle_codes(text)` → array<long>: distinct encoded 3-gram
-  * codes. Null text → null (its only consumer is `explode`, which skips
-  * null exactly like the legacy empty array).
+/** A one-string-argument kernel: null text → null, and any other input
+  * type fails analysis with one message naming the function. Every
+  * native text expression in this package extends it, so each states only
+  * its result type and its evaluation.
   */
-case class ShingleCodes(child: Expression) extends UnaryExpression with Serializable {
+abstract class StringKernel extends UnaryExpression with Serializable {
 
   override def nullIntolerant: Boolean = true
 
@@ -213,6 +208,13 @@ case class ShingleCodes(child: Expression) extends UnaryExpression with Serializ
     if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
       s"$prettyName requires a string input, got ${child.dataType.simpleString}")
+}
+
+/** `graft_shingle_codes(text)` → array<long>: distinct encoded 3-gram
+  * codes. Null text → null (its only consumer is `explode`, which skips
+  * null exactly like the legacy empty array).
+  */
+case class ShingleCodes(child: Expression) extends StringKernel {
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
@@ -230,14 +232,7 @@ case class ShingleCodes(child: Expression) extends UnaryExpression with Serializ
   * strings, first-occurrence order (null text → null; explode semantics
   * identical to the composed legacy form).
   */
-case class ShingleStrings(child: Expression) extends UnaryExpression with Serializable {
-
-  override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string input, got ${child.dataType.simpleString}")
+case class ShingleStrings(child: Expression) extends StringKernel {
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
 
@@ -255,15 +250,7 @@ case class ShingleStrings(child: Expression) extends UnaryExpression with Serial
   * per-trigram hashes (null text → null, < 3 codepoints → empty). `j` must
   * be a literal — it selects the hash family member at plan time.
   */
-case class TrigramMixHashes(child: Expression, j: Int)
-    extends UnaryExpression with Serializable {
-
-  override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string input, got ${child.dataType.simpleString}")
+case class TrigramMixHashes(child: Expression, j: Int) extends StringKernel {
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
@@ -281,14 +268,7 @@ case class TrigramMixHashes(child: Expression, j: Int)
   * over ordered 3-gram shingles (null text → null, < 3 codepoints → 0 —
   * same contract as the composed TextAnalysis form it replaces).
   */
-case class RollingFp(child: Expression) extends UnaryExpression with Serializable {
-
-  override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string input, got ${child.dataType.simpleString}")
+case class RollingFp(child: Expression) extends StringKernel {
 
   override def dataType: DataType = LongType
 

@@ -1,10 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** One-pass per-document text counters for the stats/quality/lang-ID
@@ -78,17 +77,8 @@ object TextStatsUtil {
   }
 
   def stats(s: UTF8String): InternalRow = {
-    val str = s.toString
-    val len = str.length
-    val cps = new Array[Int](len)
-    var n = 0
-    var i = 0
-    while (i < len) {
-      val cp = str.codePointAt(i)
-      cps(n) = cp
-      n += 1
-      i += Character.charCount(cp)
-    }
+    val cps = ShingleUtil.codepoints(s)
+    val n = cps.length
 
     var nTokens = 0
     var nSubwords = 0
@@ -124,7 +114,7 @@ object TextStatsUtil {
       }
     }
 
-    i = 0
+    var i = 0
     while (i < n) {
       val cp = cps(i)
       val ws = isWs(cp)
@@ -155,14 +145,7 @@ object TextStatsUtil {
   }
 }
 
-case class TextStats(child: Expression) extends UnaryExpression with Serializable {
-
-  override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string input, got ${child.dataType.simpleString}")
+case class TextStats(child: Expression) extends StringKernel {
 
   override def dataType: DataType = TextStatsFunctions.schema
 

@@ -1,9 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, IntegerType, StringType}
+import org.apache.spark.sql.types.{DataType, IntegerType}
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -44,15 +43,9 @@ object TokenCountUtil {
   }
 }
 
-case class TokenCount(child: Expression) extends UnaryExpression with Serializable {
+case class TokenCount(child: Expression) extends StringKernel {
 
-  override def nullIntolerant: Boolean = true
   override def dataType: DataType = IntegerType
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string input, got ${child.dataType.simpleString}")
 
   override protected def nullSafeEval(input: Any): Any =
     TokenCountUtil.count(input.asInstanceOf[UTF8String])

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, LongType}
 
 /** Native Catalyst expressions for vector math over `array<float|double>`
-  * columns (extension surface, SURVEY.md §7.5).
+  * and `array<bigint>` columns (extension surface, SURVEY.md §7.5).
   *
   * Rationale: the higher-order-function formulation
   * (`aggregate(zip_with(a,b,*),0d,+)`) allocates an intermediate array and
@@ -25,23 +25,29 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, L
   * any null element → null (null poisons the multiply then the sum).
   * Summation order is ascending index — identical to the SQL oracle's
   * per-index SUM, so results are bit-identical to the portable reference.
+  *
+  * The base holds what every binary array kernel shares, so that each
+  * kernel states only its element types, its result type and its loop:
+  * the type check and its message, null-in → null-out, and the codegen
+  * guards against unequal lengths and null elements.
   */
-abstract class VectorFoldExpression extends BinaryExpression with Serializable {
+abstract class VectorFoldExpression(elementTypes: Seq[DataType], resultType: DataType)
+    extends BinaryExpression with Serializable {
 
+  override def dataType: DataType = resultType
   override def nullIntolerant: Boolean = true
 
-  private def ok(t: DataType): Boolean = t match {
-    case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => true
-    case _ => false
-  }
-
-  override def checkInputDataTypes(): TypeCheckResult =
+  override def checkInputDataTypes(): TypeCheckResult = {
+    def ok(t: DataType): Boolean = t match {
+      case ArrayType(e, _) => elementTypes.contains(e)
+      case _ => false
+    }
     if (ok(left.dataType) && ok(right.dataType)) TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<float|double> inputs, " +
+      s"$prettyName requires array<${elementTypes.map(_.simpleString).mkString("|")}> inputs, " +
         s"got ${left.dataType.simpleString} and ${right.dataType.simpleString}")
+  }
 
-  override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
 
   protected def elemIsFloat(e: Expression): Boolean =
@@ -65,18 +71,25 @@ abstract class VectorFoldExpression extends BinaryExpression with Serializable {
     val lenGuard =
       s"""if ($a.numElements() != $b.numElements()) { ${ev.isNull} = true; }
          |int $n = $a.numElements();""".stripMargin
+    (lenGuard, genElemGuard(ev, a, i, b, i))
+  }
+
+  /** codegen guard: null-out the result and leave the loop when element
+    * `ai` of `a` or `bi` of `b` is null; empty for a side whose schema
+    * declares non-null elements.
+    */
+  protected def genElemGuard(ev: ExprCode, a: String, ai: String, b: String, bi: String): String = {
     val nullChecks = Seq(
-      if (elemNullable(left)) Some(s"$a.isNullAt($i)") else None,
-      if (elemNullable(right)) Some(s"$b.isNullAt($i)") else None).flatten
-    val elemGuard =
-      if (nullChecks.isEmpty) ""
-      else s"if (${nullChecks.mkString(" || ")}) { ${ev.isNull} = true; break; }"
-    (lenGuard, elemGuard)
+      if (elemNullable(left)) Some(s"$a.isNullAt($ai)") else None,
+      if (elemNullable(right)) Some(s"$b.isNullAt($bi)") else None).flatten
+    if (nullChecks.isEmpty) ""
+    else s"if (${nullChecks.mkString(" || ")}) { ${ev.isNull} = true; break; }"
   }
 }
 
 /** dot(a, b) = Σ a_i·b_i; null on length mismatch or null element. */
-case class DotProduct(left: Expression, right: Expression) extends VectorFoldExpression {
+case class DotProduct(left: Expression, right: Expression)
+    extends VectorFoldExpression(Seq(FloatType, DoubleType), DoubleType) {
 
   override def nullSafeEval(l: Any, r: Any): Any = {
     val a = l.asInstanceOf[ArrayData]; val b = r.asInstanceOf[ArrayData]
@@ -115,7 +128,8 @@ case class DotProduct(left: Expression, right: Expression) extends VectorFoldExp
 /** cosine(a, b) = dot/(‖a‖·‖b‖) in ONE fused pass; 0.0 when either norm is
   * 0; null on length mismatch or null element (mirrors the HOF form).
   */
-case class CosineSimilarity(left: Expression, right: Expression) extends VectorFoldExpression {
+case class CosineSimilarity(left: Expression, right: Expression)
+    extends VectorFoldExpression(Seq(FloatType, DoubleType), DoubleType) {
 
   override def nullSafeEval(l: Any, r: Any): Any = {
     val a = l.asInstanceOf[ArrayData]; val b = r.asInstanceOf[ArrayData]
@@ -169,26 +183,7 @@ case class CosineSimilarity(left: Expression, right: Expression) extends VectorF
   * (64·(2·10⁶)² < 2⁵⁹).
   */
 case class LongL2Squared(left: Expression, right: Expression)
-    extends BinaryExpression with Serializable {
-
-  override def nullIntolerant: Boolean = true
-
-  private def ok(t: DataType): Boolean = t match {
-    case ArrayType(LongType, _) => true
-    case _ => false
-  }
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (ok(left.dataType) && ok(right.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<bigint> inputs, " +
-        s"got ${left.dataType.simpleString} and ${right.dataType.simpleString}")
-
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-
-  private def elemNullable(e: Expression): Boolean =
-    e.dataType.asInstanceOf[ArrayType].containsNull
+    extends VectorFoldExpression(Seq(LongType), LongType) {
 
   override def nullSafeEval(l: Any, r: Any): Any = {
     val a = l.asInstanceOf[ArrayData]; val b = r.asInstanceOf[ArrayData]
@@ -207,15 +202,9 @@ case class LongL2Squared(left: Expression, right: Expression)
     nullSafeCodeGen(ctx, ev, (a, b) => {
       val i = ctx.freshName("i"); val n = ctx.freshName("n")
       val acc = ctx.freshName("acc"); val d = ctx.freshName("d")
-      val nullChecks = Seq(
-        if (elemNullable(left)) Some(s"$a.isNullAt($i)") else None,
-        if (elemNullable(right)) Some(s"$b.isNullAt($i)") else None).flatten
-      val elemGuard =
-        if (nullChecks.isEmpty) ""
-        else s"if (${nullChecks.mkString(" || ")}) { ${ev.isNull} = true; break; }"
+      val (lenGuard, elemGuard) = genGuards(ctx, ev, a, b, i, n)
       s"""
-         |if ($a.numElements() != $b.numElements()) { ${ev.isNull} = true; }
-         |int $n = $a.numElements();
+         |$lenGuard
          |long $acc = 0L;
          |if (!${ev.isNull}) {
          |  for (int $i = 0; $i < $n; $i++) {
@@ -250,26 +239,7 @@ case class LongL2Squared(left: Expression, right: Expression)
   * non-null so the static-schema guard compiles away).
   */
 case class SortedInterCount(left: Expression, right: Expression)
-    extends BinaryExpression with Serializable {
-
-  override def nullIntolerant: Boolean = true
-
-  private def ok(t: DataType): Boolean = t match {
-    case ArrayType(LongType, _) => true
-    case _ => false
-  }
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (ok(left.dataType) && ok(right.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<bigint> inputs, " +
-        s"got ${left.dataType.simpleString} and ${right.dataType.simpleString}")
-
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-
-  private def elemNullable(e: Expression): Boolean =
-    e.dataType.asInstanceOf[ArrayType].containsNull
+    extends VectorFoldExpression(Seq(LongType), LongType) {
 
   override def nullSafeEval(l: Any, r: Any): Any = {
     val a = l.asInstanceOf[ArrayData]; val b = r.asInstanceOf[ArrayData]
@@ -291,12 +261,7 @@ case class SortedInterCount(left: Expression, right: Expression)
       val na = ctx.freshName("na"); val nb = ctx.freshName("nb")
       val acc = ctx.freshName("acc")
       val x = ctx.freshName("x"); val y = ctx.freshName("y")
-      val nullChecks = Seq(
-        if (elemNullable(left)) Some(s"$a.isNullAt($i)") else None,
-        if (elemNullable(right)) Some(s"$b.isNullAt($j)") else None).flatten
-      val elemGuard =
-        if (nullChecks.isEmpty) ""
-        else s"if (${nullChecks.mkString(" || ")}) { ${ev.isNull} = true; break; }"
+      val elemGuard = genElemGuard(ev, a, i, b, j)
       s"""
          |int $na = $a.numElements(); int $nb = $b.numElements();
          |int $i = 0; int $j = 0;

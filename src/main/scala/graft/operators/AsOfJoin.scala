@@ -90,6 +90,49 @@ object AsOfJoin {
                   tsCol: String, prefix: String = "asof_"): DataFrame =
     scan(left, right, keys, tsCol, prefix, Nearest)
 
+  /** The two halves of the tagged union every as-of scan sorts: rows
+    * `(keys…, __t, __lv, __rv, __side)`, a left row carrying itself as the
+    * `__lv` struct (side 0) and a right row its ts and payload under
+    * `prefix` as `__rv` (side 1), each null on the other side. A right
+    * row with a null ts or key is dropped: it can never be a match, but
+    * would sort first and pollute the running last() (a null ts), or
+    * match null-key left rows, which neither equi-join semantics nor the
+    * DuckDB ASOF oracle allow (a null key).
+    */
+  private def taggedSides(left: DataFrame, right: DataFrame, keys: Seq[String],
+                          tsCol: String, prefix: String,
+                          payloadCols: Seq[String]): (DataFrame, DataFrame) = {
+    val lvType = StructType(left.schema.fields)
+    val rvType = StructType(
+      StructField(prefix + tsCol, right.schema(tsCol).dataType, nullable = true) +:
+        payloadCols.map(c => StructField(prefix + c, right.schema(c).dataType, nullable = true)))
+    val lt = left.select(
+      keys.map(col) ++ Seq(
+        col(tsCol).as("__t"),
+        struct(left.columns.toSeq.map(col): _*).as("__lv"),
+        lit(null).cast(rvType).as("__rv"),
+        lit(0).as("__side")): _*)
+    val rt = right
+      .filter(keys.map(col(_).isNotNull).foldLeft(col(tsCol).isNotNull)(_ && _))
+      .select(
+        keys.map(col) ++ Seq(
+          col(tsCol).as("__t"),
+          lit(null).cast(lvType).as("__lv"),
+          struct(col(tsCol).as(prefix + tsCol) +:
+            payloadCols.map(c => col(c).as(prefix + c)): _*).as("__rv"),
+          lit(1).as("__side")): _*)
+    (lt, rt)
+  }
+
+  /** An as-of scan's output columns: every left column read back from
+    * `__lv`, then the match's prefixed ts and payload read from the
+    * struct column `matched`.
+    */
+  private def outputCols(left: DataFrame, tsCol: String, prefix: String,
+                         payloadCols: Seq[String], matched: String): Seq[Column] =
+    left.columns.toSeq.map(c => col(s"__lv.$c").as(c)) ++
+      (tsCol +: payloadCols).map(f => col(s"$matched.$prefix$f").as(prefix + f))
+
   private sealed trait Mode
   private case object Backward extends Mode
   private case object Forward extends Mode
@@ -104,32 +147,7 @@ object AsOfJoin {
       .intersect((tsCol +: payloadCols).map(prefix + _).toSet)
     require(outClash.isEmpty,
       s"asOf output names collide with left columns: ${outClash.mkString(", ")} (choose another prefix)")
-    val lvType = StructType(left.schema.fields)
-    val rvType = StructType(
-      StructField(prefix + tsCol, right.schema(tsCol).dataType, nullable = true) +:
-        payloadCols.map(c => StructField(prefix + c, right.schema(c).dataType, nullable = true)))
-
-    val lt = left.select(
-      keys.map(col) ++ Seq(
-        col(tsCol).as("__t"),
-        struct(left.columns.toSeq.map(col): _*).as("__lv"),
-        lit(null).cast(rvType).as("__rv"),
-        lit(0).as("__side")): _*)
-    // a right row with null ts can never be a latest-≤ match, but would
-    // sort FIRST under asc ordering and pollute the running last() for
-    // every left row — drop it (matches ASOF null-comparison semantics).
-    // Same for null KEYS: Window.partitionBy groups nulls together, so a
-    // null-key right row would match null-key left rows — equi-join
-    // semantics (and the DuckDB ASOF oracle) never match nulls, so drop.
-    val rt = right
-      .filter(keys.map(col(_).isNotNull).foldLeft(col(tsCol).isNotNull)(_ && _))
-      .select(
-      keys.map(col) ++ Seq(
-        col(tsCol).as("__t"),
-        lit(null).cast(lvType).as("__lv"),
-        struct(col(tsCol).as(prefix + tsCol) +:
-          payloadCols.map(c => col(c).as(prefix + c)): _*).as("__rv"),
-        lit(1).as("__side")): _*)
+    val (lt, rt) = taggedSides(left, right, keys, tsCol, prefix, payloadCols)
 
     // backward: right sorts before left at equal ts (side desc) and the
     // running last() looks back — inclusive latest-≤ match. Forward: left
@@ -144,9 +162,7 @@ object AsOfJoin {
     val wFwd = base.orderBy(col("__t").asc, col("__side").asc)
       .rowsBetween(Window.currentRow, Window.unboundedFollowing)
 
-    val outCols: Seq[Column] =
-      left.columns.map(c => col(s"__lv.$c").as(c)).toSeq ++
-        rvType.fieldNames.map(f => col(s"__m.$f").as(f)).toSeq
+    val outCols = outputCols(left, tsCol, prefix, payloadCols, "__m")
 
     val union = lt.unionByName(rt)
     val withMatch = mode match {
@@ -201,31 +217,15 @@ object AsOfJoin {
     require(outClash.isEmpty,
       s"asOfSliced output names collide with left columns: ${outClash.mkString(", ")} (choose another prefix)")
 
-    val lvType = StructType(left.schema.fields)
-    val rvType = StructType(
-      StructField(prefix + tsCol, right.schema(tsCol).dataType, nullable = true) +:
-        payloadCols.map(c => StructField(prefix + c, right.schema(c).dataType, nullable = true)))
     val widthUs = Math.multiplyExact(sliceWidthMs, 1000L)
     def withSlice(df: DataFrame): DataFrame =
       df.withColumn("__um", unix_micros(col("__t")))
         .withColumn("__slice", expr(s"(__um - pmod(__um, ${widthUs}L)) div ${widthUs}L"))
         .drop("__um")
 
-    val lt = withSlice(left.select(
-      keys.map(col) ++ Seq(
-        col(tsCol).as("__t"),
-        struct(left.columns.toSeq.map(col): _*).as("__lv"),
-        lit(null).cast(rvType).as("__rv"),
-        lit(0).as("__side")): _*))
-    val rt = withSlice(right
-      .filter(keys.map(col(_).isNotNull).foldLeft(col(tsCol).isNotNull)(_ && _))
-      .select(
-        keys.map(col) ++ Seq(
-          col(tsCol).as("__t"),
-          lit(null).cast(lvType).as("__lv"),
-          struct(col(tsCol).as(prefix + tsCol) +:
-            payloadCols.map(c => col(c).as(prefix + c)): _*).as("__rv"),
-          lit(1).as("__side")): _*))
+    val (lt, rt) = taggedSides(left, right, keys, tsCol, prefix, payloadCols) match {
+      case (l, r) => (withSlice(l), withSlice(r))
+    }
 
     val keySlice = keys :+ "__slice"
     // one summary row per occupied (key, slice): the slice's latest right payload
@@ -247,9 +247,7 @@ object AsOfJoin {
     val w = Window.partitionBy(keySlice.map(col): _*)
       .orderBy(col("__t").asc, col("__side").desc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val outCols: Seq[Column] =
-      left.columns.map(c => col(s"__lv.$c").as(c)).toSeq ++
-        rvType.fieldNames.map(f => col(s"__f.$f").as(f)).toSeq
+    val outCols = outputCols(left, tsCol, prefix, payloadCols, "__f")
 
     lt.unionByName(rt)
       .withColumn("__m", last(col("__rv"), ignoreNulls = true).over(w))

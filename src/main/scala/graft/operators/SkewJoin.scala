@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.ext.Pin.PinOps
 
@@ -53,17 +53,31 @@ object SkewJoin {
     require(salt >= 1 && salt <= 1024, s"salt out of [1, 1024]: $salt")
     require(Set("inner", "left_outer", "left").contains(joinType),
       s"saltedJoin supports inner/left_outer, not $joinType (dim replication breaks right-preserving joins)")
-    val saltedLeft = left.withColumn("__salt",
-      pmod(spark_partition_id().cast("long") + monotonically_increasing_id(), lit(salt.toLong)).cast("int"))
+    val saltedLeft = left.withColumn("__salt", rowSalt(lit(salt.toLong)))
     val replicatedRight = right.withColumn("__salt",
       explode(sequence(lit(0), lit(salt - 1))))
+    joinOnSalt(saltedLeft, leftKey, replicatedRight, rightKey, joinType)
+  }
+
+  /** A fact row's salt in [0, n): `(partition id + row position) mod n`,
+    * cheap and deterministic within a run. Which salt a row gets never
+    * changes the result, only which replica of its dim row it meets.
+    */
+  private def rowSalt(n: Column): Column =
+    pmod(spark_partition_id().cast("long") + monotonically_increasing_id(), n).cast("int")
+
+  /** The salted equi-join both actuators end in: key and `__salt` equal,
+    * then the salt dropped, so the output has the plain join's columns.
+    */
+  private def joinOnSalt(saltedLeft: DataFrame, leftKey: String,
+                         replicatedRight: DataFrame, rightKey: String,
+                         joinType: String): DataFrame =
     saltedLeft
       .join(replicatedRight,
         saltedLeft(leftKey) === replicatedRight(rightKey) &&
           saltedLeft("__salt") === replicatedRight("__salt"),
         joinType)
       .drop("__salt")
-  }
 
   /** Skew ADVISOR: the decision table [[plannedSaltedJoin]] consumes —
     * per key whose fact count exceeds `targetRowsPerTask`, the ceil-
@@ -113,20 +127,13 @@ object SkewJoin {
     val saltedLeft = left
       .join(p, left(leftKey) === p("__sp_key"), "left")
       .withColumn("__sn", coalesce(col("__sp_salt"), lit(1)).cast("long"))
-      .withColumn("__salt",
-        pmod(spark_partition_id().cast("long") + monotonically_increasing_id(),
-          col("__sn")).cast("int"))
+      .withColumn("__salt", rowSalt(col("__sn")))
       .drop("__sp_key", "__sp_salt", "__sn")
     val replicatedRight = right
       .join(p, right(rightKey) === p("__sp_key"), "left")
       .withColumn("__sn", coalesce(col("__sp_salt"), lit(1)))
       .withColumn("__salt", explode(sequence(lit(0), col("__sn") - 1)))
       .drop("__sp_key", "__sp_salt", "__sn")
-    saltedLeft
-      .join(replicatedRight,
-        saltedLeft(leftKey) === replicatedRight(rightKey) &&
-          saltedLeft("__salt") === replicatedRight("__salt"),
-        joinType)
-      .drop("__salt")
+    joinOnSalt(saltedLeft, leftKey, replicatedRight, rightKey, joinType)
   }
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import java.sql.Timestamp
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, ListState, MapState, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
 
@@ -16,24 +16,38 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, ListState,
   */
 object Streams {
 
+  /** The start of an hourly window, and of a daily one as a date. */
+  private val Hour = col("w.start").as("hour")
+  private val Day = col("w.start").cast("date").as("day")
+
+  /** The one body of every single-stage windowed emitter: watermark
+    * `events` on `ts`, group by `window` and `keys`, aggregate, and emit
+    * `start` (the window's start, named by the caller) followed by the
+    * keys and aggregates in order. On a stream the watermark closes
+    * windows and bounds state; on a batch frame Spark's analyzer drops it
+    * (`EliminateEventTimeWatermark`), so the batch twins that pin each
+    * emitter to its oracle run the same plan as an unwatermarked
+    * aggregate.
+    */
+  private def windowedAgg(events: DataFrame, watermark: String, window: Column,
+                          start: Column)(keys: Column*)(aggs: Column*): DataFrame = {
+    val agg = events.withWatermark("ts", watermark)
+      .groupBy(window.as("w") +: keys: _*).agg(aggs.head, aggs.tail: _*)
+    agg.select(start +: agg.columns.toSeq.filterNot(_ == "w").map(col): _*)
+  }
+
   /** Tumbling-window counts/sums with a watermark for late data. On a
     * stream this emits append-mode results as windows close; the watermark
     * bounds state so the job runs forever at constant memory.
     */
   def hourlyByType(events: DataFrame, watermark: String = "1 hour"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n"), sum("value").as("total_value"))
-      .select(col("w.start").as("hour"), col("event_type"), col("n"), col("total_value"))
+    windowedAgg(events, watermark, window(col("ts"), "1 hour"), Hour)(col("event_type"))(
+      count(lit(1)).as("n"), sum("value").as("total_value"))
 
   /** Sliding-window per-type rates (10-minute window every 5 minutes). */
   def slidingRates(events: DataFrame, watermark: String = "30 minutes"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), "10 minutes", "5 minutes").as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("w.start").as("window_start"), col("event_type"), col("n"))
+    windowedAgg(events, watermark, window(col("ts"), "10 minutes", "5 minutes"),
+      col("w.start").as("window_start"))(col("event_type"))(count(lit(1)).as("n"))
 
   final case class Event(event_id: Long, ts: Timestamp, user_id: Long,
                          event_type: String, value: Double)
@@ -217,12 +231,10 @@ object Streams {
   def hllUsersHourly(events: DataFrame, log2m: Int = 6,
                      watermark: String = "1 hour"): DataFrame = {
     val (bucket, rank) = graft.ext.Sketch.hllBucketRank(col("user_id"), log2m)
-    events
-      .withWatermark("ts", watermark)
-      .select(col("ts"), col("event_type"), bucket.as("bucket"), rank.as("r"))
-      .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"), col("bucket"))
-      .agg(max(col("r")).cast("int").as("reg"))
-      .select(col("w.start").as("hour"), col("event_type"), col("bucket"), col("reg"))
+    windowedAgg(
+      events.select(col("ts"), col("event_type"), bucket.as("bucket"), rank.as("r")),
+      watermark, window(col("ts"), "1 hour"), Hour)(col("event_type"), col("bucket"))(
+      max(col("r")).cast("int").as("reg"))
   }
 
   /** Streaming KMV: hourly bottom-k distinct-user registers per event
@@ -239,13 +251,12 @@ object Streams {
   def kmvUsersHourly(events: DataFrame, k: Int = 64,
                      watermark: String = "1 hour"): DataFrame = {
     import graft.ext.{Dedup, Sketch}
-    events
-      .withWatermark("ts", watermark)
-      .select(col("ts"), col("event_type"),
-        Dedup.mixHash(col("user_id"), Sketch.KmvJ).as("h"))
-      .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
-      .agg(Sketch.bottomK("h", k).as("bottomk"))
-      .select(col("w.start").as("hour"), col("event_type"),
+    windowedAgg(
+      events.select(col("ts"), col("event_type"),
+        Dedup.mixHash(col("user_id"), Sketch.KmvJ).as("h")),
+      watermark, window(col("ts"), "1 hour"), Hour)(col("event_type"))(
+      Sketch.bottomK("h", k).as("bottomk"))
+      .select(col("hour"), col("event_type"),
         posexplode(col("bottomk")).as(Seq("pos", "h")))
       .select(col("hour"), col("event_type"),
         (col("pos") + 1).cast("int").as("rank"), col("h"))
@@ -266,13 +277,11 @@ object Streams {
   def logHistHourly(events: DataFrame, subBits: Int = 4,
                     watermark: String = "1 hour"): DataFrame = {
     val (id, rep) = graft.ext.Sketch.logBucketSql("__x", subBits)
-    events
-      .withWatermark("ts", watermark)
-      .select(col("ts"), expr("cast(round(value * 100) as bigint)").as("__x"))
-      .select(col("ts"), expr(id).as("bucket_id"), expr(rep).as("rep"))
-      .groupBy(window(col("ts"), "1 hour").as("w"), col("bucket_id"), col("rep"))
-      .agg(count(lit(1)).as("cnt"))
-      .select(col("w.start").as("hour"), col("bucket_id"), col("rep"), col("cnt"))
+    windowedAgg(
+      events.select(col("ts"), expr("cast(round(value * 100) as bigint)").as("__x"))
+        .select(col("ts"), expr(id).as("bucket_id"), expr(rep).as("rep")),
+      watermark, window(col("ts"), "1 hour"), Hour)(col("bucket_id"), col("rep"))(
+      count(lit(1)).as("cnt"))
   }
 
   /** Streaming CountSketch: hourly signed-frequency sketch cells per
@@ -285,7 +294,7 @@ object Streams {
     * difference is exactly the q289 drift monitor — run continuously,
     * O(depth·width) state per open window instead of a nightly two-pass
     * batch. `sum` is a supported streaming aggregate; watermark closes
-    * windows. Mode-adaptive (a batch frame skips the watermark), which
+    * windows. Mode-adaptive (Spark drops the watermark of a batch frame), which
     * is what makes the batch twin oracle-verifiable:
     * q293_cs_cells_hourly runs THIS function over the bounded events
     * table and hash-matches the DuckDB replay.
@@ -293,15 +302,12 @@ object Streams {
   def countSketchHourly(events: DataFrame, itemCol: String = "user_id",
                         depth: Int = 5, width: Int = 64,
                         watermark: String = "1 hour"): DataFrame = {
-    val src = if (events.isStreaming) events.withWatermark("ts", watermark)
-              else events
-    src.select(col("ts"),
-        explode(graft.ext.Sketch.csCellArray(col(itemCol), depth, width))
-          .as("cell"))
-      .groupBy(window(col("ts"), "1 hour").as("w"),
-        col("cell.row").as("row"), col("cell.bucket").as("bucket"))
-      .agg(sum(col("cell.sign")).as("cnt"))
-      .select(col("w.start").as("hour"), col("row"), col("bucket"), col("cnt"))
+    windowedAgg(
+      events.select(col("ts"),
+        explode(graft.ext.Sketch.csCellArray(col(itemCol), depth, width)).as("cell")),
+      watermark, window(col("ts"), "1 hour"), Hour)(
+      col("cell.row").as("row"), col("cell.bucket").as("bucket"))(
+      sum(col("cell.sign")).as("cnt"))
   }
 
   /** Streaming embedding-drift moments: per closed window, the
@@ -318,16 +324,12 @@ object Streams {
     */
   def embeddingMomentsHourly(vecs: DataFrame, vecCol: String = "embedding",
                              watermark: String = "1 hour"): DataFrame = {
-    val src = if (vecs.isStreaming) vecs.withWatermark("ts", watermark)
-              else vecs
-    src.select(col("ts"),
-        posexplode(graft.ext.Clustering.quantize(col(vecCol)))
-          .as(Seq("dim", "x")))
-      .groupBy(window(col("ts"), "1 hour").as("w"), col("dim"))
-      .agg(sum(col("x").cast("decimal(38,0)")).as("s"),
-        count(lit(1)).as("n"))
-      .select(col("w.start").as("hour"), col("dim"),
-        col("s").cast("long").as("s"), col("n"))
+    windowedAgg(
+      vecs.select(col("ts"),
+        posexplode(graft.ext.Clustering.quantize(col(vecCol))).as(Seq("dim", "x"))),
+      watermark, window(col("ts"), "1 hour"), Hour)(col("dim"))(
+      sum(col("x").cast("decimal(38,0)")).as("s"), count(lit(1)).as("n"))
+      .withColumn("s", col("s").cast("long"))
   }
 
   /** Streaming hourly per-key counts — the emitter feeding the dyadic
@@ -344,11 +346,8 @@ object Streams {
     */
   def decayedCountsHourly(events: DataFrame, keyCol: String = "event_type",
                           watermark: String = "1 hour"): DataFrame = {
-    val src = if (events.isStreaming) events.withWatermark("ts", watermark)
-              else events
-    src.groupBy(window(col("ts"), "1 hour").as("w"), col(keyCol).as("key"))
-      .agg(count(lit(1)).as("c"))
-      .select(col("w.start").as("hour"), col("key"), col("c"))
+    windowedAgg(events, watermark, window(col("ts"), "1 hour"), Hour)(
+      col(keyCol).as("key"))(count(lit(1)).as("c"))
   }
 
   /** Streaming daily active-user sets — the emitter feeding the WAU and
@@ -364,11 +363,9 @@ object Streams {
     */
   def userDaysDaily(events: DataFrame, userCol: String = "user_id",
                     watermark: String = "1 day"): DataFrame = {
-    val src = if (events.isStreaming) events.withWatermark("ts", watermark)
-              else events
-    src.groupBy(window(col("ts"), "1 day").as("w"), col(userCol).as("u"))
-      .agg(count(lit(1)).as("c"))
-      .select(col("w.start").cast("date").as("day"), col("u"))
+    windowedAgg(events, watermark, window(col("ts"), "1 day"), Day)(
+      col(userCol).as("u"))(count(lit(1)).as("c"))
+      .select("day", "u")
   }
 
   /** Streaming daily per-user value mass — the emitter feeding the
@@ -383,12 +380,9 @@ object Streams {
     */
   def userValueDaily(events: DataFrame, userCol: String = "user_id",
                      watermark: String = "1 day"): DataFrame = {
-    val src = if (events.isStreaming) events.withWatermark("ts", watermark)
-              else events
-    src.filter(col("value").isNotNull)
-      .groupBy(window(col("ts"), "1 day").as("w"), col(userCol).as("u"))
-      .agg(sum(expr("CAST(round(value * 100) AS BIGINT)")).as("cents"))
-      .select(col("w.start").cast("date").as("day"), col("u"), col("cents"))
+    windowedAgg(events.filter(col("value").isNotNull), watermark,
+      window(col("ts"), "1 day"), Day)(col(userCol).as("u"))(
+      sum(expr("CAST(round(value * 100) AS BIGINT)")).as("cents"))
   }
 
   /** Streaming daily Benford digit census — the emitter feeding the
@@ -400,15 +394,12 @@ object Streams {
     */
   def digitCountsDaily(events: DataFrame,
                        watermark: String = "1 day"): DataFrame = {
-    val src = if (events.isStreaming) events.withWatermark("ts", watermark)
-              else events
-    src.select(col("ts"), expr("CAST(round(value * 100) AS BIGINT)").as("v"))
-      .filter(col("v") > 0)
-      .select(col("ts"),
-        expr("CAST(substring(CAST(v AS STRING), 1, 1) AS BIGINT)").as("digit"))
-      .groupBy(window(col("ts"), "1 day").as("w"), col("digit"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("w.start").cast("date").as("day"), col("digit"), col("n"))
+    windowedAgg(
+      events.select(col("ts"), expr("CAST(round(value * 100) AS BIGINT)").as("v"))
+        .filter(col("v") > 0)
+        .select(col("ts"),
+          expr("CAST(substring(CAST(v AS STRING), 1, 1) AS BIGINT)").as("digit")),
+      watermark, window(col("ts"), "1 day"), Day)(col("digit"))(count(lit(1)).as("n"))
   }
 
   /** Streaming exact dedup: drops events whose `idCol` was already seen,
@@ -572,31 +563,44 @@ object Streams {
   private[streaming] def rateStep(lookback: Int, minPrior: Int, z: Int)(
       key: String, rows: Iterator[RateEvent],
       state: GroupState[RateState]): Iterator[RateAnomaly] = {
+    val out = scala.collection.mutable.ArrayBuffer.empty[RateAnomaly]
+    rollHours(rows, state)(RateState(_, 0L, Nil), _.openHour,
+      (st, n) => st.copy(openCount = st.openCount + n)) { st =>
+      // judge the open hour, roll it into history
+      graft.ext.TimeSeries.zFlag(st.closed, st.openCount, minPrior, z)
+        .foreach { dir =>
+          out += RateAnomaly(key, new Timestamp(st.openHour * 3600000L),
+            st.openCount, st.closed.size.toLong, dir)
+        }
+      RateState(st.openHour + 1, 0L, (st.openCount :: st.closed).take(lookback))
+    }
+    out.iterator
+  }
+
+  /** The manual hourly windowing of both rate-anomaly transitions
+    * ([[rateStep]], [[seasonalStep]]): count the batch's rows per hour,
+    * then from the state's open hour (or the first hour, for a new key)
+    * `close` every hour before a row's hour (a skipped hour closes with
+    * count 0) and `add` the row's count to the open hour. A row for an
+    * already-closed hour is dropped, the watermark of this windowing. The
+    * state is updated only when the batch had rows.
+    */
+  private def rollHours[S](rows: Iterator[RateEvent], state: GroupState[S])(
+      fresh: Long => S, openHour: S => Long, add: (S, Long) => S)(close: S => S): Unit = {
     val byHour = scala.collection.mutable.TreeMap.empty[Long, Long]
     rows.foreach { e =>
       val h = e.ts.getTime / 3600000L
       byHour(h) = byHour.getOrElse(h, 0L) + 1L
     }
-    if (byHour.isEmpty) Iterator.empty
-    else {
-      var st = state.getOption.getOrElse(RateState(byHour.firstKey, 0L, Nil))
-      val out = scala.collection.mutable.ArrayBuffer.empty[RateAnomaly]
-      def close(): Unit = { // judge the open hour, roll it into history
-        graft.ext.TimeSeries.zFlag(st.closed, st.openCount, minPrior, z)
-          .foreach { dir =>
-            out += RateAnomaly(key, new Timestamp(st.openHour * 3600000L),
-              st.openCount, st.closed.size.toLong, dir)
-          }
-        st = RateState(st.openHour + 1, 0L, (st.openCount :: st.closed).take(lookback))
-      }
+    if (byHour.nonEmpty) {
+      var st = state.getOption.getOrElse(fresh(byHour.firstKey))
       byHour.foreach { case (h, n) =>
-        if (h >= st.openHour) { // else: late row for a closed hour, dropped
-          while (st.openHour < h) close() // skipped hours close as 0
-          st = st.copy(openCount = st.openCount + n)
+        if (h >= openHour(st)) {
+          while (openHour(st) < h) st = close(st)
+          st = add(st, n)
         }
       }
       state.update(st)
-      out.iterator
     }
   }
 
@@ -620,8 +624,7 @@ object Streams {
   def curateStream(docs: DataFrame, minQuality: Double = 0.3,
                    watermark: String = "1 hour"): DataFrame = {
     import graft.ext.TextAnalysis
-    val gated = (if (docs.isStreaming) docs.withWatermark("ts", watermark)
-                 else docs)
+    val gated = docs.withWatermark("ts", watermark)
       .withColumn("quality", TextAnalysis.qualityScore(col("text")))
       .filter(col("quality") >= minQuality)
       .withColumn("fingerprint", TextAnalysis.fingerprint(col("text")))
@@ -763,38 +766,22 @@ object Streams {
   private[streaming] def seasonalStep(minPrior: Int, z: Int)(
       key: String, rows: Iterator[RateEvent],
       state: GroupState[SeasonalState]): Iterator[RateAnomaly] = {
-    val byHour = scala.collection.mutable.TreeMap.empty[Long, Long]
-    rows.foreach { e =>
-      val h = e.ts.getTime / 3600000L
-      byHour(h) = byHour.getOrElse(h, 0L) + 1L
-    }
-    if (byHour.isEmpty) Iterator.empty
-    else {
-      var st = state.getOption.getOrElse(
-        SeasonalState(byHour.firstKey, 0L, Map.empty))
-      val out = scala.collection.mutable.ArrayBuffer.empty[RateAnomaly]
-      def close(): Unit = {
-        val slot = ((st.openHour % 168) + 168) % 168
-        val mo = st.slots.getOrElse(slot, SlotMoments(0L, 0L, 0L))
-        graft.ext.TimeSeries
-          .zFlagMoments(mo.m, mo.s, mo.q, st.openCount, minPrior, z)
-          .foreach { dir =>
-            out += RateAnomaly(key, new Timestamp(st.openHour * 3600000L),
-              st.openCount, mo.m, dir)
-          }
-        st = SeasonalState(st.openHour + 1, 0L,
-          st.slots.updated(slot, SlotMoments(mo.m + 1,
-            mo.s + st.openCount, mo.q + st.openCount * st.openCount)))
-      }
-      byHour.foreach { case (h, n) =>
-        if (h >= st.openHour) {
-          while (st.openHour < h) close()
-          st = st.copy(openCount = st.openCount + n)
+    val out = scala.collection.mutable.ArrayBuffer.empty[RateAnomaly]
+    rollHours(rows, state)(SeasonalState(_, 0L, Map.empty), _.openHour,
+      (st, n) => st.copy(openCount = st.openCount + n)) { st =>
+      val slot = ((st.openHour % 168) + 168) % 168
+      val mo = st.slots.getOrElse(slot, SlotMoments(0L, 0L, 0L))
+      graft.ext.TimeSeries
+        .zFlagMoments(mo.m, mo.s, mo.q, st.openCount, minPrior, z)
+        .foreach { dir =>
+          out += RateAnomaly(key, new Timestamp(st.openHour * 3600000L),
+            st.openCount, mo.m, dir)
         }
-      }
-      state.update(st)
-      out.iterator
+      SeasonalState(st.openHour + 1, 0L,
+        st.slots.updated(slot, SlotMoments(mo.m + 1,
+          mo.s + st.openCount, mo.q + st.openCount * st.openCount)))
     }
+    out.iterator
   }
 
   final case class PatternEvent(user_id: Long, event_id: Long,

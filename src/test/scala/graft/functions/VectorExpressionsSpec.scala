@@ -84,6 +84,23 @@ class VectorExpressionsSpec extends SparkSpec {
     assert(plan.contains("*(1) Project"), s"no codegen span in:\n$plan")
   }
 
+  // one case per binary kernel: an array of the wrong element type fails
+  // analysis with a message that names the kernel and the element types
+  // it accepts (the type check every kernel takes from its shared base)
+  Seq(
+    ("graft_dot", "dotproduct", "array<float|double>", "ARRAY<BIGINT>"),
+    ("graft_cosine", "cosinesimilarity", "array<float|double>", "ARRAY<BIGINT>"),
+    ("graft_l2sq", "longl2squared", "array<bigint>", "ARRAY<DOUBLE>"),
+    ("graft_sorted_inter", "sortedintercount", "array<bigint>", "ARRAY<DOUBLE>")
+  ).foreach { case (fn, kernel, accepted, wrong) =>
+    test(s"$fn rejects $wrong, naming $kernel and $accepted") {
+      val d = df(s"a $wrong, b $wrong", Seq.empty)
+      val e = intercept[org.apache.spark.sql.AnalysisException](
+        d.select(call_function(fn, col("a"), col("b"))).schema)
+      assert(e.getMessage.contains(s"$kernel requires $accepted inputs"), e.getMessage)
+    }
+  }
+
   test("SortedInterCount: merge scan equals array_intersect size on sorted distinct arrays; codegen'd") {
     import spark.implicits._
     // deterministic pseudo-random distinct sorted sets

@@ -11,22 +11,6 @@
 set -uo pipefail
 cd "$(dirname "$0")/.."
 
-ADD_OPENS=(
-  --add-opens=java.base/java.lang=ALL-UNNAMED
-  --add-opens=java.base/java.lang.invoke=ALL-UNNAMED
-  --add-opens=java.base/java.lang.reflect=ALL-UNNAMED
-  --add-opens=java.base/java.io=ALL-UNNAMED
-  --add-opens=java.base/java.net=ALL-UNNAMED
-  --add-opens=java.base/java.nio=ALL-UNNAMED
-  --add-opens=java.base/java.util=ALL-UNNAMED
-  --add-opens=java.base/java.util.concurrent=ALL-UNNAMED
-  --add-opens=java.base/java.util.concurrent.atomic=ALL-UNNAMED
-  --add-opens=java.base/sun.nio.ch=ALL-UNNAMED
-  --add-opens=java.base/sun.nio.cs=ALL-UNNAMED
-  --add-opens=java.base/sun.security.action=ALL-UNNAMED
-  --add-opens=java.base/sun.util.calendar=ALL-UNNAMED
-)
-
 if [ -z "${FROZEN_CLASSES:-}" ]; then
   FROZEN_CLASSES=$(mktemp -d)/classes
   cp -r target/scala-2.13/classes "$FROZEN_CLASSES"
@@ -36,6 +20,6 @@ CP="$FROZEN_CLASSES:/opt/spark/jars/*"
 
 MAIN="${1:-graft.Bench}"
 shift || true
-exec java -cp "$CP" "${ADD_OPENS[@]}" -Xmx48g \
+exec java -cp "$CP" @tools/add_opens.args -Xmx48g \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   "$MAIN" "$@"

@@ -12,12 +12,13 @@ import os
 import sys
 
 
-def code_lines(text):
-    """Lines of `text` that carry at least one character of code.
+def code_mask(text):
+    """One flag per line of `text`: True when the line carries at least
+    one character of code.
 
     A small scanner: it tracks (nested) block comments and string
     literals, so a `/*` inside a string does not open a comment."""
-    n = 0
+    mask = []
     depth = 0  # block-comment nesting (Scala comments nest)
     in_triple = False  # inside a """...""" literal (may span lines)
     for line in text.splitlines():
@@ -67,9 +68,13 @@ def code_lines(text):
                 i = (end if end > 0 else i) + 1
             else:
                 i += 1
-        if code:
-            n += 1
-    return n
+        mask.append(code)
+    return mask
+
+
+def code_lines(text):
+    """Lines of `text` that carry at least one character of code."""
+    return sum(code_mask(text))
 
 
 def files(paths):

@@ -16,28 +16,12 @@
 set -uo pipefail
 cd "$(dirname "$0")/.."
 
-ADD_OPENS=(
-  --add-opens=java.base/java.lang=ALL-UNNAMED
-  --add-opens=java.base/java.lang.invoke=ALL-UNNAMED
-  --add-opens=java.base/java.lang.reflect=ALL-UNNAMED
-  --add-opens=java.base/java.io=ALL-UNNAMED
-  --add-opens=java.base/java.net=ALL-UNNAMED
-  --add-opens=java.base/java.nio=ALL-UNNAMED
-  --add-opens=java.base/java.util=ALL-UNNAMED
-  --add-opens=java.base/java.util.concurrent=ALL-UNNAMED
-  --add-opens=java.base/java.util.concurrent.atomic=ALL-UNNAMED
-  --add-opens=java.base/sun.nio.ch=ALL-UNNAMED
-  --add-opens=java.base/sun.nio.cs=ALL-UNNAMED
-  --add-opens=java.base/sun.security.action=ALL-UNNAMED
-  --add-opens=java.base/sun.util.calendar=ALL-UNNAMED
-)
-
 sbt -batch compile || exit 1
 
 frozen=$(mktemp -d)/classes
 cp -r target/scala-2.13/classes "$frozen"
 CP="$frozen:/opt/spark/jars/*"
-JAVA=(java -cp "$CP" "${ADD_OPENS[@]}" -Xmx48g
+JAVA=(java -cp "$CP" @tools/add_opens.args -Xmx48g
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC)
 
 tmp=$(mktemp -d)
