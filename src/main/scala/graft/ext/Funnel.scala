@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.ext.Pin.PinOps
@@ -96,20 +96,6 @@ object Funnel {
       round(col("n").cast("double") / sum(col("n")).over(perFrom), 6))
   }
 
-  /** The touch and conversion events of an attribution,
-    * `(user, id, type, t_us, cents)`: µs timestamps and integer-cent
-    * values (`round(value·100)`, the money rule of every report query).
-    * Both attribution models read this one relation, so they credit the
-    * same events with the same cents.
-    */
-  private def touchesAndConversions(events: DataFrame, isTouch: Column, convType: String,
-                                    tsCol: String, userCol: String, typeCol: String,
-                                    idCol: String, valueCol: String): DataFrame =
-    events.filter(isTouch || col(typeCol) === convType)
-      .select(col(userCol), col(idCol), col(typeCol),
-        unix_micros(col(tsCol)).as("t_us"),
-        round(col(valueCol) * 100).cast("long").as("cents"))
-
   /** Last-touch attribution: every conversion is credited to the SAME
     * user's most recent touch event (view/click/…) at or before the
     * conversion, provided it happened within `horizonUs`; conversions with
@@ -138,8 +124,11 @@ object Funnel {
     val isTouch = col(typeCol).isInCollection(touchTypes)
     val w = Window.partitionBy(col(userCol)).orderBy(col("t_us"), col(idCol))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val attributed = touchesAndConversions(events, isTouch, convType, tsCol,
-        userCol, typeCol, idCol, valueCol)
+    val attributed = events
+      .filter(isTouch || col(typeCol) === convType)
+      .select(col(userCol), col(idCol), col(typeCol),
+        unix_micros(col(tsCol)).as("t_us"),
+        round(col(valueCol) * 100).cast("long").as("cents"))
       .withColumn("touch_type",
         last(when(isTouch, col(typeCol)), ignoreNulls = true).over(w))
       .withColumn("touch_us",
@@ -179,8 +168,10 @@ object Funnel {
                         idCol: String = "event_id",
                         valueCol: String = "value"): DataFrame = {
     val isTouch = col(typeCol).isInCollection(touchTypes)
-    val base = touchesAndConversions(events, isTouch, convType, tsCol,
-      userCol, typeCol, idCol, valueCol)
+    val base = events.filter(isTouch || col(typeCol) === convType)
+      .select(col(userCol), col(idCol), col(typeCol),
+        unix_micros(col(tsCol)).as("t_us"),
+        round(col(valueCol) * 100).cast("long").as("cents"))
     val conv = base.filter(col(typeCol) === convType)
       .select(col(userCol), col(idCol).as("conv_id"),
         col("t_us").as("t_c"), col("cents"))

@@ -1191,6 +1191,17 @@ object Jpeg {
     Array(sum, wsum, ch(0), ch(1), ch(2))
   }
 
+  /** The unsigned byte sum alone, for the callers that read nothing else
+    * (the MJPEG frame sums, [[Multimodal.probePng]]): it spares them
+    * [[pixelSums]]' weighted and per-channel work on every pixel.
+    */
+  private[ext] def pixelSum(px: Array[Byte]): Long = {
+    var sum = 0L
+    var i = 0
+    while (i < px.length) { sum += px(i) & 0xff; i += 1 }
+    sum
+  }
+
   /** The body of the three pixel-stats queries ([[jpegPixelStats]],
     * [[jpegProgressivePixelStats]], [[jpeg420PixelStats]]), which differ
     * only in the encoder that makes each doc's payload: decode it and

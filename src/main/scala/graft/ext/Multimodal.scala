@@ -493,7 +493,7 @@ object Multimodal {
       Png.decodeFull(p) match {
         case Some(img) =>
           ProbedMedia(id, "png", img.width, img.height, 0, 0,
-            img.pixels.length, Jpeg.pixelSums(img.pixels)(0))
+            img.pixels.length, Jpeg.pixelSum(img.pixels))
         case None => ProbedMedia(id, "unknown", 0, 0, 0, 0, p.length, 0L)
       }
     }

@@ -149,7 +149,7 @@ object Video {
           var n = 0
           avi.frames.zipWithIndex.foreach { case (fb, fi) =>
             Jpeg.decode(fb).foreach { img =>
-              val s = Jpeg.pixelSums(img.pixels)(0)
+              val s = Jpeg.pixelSum(img.pixels)
               if (fi < 4) sums(fi) = s
               total += s
               n += 1

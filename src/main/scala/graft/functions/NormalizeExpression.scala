@@ -1,8 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{DataType, StringType}
@@ -59,15 +58,7 @@ object NormalizeUtil {
 /** `graft_clean_text(string) -> string` — see [[NormalizeUtil.cleanText]].
   * Null in → null out.
   */
-case class CleanText(child: Expression) extends UnaryExpression with Serializable {
-
-  override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string, got ${other.simpleString}")
-  }
+case class CleanText(child: Expression) extends StringKernel {
 
   override def dataType: DataType = StringType
 

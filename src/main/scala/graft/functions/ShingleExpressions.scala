@@ -197,8 +197,8 @@ object ShingleUtil {
 
 /** A one-string-argument kernel: null text → null, and any other input
   * type fails analysis with one message naming the function. Every
-  * native text expression in this package extends it, so each states only
-  * its result type and its evaluation.
+  * one-string native expression in this package extends it, so each
+  * states only its result type and its evaluation.
   */
 abstract class StringKernel extends UnaryExpression with Serializable {
 

@@ -56,7 +56,12 @@ object SkewJoin {
     val saltedLeft = left.withColumn("__salt", rowSalt(lit(salt.toLong)))
     val replicatedRight = right.withColumn("__salt",
       explode(sequence(lit(0), lit(salt - 1))))
-    joinOnSalt(saltedLeft, leftKey, replicatedRight, rightKey, joinType)
+    saltedLeft
+      .join(replicatedRight,
+        saltedLeft(leftKey) === replicatedRight(rightKey) &&
+          saltedLeft("__salt") === replicatedRight("__salt"),
+        joinType)
+      .drop("__salt")
   }
 
   /** A fact row's salt in [0, n): `(partition id + row position) mod n`,
@@ -65,19 +70,6 @@ object SkewJoin {
     */
   private def rowSalt(n: Column): Column =
     pmod(spark_partition_id().cast("long") + monotonically_increasing_id(), n).cast("int")
-
-  /** The salted equi-join both actuators end in: key and `__salt` equal,
-    * then the salt dropped, so the output has the plain join's columns.
-    */
-  private def joinOnSalt(saltedLeft: DataFrame, leftKey: String,
-                         replicatedRight: DataFrame, rightKey: String,
-                         joinType: String): DataFrame =
-    saltedLeft
-      .join(replicatedRight,
-        saltedLeft(leftKey) === replicatedRight(rightKey) &&
-          saltedLeft("__salt") === replicatedRight("__salt"),
-        joinType)
-      .drop("__salt")
 
   /** Skew ADVISOR: the decision table [[plannedSaltedJoin]] consumes —
     * per key whose fact count exceeds `targetRowsPerTask`, the ceil-
@@ -134,6 +126,11 @@ object SkewJoin {
       .withColumn("__sn", coalesce(col("__sp_salt"), lit(1)))
       .withColumn("__salt", explode(sequence(lit(0), col("__sn") - 1)))
       .drop("__sp_key", "__sp_salt", "__sn")
-    joinOnSalt(saltedLeft, leftKey, replicatedRight, rightKey, joinType)
+    saltedLeft
+      .join(replicatedRight,
+        saltedLeft(leftKey) === replicatedRight(rightKey) &&
+          saltedLeft("__salt") === replicatedRight("__salt"),
+        joinType)
+      .drop("__salt")
   }
 }

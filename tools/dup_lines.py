@@ -4,13 +4,13 @@ consecutive code lines (blank and comment-only lines skipped, each line
 trimmed) that occurs 2 or more times in the given paths is duplicated.
 
     python3 tools/dup_lines.py src/main
-    python3 tools/dup_lines.py --all src/main   # also count Oracles.scala
 
 Prints each group (a run of overlapping duplicated windows, with every
 place it occurs as `file:line`, first and last line of the run), then the
 total: the number of distinct source lines that lie in a duplicated
 window. `Oracles.scala` holds the reference SQL, which restates the
-engine on purpose, so it is skipped unless `--all` is given.
+engine on purpose, so it is skipped when found under a directory
+argument; name the file itself to count it.
 """
 import os
 import sys
@@ -74,12 +74,10 @@ def duplicates(paths):
 
 
 def main(argv):
-    keep_all = "--all" in argv
-    argv = [a for a in argv if a != "--all"]
     if not argv:
         print(__doc__.strip(), file=sys.stderr)
         return 2
-    paths = [p for p in files(argv) if keep_all or os.path.basename(p) not in EXCLUDED]
+    paths = [p for p in files(argv) if p in argv or os.path.basename(p) not in EXCLUDED]
     total, groups = duplicates(paths)
     for g in groups:
         print("  ".join(f"{p}:{a}-{b}" for p, a, b in g))
